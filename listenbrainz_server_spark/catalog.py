@@ -3,30 +3,34 @@
 The reference resolves datasets by HDFS path constants and registers
 temp views per query (listenbrainz_spark/path.py, listens/data.py:38-55).
 We keep a thin catalog: table name -> parquet path under a base dir,
-lazily loaded, memoized, registered as temp views so both the
-DataFrame API and spark.sql() see the same names.
+read through ``load_table``.
 
-Memoization + caching strategy (the "many queries, one session" path —
-exactly what the reference's request_consumer does with one long-lived
-session serving a request queue):
+A table is read one of two ways:
 
-- The DataFrame handle for (session, path) is memoized, so repeated
-  ``load_table`` calls across queries reuse one analyzed plan instead of
-  re-listing files and re-reading parquet footers per query.
-- When the table's on-disk size is below ``SPARK_GRAFT_CACHE_MAX_MB``
-  (default 512 MB per table), the DataFrame is additionally ``.cache()``d:
-  the first action materializes it into executor memory and every later
-  query scans memory, not parquet.  At 100 TB the threshold disables
-  this automatically — big tables keep streaming from disk with
-  pushdown/pruning intact.
-- The memo key includes the parquet directory's mtime, so a sink that
-  overwrites a path invalidates the stale handle on the next load.
+- **Cached** (the default; the "many queries, one session" path the
+  reference's request_consumer runs with one long-lived session serving
+  a request queue). The handle for (session, path) is memoized, so
+  repeated loads reuse one analyzed plan instead of re-listing files and
+  re-reading parquet footers. A table up to ``_CACHE_MAX_BYTES`` on disk
+  is repartitioned once and ``.cache()``d: the first action fills
+  executor memory and later queries scan memory, not parquet. A memo hit
+  that Spark has since un-cached (``spark.catalog.clearCache()``) is
+  cached again, so a hit never plans the repartition over a bare scan.
+  Larger tables keep a memoized plain scan with pushdown and pruning,
+  which is every table at 100 TB.
+- **Bare scan**, inside ``cache_disabled()``: no memo and no cache.
+  Entering it un-caches the memoized handles, since Spark would
+  otherwise substitute a cached copy whose plan equals the plain scan.
+
+The memo key includes the parquet directory's mtime, so a sink that
+overwrites a path invalidates the stale handle on the next load.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 TPCH_TABLES = (
@@ -52,67 +56,51 @@ def table_path(base_dir: str, name: str) -> str:
 # timestamps here — same truncation DuckDB applies reading TIMESTAMP_NS.
 _NANO_TS_COLS = {"events": ("ts",)}
 
-_CACHE_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_MAX_MB", "512")) * 1024 * 1024
+_CACHE_MAX_BYTES = 512 * 1024 * 1024
 
-# Cached-table partition sizing (r14 opt, guide §2.5/§2.7): a cached
-# table inherits the SCAN's split count, and these single-file fixture
-# tables scan as 1-3 row-group splits — so every consumer's first map
-# stage (InMemoryTableScan → project/broadcast-join/partial-agg →
-# exchange write) ran 3-wide on a 32-core box (h_fresh_releases: 2.56 s
-# of its 4.0 s wall in one 3-task stage). Repartition BEFORE caching so
-# the in-memory layout tracks the session's parallelism instead of the
-# accident of source file count: partitions = clamp(ceil(on-disk bytes
-# / quantum), 1, defaultParallelism). Size-derived AND core-capped, so
-# a huge cluster doesn't shred a small dim table into thousands of
-# empty cache blocks, and the driver's low-core bench legs shrink it
-# automatically. The one-time round-robin shuffle happens at cache
-# materialization (untimed warm-up in the bench); at 100 TB the size
-# gate disables caching and scans keep their natural split parallelism.
+# Cached-table partition quantum. A cached table inherits its scan's
+# split count, and a single-file table scans as 1-3 row-group splits, so
+# every consumer's first map stage (InMemoryTableScan → project /
+# broadcast join / partial agg → exchange write) would run 1-3 tasks
+# wide whatever the core count. Repartitioning before ``.cache()`` sizes
+# the cached layout to clamp(ceil(on-disk bytes / quantum), 1,
+# defaultParallelism): size-derived, so a large cluster does not shred a
+# small dimension table into empty blocks, and core-capped, so small
+# sessions get fewer blocks. The round-robin shuffle runs once, when the
+# cache fills.
 #
-# Quantum = 1 MiB, measured not guessed: the first cut used 256 KiB
-# (lineitem → 32 cache blocks at sf0.1) and the endround A-B-A caught
-# 4 sub-second cached-scan queries CONFIRMED slower under matched
-# windows (p9_conditional_projection 0.23 → 0.67 s matched legs) —
-# per-task overhead dominates a 0.2 s query read 32-wide. A mirrored
-# in-process A/B over {256K, 1M, 4M, off} × 3 cycles × 2 reps
-# (medians, sf0.1) showed 1 MiB strictly better for the tiny queries
-# (p9 0.244→0.183, p6_having 0.256→0.166, h_yim_top_missed
-# 0.652→0.480, a12_distinct 0.239→0.147) at a small cost on the
-# widest heavy stage (h_fresh_releases 2.27→2.53; still 2.1x better
-# than no-repartition's 5.36) while keeping a1_pricing_summary's win
-# (0.374 vs 1.320 off); panel totals 5.35/5.12/6.38/9.61.
-#
-# Env-overridable (ADVICE r14, mirroring _CACHE_MAX_BYTES): the 1 MiB
-# default was tuned on THIS host's sf0.1 panel; different hardware or
-# scale factors re-tune via SPARK_GRAFT_CACHE_PARTITION_KB without a
-# code change. Re-validated on the 8-core leg in r15 (mirrored A/B,
-# OPTIMIZATION_r15.md) — the defaultParallelism cap already shrinks
-# the block count on low-core sessions.
-_CACHE_PARTITION_BYTES = (
-    int(os.environ.get("SPARK_GRAFT_CACHE_PARTITION_KB", "1024")) * 1024
-)
+# 1 MiB is measured. 256 KiB (lineitem → 32 blocks at sf0.1) made
+# sub-second cached-scan queries slower, because per-task overhead
+# dominates a 0.2 s query read 32 wide: p9_conditional_projection went
+# from 0.23 to 0.67 s in matched A-B-A legs. A mirrored A/B over {256K,
+# 1M, 4M, off} at sf0.1 favoured 1 MiB on the small queries
+# (p9 0.244 → 0.183 s, a12_distinct 0.239 → 0.147 s) at a small cost on
+# the widest stage (h_fresh_releases 2.27 → 2.53 s, against 5.36 s
+# without repartitioning); panel totals 5.35 / 5.12 / 6.38 / 9.61 s.
+_CACHE_PARTITION_BYTES = 1024 * 1024
 
 # (applicationId, abspath, mtime_ns) -> DataFrame
 _TABLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
-def clear_table_cache() -> None:
-    _TABLE_CACHE.clear()
-
 
 _CACHE_ENABLED = True
 
 
 class cache_disabled:
-    """Context manager: force direct parquet scans (the shape every
-    table takes at 100 TB, where the size gate disables caching).
-    Plan-shape tests use this to assert pushdown/pruning on the real
-    scan instead of an InMemoryTableScan."""
+    """Context manager: bare parquet scans, the shape every table takes
+    at 100 TB where the size gate turns caching off. Plan-shape tests
+    use it to assert pushdown and pruning on the real scan instead of
+    an InMemoryTableScan. On entry it un-caches and forgets the
+    memoized handles, so no cached copy can stand in for the scan."""
 
     def __enter__(self):
         global _CACHE_ENABLED
         self._prev = _CACHE_ENABLED
         _CACHE_ENABLED = False
+        sc = SparkContext._active_spark_context
+        for (app_id, _path, _mtime), df in _TABLE_CACHE.items():
+            if sc is not None and app_id == sc.applicationId:
+                df.unpersist()
+        _TABLE_CACHE.clear()
         return self
 
     def __exit__(self, *exc):
@@ -138,10 +126,9 @@ def _path_stats(path: str) -> tuple[int, int]:
     return total, mtime
 
 
-def load_table(
-    spark: SparkSession, base_dir: str, name: str, *, use_cache: bool = True
-) -> DataFrame:
-    """Parquet scan with memoized handle + size-gated in-memory cache.
+def load_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
+    """Parquet scan with memoized handle + size-gated in-memory cache
+    (a bare scan inside ``cache_disabled()``).
 
     Column pruning + predicate pushdown are left to Catalyst — callers
     filter/select on the returned DataFrame and the scan narrows
@@ -163,11 +150,15 @@ def load_table(
 
     path = table_path(base_dir, name)
     key = None
-    if use_cache and _CACHE_ENABLED:
+    if _CACHE_ENABLED:
         size, mtime = _path_stats(path)
         key = (spark.sparkContext.applicationId, os.path.abspath(path), mtime)
         hit = _TABLE_CACHE.get(key)
         if hit is not None:
+            # ``is_cached`` records that we cached it and survives
+            # clearCache(); the storage level is what Spark holds now.
+            if hit.is_cached and not hit._jdf.storageLevel().useMemory():
+                hit.cache()
             return hit
 
     if name in _NANO_TS_COLS:
@@ -229,18 +220,3 @@ def load_table(
         _TABLE_CACHE[key] = df
     return df
 
-
-def register_views(spark: SparkSession, base_dir: str, tables=TPCH_TABLES) -> dict[str, DataFrame]:
-    """Register every table as a temp view; returns the DataFrames.
-
-    Routed through load_table so SQL views and the DataFrame API share
-    one conversion/validation path (events.ts is a timestamp in both).
-    """
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        if not os.path.exists(table_path(base_dir, name)):
-            continue
-        df = load_table(spark, base_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -49,14 +49,6 @@ def punct_ratio(text: Column | str) -> Column:
     return (F.length(col) - F.length(stripped)) / F.greatest(F.length(col), F.lit(1))
 
 
-def mean_word_length(text: Column | str) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t).cast("bigint")
-    )
-    return total / F.greatest(F.size(toks), F.lit(1))
-
-
 def top_word_count(toks: Column) -> Column:
     """Count of the single most frequent token — as a pure column
     expression (zero shuffle), replacing the explode → groupBy(doc, w)

@@ -5,8 +5,7 @@ Reference shapes (SURVEY.md §2.4): group-count workhorse
 skew control (stats/incremental/sitewide/entity.py:50-59), partial +
 final combine for incremental stats
 (stats/incremental/incremental_stats_engine.py:86-142), count-distinct
-listener counts (popularity/common.py:17,54), sum-with-default
-(year_in_music/listening_time.py:20-27).
+listener counts (popularity/common.py:17,54).
 
 Scale notes:
 - Every groupBy here benefits from Spark's map-side partial
@@ -24,7 +23,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -71,11 +70,6 @@ def combine_aggregates(
     unioned = existing.unionByName(delta)
     aggs = [F.sum(c).alias(c) for c in sum_cols]
     return unioned.groupBy(*keys).agg(*aggs)
-
-
-def sum_with_default(col: str, default: Column, alias: str) -> Column:
-    """sum(coalesce(col, default)) (year_in_music/listening_time.py:20-27)."""
-    return F.sum(F.coalesce(F.col(col), default)).alias(alias)
 
 
 def distinct_count(df: DataFrame, keys: Sequence[str], what: str, alias: str) -> DataFrame:

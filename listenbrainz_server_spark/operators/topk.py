@@ -3,8 +3,7 @@
 Reference shapes: row_number top-K per group
 (listenbrainz_spark/stats/incremental/user/artist.py:87,102), global
 ORDER BY..LIMIT (stats/incremental/sitewide/artist.py:73-77), rank /
-dense_rank (troi/periodic_jams.py:49-55, tags/tags.py:14-22), grand
-totals alongside top-K (stats/incremental/user/artist.py:77-110).
+dense_rank (troi/periodic_jams.py:49-55, tags/tags.py:14-22).
 
 Scale notes:
 - ``top_k_per_group`` is one shuffle on the partition keys; Spark
@@ -49,27 +48,3 @@ def top_k_per_group(
 def global_top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
     """Global ORDER BY ... LIMIT k (planned as TakeOrderedAndProject)."""
     return df.orderBy(*order_by).limit(k)
-
-
-def with_group_total(
-    df: DataFrame,
-    group_keys: Sequence[str],
-    total_col: Column,
-    total_name: str,
-) -> DataFrame:
-    """Attach a per-group grand total next to detail rows.
-
-    The reference computes totals as a separate CTE and joins back
-    (stats/incremental/user/artist.py:77-110); a window sum is the
-    same single shuffle without the join.
-    """
-    w = Window.partitionBy(*group_keys)
-    return df.withColumn(total_name, total_col.over(w))
-
-
-def with_global_total(df: DataFrame, total_df: DataFrame) -> DataFrame:
-    """JOIN ON TRUE with a 1-row totals side
-    (stats/incremental/sitewide/artist.py:91-95). The single-row side
-    is broadcast — a BroadcastNestedLoopJoin over 1 row is free.
-    """
-    return df.crossJoin(F.broadcast(total_df))

@@ -27,6 +27,12 @@ from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.plans import handlers
+from listenbrainz_server_spark.plans.incremental_stats import (
+    entity_listener_stat,
+    final_entity_listener_stats,
+    final_sitewide_entity_stats,
+    sitewide_entity_stat,
+)
 from listenbrainz_server_spark.plans.ranges import resolve_range
 
 
@@ -139,15 +145,25 @@ def _similar_users(
     )
 
 
+# The two stats below are defined once, as incremental providers
+# (plans/incremental_stats.py); a direct request is the provider's
+# aggregate over the ranged events, then the same final stats query.
+
+
 def _stats_sitewide_entity(
     spark: SparkSession,
     sf_dir: str,
     entity: str = "event_type",
     stats_range: str | None = None,
-    **params,
+    user_col: str = "user_id",
+    cap: int = 500,
+    k: int = 1000,
 ) -> DataFrame:
+    """stats.sitewide.entity (sitewide/entity.py:50-59): per-user cap
+    before the global aggregate, then global top-K."""
     ev = _range_filtered_events(spark, sf_dir, stats_range)
-    return handlers.sitewide_entity_stats(ev, entity_col=entity, **params)
+    stat = sitewide_entity_stat(user_col, entity, cap=cap)
+    return final_sitewide_entity_stats(stat.aggregate(ev), entity, k=k)
 
 
 def _stats_entity_listeners(
@@ -155,10 +171,14 @@ def _stats_entity_listeners(
     sf_dir: str,
     entity: str = "event_type",
     stats_range: str | None = None,
-    **params,
+    user_col: str = "user_id",
+    k: int = 10,
 ) -> DataFrame:
+    """stats.entity.listeners (stats/listener/entity.py:20-28): top-K
+    listeners per entity + total distinct listener count."""
     ev = _range_filtered_events(spark, sf_dir, stats_range)
-    return handlers.entity_listener_stats(ev, entity_col=entity, **params)
+    stat = entity_listener_stat(user_col, entity)
+    return final_entity_listener_stats(stat.aggregate(ev), user_col, entity, k=k)
 
 
 def _stats_listening_activity(

@@ -14,10 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from listenbrainz_server_spark.operators.aggregates import capped_count
 from listenbrainz_server_spark.operators.joins import densify
 from listenbrainz_server_spark.operators.sessionize import session_pairs, with_session_ids
-from listenbrainz_server_spark.operators.topk import global_top_k, top_k_per_group
+from listenbrainz_server_spark.operators.topk import top_k_per_group
 
 
 def user_entity_stats(
@@ -44,45 +43,6 @@ def user_entity_stats(
         k=k,
     )
     return ranked.withColumn("rank", F.col("rank").cast("bigint"))
-
-
-def sitewide_entity_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    entity_col: str = "event_type",
-    cap: int = 500,
-    k: int = 1000,
-) -> DataFrame:
-    """stats.sitewide.entity (sitewide/entity.py:50-59): per-user cap
-    before the global aggregate (anti-abuse + shuffle-skew control),
-    then global top-K."""
-    capped = capped_count(events, user_col, [entity_col], cap=cap)
-    return global_top_k(
-        capped, [F.col("listen_count").desc(), F.col(entity_col)], k
-    )
-
-
-def entity_listener_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    entity_col: str = "event_type",
-    k: int = 10,
-) -> DataFrame:
-    """stats.entity.listeners (stats/listener/entity.py:20-28): top-K
-    listeners per entity + total distinct listener count."""
-    counts = events.groupBy(entity_col, user_col).agg(
-        F.count(F.lit(1)).alias("listen_count")
-    )
-    w = Window.partitionBy(entity_col)
-    enriched = counts.withColumn(
-        "total_listeners", F.count(F.lit(1)).over(w).cast("bigint")
-    )
-    return top_k_per_group(
-        enriched,
-        partition_by=[entity_col],
-        order_by=[F.col("listen_count").desc(), F.col(user_col)],
-        k=k,
-    ).withColumn("rank", F.col("rank").cast("bigint"))
 
 
 def daily_activity(

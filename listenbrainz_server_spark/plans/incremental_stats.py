@@ -70,8 +70,9 @@ def final_sitewide_entity_stats(
     k: int = 1000,
 ) -> DataFrame:
     """generate_stats for the sitewide entity aggregate: global sum of
-    the per-(user, entity) capped partials, then global top-K —
-    matches the direct handler's capped_count → global_top_k shape.
+    the per-(user, entity) capped partials, then global top-K. The
+    direct stats.sitewide.entity request runs this over a single
+    aggregate pass.
 
     NEVER-PRUNED (the reference's sitewide semantics,
     stats/incremental/sitewide/entity.py:38-40): a sitewide stat's
@@ -97,7 +98,8 @@ def final_entity_listener_stats(
 ) -> DataFrame:
     """generate_stats for the listener aggregate: per-entity distinct
     listener total (window count over the combined per-(entity, user)
-    rows) + top-K listeners — the direct entity_listener_stats shape."""
+    rows) + top-K listeners. The direct stats.entity.listeners request
+    runs this over a single aggregate pass."""
     w_total = Window.partitionBy(entity_col)
     enriched = combined.withColumn(
         "total_listeners", F.count(F.lit(1)).over(w_total).cast("bigint")

@@ -18,7 +18,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# SPARK_GRAFT_CPUS overrides for a deployment; otherwise use the CPUs
+# this process may run on.
+_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_session(
@@ -30,9 +32,10 @@ def get_session(
     """Build (or fetch) the engine's SparkSession.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[$SPARK_GRAFT_CPUS]``, or to the CPUs this process
+    may use when that is unset.
     """
-    cpus = int(_DEFAULT_CPUS)
+    cpus = _DEFAULT_CPUS
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -66,35 +69,6 @@ def get_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def cluster_profile(executors: int = 1000, cores: int = 5, mem_gb: int = 16) -> dict[str, str]:
-    """Config deltas for a real multi-executor deployment at the
-    100 TB scale this engine targets (local[] testing uses the
-    defaults in get_session; spark-submit merges these on top).
-
-    Sizing rationale:
-    - shuffle.partitions ≈ 2-3× total cores so AQE coalesces DOWN
-      (splitting up is impossible); at 100 TB inputs this also keeps
-      post-shuffle partitions under ~256 MB for a ~20 TB shuffle.
-    - maxPartitionBytes 256m → ~400k input splits for 100 TB, fine
-      for a 1000-executor scheduler.
-    - Kryo + compressed broadcasts for the dimension-join path.
-    """
-    total_cores = executors * cores
-    return {
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(cores),
-        "spark.executor.memory": f"{mem_gb}g",
-        "spark.sql.shuffle.partitions": str(total_cores * 2),
-        "spark.sql.files.maxPartitionBytes": "256m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
-        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
-        "spark.sql.autoBroadcastJoinThreshold": "64m",
-        "spark.shuffle.service.enabled": "true",
-        "spark.dynamicAllocation.enabled": "true",
-        "spark.dynamicAllocation.maxExecutors": str(executors),
-    }
 
 
 def stop_session() -> None:

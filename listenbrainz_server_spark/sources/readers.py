@@ -76,15 +76,6 @@ def jdbc_query(
     return reader.load()
 
 
-def rows_source(
-    spark: SparkSession, rows: list, schema: StructType | str
-) -> DataFrame:
-    """S5/S13: driver-materialized source (REST fetch results, generated
-    time-range dimensions — fresh_releases.py:20-41,
-    listening_activity.py:188-202). Keep such tables broadcast-small."""
-    return spark.createDataFrame(rows, schema)
-
-
 MLHD_LISTEN_SCHEMA = (
     "listened_at BIGINT, artist_credit_mbids STRING, "
     "release_mbid STRING, recording_mbid STRING"

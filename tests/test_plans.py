@@ -21,9 +21,8 @@ def plan_of(spark, registry, name: str) -> str:
     # cache_disabled: assert the direct-scan shape (what every table is
     # at 100 TB, where the catalog's size gate turns caching off) —
     # an InMemoryTableScan would hide PushedFilters/ReadSchema.
-    from listenbrainz_server_spark.catalog import cache_disabled, clear_table_cache
+    from listenbrainz_server_spark.catalog import cache_disabled
 
-    clear_table_cache()
     with cache_disabled():
         df = registry[name].fn(spark, SF)
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from listenbrainz_server_spark.catalog import TPCH_TABLES, load_table
+from listenbrainz_server_spark.catalog import TPCH_TABLES, cache_disabled, load_table
 from listenbrainz_server_spark.schemas import TABLE_SCHEMAS, validate
 
 SF = "/root/testdata/sf0.001"
@@ -42,23 +42,22 @@ def test_events_ts_stable_under_hostile_session_confs(spark):
     spark.sql.timestampType=TIMESTAMP_NTZ (makes a DDL-keyword
     "timestamp" cast a no-op → schema drift). load_table must yield
     the same epoch instants and TimestampType either way."""
-    from listenbrainz_server_spark.catalog import load_table
 
-    baseline = (
-        load_table(spark, SF, "events", use_cache=False)
-        .selectExpr("min(unix_micros(ts)) AS lo", "max(unix_micros(ts)) AS hi")
-        .collect()[0]
-    )
+    def ts_range():
+        with cache_disabled():
+            return (
+                load_table(spark, SF, "events")
+                .selectExpr("min(unix_micros(ts)) AS lo", "max(unix_micros(ts)) AS hi")
+                .collect()[0]
+            )
+
+    baseline = ts_range()
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     prev_tt = spark.conf.get("spark.sql.timestampType")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
-        hostile = (
-            load_table(spark, SF, "events", use_cache=False)
-            .selectExpr("min(unix_micros(ts)) AS lo", "max(unix_micros(ts)) AS hi")
-            .collect()[0]
-        )
+        hostile = ts_range()
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
         spark.conf.set("spark.sql.timestampType", prev_tt)

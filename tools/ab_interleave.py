@@ -5,7 +5,7 @@ every optimization decision is made on INTERLEAVED evidence: the old
 and new code run as alternating sequential processes inside one
 machine window, and per-query medians are compared old-vs-new.
 
-    python tools/ab_interleave.py <old_ref> <q1,q2,...> [pairs]
+    python tools/ab_interleave.py <old_ref> <q1,q2,...> [pairs] [--tag NAME]
 
 - <old_ref>: a git ref (commit/branch) for the OLD side; a detached
   worktree is created under a private tempdir and removed afterwards.
@@ -21,6 +21,7 @@ same JSON to plans/r15/AB_<tag>.json when --tag is given.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -49,15 +50,18 @@ def run_leg(script_dir: str, names: list[str]) -> dict[str, float]:
     raise SystemExit(f"leg in {script_dir} printed no JSON line")
 
 
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    p = argparse.ArgumentParser(description="Interleaved old/new bench.py legs.")
+    p.add_argument("old_ref")
+    p.add_argument("names", type=lambda s: s.split(","))
+    p.add_argument("pairs", nargs="?", type=int, default=3)
+    p.add_argument("--tag")
+    return p.parse_intermixed_args(argv)
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--tag")]
-    tag = None
-    for a in sys.argv[1:]:
-        if a.startswith("--tag="):
-            tag = a.split("=", 1)[1]
-    old_ref = args[0]
-    names = args[1].split(",")
-    pairs = int(args[2]) if len(args) > 2 else 3
+    args = parse_args(sys.argv[1:])
+    old_ref, names, pairs, tag = args.old_ref, args.names, args.pairs, args.tag
 
     wt = os.path.join(tempfile.mkdtemp(prefix="ab_worktree_"), "old")
     r = subprocess.run(

@@ -88,9 +88,9 @@ def _package_import_graph() -> dict[str, set[str]]:
     under-run), and a change to ONE leaf operator module would force
     the FULL 294-name sf0.1 sweep (~20 min) instead of its actual
     dependents. There is no dynamic import / string-keyed UDF
-    registration in the package (checked: the only name-based
-    registration is catalog.register_views, and every consumer
-    imports catalog directly), so the static graph is sound; any
+    registration in the package (checked: nothing registers a temp
+    view or UDF by name, and every consumer imports catalog
+    directly), so the static graph is sound; any
     changed path NOT in the graph still forces the conservative full
     pass in _stale_names.
     """
@@ -567,6 +567,37 @@ def _prior_query_map(prior_bench: str, old_head: str):
     return {}, None
 
 
+ABA_CONFIRM_MARGIN = 1.15
+
+
+def _adjudicate(new1, old, new2, sweep_ratio: float | None) -> dict:
+    """Stamp one mover from its matched new/old/new legs, drift-
+    conservatively: a regression is confirmed only if even HEAD's better
+    leg is >= ABA_CONFIRM_MARGIN x old, an improvement only if even
+    HEAD's worse leg is <= old / ABA_CONFIRM_MARGIN. A sweep ratio picks
+    the direction to test; a name with no ratio (selected as
+    round-touched) is tested both ways and stamped with whichever
+    direction clears the margin."""
+    margin = ABA_CONFIRM_MARGIN
+    if None in (new1, old, new2) or old <= 0:
+        return {"ab_confirmed": None,
+                "note": "leg missing — adjudication unavailable"}
+    slower = round(min(new1, new2) / old, 3)
+    faster = round(max(new1, new2) / old, 3)
+    if sweep_ratio is None:
+        if slower >= margin:
+            return {"matched_ratio": slower, "ab_confirmed": True,
+                    "direction": "regressed"}
+        if faster <= 1 / margin:
+            return {"matched_ratio": faster, "ab_confirmed": True,
+                    "direction": "improved"}
+        return {"matched_ratio": slower if slower > 1 else faster,
+                "ab_confirmed": False}
+    if sweep_ratio > 1:  # apparent regression
+        return {"matched_ratio": slower, "ab_confirmed": slower >= margin}
+    return {"matched_ratio": faster, "ab_confirmed": faster <= 1 / margin}
+
+
 def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
     """Same-session A-B-A anchor for the headline movers (VERDICT r12
     #1): cross-window headline ratios on this box carry ±40% drift —
@@ -588,11 +619,9 @@ def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
        recorded in CHECK_full_r{N-1}.json);
     3. run bench.py --only <movers> new → old → new in ONE session
        (sequential JVMs, no concurrent Spark — the measurement rules);
-    4. stamp each mover ab_confirmed from the MATCHED-condition legs,
-       direction-aware and drift-conservative: an apparent regression
-       is confirmed only if even HEAD's BETTER leg is >=1.15x the old
-       snapshot; an apparent improvement only if even HEAD's WORSE leg
-       is <=1/1.15x.
+    4. stamp each mover ab_confirmed from the MATCHED-condition legs
+       (``_adjudicate``): the sweep's direction for ratio movers, both
+       directions for round-touched names.
 
     Writes ABA_latest.json; bench.py's headline mode attaches it so
     BENCH_r{N} (the driver-recorded artifact) carries the field.
@@ -614,7 +643,7 @@ def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
         "git_head": _head(),
         "generated": time.strftime("%Y-%m-%dT%H:%M:%S"),
         "threshold": threshold,
-        "confirm_margin": 1.15,
+        "confirm_margin": ABA_CONFIRM_MARGIN,
         "movers": {},
     }
     prior_bench = os.path.join(REPO, f"BENCH_r{rnd - 1:02d}.json")
@@ -755,24 +784,7 @@ def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
         }
         if n not in ratios:
             m["selected_by"] = "round-touched"
-        if None in (new1, old, new2) or old <= 0:
-            m["ab_confirmed"] = None
-            m["note"] = "leg missing — adjudication unavailable"
-        elif ratios.get(n, 1.0) > 1:  # apparent/possible regression
-            m["matched_ratio"] = round(min(new1, new2) / old, 3)
-            m["ab_confirmed"] = m["matched_ratio"] >= 1.15
-            # A touched name with no sweep signal still gets a
-            # direction: flag whichever matched-condition movement
-            # clears the confirm margin.
-            if n not in ratios and not m["ab_confirmed"]:
-                impr = round(max(new1, new2) / old, 3)
-                if impr <= 1 / 1.15:
-                    m["matched_ratio"] = impr
-                    m["ab_confirmed"] = True
-                    m["direction"] = "improved"
-        else:  # apparent improvement
-            m["matched_ratio"] = round(max(new1, new2) / old, 3)
-            m["ab_confirmed"] = m["matched_ratio"] <= 1 / 1.15
+        m.update(_adjudicate(new1, old, new2, ratios.get(n)))
         base["movers"][n] = m
     json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
     n_conf = sum(1 for m in base["movers"].values() if m["ab_confirmed"])

@@ -13,6 +13,28 @@ import re
 import sys
 
 
+def _seconds(value: str, unit: str) -> float:
+    return float(value) / 1000.0 if unit == "ms" else float(value)
+
+
+def parse_line(ln: str) -> tuple[str, float, str] | None:
+    """("job" | "stage", seconds, label) for a DAGScheduler finish line,
+    else None. Both line kinds print their duration in s or ms."""
+    jm = re.search(r"Job (\d+) finished: (.*), took ([\d.]+) (m?s)", ln)
+    if jm:
+        return "job", _seconds(jm.group(3), jm.group(4)), f"job{jm.group(1)} {jm.group(2)[:60]}"
+    sm = re.search(
+        r"(ShuffleMapStage|ResultStage) (\d+) \((.*)\) finished in ([\d.]+) (m?s)", ln
+    )
+    if sm:
+        return (
+            "stage",
+            _seconds(sm.group(4), sm.group(5)),
+            f"{sm.group(1)[:8]}{sm.group(2)} {sm.group(3)[:55]}",
+        )
+    return None
+
+
 def main() -> None:
     path = sys.argv[1]
     sections: list[tuple[str, float, list[str]]] = []
@@ -29,20 +51,10 @@ def main() -> None:
         jobs: list[tuple[float, str]] = []
         stages: list[tuple[float, str]] = []
         for ln in lines:
-            jm = re.search(r"Job (\d+) finished: (.*), took ([\d.]+) m?s", ln)
-            if jm:
-                ms = float(jm.group(3))
-                jobs.append((ms / 1000.0, f"job{jm.group(1)} {jm.group(2)[:60]}"))
-            sm = re.search(
-                r"(ShuffleMapStage|ResultStage) (\d+) \((.*)\) finished in ([\d.]+) (m?s)",
-                ln,
-            )
-            if sm:
-                v = float(sm.group(4))
-                secs = v / 1000.0 if sm.group(5) == "ms" else v
-                stages.append(
-                    (secs, f"{sm.group(1)[:8]}{sm.group(2)} {sm.group(3)[:55]}")
-                )
+            timed = parse_line(ln)
+            if timed is not None:
+                kind, secs, label = timed
+                (jobs if kind == "job" else stages).append((secs, label))
         jt = sum(s for s, _ in jobs)
         st = sum(s for s, _ in stages)
         print(f"\n=== {name}: wall {wall:.2f}s | {len(jobs)} jobs "
