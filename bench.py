@@ -12,28 +12,21 @@ parser to recover the JSON line intact.
 Each query is timed to full materialization (noop-format write — same
 work the correctness gate does, minus driver-side collection).
 
-Headline timings are the MEDIAN OF 3 runs per query (VERDICT r4 #4):
-single-shot numbers mix first-touch costs (JIT, Arrow worker spin-up,
-parquet footer caches) into whichever queries run early, which round 4
-showed can fabricate 15%+ "regressions" that a second run disproves.
-The --all sweep runs ONE UNTIMED WARM-UP per query (VERDICT r11 #1 —
-a single-run sweep otherwise times run 0 of cold mapInPandas stages,
-the documented ~5 s worker spin-up trap) then a single timed pass,
-promoting any query whose warm run exceeds 2 s to median-of-3; every
-sample plus per-query warm-up seconds land in BENCH_full_latest.json,
-and queries whose cold run exceeded 1.5x their warm median are listed
-under "cold_start". Both modes stamp "window_unstable" from the
-INTERLEAVED probe trace (max/min of single-shot probes taken every
-PROBE_EVERY queries > 1.6x, first trace point skipped — calibrated on
-three measured flat windows reading 1.25-1.56 after the skip, vs the
-r11 mid-sweep ~2x tail the flag exists for; normalized cross-round
-ratios from a tripped window carry the probe's noise, not the
-queries'). Runs too short to produce >= 2 usable trace points (e.g.
---only deltas, which get only the qi=0 probe) stamp the flag null —
-the retired start/end-pair rule reads ~2.1x even on healthy warmed
-sweeps, so it cannot substitute. The start/end probe pair stays
-recorded but is a JVM-maturation readout ("jvm_maturation", ~2-4x on
-a healthy sweep), not a drift signal.
+Headline timings are the MEDIAN OF 3 runs per query: single-shot
+numbers mix first-touch costs (JIT, Arrow worker spin-up, parquet
+footer caches) into whichever queries run early, which can fabricate
+15%+ "regressions" that a second run disproves. The --all sweep runs
+ONE UNTIMED WARM-UP per query (a single-run sweep otherwise times run 0
+of cold mapInPandas stages, the ~5 s Python-worker spin-up) then a
+single timed pass, promoting any query whose warm run exceeds 2 s to
+median-of-3; every sample plus per-query warm-up seconds land in
+BENCH_full_latest.json, and queries whose cold run exceeded 1.5x their
+warm median are listed under "cold_start".
+
+Seconds from different runs of this script drift up to ±40% between
+windows on unchanged code (measured on a 4-core host); judge a
+wall-time change with tools/ab.py, which interleaves old and new legs
+of this script.
 """
 
 from __future__ import annotations
@@ -49,23 +42,22 @@ from listenbrainz_server_spark.queries import load_all
 from listenbrainz_server_spark.session import get_session
 
 # The driver recovers the headline JSON from a bounded stdout tail
-# (2,000 chars measured: r12's 1,695-char line parsed, r13's
-# 2,280-char line recorded parsed:null — VERDICT r13 #1). Budget the
-# emitted line below that with headroom.
+# (2,000 chars measured: a 1,695-char line parsed, a 2,280-char line
+# recorded parsed:null). Budget the emitted line below that with
+# headroom.
 LINE_BUDGET = 1900
 
 
 def headline_line(out: dict) -> str:
     """Serialize the headline JSON line, enforcing LINE_BUDGET chars.
 
-    Progressive trim order if over budget: probe_trace (recoverable by
-    re-running), then the aba verdict map (full adjudication lives in
-    ABA_latest.json), then the per-query timings (value /
-    value_normalized always survive). Dropped keys are recorded under
-    "trimmed" so a reader knows the omission was deliberate.
+    Progressive trim order if over budget: the aba verdict map (full
+    adjudication lives in ABA_latest.json), then the per-query timings
+    (value always survives). Dropped keys are recorded under "trimmed"
+    so a reader knows the omission was deliberate.
     """
     line = json.dumps(out, separators=(",", ":"))
-    for trim in ("probe_trace", "aba", "queries"):
+    for trim in ("aba", "queries"):
         if len(line) <= LINE_BUDGET:
             break
         if trim in out:
@@ -162,53 +154,6 @@ HEADLINE_NEW = (
 )
 
 
-# --- In-session calibration probe (VERDICT r8 #2) -------------------
-# This box's throughput drifts +/-40% between bench windows hours
-# apart (measured on UNCHANGED code — see NEXT.md and memory note), so
-# raw cross-round seconds carry no signal. Every sweep therefore runs
-# a fixed probe (a1_pricing_summary, median of 3) at sweep START and
-# END and records both; "normalized" values divide the raw seconds by
-# (probe_median / PROBE_REF_SECS) so a round-over-round reader can
-# compare speeds with the window's drift divided out.
-#
-# RE-PIN (r13, advisor r12): the original 0.36 pin (r9, measured
-# [0.42, 0.29]) predates the r12 warmed-probe methodology — _run_probe
-# now warms its own plan untimed, which reads systematically lower
-# (r12 measured warmed start 0.399 vs un-warmed 0.425), so keeping the
-# un-warmed pin inflated value_normalized a few percent across the
-# methodology boundary. New pin = the r12 full-sweep warmed pair
-# [0.38, 0.227] -> median 0.304, taken on a trace-flat window
-# (window_unstable=false, trace 0.30-0.38). Cross-round normalized
-# ratios across the r12->r13 boundary must rescale old values by
-# 0.36/0.304 ~= 1.18 (or compare raw like-for-like, as the
-# measurement rules prefer anyway).
-PROBE_QUERY = "a1_pricing_summary"
-PROBE_REF_SECS = 0.304  # r12 full-sweep warmed [0.38, 0.227] median
-
-
-def _run_probe(spark, registry, sf_dir: str) -> float:
-    # One untimed execution first (r12): every recorded probe pair up
-    # to r11 showed start ≈ 2.3-4x end (r10 0.793/0.198, r11
-    # 0.53/0.208, r12 first sweeps 0.425/0.183 and 0.507/0.218) — a
-    # SYSTEMATIC signature, not drift: the start probe ran in a
-    # semi-cold JVM (codegen for the noop-write plan) while the end
-    # probe ran after the whole sweep. That constant artifact tripped
-    # window_unstable on every sweep and made normalized cross-round
-    # ratios unadjudicable. Warm the probe's own plan untimed so the
-    # flag measures the WINDOW, not JIT.
-    registry[PROBE_QUERY].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    samples = []
-    for _ in range(3):
-        t0 = time.time()
-        registry[PROBE_QUERY].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        samples.append(time.time() - t0)
-    return round(sorted(samples)[1], 3)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
@@ -222,11 +167,10 @@ def main() -> None:
         only = sys.argv[sys.argv.index("--only") + 1].split(",")
         run_all = True
     # --no-artifact: measure and print the JSON line but do NOT write /
-    # merge BENCH_full_latest.json. Used by the endround A-B-A legs
-    # (tools/endround.py), whose measurements are evidence about a
-    # specific code snapshot in a specific window — merging them into
-    # the artifact of record would contaminate it with repeated-leg
-    # numbers taken under deliberately different code.
+    # merge BENCH_full_latest.json. Used by the tools/ab.py legs, whose
+    # measurements are evidence about one code snapshot in one window;
+    # merging them would mix deliberately different code into the
+    # artifact of record.
     no_artifact = "--no-artifact" in sys.argv
 
     spark = get_session("bench")
@@ -247,7 +191,6 @@ def main() -> None:
     # Warm the JVM + parquet footers once so per-query numbers measure
     # query execution, not session cold-start.
     registry["a1_pricing_summary"].fn(spark, sf_dir).count()
-    probe_start = _run_probe(spark, registry, sf_dir)
     # Warm MLlib's ALS codepath too: the first fit in a fresh JVM pays
     # ~2-10 s of JIT that would otherwise be billed to whichever ALS
     # query runs first (measured: m_als_cv 11.0 s cold vs 8.5 s warm).
@@ -261,42 +204,19 @@ def main() -> None:
 
     # --all: ONE UNTIMED WARM-UP per query, then one timed pass; any
     # query over HEAVY_SECS (warm) gets two more runs and reports the
-    # median (VERDICT r5 #4: a 1-run full bench cannot distinguish
-    # regression from noise exactly where it matters — the heavies).
-    # The warm-up (VERDICT r11 #1) exists because a single-run sweep
-    # otherwise times run 0 of cold mapInPandas stages — the repo's
-    # own documented ~5 s Python-worker spin-up trap — manufacturing
-    # phantom regressions in the artifact of record (r11:
-    # mm_decode_features read 2.7x its headline median; g_pagerank
-    # 2.3x; both IMPROVED in the median-of-3 headline). Warm-up
+    # median, because a 1-run sweep cannot tell regression from noise
+    # exactly where it matters, on the heavies. The warm-up absorbs the
+    # ~5 s cold mapInPandas worker spin-up, which otherwise read as
+    # 2-3x phantom regressions (mm_decode_features, g_pagerank); its
     # seconds are recorded per query (warmup_secs) and any query whose
     # cold run exceeds 1.5x its warm median is flagged in cold_start.
     runs = 1 if run_all else 3
     HEAVY_SECS = 2.0
-    # Intra-sweep drift trace (r11, now the instability signal in
-    # BOTH modes): a 1-sample probe every PROBE_EVERY queries records
-    # WHEN the window moved. r12 measured WHY the start/end pair
-    # cannot serve that role: with the probe's own plan warmed, the
-    # pair still reads ~2.1x (0.399/0.193) while the interleaved
-    # trace is FLAT (0.316-0.416) — the pair gap is whole-JVM C2
-    # maturation plus back-to-back-repetition cache effects, not
-    # window drift, and it reproduces every sweep (r10 0.793/0.198,
-    # r11 0.53/0.208). So window_unstable compares trace points
-    # (same single-shot methodology, interleaved with the same kind
-    # of work); the pair stays recorded for maturation visibility.
-    PROBE_EVERY = 50 if run_all else 10
-    probe_trace: list[list] = []
     timings: dict[str, float] = {}
     samples_by_query: dict[str, list[float]] = {}
     warmup_by_query: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for qi, name in enumerate(names):
-        if qi % PROBE_EVERY == 0:
-            t0 = time.time()
-            registry[PROBE_QUERY].fn(spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            probe_trace.append([qi, round(time.time() - t0, 3)])
+    for name in names:
         samples: list[float] = []
 
         def one_run() -> None:
@@ -308,11 +228,6 @@ def main() -> None:
 
         try:
             if run_all:
-                # Untimed warm-up (VERDICT r11 #1): absorbs Python
-                # worker spin-up / JIT / footer caches so the timed
-                # run measures steady state, same as the headline's
-                # median-of-3 does implicitly. Duration recorded so
-                # cold-start cost stays visible instead of billed.
                 one_run()
                 warmup_by_query[name] = round(samples.pop(), 2)
             for _ in range(runs):
@@ -328,48 +243,13 @@ def main() -> None:
         # whose GC releases accumulated localCheckpoint RDD blocks —
         # without this, block-manager pressure from ~200 earlier
         # queries inflated the mid-alphabet ML heavies ~3x in the full
-        # sweep (m_als_cv 25.3 s in-sweep vs 7.8 s fresh-session,
-        # measured r8; the same query, same code, same box).
+        # sweep (m_als_cv 25.3 s in-sweep vs 7.8 s fresh-session; the
+        # same query, same code, same box).
         import gc as _gc
 
         spark.catalog.clearCache()
         _gc.collect()
 
-    probe_end = _run_probe(spark, registry, sf_dir)
-    probe_median = round((probe_start + probe_end) / 2, 3)
-    window_factor = round(probe_median / PROBE_REF_SECS, 3)
-    # Machine-readable instability flag (VERDICT r11 #2, redefined
-    # r12): computed over the INTERLEAVED single-shot trace, not the
-    # start/end pair — the pair gap is a reproducible ~2.1-4x JVM-
-    # maturation signature even on a flat window (see PROBE_EVERY
-    # comment), so a pair rule tripped on every sweep and said
-    # nothing. The trace's FIRST point is skipped (taken right after
-    # session warm-up, it still carries ramp) and the threshold is
-    # calibrated on measured flat windows: three flat sweeps read
-    # max/min 1.25-1.56 after the skip (residual ramp at the second
-    # point), while the failure mode this flag exists for — the r11
-    # mid-sweep ~2x tail inflation — reads >= 2x. Tripping means the
-    # window itself moved mid-sweep; readers (and tools/endround.py,
-    # which re-runs once) should then prefer raw like-for-like or
-    # same-session A/Bs over this artifact's normalized value.
-    trace_vals = [s for _, s in probe_trace[1:]]
-    if len(trace_vals) >= 2:
-        window_unstable = (
-            max(trace_vals) / max(min(trace_vals), 1e-9) > 1.6
-        )
-    else:
-        # Short run (--only delta: only the qi=0 probe fires) — no
-        # usable trace. The start/end pair CANNOT substitute: it reads
-        # ~2.1x on healthy warmed sweeps (JVM maturation, see the
-        # PROBE_EVERY comment), so a pair rule here would spuriously
-        # self-flag every short run (advisor r12). Stamp null: "not
-        # measured", distinct from both stable and unstable. Merged
-        # artifacts drop the flag regardless, and endround's re-run
-        # trigger treats null as falsy — no behavior change there.
-        window_unstable = None
-    # start/end ratio exported for maturation visibility — expect
-    # ~2-4x on a healthy sweep; it is NOT a drift signal.
-    jvm_maturation = round(probe_start / max(probe_end, 1e-9), 2)
     total = round(sum(timings.values()), 2)
     out = {
         "metric": "headline_query_wall_seconds" if not run_all else "total_query_wall_seconds",
@@ -378,22 +258,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "runs_per_query": runs,
-        # Drift calibration (VERDICT r8 #2): divide raw seconds by
-        # window_factor to compare across bench windows. probe_secs =
-        # [start, end] medians; a large start/end gap means the window
-        # itself was unstable and even normalized numbers are suspect.
-        "probe_secs": [probe_start, probe_end],
-        "probe_ref_secs": PROBE_REF_SECS,
-        "window_factor": window_factor,
-        "window_unstable": window_unstable,
-        "jvm_maturation": jvm_maturation,
-        "probe_trace": probe_trace,
-        "value_normalized": round(total / window_factor, 2) if window_factor else None,
     }
     if run_all:
-        # cold_start: queries whose untimed warm-up ran >1.5x their
-        # warm median — exactly the set whose single-run reading
-        # would have manufactured a phantom regression pre-r12.
         out["cold_start"] = {
             n: warmup_by_query[n]
             for n in sorted(timings)
@@ -407,16 +273,12 @@ def main() -> None:
     if errors:
         out["errors"] = errors
     if not run_all:
-        # VERDICT r12 #1: attach the endround A-B-A adjudication so the
-        # headline artifact of record (the driver-recorded stdout of
-        # this mode) carries ab_confirmed per mover — a cross-window
-        # headline ratio alone cannot distinguish code effect from the
-        # box's ±40% drift (r12's 1.20x phantom regression shipped
-        # under a "stable" stamp). ABA_latest.json is produced by
-        # tools/endround.py: top headline movers re-run old→new
-        # snapshots back-to-back in ONE session. head_moved flags
-        # whether query-affecting paths changed since the A-B-A ran —
-        # if true, the adjudication describes an older engine state.
+        # Attach the endround A/B verdicts (ABA_latest.json, written by
+        # tools/endround.py) so the headline artifact of record carries
+        # ab_confirmed per mover: a cross-window headline ratio alone
+        # cannot tell a code effect from drift. head_moved
+        # flags whether query-affecting paths changed since the A/B ran,
+        # in which case it describes an older engine state.
         aba_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "ABA_latest.json"
         )
@@ -435,12 +297,9 @@ def main() -> None:
                     capture_output=True, text=True,
                 )
                 head_moved = bool(r.returncode) or bool(r.stdout.strip())
-            # VERDICT r13 #1: the full per-mover legs/ratios block
-            # pushed the r13 headline line past the driver's 2,000-char
-            # parse window (r12: 1,695 chars parsed; r13: 2,280 did
-            # not). The stdout line carries only the verdicts —
-            # {name: ab_confirmed} — plus a pointer; legs, ratios and
-            # heads live in ABA_latest.json.
+            # Verdicts only ({name: ab_confirmed}) plus a pointer: the
+            # per-mover legs pushed the line past the 2,000-char parse
+            # window (LINE_BUDGET). Legs, ratios and heads stay in the file.
             out["aba"] = {
                 "round": aba.get("round"),
                 "head_moved": head_moved,
@@ -451,28 +310,19 @@ def main() -> None:
                 "ref": "ABA_latest.json",
             }
     if run_all and not no_artifact:
-        # Side artifact for round-over-round regression tracking of the
-        # full registry (VERDICT r2 #5) — the stdout line stays the
-        # driver's parse target. Per-run samples let a reader separate
-        # noise from regression without re-running.
+        # Side artifact for regression tracking of the full registry —
+        # the stdout line stays the headline parse target. Per-run
+        # samples let a reader separate noise from regression without
+        # re-running. query_window stamps WHEN each number was taken,
+        # because a merged artifact mixes windows.
         path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                             "BENCH_full_latest.json")
-        # Every query measured this invocation is stamped with this
-        # window id so a merged artifact records WHEN/WHERE each number
-        # was taken (advisor r8: a spliced total mixes windows that
-        # drift +/-40% — the stamp + "merged" flag make that legible,
-        # and window_factor makes the numbers comparable anyway).
         window_id = time.strftime("%Y-%m-%dT%H:%M:%S")
-        window_meta = {"window_id": window_id, "window_factor": window_factor,
-                       "probe_secs": [probe_start, probe_end],
-                       "window_unstable": window_unstable,
-                       "probe_trace": probe_trace}
         artifact = {
             **out,
             "samples": samples_by_query,
             "warmup_secs": warmup_by_query,
             "sf_dir": sf_dir,
-            "windows": {window_id: window_meta},
             "query_window": {n: window_id for n in timings},
         }
         if only and os.path.exists(path):
@@ -494,31 +344,21 @@ def main() -> None:
             merged_e = {**prior.get("errors", {}), **errors}
             for n in timings:  # a now-passing query clears its old error
                 merged_e.pop(n, None)
-            merged_w = {**prior.get("windows", {}), window_id: window_meta}
             merged_qw = {**prior.get("query_window", {}),
                          **{n: window_id for n in timings}}
+            # Built from this run's keys, not the prior's, so fields an
+            # older bench.py wrote do not ride along forever.
             artifact = {
-                **prior,
+                **out,
                 "queries": merged_q,
                 "samples": merged_s,
                 "warmup_secs": merged_wu,
                 "cold_start": merged_cs,
                 "value": round(sum(merged_q.values()), 2),
                 "merged": True,
-                "windows": merged_w,
+                "sf_dir": sf_dir,
                 "query_window": merged_qw,
             }
-            # The single-window normalization trio describes ONE
-            # sweep; a merged artifact mixes windows (per-query
-            # window ids above), so carrying the prior's values
-            # forward would pair a mixed-window total with one
-            # window's probe — drop them (readers normalize per
-            # query via query_window -> windows[...].factor).
-            for stale in ("value_normalized", "window_factor",
-                          "probe_secs", "probe_ref_secs",
-                          "window_unstable", "jvm_maturation",
-                          "probe_trace"):
-                artifact.pop(stale, None)
             if merged_e:
                 artifact["errors"] = merged_e
             else:

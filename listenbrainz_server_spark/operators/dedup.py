@@ -322,7 +322,10 @@ def connected_components(
     # state frame and splitting with post-materialization filters.
     contract_after = 2
     phase = "plain"
-    while rounds < max_iter:
+    # The plain round that confirms a contraction fixpoint does not
+    # count against max_iter: a contraction that converges on the last
+    # allowed round still gets its proof instead of a spurious warning.
+    while rounds < max_iter + (phase == "confirm"):
         rounds += 1
         if phase != "contract":
             # Pointer edges (l(v) → v) ride the SAME join as graph

@@ -96,8 +96,21 @@ def test_connected_components_shuffled_chain_contracts(spark):
     )
     stats: dict = {}
     out = connected_components(nodes, pairs, max_iter=25, stats=stats)
-    assert {r.group_id for r in out.collect()} == {0}
+    labels = {(r.id, r.group_id) for r in out.collect()}
+    assert {g for _, g in labels} == {0}
     assert stats["rounds"] <= 12, stats
+
+    # The confirming plain round is not counted against max_iter: with
+    # max_iter set so the contraction converges on the last allowed
+    # round, the confirm round still runs, silently, with equal labels.
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        tight = connected_components(
+            nodes, pairs, max_iter=stats["rounds"] - 1
+        )
+        assert {(r.id, r.group_id) for r in tight.collect()} == labels
 
 
 def test_connected_components_warns_when_not_converged(spark):

@@ -21,9 +21,12 @@ Runs, in order:
      sweep (deferred with a printed notice on --delta). rc-enforced —
      the r13 one-time sweep found 4 scale defects invisible at every
      sf0.01 gate;
-  4. (full pass only) the A-B-A anchor — headline movers >1.3x vs the
-     prior round re-run new→old→new against the prior snapshot in one
-     session → ABA_latest.json (VERDICT r12 #1), and
+  4. (full pass only) the A/B anchor — the sweep's movers (>1.3x vs
+     the prior round, plus names whose code changed since its head,
+     capped at 20) run as 3 interleaved old/new pairs against the prior
+     round's snapshot through tools/ab.py, each stamped improved,
+     regressed or unconfirmed by its both-direction rule →
+     ABA_latest.json, and
   5. (full pass only) tools/recall_smoke.py — auto ANN-dial recall vs
      brute force at sf0.1 + sf1, rc-enforced (VERDICT r12 #2).
 
@@ -567,83 +570,37 @@ def _prior_query_map(prior_bench: str, old_head: str):
     return {}, None
 
 
-ABA_CONFIRM_MARGIN = 1.15
-
-
-def _adjudicate(new1, old, new2, sweep_ratio: float | None) -> dict:
-    """Stamp one mover from its matched new/old/new legs, drift-
-    conservatively: a regression is confirmed only if even HEAD's better
-    leg is >= ABA_CONFIRM_MARGIN x old, an improvement only if even
-    HEAD's worse leg is <= old / ABA_CONFIRM_MARGIN. A sweep ratio picks
-    the direction to test; a name with no ratio (selected as
-    round-touched) is tested both ways and stamped with whichever
-    direction clears the margin."""
-    margin = ABA_CONFIRM_MARGIN
-    if None in (new1, old, new2) or old <= 0:
-        return {"ab_confirmed": None,
-                "note": "leg missing — adjudication unavailable"}
-    slower = round(min(new1, new2) / old, 3)
-    faster = round(max(new1, new2) / old, 3)
-    if sweep_ratio is None:
-        if slower >= margin:
-            return {"matched_ratio": slower, "ab_confirmed": True,
-                    "direction": "regressed"}
-        if faster <= 1 / margin:
-            return {"matched_ratio": faster, "ab_confirmed": True,
-                    "direction": "improved"}
-        return {"matched_ratio": slower if slower > 1 else faster,
-                "ab_confirmed": False}
-    if sweep_ratio > 1:  # apparent regression
-        return {"matched_ratio": slower, "ab_confirmed": slower >= margin}
-    return {"matched_ratio": faster, "ab_confirmed": faster <= 1 / margin}
-
-
 def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
-    """Same-session A-B-A anchor for the headline movers (VERDICT r12
-    #1): cross-window headline ratios on this box carry ±40% drift —
-    r12's headline manufactured a 1.20x phantom regression under a
-    "stable" window stamp, disproved only by the judge's hand-run
-    worktree A-B-A. This automates that exact recipe at endround:
+    """Interleaved A/B of the round's movers against the prior round's
+    snapshot (the git_head recorded in CHECK_full_r{N-1}.json).
+    Cross-window headline ratios carry up to ±40% drift (measured on
+    a 4-core host), so a sweep ratio only nominates names; tools/ab.py
+    judges them.
 
-    1. movers = the top-10 names whose full-sweep time moved >1.3x vs
-       the prior round's artifact, PLUS every registered name whose
-       defining module changed since the prior round's head (the
-       import-closure stale set — VERDICT r14 #6: sweep-ratio-chosen
-       movers alone left a round's claims resting on 5 adjudications
-       picked by a garbage-window signal). The combined list is
-       ranked (ratio movers by |log ratio|, then touched names by
-       current sweep seconds) and capped at ABA_MAX_MOVERS=20 legs
-       per window; anything dropped by the cap is stamped under
-       "movers_capped" so the omission is legible;
-    2. git-worktree the prior round's engine snapshot (the git_head
-       recorded in CHECK_full_r{N-1}.json);
-    3. run bench.py --only <movers> new → old → new in ONE session
-       (sequential JVMs, no concurrent Spark — the measurement rules);
-    4. stamp each mover ab_confirmed from the MATCHED-condition legs
-       (``_adjudicate``): the sweep's direction for ratio movers, both
-       directions for round-touched names.
+    Movers are the top-10 names whose full-sweep time moved beyond
+    `threshold` vs the prior round's artifact, plus every registered
+    name whose defining module changed since the prior round's head
+    (the import-closure stale set), because the ratio signal is exactly
+    what a drifted window poisons. The list is ranked (ratio movers by
+    |log ratio|, then touched names by current sweep seconds) and
+    capped at ABA_MAX_MOVERS=20; names dropped by the cap are stamped
+    under "movers_capped". Each mover carries its per-pair `legs` and
+    a both-direction `ab_confirmed` / `direction` verdict.
 
-    Writes ABA_latest.json; bench.py's headline mode attaches it so
-    BENCH_r{N} (the driver-recorded artifact) carries the field.
-    Returns an error string or None.
+    Writes ABA_latest.json; bench.py's headline mode attaches its
+    verdicts to the artifact of record. Returns an error string or None.
     """
     import math
-    import shutil
     import time
 
+    import ab
+
     out_path = os.path.join(REPO, "ABA_latest.json")
-
-    def _head():
-        r = subprocess.run(["git", "rev-parse", "HEAD"], cwd=REPO,
-                           capture_output=True, text=True)
-        return r.stdout.strip() if r.returncode == 0 else None
-
     base = {
         "round": rnd,
-        "git_head": _head(),
+        "git_head": _git_head(),
         "generated": time.strftime("%Y-%m-%dT%H:%M:%S"),
         "threshold": threshold,
-        "confirm_margin": ABA_CONFIRM_MARGIN,
         "movers": {},
     }
     prior_bench = os.path.join(REPO, f"BENCH_r{rnd - 1:02d}.json")
@@ -671,10 +628,10 @@ def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
         json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
         print(f"  aba: {base['note']}")
         return None
-    # Advisor r13 #3: the sweep step can fail (or be skipped) — a
-    # missing/corrupt BENCH_full_latest.json must degrade to a stamped
-    # note, not an uncaught exception that aborts endround before the
-    # head-stamp and coverage assertions run.
+    # The sweep step can fail (or be skipped): a missing or corrupt
+    # BENCH_full_latest.json degrades to a stamped note, not an
+    # uncaught exception that aborts endround before the head-stamp
+    # and coverage assertions run.
     bench_path = os.path.join(REPO, "BENCH_full_latest.json")
     try:
         cur_q = json.load(open(bench_path)).get("queries", {})
@@ -695,12 +652,9 @@ def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
         key=lambda n: abs(math.log(ratios[n])),
         reverse=True,
     )[:10]
-    # Round-touched names (VERDICT r14 #6): adjudicate every query the
-    # round's code changes could affect, not just the sweep's ratio
-    # picks — the ratio signal is exactly what a drifted window
-    # poisons. Stale set = import-closure of the diff vs the prior
-    # round's head; ranked by current sweep seconds so the cap keeps
-    # the names whose adjudication moves the most total seconds.
+    # Round-touched names: the stale set is the import-closure of the
+    # diff vs the prior round's head, ranked by current sweep seconds
+    # so the cap keeps the names whose verdict moves the most seconds.
     registry = load_all()
     touched = _stale_names(registry, {"git_head": old_head})
     if touched is None:
@@ -728,68 +682,25 @@ def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
     print(f"  aba movers ({len(ratio_movers)} ratio + "
           f"{len(movers) - len(ratio_movers)} touched): {movers}")
 
-    # Advisor r13 #3: a fixed /tmp path can clobber unrelated content
-    # or collide across concurrent runs — take a fresh private dir and
-    # let git create the worktree inside it.
-    import tempfile
-
-    wt = os.path.join(tempfile.mkdtemp(prefix="aba_worktree_"), "snapshot")
-    r = subprocess.run(
-        ["git", "worktree", "add", "--detach", wt, old_head],
-        cwd=REPO, capture_output=True, text=True,
-    )
-    if r.returncode != 0:
-        return f"worktree add {old_head[:10]} failed: {r.stderr.strip()[:200]}"
-
-    def leg(script_dir: str, extra: list[str]) -> dict | str:
-        r = subprocess.run(
-            [sys.executable, os.path.join(script_dir, "bench.py"),
-             "--only", ",".join(movers), *extra],
-            cwd=script_dir, capture_output=True, text=True,
-        )
-        if r.returncode != 0:
-            return f"leg in {script_dir} exited {r.returncode}"
-        for ln in reversed(r.stdout.splitlines()):
-            if ln.startswith("{"):
-                return json.loads(ln).get("queries", {})
-        return f"leg in {script_dir} printed no JSON line"
-
     try:
-        # new → old → new: bracketing HEAD around the old snapshot so
-        # a mid-A-B-A window shift shows up as new1/new2 disagreement.
-        legs = {}
-        for label, (d, extra) in (
-            ("new1", (REPO, ["--no-artifact"])),
-            ("old", (wt, [])),  # old bench.py has no --no-artifact;
-            #                     its merge stays inside the worktree
-            ("new2", (REPO, ["--no-artifact"])),
-        ):
-            got = leg(d, extra)
-            if isinstance(got, str):
-                return got
-            legs[label] = got
-    finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt],
-                       cwd=REPO, capture_output=True)
-        shutil.rmtree(os.path.dirname(wt), ignore_errors=True)
-
+        result = ab.compare(old_head, movers, pairs=3)
+    except (RuntimeError, OSError) as e:
+        return f"A/B legs failed: {e}"
+    base["pairs"] = result["pairs"]
     for n in movers:
-        new1, old, new2 = (legs["new1"].get(n), legs["old"].get(n),
-                           legs["new2"].get(n))
         m = {
             "prior_round": prior_q.get(n),
             "this_sweep": cur_q[n],
             "sweep_ratio": round(ratios[n], 3) if n in ratios else None,
-            "legs": {"new1": new1, "old": old, "new2": new2},
+            **result["queries"][n],
         }
         if n not in ratios:
             m["selected_by"] = "round-touched"
-        m.update(_adjudicate(new1, old, new2, ratios.get(n)))
         base["movers"][n] = m
     json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
     n_conf = sum(1 for m in base["movers"].values() if m["ab_confirmed"])
-    print(f"  aba: {n_conf}/{len(movers)} movers confirmed real "
-          f"(rest are window drift)")
+    print(f"  aba: {n_conf}/{len(movers)} movers confirmed by "
+          f"{result['pairs']} interleaved pairs")
     return None
 
 
@@ -896,30 +807,9 @@ def main() -> int:
     if err:
         failures.append(f"sf0.1 gate: {err}")
 
-    # VERDICT r11 #2: an unstable probe window (interleaved trace
-    # max/min > 1.6x after the first-point skip — NOT the retired
-    # start/end-pair rule, which reads ~2.1x even on healthy sweeps)
-    # makes the sweep's normalized numbers unadjudicable — re-run the
-    # full bench ONCE when the artifact flags it. If the second window
-    # is also unstable, keep its flag (the artifact self-annotates)
-    # rather than loop; readers then prefer raw like-for-like.
     if not delta:
-        bpath = os.path.join(REPO, "BENCH_full_latest.json")
-        if os.path.exists(bpath):
-            with open(bpath) as f:
-                if json.load(f).get("window_unstable"):
-                    print("== full bench: window_unstable tripped, re-running once")
-                    r = subprocess.run(
-                        [sys.executable, os.path.join(REPO, "bench.py"), "--all"],
-                        cwd=REPO,
-                    )
-                    if r.returncode != 0:
-                        failures.append(f"bench re-run exited {r.returncode}")
-
-    if not delta:
-        # VERDICT r12 #1: adjudicate the headline movers with a
-        # same-session worktree A-B-A, right after the sweep so the
-        # legs share its window. Writes ABA_latest.json; bench.py's
+        # Judge the sweep's movers with interleaved A/B pairs against
+        # the prior round's snapshot. Writes ABA_latest.json; bench.py's
         # headline mode attaches it to the artifact of record.
         print("== aba anchor: headline movers vs prior round")
         err = run_aba(int(rnd))
