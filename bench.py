@@ -27,6 +27,14 @@ Seconds from different runs of this script drift up to ±40% between
 windows on unchanged code (measured on a 4-core host); judge a
 wall-time change with tools/ab.py, which interleaves old and new legs
 of this script.
+
+Each run executes under the Spark job group "bench:<name>:<i>". With
+--all / --only, the last timed run of each query is read back from
+Spark's own status stores into a per-query record (jobs, stages,
+tasks, executor time, shuffle and spill bytes, SQL executions and the
+executed plan-node counts), written under "records"; red_flags() is the
+one check on it. Profile one query with
+`python bench.py --only <name> --no-artifact`.
 """
 
 from __future__ import annotations
@@ -35,6 +43,8 @@ import json
 import os
 import sys
 import time
+
+from py4j.protocol import Py4JJavaError
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -65,6 +75,82 @@ def headline_line(out: dict) -> str:
             out["trimmed"] = out.get("trimmed", []) + [trim]
             line = json.dumps(out, separators=(",", ":"))
     return line
+
+
+def record(spark, group: str) -> dict:
+    """What the jobs of `group` executed, read from Spark's status
+    stores: the AppStatusStore for jobs and stages, the
+    SQLAppStatusStore for the plan graph of each SQL execution that ran
+    one of those jobs (final plans: AQE re-plans update the graph). Uses
+    only pyspark and JVM APIs, so tools/ab.py can run it on old trees."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the stores lag the scheduler
+    app = jsc.statusStore()
+    job_ids = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+    stage_ids, exec_ids = set(), set()
+    for jid in job_ids:
+        pair = app.jobWithAssociatedSql(jid)  # (JobData, Option[execution id])
+        it = pair._1().stageIds().iterator()
+        while it.hasNext():
+            stage_ids.add(it.next())
+        if pair._2().isDefined():
+            exec_ids.add(pair._2().get())
+    rec = {"jobs": len(job_ids), "stages": 0, "tasks": 0, "executor_run_s": 0.0,
+           "executor_cpu_s": 0.0, "shuffle_read_bytes": 0,
+           "shuffle_write_bytes": 0, "spill_bytes": 0,
+           "sql_executions": len(exec_ids)}
+    for sid in sorted(stage_ids):
+        try:
+            s = app.lastStageAttempt(sid)
+        except Py4JJavaError:
+            # Evicted, so skipped: past spark.ui.retainedStages the store
+            # drops skipped stages first (they have no completion time),
+            # and the run just read holds the newest executed ones.
+            continue
+        if s.status().toString() == "SKIPPED":  # output reused, nothing ran
+            continue
+        rec["stages"] += 1
+        rec["tasks"] += s.numTasks()
+        rec["executor_run_s"] += s.executorRunTime() / 1e3  # ms
+        rec["executor_cpu_s"] += s.executorCpuTime() / 1e9  # ns
+        rec["shuffle_read_bytes"] += s.shuffleReadBytes()
+        rec["shuffle_write_bytes"] += s.shuffleWriteBytes()
+        rec["spill_bytes"] += s.diskBytesSpilled()
+    rec["executor_run_s"] = round(rec["executor_run_s"], 2)
+    rec["executor_cpu_s"] = round(rec["executor_cpu_s"], 2)
+    sql = spark._jsparkSession.sharedState().statusStore()
+    ops: dict[str, int] = {}
+    for eid in sorted(exec_ids):
+        it = sql.planGraph(eid).allNodes().iterator()
+        while it.hasNext():
+            op = it.next().name().strip()
+            if not op.startswith("WholeStageCodegen"):  # wrappers, not operators
+                ops[op] = ops.get(op, 0) + 1
+    rec["ops"] = dict(sorted(ops.items()))
+    return rec
+
+
+# MLlib's ALS recommendForAllUsers cross-joins blocks of the user and
+# item factor matrices, and that blocked cross does execute (a
+# CartesianProduct in its executed plan). Each side is a rank-wide
+# factor block, so its cost is bounded by rank x block sizes: it is the
+# blocked algorithm, not a planning miss.
+CARTESIAN_OK = ("m_als_recommend",)
+
+
+def red_flags(records: dict[str, dict]) -> list[str]:
+    """The scale red flags in executed plans: any row-at-a-time Python
+    UDF (BatchEvalPython), and any CartesianProduct outside
+    CARTESIAN_OK."""
+    flags = []
+    for name, rec in sorted(records.items()):
+        ops = rec.get("ops", {})
+        if ops.get("BatchEvalPython"):
+            flags.append(f"{name}: row-at-a-time Python UDF (BatchEvalPython)")
+        if ops.get("CartesianProduct") and name not in CARTESIAN_OK:
+            flags.append(f"{name}: CartesianProduct")
+    return flags
+
 
 # One per family; the expensive ones stay in so regressions in the
 # heavy paths (ALS, cosine join, LSH re-rank, Arrow decode) are visible.
@@ -215,11 +301,13 @@ def main() -> None:
     timings: dict[str, float] = {}
     samples_by_query: dict[str, list[float]] = {}
     warmup_by_query: dict[str, float] = {}
+    records: dict[str, dict] = {}
     errors: dict[str, str] = {}
     for name in names:
         samples: list[float] = []
 
-        def one_run() -> None:
+        def one_run(run: int | str) -> None:
+            spark.sparkContext.setJobGroup(f"bench:{name}:{run}", name)
             t0 = time.time()
             df = registry[name].fn(spark, sf_dir)
             # Force full execution of every operator in the plan.
@@ -228,13 +316,15 @@ def main() -> None:
 
         try:
             if run_all:
-                one_run()
+                one_run("warmup")
                 warmup_by_query[name] = round(samples.pop(), 2)
-            for _ in range(runs):
-                one_run()
+            for i in range(runs):
+                one_run(i)
             if run_all and samples[0] > HEAVY_SECS:
-                one_run()
-                one_run()
+                one_run(runs)
+                one_run(runs + 1)
+            if run_all:
+                records[name] = record(spark, f"bench:{name}:{len(samples) - 1}")
             timings[name] = round(sorted(samples)[len(samples) // 2], 2)
             samples_by_query[name] = [round(s, 2) for s in samples]
         except Exception as e:  # noqa: BLE001 — one bad query must not kill the bench
@@ -260,6 +350,7 @@ def main() -> None:
         "runs_per_query": runs,
     }
     if run_all:
+        out["records"] = records
         out["cold_start"] = {
             n: warmup_by_query[n]
             for n in sorted(timings)
@@ -336,6 +427,7 @@ def main() -> None:
             merged_q = {**prior.get("queries", {}), **timings}
             merged_s = {**prior.get("samples", {}), **samples_by_query}
             merged_wu = {**prior.get("warmup_secs", {}), **warmup_by_query}
+            merged_r = {**prior.get("records", {}), **records}
             merged_cs = {
                 n: w
                 for n, w in merged_wu.items()
@@ -353,6 +445,7 @@ def main() -> None:
                 "queries": merged_q,
                 "samples": merged_s,
                 "warmup_secs": merged_wu,
+                "records": merged_r,
                 "cold_start": merged_cs,
                 "value": round(sum(merged_q.values()), 2),
                 "merged": True,

@@ -31,7 +31,9 @@ from listenbrainz_server_spark.plans.incremental_stats import (
     entity_listener_stat,
     final_entity_listener_stats,
     final_sitewide_entity_stats,
+    final_user_entity_stats,
     sitewide_entity_stat,
+    user_entity_stat,
 )
 from listenbrainz_server_spark.plans.ranges import resolve_range
 
@@ -86,10 +88,16 @@ def _stats_user_entity(
     sf_dir: str,
     entity: str = "event_type",
     stats_range: str | None = None,
-    **params,
+    user_col: str = "user_id",
+    k: int = 1000,
 ) -> DataFrame:
+    """stats.user.entity: the incremental provider's aggregate over the
+    ranged scan, then the same final query the incremental path runs."""
     ev = _range_filtered_events(spark, sf_dir, stats_range)
-    return handlers.user_entity_stats(ev, entity_col=entity, **params)
+    return final_user_entity_stats(
+        user_entity_stat(user_col, entity).aggregate(ev),
+        user_col=user_col, entity_col=entity, k=k,
+    )
 
 
 def _stats_daily_activity(
@@ -484,7 +492,7 @@ QUERY_MAP: dict[str, Callable] = {
     # -- year in music -----------------------------------------------------
     "year_in_music.new_releases_of_top_artists": _registered("h_yim_new_releases"),
     "year_in_music.most_listened_year": _registered("h_yim_most_listened_year"),
-    "year_in_music.artist_evolution_activity": _registered("h_artist_evolution"),
+    "year_in_music.artist_evolution_activity": _artist_evolution_activity,
     "year_in_music.day_of_week": _events_handler(handlers.day_of_week),
     "year_in_music.similar_users": _similar_users,
     "year_in_music.top_stats": _registered("h_yim_top_stats"),
@@ -493,7 +501,7 @@ QUERY_MAP: dict[str, Callable] = {
     "year_in_music.new_artists_discovered_count": _registered("h_yim_new_entities"),
     "year_in_music.listening_time": _registered("h_yim_listening_time"),
     "year_in_music.top_genres": _registered("h_top_genres"),
-    "year_in_music.genre_activity": _registered("h_genre_activity"),
+    "year_in_music.genre_activity": _stats_genre_activity,
     "year_in_music.top_missed_recordings": _registered("h_yim_top_missed"),
     "year_in_music.top_discoveries": _registered("h_yim_top_discoveries"),
 }

@@ -19,32 +19,6 @@ from listenbrainz_server_spark.operators.sessionize import session_pairs, with_s
 from listenbrainz_server_spark.operators.topk import top_k_per_group
 
 
-def user_entity_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    entity_col: str = "event_type",
-    k: int = 1000,
-) -> DataFrame:
-    """stats.user.entity (stats/incremental/user/artist.py:34-110
-    spine): per-user entity counts, top-K by count, per-user grand
-    total alongside — the M0 vertical slice."""
-    counts = events.groupBy(user_col, entity_col).agg(
-        F.count(F.lit(1)).alias("listen_count")
-    )
-    w_total = Window.partitionBy(user_col)
-    ranked = top_k_per_group(
-        counts.withColumn(
-            "total_count", F.sum("listen_count").over(w_total)
-        ).withColumn(
-            "entity_count", F.count(F.lit(1)).over(w_total).cast("bigint")
-        ),
-        partition_by=[user_col],
-        order_by=[F.col("listen_count").desc(), F.col(entity_col)],
-        k=k,
-    )
-    return ranked.withColumn("rank", F.col("rank").cast("bigint"))
-
-
 def daily_activity(
     events: DataFrame, user_col: str = "user_id", ts_col: str = "ts"
 ) -> DataFrame:

@@ -118,10 +118,15 @@ def final_user_entity_stats(
     entity_col: str = "event_type",
     k: int = 1000,
 ) -> DataFrame:
-    """generate_stats over the combined aggregate: top-K + totals."""
+    """generate_stats over the combined aggregate: top-K plus each
+    user's listen total and distinct-entity count
+    (stats/incremental/user/artist.py:77-110). The direct
+    stats.user.entity request runs this over a single aggregate pass."""
     w_total = Window.partitionBy(user_col)
     enriched = combined.withColumn(
         "total_count", F.sum("listen_count").over(w_total).cast("bigint")
+    ).withColumn(
+        "entity_count", F.count(F.lit(1)).over(w_total).cast("bigint")
     )
     return top_k_per_group(
         enriched,

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.operators.joins import densify, dim_join
 from listenbrainz_server_spark.operators.topk import top_k_per_group
+from listenbrainz_server_spark.plans.api import dispatch
 from listenbrainz_server_spark.queries import register
 
 
@@ -32,15 +33,7 @@ from listenbrainz_server_spark.queries import register
     doc="stats.user.era_activity handler: per-user era-year counts",
 )
 def h_era_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.where(F.year("o_orderdate") >= 1800)  # era_activity.py:42-43 floor
-        .groupBy(
-            F.col("o_custkey").alias("user_id"),
-            F.year("o_orderdate").cast("bigint").alias("era_year"),
-        )
-        .agg(F.count(F.lit(1)).alias("listen_count"))
-    )
+    return dispatch("stats.user.era_activity", spark, sf_dir)
 
 
 # --------------------------------------------------------------------------
@@ -66,16 +59,7 @@ def h_era_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="stats.user.genre_activity handler: top-K entity per hour",
 )
 def h_genre_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    agg = ev.groupBy(
-        F.hour("ts").cast("bigint").alias("hour"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("listen_count"))
-    return top_k_per_group(
-        agg,
-        partition_by=["hour"],
-        order_by=[F.col("listen_count").desc(), F.col("event_type")],
-        k=2,
-    ).withColumn("rank", F.col("rank").cast("bigint"))
+    return dispatch("stats.user.genre_activity", spark, sf_dir, k=2)
 
 
 # --------------------------------------------------------------------------
@@ -95,12 +79,7 @@ def h_genre_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="stats.user.artist_evolution_activity handler: entity×year counts",
 )
 def h_artist_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.groupBy(
-        F.col("o_custkey").alias("user_id"),
-        F.year("o_orderdate").cast("bigint").alias("year"),
-        F.col("o_orderpriority").alias("entity"),
-    ).agg(F.count(F.lit(1)).alias("listen_count"))
+    return dispatch("stats.user.artist_evolution_activity", spark, sf_dir)
 
 
 # --------------------------------------------------------------------------

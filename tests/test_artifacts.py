@@ -1,14 +1,14 @@
 """At-head artifact coverage — the VERDICT r7 #1 invariant made
 STRUCTURAL (4th recurrence of the drift: r3, r4, r5, r7): the test
 suite itself fails if the committed full-registry artifacts
-(CHECK_full_r*.json, BENCH_full_latest.json, PLAN_AUDIT.md) don't
-cover every registered query. A round can no longer end green with
-queries registered after the last `tools/endround.py` run — the
-snapshot commit would carry a red suite.
+(CHECK_full_r*.json, BENCH_full_latest.json with its per-query
+execution records) don't cover every registered query. A round can no
+longer end green with queries registered after the last
+`tools/endround.py` run — the snapshot commit would carry a red suite.
 
 The rule this encodes: anything registered in the round's last
 working commit triggers `tools/endround.py` (which regenerates all
-three artifacts and fails on drift) BEFORE the snapshot.
+artifacts and fails on drift) BEFORE the snapshot.
 """
 
 from __future__ import annotations
@@ -67,19 +67,25 @@ def test_bench_full_covers_registry():
 
 
 def test_plan_audit_covers_registry():
-    reg = _registry_names()
-    path = os.path.join(REPO, "PLAN_AUDIT.md")
+    """Every timed query in BENCH_full_latest.json carries the record of
+    what its last run executed, and bench.red_flags finds nothing in
+    those records."""
+    import sys
+
+    sys.path.insert(0, REPO)
+    import bench
+
+    path = os.path.join(REPO, "BENCH_full_latest.json")
     assert os.path.exists(path), "run tools/endround.py"
-    audit = open(path).read()
-    rows = set(
-        m.group(1)
-        for m in re.finditer(r"^\| (?!query \|)(\w+)", audit, re.M)
-    )
-    missing = sorted(reg - rows)
+    with open(path) as f:
+        full = json.load(f)
+    records = full.get("records", {})
+    missing = sorted((_registry_names() & set(full.get("queries", {}))) - set(records))
     assert not missing, (
-        f"PLAN_AUDIT.md missing {len(missing)} queries ({missing[:5]}…) — "
-        "run tools/endround.py before the snapshot commit"
+        f"BENCH_full_latest.json has no record for {len(missing)} queries "
+        f"({missing[:5]}…) — run tools/endround.py before the snapshot commit"
     )
+    assert bench.red_flags(records) == []
 
 
 def test_ladder_names_exist():

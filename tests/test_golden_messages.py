@@ -54,51 +54,25 @@ def test_handler_message_stream_matches_golden(
     )
 
 
-def test_incremental_golden_equals_direct_recompute():
-    """The dumps-stacking invariant IN the goldens: the incremental
-    case's streamed rows (base partial + two stacked delta combines)
-    must equal the direct all-time handler's rows — the reference's
-    recompute-equivalence check on its own incremental test fixtures
-    (dumps 2/3 on top of 1 produce the same stats the full dump
-    would). The direct handler emits one extra enrichment column
-    (entity_count) the incremental provider doesn't; strip it before
-    comparing."""
-    with open(os.path.join(GOLDEN_DIR, "stats_user_entity_all_time.json")) as f:
-        direct = json.load(f)
-    with open(
-        os.path.join(GOLDEN_DIR, "stats_user_entity_incremental.json")
-    ) as f:
-        incr = json.load(f)
-
-    def strip(rows, drop=("entity_count",)):
-        out = []
-        for r in rows:
-            d = json.loads(r)
-            for c in drop:
-                d.pop(c, None)
-            out.append(json.dumps(d, sort_keys=True))
-        return sorted(out)
-
-    assert strip(direct["rows"]) == strip(incr["rows"])
-    assert direct["n_messages"] == incr["n_messages"]
-
-
 @pytest.mark.parametrize(
     "incr_stem,direct_stem",
     [
         ("stats_sitewide_entity_incremental", "stats_sitewide_entity_all_time"),
         ("stats_entity_listeners_incremental", "stats_entity_listeners_all_time"),
+        ("stats_user_entity_incremental", "stats_user_entity_all_time"),
     ],
 )
 def test_sitewide_and_listener_incremental_equal_direct(
     incr_stem, direct_stem
 ):
-    """VERDICT r11 #6: the sitewide (never-pruned,
-    sitewide/entity.py:38-40 semantics) and listener incremental
-    paths, through production dispatch + chunker, must stream EXACTLY
-    the direct all-time handler's rows — full + two stacked deltas
-    recompute-equivalent, byte-identical (no enrichment columns to
-    strip on these two; the sitewide cap composes exactly at fixture
+    """The dumps-stacking invariant IN the goldens: the user-entity,
+    sitewide (never-pruned, sitewide/entity.py:38-40 semantics) and
+    listener incremental paths (base partial + two stacked delta
+    combines), through production dispatch + chunker, must stream
+    EXACTLY the direct all-time handler's rows — the reference's
+    recompute-equivalence check on its own incremental test fixtures,
+    byte-identical (each direct handler runs the same final query over
+    one aggregate pass; the sitewide cap composes exactly at fixture
     scale where no (user, entity) pair nears 500)."""
     with open(os.path.join(GOLDEN_DIR, f"{direct_stem}.json")) as f:
         direct = json.load(f)

@@ -10,8 +10,11 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.incremental.engine import IncrementalEngine
-from listenbrainz_server_spark.plans.handlers import user_entity_stats
-from listenbrainz_server_spark.plans.incremental_stats import run_incremental_user_entity
+from listenbrainz_server_spark.plans.incremental_stats import (
+    final_user_entity_stats,
+    run_incremental_user_entity,
+    user_entity_stat,
+)
 
 
 def _events(spark, rows):
@@ -45,20 +48,9 @@ def test_incremental_handler_equals_batch_handler(spark, tmp_path):
         created="2024-01-20",
         k=10,
     )
-    batch = user_entity_stats(df, k=10).select(
-        "user_id", "event_type", "listen_count", "total_count", "rank"
-    )
-    inc_set = {
-        (r.user_id, r.event_type, r.listen_count, r.total_count, r.rank)
-        for r in inc.select(
-            "user_id", "event_type", "listen_count", "total_count", "rank"
-        ).collect()
-    }
-    batch_set = {
-        (r.user_id, r.event_type, r.listen_count, r.total_count, r.rank)
-        for r in batch.collect()
-    }
-    assert inc_set == batch_set
+    batch = final_user_entity_stats(user_entity_stat().aggregate(df), k=10)
+    assert inc.columns == batch.columns
+    assert set(inc.collect()) == set(batch.collect())
 
 
 def test_incremental_handler_affected_only(spark, tmp_path):

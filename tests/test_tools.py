@@ -11,17 +11,6 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 import ab  # noqa: E402
-from parse_profile import parse_line  # noqa: E402
-
-
-def test_parse_profile_honours_job_and_stage_units():
-    job_s = parse_line("INFO DAGScheduler: Job 7 finished: collect at x.py:3, took 1.500000 s")
-    job_ms = parse_line("INFO DAGScheduler: Job 8 finished: count at x.py:4, took 250.0 ms")
-    stage = parse_line("INFO DAGScheduler: ResultStage 9 (collect at x.py:3) finished in 2.5 s")
-    assert job_s[:2] == ("job", 1.5)
-    assert job_ms[:2] == ("job", 0.25)
-    assert stage[:2] == ("stage", 2.5)
-    assert parse_line("INFO Executor: Finished task 0.0") is None
 
 
 def test_ab_confirms_three_wins_beyond_old_iqr_in_each_direction():

@@ -1,6 +1,6 @@
-"""End-of-round artifact gate (VERDICT r5 #1): regenerate the three
-at-head artifacts and REFUSE to pass unless each covers every
-registered query.
+"""End-of-round artifact gate (VERDICT r5 #1): regenerate the at-head
+artifacts and REFUSE to pass unless each covers every registered
+query.
 
     python tools/endround.py [round_number] [--delta]
 
@@ -8,9 +8,10 @@ Runs, in order:
   1. tools/check.py --json CHECK_full_r{N}.json  (full oracle gate,
      sf0.01) — fails on any oracle mismatch;
   2. bench.py --all  (sf0.1) → BENCH_full_latest.json, heavies
-     median-of-3 with per-run samples;
-  3. tools/audit_plans.py → PLAN_AUDIT.md;
-  3b. the STANDING sf0.1 value gate (VERDICT r13 #2) — re-runs at
+     median-of-3 with per-run samples, plus each query's execution
+     record (jobs, stages, shuffle and spill bytes, executed plan-node
+     counts) read from Spark's status stores;
+  3. the STANDING sf0.1 value gate (VERDICT r13 #2) — re-runs at
      sf0.1 every name staled since the newest committed CHECK_sf01
      artifact (plus missing names), merging into CHECK_sf01_r{N}.json
      stamped at ONE head. Staleness is the import-closure of the
@@ -30,10 +31,12 @@ Runs, in order:
   5. (full pass only) tools/recall_smoke.py — auto ANN-dial recall vs
      brute force at sf0.1 + sf1, rc-enforced (VERDICT r12 #2).
 
-Then asserts len(artifact) == len(registry) for all three and exits
-non-zero on any shortfall — the artifact-drift failure mode of rounds
-3-5 (BENCH_full/PLAN_AUDIT missing final-commit queries, CHECK_full
-never committed) becomes a hard error instead of a memory.
+Then asserts that CHECK_full and BENCH_full cover the registry, that
+every benched query has an execution record, and that bench.red_flags
+finds no row-at-a-time Python UDF or stray CartesianProduct in those
+records; it exits non-zero on any shortfall — the artifact-drift
+failure mode of rounds 3-5 (BENCH_full missing final-commit queries,
+CHECK_full never committed) becomes a hard error instead of a memory.
 
 --delta certifies coverage AND (since r9) staleness: besides names
 MISSING from the committed artifacts, the oracle gate re-runs every
@@ -49,10 +52,10 @@ CORRECTNESS gate also re-runs a sweep per round.
 
 --delta (VERDICT r7 #1, the structural fix): instead of the full
 ~15 min sweep, compute the set of registered names MISSING from each
-committed artifact and run check/bench/audit for just those, merging
+committed artifact and run check/bench for just those, merging
 into the artifacts (CHECK_full_r{N}.json starts from the newest
-committed CHECK_full; bench.py --only and audit_plans.py <names>
-merge natively). The coverage assertions at the end are identical to
+committed CHECK_full; bench.py --only merges its timings and records
+natively). The coverage assertions at the end are identical to
 the full path, and tests/test_artifacts.py keeps the suite red until
 this has run — so registering a query and running `endround.py N
 --delta` before its commit is cheap enough to be the per-registration
@@ -64,13 +67,13 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import red_flags  # noqa: E402
 from listenbrainz_server_spark.queries import load_all  # noqa: E402
 
 
@@ -298,19 +301,18 @@ def _git_head():
 
 
 def _delta_steps(registry, check_path):
-    """Build (label, thunk) steps that re-run check/bench/audit for
-    the registered names each committed artifact is missing PLUS the
+    """Build (label, thunk) steps that re-run check/bench for the
+    registered names each committed artifact is missing PLUS the
     import-closure-staled names, then merge. A thunk returns an error
     string or None.
 
-    BENCH_full_latest.json and PLAN_AUDIT.md carry no git head of
-    their own, and run_check advances the CHECK head before the other
-    two thunks run — so the staleness baseline for bench/audit is the
-    newest committed CHECK_full head CAPTURED HERE, before any thunk
-    mutates it. Without this, a mid-round --delta that happened to be
-    the round's last pass would leave bench rows / plan-audit rows
-    reflecting pre-change code while CHECK claimed the new head (the
-    r9 artifact-drift failure mode, on the other two artifacts)."""
+    BENCH_full_latest.json carries no git head of its own, and
+    run_check advances the CHECK head before the bench thunk runs — so
+    the staleness baseline for bench is the newest committed CHECK_full
+    head CAPTURED HERE, before any thunk mutates it. Without this, a
+    mid-round --delta that happened to be the round's last pass would
+    leave bench rows and records reflecting pre-change code while CHECK
+    claimed the new head (the r9 artifact-drift failure mode)."""
     import glob
 
     reg = set(registry)
@@ -403,30 +405,7 @@ def _delta_steps(registry, check_path):
         )
         return f"delta bench exited {r.returncode}" if r.returncode else None
 
-    def run_audit():
-        path = os.path.join(REPO, "PLAN_AUDIT.md")
-        covered = set()
-        if os.path.exists(path):
-            covered = set(re.findall(r"^\| (?!query \|)(\w+)", open(path).read(), re.M))
-        stale = _baseline_stale()
-        if stale is None:
-            print("  audit delta: staleness unknown (unmappable "
-                  "change) — plan rows for changed code may be stale "
-                  "until the round-closing full audit")
-            stale = set()
-        missing = sorted((reg - covered) | stale)
-        if not missing:
-            print("  audit: nothing missing or stale")
-            return None
-        print(f"  audit delta (missing+stale): {missing}")
-        r = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools/audit_plans.py"), *missing],
-            cwd=REPO,
-        )
-        return f"delta audit exited {r.returncode}" if r.returncode else None
-
-    return [("oracle gate", run_check), ("full bench", run_bench),
-            ("plan audit", run_audit)]
+    return [("oracle gate", run_check), ("full bench", run_bench)]
 
 
 def run_sf01_gate(rnd: int, registry, conservative_full: bool = True) -> str | None:
@@ -781,7 +760,6 @@ def main() -> int:
                  "/root/testdata/sf0.01", "--json", check_path],
             ),
             ("full bench", [sys.executable, os.path.join(REPO, "bench.py"), "--all"]),
-            ("plan audit", [sys.executable, os.path.join(REPO, "tools/audit_plans.py")]),
         ]
     failures: list[str] = []
     for label, step in steps:
@@ -856,16 +834,11 @@ def main() -> int:
         failures.append(f"BENCH_full covers {n_bench}/{n_reg}")
     if bench.get("errors"):
         failures.append(f"BENCH_full errors: {sorted(bench['errors'])}")
-
-    audit = open(os.path.join(REPO, "PLAN_AUDIT.md")).read()
-    # Data rows only: the markdown header row ("| query | ...") also
-    # starts with "| <word>" — counting it made a complete audit fail
-    # 246/245 and would let an audit missing exactly one query pass.
-    n_audit = len(re.findall(r"^\| (?!query \|)\w", audit, re.M))
-    if n_audit != n_reg:
-        failures.append(f"PLAN_AUDIT covers {n_audit}/{n_reg}")
-    if "## RED FLAGS" in audit:
-        failures.append("PLAN_AUDIT has red flags")
+    records = bench.get("records", {})
+    unrecorded = sorted(set(bench.get("queries", {})) - set(records))
+    if unrecorded:
+        failures.append(f"BENCH_full has no record for {unrecorded}")
+    failures += [f"red flag: {f}" for f in red_flags(records)]
 
     if failures:
         print("ENDROUND FAIL:")
@@ -874,7 +847,8 @@ def main() -> int:
         return 1
     print(
         f"ENDROUND OK: {n_reg} queries covered by "
-        f"{os.path.basename(check_path)}, BENCH_full_latest.json, PLAN_AUDIT.md"
+        f"{os.path.basename(check_path)} and BENCH_full_latest.json "
+        f"(records, no red flags)"
     )
     return 0
 
