@@ -27,14 +27,14 @@ def _parse_param(kv: str):
     return k, v
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     parser = argparse.ArgumentParser(description=__doc__)
     parser.add_argument("query", help="handler name (see plans/api.QUERY_MAP) or 'list'")
     parser.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     parser.add_argument("--param", action="append", default=[], help="k=v handler param")
     parser.add_argument("--chunk-size", type=int, default=25)
     parser.add_argument("--limit", type=int, default=None, help="cap emitted rows")
-    args = parser.parse_args(argv)
+    args = parser.parse_args()
 
     from listenbrainz_server_spark.plans.api import QUERY_MAP
 

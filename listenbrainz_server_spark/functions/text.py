@@ -24,20 +24,20 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def tokens(text: Column | str, delim: str = " ") -> Column:
+def tokens(text: Column | str) -> Column:
     """Whitespace tokenization (the BPE-ish regex path is
     ``F.split(text, r"\\s+|(?=[.,!?])")`` — same operator shape)."""
-    return F.split(text, delim)
+    return F.split(text, " ")
 
 
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("bigint")
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords for ``lang``."""
+def stopword_ratio(text: Column | str) -> Column:
+    """Fraction of tokens that are English stopwords."""
     toks = tokens(text)
-    words = list(LANG_STOPWORDS[lang])
+    words = list(LANG_STOPWORDS["en"])
     hits = F.size(F.filter(toks, lambda t: t.isin(*words)))
     return hits / F.greatest(F.size(toks), F.lit(1))
 
@@ -78,19 +78,16 @@ def top_word_count(toks: Column) -> Column:
     return F.aggregate(s, zero, step, lambda acc: acc["best"])
 
 
-def quality_flag(
-    text: Column | str, min_tokens: int = 20, max_top_ratio: float = 0.25
-) -> Column:
+def quality_flag(text: Column | str) -> Column:
     """The d_clean_corpus admission gate as a reusable boolean column:
-    enough tokens AND no single token dominating (repetition proxy).
+    at least 20 tokens AND no single token over a quarter of them
+    (repetition proxy).
     Pure expression (tokenize + run-length fold) — zero shuffle, so it
     is usable identically in batch scans and streaming micro-batches
     (see streaming.jobs.quality_gate)."""
     toks = tokens(text)
     total = F.size(toks).cast("bigint")
-    return (total >= min_tokens) & (
-        top_word_count(toks) * 1.0 / total <= max_top_ratio
-    )
+    return (total >= 20) & (top_word_count(toks) * 1.0 / total <= 0.25)
 
 
 def quality_score(text: Column | str) -> Column:
@@ -134,10 +131,10 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(normalized)
 
 
-def shingles(text: Column | str, n: int = 3, delim: str = " ") -> Column:
+def shingles(text: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles as an array of strings (distinct not
     applied — callers explode + distinct as needed)."""
-    toks = tokens(text, delim)
+    toks = tokens(text)
     k = F.size(toks) - (n - 1)
     idx = F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0)))
     make = lambda i: F.array_join(F.slice(toks, i + 1, n), " ")  # noqa: E731

@@ -154,20 +154,16 @@ class IncrementalEngine:
         to_date: str,
         created: str,
         only_affected: bool = False,
-        created_col: str | None = None,
     ) -> DataFrame:
         """Full lifecycle: reuse-or-build partial, aggregate delta,
-        combine. Returns the combined aggregate DataFrame.
-
-        ``created_col`` threads the created high-water-mark filter into
-        the delta aggregate (engine.py:154-165): rows of ``delta_df``
-        ingested before the partial's ``created`` stamp are already in
-        the partial and must not be double-counted. When ``delta_df``
-        has no ingest-time column, pass None and pre-filter yourself.
+        combine. Returns the combined aggregate DataFrame. ``delta_df``
+        must hold only rows the partial lacks: callers pre-filter it
+        (``delta_aggregate(created_col=...)`` applies the created
+        high-water mark, engine.py:154-165).
         """
         if not self.partial_usable(stat, from_date, to_date):
             self.create_partial(stat, full_df, from_date, to_date, created)
-        delta_agg = self.delta_aggregate(stat, delta_df, created_col=created_col)
+        delta_agg = self.delta_aggregate(stat, delta_df)
         return self.combine(stat, delta_agg, only_affected=only_affected)
 
     def advance_partial(
@@ -199,7 +195,6 @@ class IncrementalEngine:
         stat: IncrementalStat,
         deleted_agg: DataFrame,
         count_col: str,
-        only_affected: bool = True,
     ) -> DataFrame:
         """Apply DELETIONS to the stored partial without rebuilding it:
         the deleted rows' aggregate enters the ordinary combine with
@@ -214,22 +209,17 @@ class IncrementalEngine:
         (integer-quantize money first — float sums are not associative
         enough to survive subtract-then-compare).
 
-        ``only_affected`` prunes the combine to keys present in the
-        deletion delta (P8), so a small erasure batch touches a small
-        slice of state; the untouched remainder is unioned back
-        verbatim.
+        The combine is pruned to keys present in the deletion delta
+        (P8), so a small erasure batch touches a small slice of state;
+        the untouched remainder is unioned back verbatim.
         """
         neg = deleted_agg.select(
             *stat.keys,
             *[(-F.col(c)).alias(c) for c in stat.sum_cols],
         )
         partial = self.load_partial(stat)
-        if only_affected:
-            affected = neg.select(*stat.keys).distinct()
-            touched = semi_join(partial, affected, stat.keys)
-            untouched = partial.join(affected, list(stat.keys), "left_anti")
-            merged = combine_aggregates(touched, neg, stat.keys, stat.sum_cols)
-            merged = merged.unionByName(untouched)
-        else:
-            merged = combine_aggregates(partial, neg, stat.keys, stat.sum_cols)
-        return merged.where(F.col(count_col) > 0)
+        affected = neg.select(*stat.keys).distinct()
+        touched = semi_join(partial, affected, stat.keys)
+        untouched = partial.join(affected, list(stat.keys), "left_anti")
+        merged = combine_aggregates(touched, neg, stat.keys, stat.sum_cols)
+        return merged.unionByName(untouched).where(F.col(count_col) > 0)

@@ -34,33 +34,27 @@ CHUNK_SIMILARITY = 10000
 MESSAGE_FLOAT_DP = 6
 
 
-def _canon_floats(v, dp: int):
+def _canon_floats(v):
     """Round every float in a row value tree (dicts/lists from
-    Row.asDict(recursive=True)); NaN passes through (round(nan)=nan),
-    ints/strings/dates untouched."""
+    Row.asDict(recursive=True)) to MESSAGE_FLOAT_DP; NaN passes
+    through (round(nan)=nan), ints/strings/dates untouched."""
     if isinstance(v, float):
-        return round(v, dp)
+        return round(v, MESSAGE_FLOAT_DP)
     if isinstance(v, dict):
-        return {k: _canon_floats(x, dp) for k, x in v.items()}
+        return {k: _canon_floats(x) for k, x in v.items()}
     if isinstance(v, (list, tuple)):
-        return [_canon_floats(x, dp) for x in v]
+        return [_canon_floats(x) for x in v]
     return v
 
 
 def iter_message_chunks(
-    df: DataFrame, chunk_size: int, message_type: str,
-    float_dp: int | None = MESSAGE_FLOAT_DP,
+    df: DataFrame, chunk_size: int, message_type: str
 ) -> Iterator[dict]:
-    """Yield {type, data: [row dicts]} messages of ≤chunk_size rows.
-
-    Floats are canonicalized to ``float_dp`` decimals at the message
-    boundary (pass ``float_dp=None`` for raw doubles)."""
+    """Yield {type, data: [row dicts]} messages of ≤chunk_size rows,
+    floats canonicalized to MESSAGE_FLOAT_DP decimals."""
     buf: list[dict] = []
     for row in df.toLocalIterator():
-        d = row.asDict(recursive=True)
-        if float_dp is not None:
-            d = _canon_floats(d, float_dp)
-        buf.append(d)
+        buf.append(_canon_floats(row.asDict(recursive=True)))
         if len(buf) >= chunk_size:
             yield {"type": message_type, "data": buf}
             buf = []

@@ -36,7 +36,6 @@ def capped_count(
     user_key: str,
     entity_keys: Sequence[str],
     cap: int,
-    count_name: str = "listen_count",
 ) -> DataFrame:
     """Two-level aggregate: per-(user, entity) count capped at ``cap``,
     then summed per entity (stats/incremental/sitewide/entity.py:50-59).
@@ -44,7 +43,7 @@ def capped_count(
     per_user = df.groupBy(user_key, *entity_keys).agg(
         F.least(F.count(F.lit(1)), F.lit(cap)).alias("_capped")
     )
-    return per_user.groupBy(*entity_keys).agg(F.sum("_capped").alias(count_name))
+    return per_user.groupBy(*entity_keys).agg(F.sum("_capped").alias("listen_count"))
 
 
 def combine_aggregates(

@@ -43,23 +43,24 @@ _GEAR = [
     int(hashlib.md5(bytes([i])).hexdigest()[:16], 16) for i in range(256)
 ]
 _M64 = (1 << 64) - 1
+# Chunk bounds in bytes and the boundary mask width: a boundary fires
+# on average every 2**AVG_BITS bytes past MIN_LEN; MAX_LEN force-cuts.
+MIN_LEN, AVG_BITS, MAX_LEN = 32, 6, 192
 
 
-def chunk_text(
-    text: str, min_len: int = 32, avg_bits: int = 6, max_len: int = 192
-) -> list:
+def chunk_text(text: str) -> list:
     """Split ``text`` into content-defined chunks. The algorithm runs
-    over the UTF-8 ENCODING of the text: ``min_len`` / ``max_len`` are
+    over the UTF-8 ENCODING of the text: ``MIN_LEN`` / ``MAX_LEN`` are
     byte lengths, and the returned ``(start, length, md5hex)`` tuples
     are byte offsets/lengths into that encoding (NOT character indexes
     into the original string — they diverge for any non-ASCII text; to
     recover a chunk, slice ``text.encode('utf-8', 'surrogatepass')``).
     A boundary fires when the rolling gear hash has its low
-    ``avg_bits`` bits zero and the chunk holds at least ``min_len``
-    bytes; ``max_len`` force-cuts pathological runs. The chunks cover
+    ``AVG_BITS`` bits zero and the chunk holds at least ``MIN_LEN``
+    bytes; ``MAX_LEN`` force-cuts pathological runs. The chunks cover
     the encoded text exactly."""
     gear, m64 = _GEAR, _M64
-    mask = (1 << avg_bits) - 1
+    mask = (1 << AVG_BITS) - 1
     chunks = []
     start, h = 0, 0
     data = text.encode("utf-8", "surrogatepass")
@@ -67,7 +68,7 @@ def chunk_text(
     for i, b in enumerate(data):
         h = ((h << 1) + gear[b]) & m64
         ln = i - start + 1
-        if (ln >= min_len and (h & mask) == 0) or ln >= max_len:
+        if (ln >= MIN_LEN and (h & mask) == 0) or ln >= MAX_LEN:
             seg = data[start : i + 1]
             chunks.append((start, ln, hashlib.md5(seg).hexdigest()))
             start, h = i + 1, 0
@@ -77,14 +78,7 @@ def chunk_text(
     return chunks
 
 
-def cdc_chunks(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_len: int = 32,
-    avg_bits: int = 6,
-    max_len: int = 192,
-) -> DataFrame:
+def cdc_chunks(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One row per content-defined chunk: (id, chunk_idx, start,
     chunk_len, chunk_hash). Pure map stage — no shuffle."""
     id_t = df.schema[id_col].dataType.simpleString()
@@ -101,9 +95,7 @@ def cdc_chunks(
         for pdf in batches:
             rows = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                for idx, (st, ln, hx) in enumerate(
-                    _chunk(text or "", min_len, avg_bits, max_len)
-                ):
+                for idx, (st, ln, hx) in enumerate(_chunk(text or "")):
                     rows.append((did, idx, st, ln, hx))
             if rows:
                 yield pd.DataFrame(

@@ -212,8 +212,6 @@ def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
     id_col: str = "id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
     max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -260,9 +258,9 @@ def connected_components(
     ContextCleaner-reclaimable — no cache bookkeeping needed.
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
         # Materialize once: every iteration joins edges, and the pair
@@ -480,7 +478,6 @@ def exact_substring_contamination(
     text_col: str,
     k: int = 24,
     stride: int = 8,
-    min_matched: int = 1,
     max_gram_df: int | None = None,
 ) -> DataFrame:
     """Exact-substring contamination detection via rolling character
@@ -541,7 +538,6 @@ def exact_substring_contamination(
         tg.join(bg, "g")
         .groupBy("train_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("matched_grams"))
-        .where(F.col("matched_grams") >= min_matched)
     )
 
 
@@ -552,7 +548,6 @@ def exact_substring_pairs(
     k: int = 24,
     stride: int = 8,
     min_matched: int = 1,
-    max_gram_df: int | None = None,
     prefilter: bool = True,
 ) -> DataFrame:
     """Within-corpus exact-substring duplicate pairs — the train-train
@@ -570,10 +565,6 @@ def exact_substring_pairs(
     across both directions, so a pair never double-counts a gram seen
     from each side.
 
-    ``max_gram_df`` drops coarse grams present in more than that many
-    docs (boilerplate runs — the hot-key skew at 100 TB), same
-    broadcast-anti-join shape as the contamination tier.
-
     ``prefilter=True`` gates both indexes behind the winnowed
     candidate-doc set (see exact_substring_spans — recall 1 for all
     guaranteed-detectable runs >= k + stride - 1).
@@ -583,14 +574,6 @@ def exact_substring_pairs(
     spans.
     """
     if prefilter:
-        # The gram-tier hot-key cap (max_gram_df) is deliberately NOT
-        # forwarded as the winnow gate's max_fp_df: the gram guard
-        # drops individual hot grams while a run's other grams still
-        # pair the docs, but a fingerprint cap drops whole DOCUMENTS —
-        # that would silently void the recall-1 guarantee for pairs
-        # whose shared window-min happens to be boilerplate-hot.
-        # Callers wanting a gated hot-fp cap use winnow_candidate_docs
-        # directly and own the recall trade.
         cand = winnow_candidate_docs(docs, id_col, text_col, k=k, w=stride)
         docs = docs.join(cand, id_col, "left_semi")
 
@@ -602,8 +585,7 @@ def exact_substring_pairs(
     # a full extra shuffle of BOTH indexes (distinct shuffles the same
     # rows the join is about to shuffle again on g). Within-doc gram
     # repetition is tiny anyway (measured 18 of 1.37M positions at
-    # sf0.1); cross-doc hot grams — the real skew axis — are handled
-    # by max_gram_df, unchanged.
+    # sf0.1).
     def gram_index(out_id: str, s: int) -> DataFrame:
         grams_expr = (
             f"transform(sequence(1, length(_t) - {k} + 1, {s}), "
@@ -617,16 +599,6 @@ def exact_substring_pairs(
 
     cg = gram_index("cid", stride)
     fg = gram_index("fid", 1)
-    if max_gram_df is not None:
-        hot = (
-            cg.groupBy("g")
-            # count_distinct, not count: cg is no longer pre-distinct,
-            # so a plain count would be positions, not doc frequency.
-            .agg(F.count_distinct("cid").alias("_df"))
-            .where(F.col("_df") > max_gram_df)
-            .select("g")
-        )
-        cg = cg.join(F.broadcast(hot), "g", "left_anti")
     # shuffle_hash on the coarse side (r14 opt): post-gate size
     # estimates are unreliable enough that the planner was BROADCASTING
     # the stride-1 FINE index (the larger side — 1.25M rows at sf0.1,
@@ -719,7 +691,6 @@ def winnow_candidate_docs(
     text_col: str,
     k: int = 24,
     w: int = 8,
-    max_fp_df: int | None = None,
 ) -> DataFrame:
     """Documents that share at least one winnowed fingerprint with
     ANOTHER document — the candidate gate for the verbatim-span tier:
@@ -727,9 +698,7 @@ def winnow_candidate_docs(
     of length >= k + w - 1, so the stride-1 fine-gram pass can skip it
     entirely. Everything is keyed by fingerprint then id; the
     multi-doc-fingerprint set is a data-reduced aggregate, never
-    all-pairs. ``max_fp_df`` drops boilerplate fingerprints present in
-    more than that many docs (the hot-key guard, same contract as the
-    gram-tier ``max_gram_df``).
+    all-pairs.
     """
     # winnow_fingerprints ends in a per-(id, fp) distinct (the
     # explode + window-min pass emits one row per WINDOW, and adjacent
@@ -738,8 +707,6 @@ def winnow_candidate_docs(
     fps = winnow_fingerprints(docs, id_col, text_col, k=k, w=w)
     multi = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_df")).where(
         F.col("_df") >= 2
-        if max_fp_df is None
-        else (F.col("_df") >= 2) & (F.col("_df") <= max_fp_df)
     )
     return (
         fps.join(multi.select("fp"), "fp", "left_semi")
@@ -754,7 +721,6 @@ def exact_substring_spans(
     text_col: str,
     k: int = 24,
     stride: int = 8,
-    max_gram_df: int | None = None,
     prefilter: bool = True,
 ) -> DataFrame:
     """Maximal verbatim-run EXTENTS for exact-substring matches — the
@@ -800,27 +766,11 @@ def exact_substring_spans(
     form as the fixture-scale recall cross-check.
     """
     if prefilter:
-        # The gram-tier hot-key cap (max_gram_df) is deliberately NOT
-        # forwarded as the winnow gate's max_fp_df: the gram guard
-        # drops individual hot grams while a run's other grams still
-        # pair the docs, but a fingerprint cap drops whole DOCUMENTS —
-        # that would silently void the recall-1 guarantee for pairs
-        # whose shared window-min happens to be boilerplate-hot.
-        # Callers wanting a gated hot-fp cap use winnow_candidate_docs
-        # directly and own the recall trade.
         cand = winnow_candidate_docs(docs, id_col, text_col, k=k, w=stride)
         docs = docs.join(cand, id_col, "left_semi")
 
     cg = _positioned_gram_index(docs, id_col, text_col, "cid", "cpos", k, stride)
     fg = _positioned_gram_index(docs, id_col, text_col, "fid", "fpos", k, 1)
-    if max_gram_df is not None:
-        hot = (
-            cg.groupBy("g")
-            .agg(F.count_distinct("cid").alias("_df"))
-            .where(F.col("_df") > max_gram_df)
-            .select("g")
-        )
-        cg = cg.join(F.broadcast(hot), "g", "left_anti")
 
     # shuffle_hash on the coarse side (r14 opt): same rationale as
     # exact_substring_pairs — the planner's post-gate estimates had it
@@ -1005,7 +955,6 @@ def contamination_pairs(
     text_col: str,
     n: int = 3,
     min_containment: float = 0.5,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Benchmark-contamination detection: (train doc, benchmark doc)
     pairs where ≥ ``min_containment`` of the benchmark doc's distinct
@@ -1016,13 +965,12 @@ def contamination_pairs(
     index; candidates come from the shingle equi join (shuffle key =
     shingle, never train × bench all-pairs); containment denominators
     join broadcast (the benchmark corpus is tiny relative to training
-    data — at 100 TB the bench index itself is broadcastable, and the
-    ``max_shingle_df`` cap bounds hot-shingle skew on the train side).
+    data — at 100 TB the bench index itself is broadcastable).
     """
-    ti = shingle_index(train, id_col, text_col, n, max_shingle_df).select(
+    ti = shingle_index(train, id_col, text_col, n).select(
         F.col(id_col).alias("train_id"), "shingle"
     )
-    bi = shingle_index(bench, id_col, text_col, n, max_shingle_df).select(
+    bi = shingle_index(bench, id_col, text_col, n).select(
         F.col(id_col).alias("bench_id"), "shingle"
     )
     bench_sz = bi.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bench_sz"))

@@ -52,7 +52,6 @@ def explode_equi_join(
     left_array_col: str,
     right: DataFrame,
     right_array_col: str,
-    element_name: str = "_elem",
 ) -> DataFrame:
     """Join two tables on *any shared array element* by exploding both
     sides and equi-joining on the element — the semantic rewrite of an
@@ -60,9 +59,9 @@ def explode_equi_join(
     (new_releases_of_top_artists.py:39-43). Result may contain one row
     per shared element; callers dedup on their keys.
     """
-    l_ex = left.withColumn(element_name, F.explode(left_array_col))
-    r_ex = right.withColumn(element_name, F.explode(right_array_col))
-    return l_ex.join(r_ex, on=element_name, how="inner")
+    l_ex = left.withColumn("_elem", F.explode(left_array_col))
+    r_ex = right.withColumn("_elem", F.explode(right_array_col))
+    return l_ex.join(r_ex, on="_elem", how="inner")
 
 
 def densify(
@@ -92,9 +91,7 @@ def symmetric_pairs(pairs: DataFrame, a: str, b: str) -> DataFrame:
     return fwd.unionByName(bwd)
 
 
-def priority_pick(
-    df: DataFrame, keys: Sequence[str], priority_col: str = "priority"
-) -> DataFrame:
+def priority_pick(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Keep, per key group, the single row with the lowest (= best)
     priority — the reference's multi-source tag merge
     (year_in_music/top_genres.py:62-79: recording > release-group >
@@ -107,9 +104,9 @@ def priority_pick(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*keys).orderBy(F.col(priority_col).asc())
+    w = Window.partitionBy(*keys).orderBy(F.col("priority").asc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
-        .drop("__rn", priority_col)
+        .drop("__rn", "priority")
     )

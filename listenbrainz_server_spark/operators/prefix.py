@@ -42,9 +42,8 @@ def partitioned_running_sum(
     order_cols: list,
     value_cols: list,
     n_partitions: int = 32,
-    prefix: str = "cum_",
 ) -> DataFrame:
-    """Add ``prefix + c`` running-total columns (inclusive of the
+    """Add ``"cum_" + c`` running-total columns (inclusive of the
     current row) for each value column, over the GLOBAL order given
     by ``order_cols`` — which must be a deterministic total order
     (include a unique tiebreak key; ties would otherwise make the
@@ -92,7 +91,7 @@ def partitioned_running_sum(
     out = local.join(F.broadcast(offsets), "_rpid")
     for c in value_cols:
         out = out.withColumn(
-            prefix + c,
+            "cum_" + c,
             F.col(f"_loc_{c}") + F.coalesce(F.col(f"_off_{c}"), F.lit(0)),
         ).drop(f"_loc_{c}", f"_off_{c}")
     return out.drop("_rpid")

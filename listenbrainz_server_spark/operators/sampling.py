@@ -62,11 +62,10 @@ def hash_split(
     key_col: str,
     weights: Sequence[float] = (0.8, 0.1, 0.1),
     labels: Sequence[str] = ("train", "val", "test"),
-    label_col: str = "split",
 ) -> DataFrame:
     """Disjoint, exhaustive, reproducible splits keyed on ``key_col``
     (use a group key to keep groups un-leaked across splits)."""
-    return df.withColumn(label_col, split_label(F.col(key_col), weights, labels))
+    return df.withColumn("split", split_label(F.col(key_col), weights, labels))
 
 
 def stratified_hash_sample(

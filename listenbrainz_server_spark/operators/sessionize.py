@@ -29,7 +29,6 @@ def with_session_ids(
     user_col: str,
     ts_col: str,
     gap_seconds: int,
-    session_col: str = "session_id",
     tiebreak: tuple[str, ...] = (),
 ) -> DataFrame:
     """Assign per-user session ids: a session breaks when the gap from
@@ -44,7 +43,7 @@ def with_session_ids(
     run = Window.partitionBy(user_col).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
     is_break = F.when(gap > F.lit(gap_seconds), 1).otherwise(0)
     return df.withColumn("_gap", gap).withColumn(
-        session_col, F.sum(is_break).over(run)
+        "session_id", F.sum(is_break).over(run)
     ).drop("_gap")
 
 
@@ -53,7 +52,6 @@ def session_pairs(
     user_col: str,
     session_col: str,
     item_col: str,
-    score_col: str = "score",
     max_contribution: int | None = None,
 ) -> DataFrame:
     """Co-occurrence pairs within a session, canonicalized so
@@ -72,8 +70,8 @@ def session_pairs(
         F.col("item_a") < F.col("item_b")
     )
     if max_contribution is None:
-        return pairs.groupBy("item_a", "item_b").agg(F.count(F.lit(1)).alias(score_col))
+        return pairs.groupBy("item_a", "item_b").agg(F.count(F.lit(1)).alias("score"))
     per_user = pairs.groupBy(user_col, "item_a", "item_b").agg(
         F.least(F.count(F.lit(1)), F.lit(max_contribution)).alias("_contrib")
     )
-    return per_user.groupBy("item_a", "item_b").agg(F.sum("_contrib").alias(score_col))
+    return per_user.groupBy("item_a", "item_b").agg(F.sum("_contrib").alias("score"))

@@ -33,6 +33,15 @@ from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.operators.topk import top_k_per_group
 
+# Every score these operators return is ROUNDed to 6 places, the
+# precision the DuckDB oracles compare at.
+ROUND_DP = 6
+# Seed of every driver-side trainer (k-means init, PQ/OPQ codebooks).
+SEED = 45
+# Rows of the content-hash training sample the driver-side trainers
+# pull (coarse trainers raise it to 40 per centroid).
+TRAIN_SAMPLE_CAP = 4096
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -68,23 +77,18 @@ def unit_vectors(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
-    partitions: int | str | None = "auto",
     pin: bool = False,
 ) -> DataFrame:
     """(vid, vec) with ``vec`` unit-normalized and zero-norm rows
     dropped (no cosine exists for them; downstream trainers/encoders
     would NaN-poison).
 
-    ``partitions``: explicit repartition first — a single-file source
-    otherwise serializes every downstream stage on one task, INCLUDING
-    iterative trainers fit on a checkpointed frame (localCheckpoint
-    preserves the 1-partition layout). ``'auto'`` (default, r14)
-    derives the count from ``defaultParallelism`` instead of the old
-    fixed 32 — identical on local[32], but a fixed constant would
-    SHRINK a many-split scan to 32 tasks on a real cluster and
-    over-split on the driver's low-core scaling legs (the 20d55b7
-    rule applied to this last hardcoded site). Pass an int to force,
-    or ``None``/0 to skip the repartition.
+    The input is repartitioned to ``defaultParallelism`` first — a
+    single-file source otherwise serializes every downstream stage on
+    one task, INCLUDING iterative trainers fit on a checkpointed frame
+    (localCheckpoint preserves the 1-partition layout). A fixed count
+    would SHRINK a many-split scan on a real cluster and over-split on
+    the driver's low-core scaling legs.
 
     ``pin`` (MEASURE per site — the r8 refactor that defaulted this to
     True cost v_ivfpq_topk +1.6 s and d_semdedup +1.8 s in redundant
@@ -100,10 +104,7 @@ def unit_vectors(
     raw = vectors.select(
         F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("raw")
     )
-    if partitions == "auto":
-        partitions = vectors.sparkSession.sparkContext.defaultParallelism
-    if partitions:
-        raw = raw.repartition(partitions)
+    raw = raw.repartition(vectors.sparkSession.sparkContext.defaultParallelism)
     if not pin:
         return raw.where(norm(F.col("raw")) != 0).select(
             "vid", F.transform("raw", lambda x: x / norm(F.col("raw"))).alias("vec")
@@ -302,7 +303,6 @@ def brute_force_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    round_dp: int = 6,
     block_rows: int = DEFAULT_BLOCK_ROWS,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for every vector.
@@ -345,7 +345,7 @@ def brute_force_topk(
                 qids = pdf[id_col].to_numpy()
                 q = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
                 q = q / np.linalg.norm(q, axis=1, keepdims=True)
-                scores = np.round(q @ ref.T, round_dp)
+                scores = np.round(q @ ref.T, ROUND_DP)
                 scores[qids[:, None] == ref_ids[None, :]] = -np.inf  # exclude self
                 # Top-m by value first (O(N) per row), exact (score desc,
                 # id asc) ordering resolved inside the small candidate set.
@@ -392,7 +392,6 @@ def neardup_pairs(
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    round_dp: int = 6,
     block_rows: int = DEFAULT_BLOCK_ROWS,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, score ≥
@@ -425,7 +424,7 @@ def neardup_pairs(
                     {
                         "id_a": qids[qi],
                         "id_b": ref_ids[ni],
-                        "score": np.round(scores[qi, ni], round_dp),
+                        "score": np.round(scores[qi, ni], ROUND_DP),
                     }
                 )
 
@@ -456,27 +455,26 @@ def hyperplane_component(h: int, d: int) -> int:
 def sized_sig_bits(
     n_rows: int,
     target_bucket_rows: int = 64,
-    min_bits: int = 4,
-    max_bits: int = 24,
 ) -> int:
     """Sign-LSH signature sizing rule (VERDICT r2 #4):
 
-        sig_bits = clamp(ceil(log2(n / target_bucket_rows)), min, max)
+        sig_bits = clamp(ceil(log2(n / target_bucket_rows)), 4, 24)
 
     The in-bucket exact re-rank is quadratic in bucket population, and
     expected population is n / 2^sig_bits — so bits must GROW with the
     corpus or buckets grow as n and the re-rank degenerates toward
     all-pairs. This rule guarantees expected population ≤
     ``target_bucket_rows`` by construction at any n (a 10× corpus adds
-    ~3.3 bits). ``max_bits=24`` caps bucket-count metadata at 16M —
-    raise it past ~10^9-row corpora.
+    ~3.3 bits). The 4-bit floor keeps tiny corpora bucketed; the
+    24-bit cap bounds bucket-count metadata at 16M — raise it past
+    ~10^9-row corpora.
     """
     import math
 
     if n_rows <= 0:
-        return min_bits
+        return 4
     bits = math.ceil(math.log2(max(1, n_rows / target_bucket_rows)))
-    return max(min_bits, min(max_bits, bits))
+    return max(4, min(24, bits))
 
 
 def lsh_signature(vec: Column | str, dims: int, sig_bits: int = 8) -> Column:
@@ -527,7 +525,6 @@ def bucket_scored_pairs(
     vec_col: str,
     dims: int,
     sig_bits: int,
-    round_dp: int = 6,
 ) -> DataFrame:
     """All scored (qid, nid) pairs WITHIN each sign-LSH bucket as pure
     column expressions: signature equi self-join + fold dot product —
@@ -564,7 +561,7 @@ def bucket_scored_pairs(
                     (F.col("na") != 0) & (F.col("nb") != 0),
                     dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
                 ),
-                round_dp,
+                ROUND_DP,
             ).alias("score"),
         )
     )
@@ -578,7 +575,6 @@ def banded_range_search(
     threshold: float,
     bands: int = 8,
     band_bits: int = 3,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Radius query (FAISS range_search, pgvector WHERE-distance): all
     unordered pairs with rounded cosine >= ``threshold``, candidates
@@ -656,7 +652,7 @@ def banded_range_search(
             (F.col("na") != 0) & (F.col("nb") != 0),
             dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
         ),
-        round_dp,
+        ROUND_DP,
     )
     return (
         cand.join(na, "id_a")
@@ -674,7 +670,6 @@ def lsh_bucketed_topk(
     dims: int,
     k: int = 5,
     sig_bits: int | None = None,
-    round_dp: int = 6,
 ) -> DataFrame:
     """ANN top-k within sign-LSH buckets.
 
@@ -712,7 +707,7 @@ def lsh_bucketed_topk(
         ids = pdf["qid"].to_numpy()
         m = np.vstack(pdf["qv"].to_numpy()).astype("float64")
         m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        scores = np.round(m @ m.T, round_dp)
+        scores = np.round(m @ m.T, ROUND_DP)
         np.fill_diagonal(scores, -np.inf)
         out_q, out_n, out_s, out_r = [], [], [], []
         for i in range(n):
@@ -736,8 +731,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int | str = 16,
     n_probe: int | str = 2,
-    round_dp: int = 6,
-    seed: int = 45,
 ) -> DataFrame:
     """IVF (inverted-file) ANN top-k with a learned coarse quantizer.
 
@@ -796,7 +789,7 @@ def ivf_topk(
     n_centroids = resolve_n_centroids(n_centroids, vectors)
     n_probe = resolve_n_probe(n_probe, n_centroids)
     centers = coarse_train_centroids(
-        feats, "qv", n_centroids, seed=seed, max_iter=8
+        feats, "qv", n_centroids, seed=SEED, max_iter=8
     )
 
     # The Arrow assign pass computes the nearest bucket (assignment)
@@ -883,7 +876,7 @@ def ivf_topk(
             score_bucket,
             schema=f"qid {id_spark_t}, nid {id_spark_t}, score double",
         )
-    ).withColumn("score", F.round(F.col("score"), round_dp))
+    ).withColumn("score", F.round(F.col("score"), ROUND_DP))
     w_rank = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
     return (
         scored.withColumn("rank", F.row_number().over(w_rank).cast("bigint"))
@@ -1032,7 +1025,6 @@ def lsh_multiprobe_topk(
     k: int = 5,
     sig_bits: int | None = None,
     n_flip: int | str = 1,
-    round_dp: int = 6,
     vectorized: bool = True,
 ) -> DataFrame:
     """Multi-probe sign-LSH ANN top-k. ``sig_bits=None`` auto-sizes
@@ -1138,7 +1130,7 @@ def lsh_multiprobe_topk(
             # near-tie straddling a rounding boundary could pick a
             # different local top-k than the expression path.
             scores = np.round(
-                (q / qn_safe[:, None]) @ (m / mn_safe[:, None]).T, round_dp
+                (q / qn_safe[:, None]) @ (m / mn_safe[:, None]).T, ROUND_DP
             )
             scores[qz, :] = np.nan
             scores[:, mz] = np.nan
@@ -1162,7 +1154,7 @@ def lsh_multiprobe_topk(
                 score_bucket,
                 schema=f"qid {id_spark_t}, nid {id_spark_t}, score double",
             )
-            .withColumn("score", F.round(F.col("score"), round_dp))
+            .withColumn("score", F.round(F.col("score"), ROUND_DP))
         )
         w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
         return (
@@ -1179,7 +1171,7 @@ def lsh_multiprobe_topk(
             (F.col("q_nrm") != 0) & (F.col("n_nrm") != 0),
             dot(F.col("qv"), F.col("nv")) / (F.col("q_nrm") * F.col("n_nrm")),
         ),
-        round_dp,
+        ROUND_DP,
     )
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
     return (
@@ -1360,9 +1352,8 @@ def coarse_train_centroids(
     vectors: DataFrame,
     vec_col: str,
     k: int,
-    seed: int = 45,
+    seed: int = SEED,
     max_iter: int = 8,
-    sample_cap: int = 4096,
 ):
     """Train an IVF coarse quantizer FAISS-style: one distributed
     TakeOrdered pulls the training sample (ordered by content hash —
@@ -1372,8 +1363,8 @@ def coarse_train_centroids(
     previous MLlib KMeans fit re-scanned the corpus every iteration.
     Returns a (k', dims) float64 ndarray.
 
-    The effective sample is ``max(sample_cap, 40·k)`` — the FAISS
-    floor of ~40 training points per centroid — so a large
+    The effective sample is ``max(TRAIN_SAMPLE_CAP, 40·k)`` — the
+    FAISS floor of ~40 training points per centroid — so a large
     ``n_centroids='auto'`` dial (nlist ≈ √n) can never be silently
     clamped to the sample size with one training point per center.
     Driver memory stays sample+block-bounded, not corpus-bounded: at
@@ -1386,7 +1377,7 @@ def coarse_train_centroids(
     Raises if the frame has no rows (e.g. an all-zero-vector corpus
     after the unit-norm filter) rather than failing inside numpy.
     """
-    n_pull = max(sample_cap, 40 * k)
+    n_pull = max(TRAIN_SAMPLE_CAP, 40 * k)
     data = _train_sample(
         vectors, as_double(F.col(vec_col)), n_pull, "coarse_train_centroids"
     )
@@ -1399,7 +1390,6 @@ def _ivfpq_train_from_unit(
     m: int,
     k_sub: int,
     seed: int,
-    sample_cap: int = 4096,
 ):
     """The single IVFPQ trainer (shared by ``ivfpq_topk`` and
     ``ivfpq_train_artifacts`` — the frozen-artifact maintenance
@@ -1412,7 +1402,7 @@ def _ivfpq_train_from_unit(
     Returns ``(centers, codebooks)`` as float64 ndarrays
     ((k', dims) and (m, k_sub, dims//m)).
     """
-    n_pull = max(sample_cap, 40 * n_centroids)
+    n_pull = max(TRAIN_SAMPLE_CAP, 40 * n_centroids)
     data = _train_sample(unit, F.col("vec"), n_pull, "ivfpq trainer")
     if len(data) < k_sub:
         raise ValueError(
@@ -1433,9 +1423,7 @@ def pq_train_codebooks(
     dims: int,
     m: int = 4,
     k_sub: int = 16,
-    seed: int = 45,
-    max_iter: int = 10,
-    sample_cap: int = 4096,
+    seed: int = SEED,
 ) -> list[list[list[float]]]:
     """Train product-quantization codebooks: seeded Lloyd's k-means per
     subspace over a bounded deterministic sample (the PQ training step
@@ -1443,11 +1431,12 @@ def pq_train_codebooks(
     Search"; codebook quality saturates on a few thousand samples, so
     training is a BOUNDED model-fit step regardless of corpus size).
 
-    Execution shape: one distributed TakeOrdered pulls ``sample_cap``
-    rows (ordered by content hash — partitioning-independent), then m
-    tiny k-means fits run driver-side in numpy. Distributed iterative
-    KMeans here would cost m × max_iter job launches to fit what is at
-    most a (sample_cap × dims) matrix — pure scheduler overhead at any
+    Execution shape: one distributed TakeOrdered pulls
+    ``TRAIN_SAMPLE_CAP`` rows (ordered by content hash —
+    partitioning-independent), then m tiny 10-iteration k-means fits
+    run driver-side in numpy. Distributed iterative KMeans here would
+    cost m × 10 job launches to fit what is at most a
+    (TRAIN_SAMPLE_CAP × dims) matrix — pure scheduler overhead at any
     scale. Driver memory is bounded by the cap, never the corpus.
 
     Returns ``codebooks[j][c]`` = centroid ``c`` of subspace ``j`` as
@@ -1459,7 +1448,8 @@ def pq_train_codebooks(
     if sub * m != dims:
         raise ValueError(f"dims={dims} not divisible by m={m}")
     data = _train_sample(
-        vectors, as_double(F.col(vec_col)), sample_cap, "pq_train_codebooks"
+        vectors, as_double(F.col(vec_col)), TRAIN_SAMPLE_CAP,
+        "pq_train_codebooks",
     )
     if len(data) < k_sub:
         raise ValueError(f"need >= {k_sub} vectors to train, got {len(data)}")
@@ -1468,7 +1458,7 @@ def pq_train_codebooks(
     # Lloyd's that OPQ warm-starts from — opq_train's "trace[0] equals
     # plain-PQ MSE" contract depends on the two paths never drifting.
     centers = _fit_subspace_books(
-        data, m=m, k_sub=k_sub, seed=seed, max_iter=max_iter, init=None
+        data, m=m, k_sub=k_sub, seed=seed, max_iter=10, init=None
     )
     return [
         [[float(v) for v in c] for c in centers[j]] for j in range(m)
@@ -1535,10 +1525,6 @@ def opq_train(
     dims: int,
     m: int = 4,
     k_sub: int = 16,
-    seed: int = 45,
-    max_iter: int = 10,
-    opq_iters: int = 8,
-    sample_cap: int = 4096,
 ):
     """OPQ-NP rotation training (Ge et al., "Optimized Product
     Quantization", CVPR 2013): learn an orthonormal R so the PQ
@@ -1561,7 +1547,8 @@ def opq_train(
     Every step minimizes E with the other blocks fixed, so the
     training-MSE trace is monotonically non-increasing from the
     plain-PQ starting point — the auditable contract the registered
-    query checks. Returns (R, codebooks, mse_trace) with R as an
+    query checks. Runs 8 alternations; each warm-started Lloyd update
+    takes 2 iterations after the 10-iteration plain-PQ fit. Returns (R, codebooks, mse_trace) with R as an
     orthonormal (dims, dims) list-of-lists and mse_trace[0] = the
     plain-PQ training MSE.
     """
@@ -1571,19 +1558,19 @@ def opq_train(
     if sub * m != dims:
         raise ValueError(f"dims={dims} not divisible by m={m}")
     X = _train_sample(
-        vectors, as_double(F.col(vec_col)), sample_cap, "opq_train"
+        vectors, as_double(F.col(vec_col)), TRAIN_SAMPLE_CAP, "opq_train"
     )
     if len(X) < k_sub:
         raise ValueError(f"need >= {k_sub} vectors to train, got {len(X)}")
 
     R = np.eye(dims)
-    books = _fit_subspace_books(X, m, k_sub, seed, max_iter)
+    books = _fit_subspace_books(X, m, k_sub, SEED, 10)
     _, err = _pq_reconstruct(X, books, m)
     trace = [float(err.mean())]
-    for _ in range(opq_iters):
+    for _ in range(8):
         Xr = X @ R
         books = _fit_subspace_books(
-            Xr, m, k_sub, seed, max_iter=2, init=books
+            Xr, m, k_sub, SEED, max_iter=2, init=books
         )
         Xhat, err = _pq_reconstruct(Xr, books, m)
         # Procrustes: min_R ||X R - Xhat||_F over orthogonal R.
@@ -1664,10 +1651,6 @@ def pq_topk(
     m: int = 4,
     k_sub: int = 16,
     sig_bits: int = 8,
-    n_flip: int | str = 1,
-    oversample: int = 3,
-    round_dp: int = 6,
-    seed: int = 45,
     train_fraction: float = 1.0,
 ) -> DataFrame:
     """Product-quantization ANN top-k (ADC) over sign-LSH buckets —
@@ -1686,13 +1669,13 @@ def pq_topk(
        column expressions were tried first and cost ~10 s of Catalyst
        analysis/codegen per action regardless of data size.)
     3. BUCKET: multi-probe sign-LSH signature join restricts
-       candidates (query side probes Hamming-≤``n_flip`` buckets) —
+       candidates (query side probes Hamming-≤1 buckets) —
        the only shuffle key; PQ itself is a compressor, not a pruner,
        so it composes with any coarse index (IVF-PQ shape).
     4. ADC: candidate approx distance = sum of m LUT lookups on its
        codes (small JVM expression) — never touches the candidate's
        raw vector; only (qid, nid, approx) ride the ranking shuffle.
-    5. RE-RANK: the ``oversample``·k best ADC candidates re-fetch
+    5. RE-RANK: the 3·k best ADC candidates re-fetch
        vectors and get exact cosine; top-k of those is returned.
     """
     from pyspark.sql import Window
@@ -1712,7 +1695,7 @@ def pq_topk(
         from listenbrainz_server_spark.operators.sampling import hash_sample
 
         train = hash_sample(unit, "vid", train_fraction)
-    books = pq_train_codebooks(train, "vec", dims, m=m, k_sub=k_sub, seed=seed)
+    books = pq_train_codebooks(train, "vec", dims, m=m, k_sub=k_sub, seed=SEED)
 
     # Pin the index pass (r14 opt): base feeds FOUR consumers
     # (members, probes, and both re-rank vector sides) and nothing
@@ -1733,9 +1716,7 @@ def pq_topk(
         "codes",
         "sig",
     )
-    probe_sigs = _probe_sig_array(
-        "`sig`", sig_bits, resolve_n_flip(n_flip, sig_bits)
-    )
+    probe_sigs = _probe_sig_array("`sig`", sig_bits, 1)
     probes = base.select(
         F.col("vid").alias("qid"),
         "lut",
@@ -1755,14 +1736,14 @@ def pq_topk(
         .where(F.col("qid") != F.col("nid"))
         .select("qid", "nid", adc.alias("approx"))
         .withColumn("_ar", F.row_number().over(w_adc))
-        .where(F.col("_ar") <= oversample * k)
+        .where(F.col("_ar") <= 3 * k)
         .select("qid", "nid")
     )
-    # Exact re-rank re-fetches raw vectors for the (oversample·k)-
+    # Exact re-rank re-fetches raw vectors for the (3·k)-
     # bounded survivor set only.
     qv = base.select(F.col("vid").alias("qid"), F.col("vec").alias("qv"))
     nv = base.select(F.col("vid").alias("nid"), F.col("vec").alias("nv"))
-    score = F.round(dot(F.col("qv"), F.col("nv")), round_dp)
+    score = F.round(dot(F.col("qv"), F.col("nv")), ROUND_DP)
     w_rank = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
     return (
         survivors.join(qv, "qid")
@@ -1785,8 +1766,6 @@ def ivfpq_topk(
     m: int = 4,
     k_sub: int = 16,
     oversample: int | str = 3,
-    round_dp: int = 6,
-    seed: int = 45,
 ) -> DataFrame:
     """IVF-PQ ANN top-k — the full FAISS IVFPQ composition (Jégou et
     al. 2011): a learned coarse quantizer prunes the search to
@@ -1839,7 +1818,7 @@ def ivfpq_topk(
     n_probe = resolve_n_probe(n_probe, n_centroids)
     oversample = resolve_oversample(oversample, n_probe)
     centers, cb = _ivfpq_train_from_unit(
-        unit, n_centroids, m=m, k_sub=k_sub, seed=seed
+        unit, n_centroids, m=m, k_sub=k_sub, seed=SEED
     )
 
     # Output id columns keep the INPUT id column's type (ADVICE r11 —
@@ -1948,7 +1927,7 @@ def ivfpq_topk(
     )
     qv = unit.select(F.col("vid").alias("qid"), F.col("vec").alias("qv"))
     nv = unit.select(F.col("vid").alias("nid"), F.col("vec").alias("nv"))
-    score = F.round(dot(F.col("qv"), F.col("nv")), round_dp)
+    score = F.round(dot(F.col("qv"), F.col("nv")), ROUND_DP)
     w_rank = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid"))
     return (
         survivors.join(qv, "qid")
@@ -1968,7 +1947,6 @@ def ivfpq_train_artifacts(
     n_centroids: int | str = 8,
     m: int = 4,
     k_sub: int = 16,
-    seed: int = 45,
 ):
     """Train the IVFPQ model artifacts ONLY — coarse centers + residual
     codebooks — without encoding anything. The artifacts are the unit
@@ -1989,7 +1967,7 @@ def ivfpq_train_artifacts(
     unit = unit_vectors(vectors, id_col, vec_col)
     n_centroids = resolve_n_centroids(n_centroids, vectors)
     centers_np, cb = _ivfpq_train_from_unit(
-        unit, n_centroids, m=m, k_sub=k_sub, seed=seed
+        unit, n_centroids, m=m, k_sub=k_sub, seed=SEED
     )
     centers = [[float(x) for x in c] for c in centers_np]
     books = [[[float(v) for v in c] for c in cb[j]] for j in range(m)]
@@ -2062,9 +2040,7 @@ def ivfpq_encode(
     return unit.mapInPandas(encode, schema=schema)
 
 
-def ivf_drift_report(
-    encoded_delta: DataFrame, centers, round_dp: int = 6
-) -> DataFrame:
+def ivf_drift_report(encoded_delta: DataFrame, centers) -> DataFrame:
     """Per-coarse-list drift of a delta batch vs the FROZEN centers —
     the v_embedding_drift centroid-shift stat repurposed as the
     refit-vs-append trigger (VERDICT r7 #6): per bucket, the L2
@@ -2102,7 +2078,7 @@ def ivf_drift_report(
         .groupBy("bucket")
         .agg(
             F.max("n").cast("bigint").alias("n_delta"),
-            F.round(F.sqrt(F.sum("sq")), round_dp).alias("centroid_shift"),
+            F.round(F.sqrt(F.sum("sq")), ROUND_DP).alias("centroid_shift"),
         )
     )
 
@@ -2129,7 +2105,6 @@ def mmr_rerank(
     vec_col: str = "embedding",
     k: int = 5,
     lam: float = 0.7,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Maximal Marginal Relevance diversified re-rank of an ANN/exact
     candidate set: greedily select ``k`` of each query's candidates by
@@ -2154,7 +2129,7 @@ def mmr_rerank(
     (|queries|/B × candidate_mult × dims doubles) stays bounded as
     cluster and data grow together. Determinism: relevance comes in
     pre-rounded, intra-candidate sims and the objective are rounded
-    to ``round_dp`` before comparison, and ties pick the smaller
+    to ``ROUND_DP`` before comparison, and ties pick the smaller
     neighbor id — a total order, so output is stable across
     partitionings, bucketings, and engines.
 
@@ -2194,7 +2169,7 @@ def mmr_rerank(
         V = V[order]
         nrms = np.linalg.norm(V, axis=1)
         nrms[nrms == 0] = 1.0
-        S = np.round((V / nrms[:, None]) @ (V / nrms[:, None]).T, round_dp)
+        S = np.round((V / nrms[:, None]) @ (V / nrms[:, None]).T, ROUND_DP)
         selected: list[int] = []
         remaining = list(range(len(nids)))
         picks = []
@@ -2202,7 +2177,7 @@ def mmr_rerank(
             best = None
             for i in remaining:
                 pen = max((S[i][j] for j in selected), default=0.0)
-                obj = round(lam * rel[i] - (1.0 - lam) * pen, round_dp)
+                obj = round(lam * rel[i] - (1.0 - lam) * pen, ROUND_DP)
                 key = (-obj, nids[i])
                 if best is None or key < best[0]:
                     best = (key, i, obj)
@@ -2265,8 +2240,6 @@ def semdedup(
     dims: int,
     n_clusters: int = 16,
     tau: float = 0.4,
-    seed: int = 45,
-    round_dp: int = 6,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication with CLUSTER-BOUNDED pair enumeration — the scale
@@ -2324,7 +2297,7 @@ def semdedup(
         "vid", F.transform("raw", lambda x: x / norm(F.col("raw"))).alias("vec")
     ).localCheckpoint(eager=True)
     centers = coarse_train_centroids(
-        unit, "vec", n_clusters, seed=seed, max_iter=8
+        unit, "vec", n_clusters, seed=SEED, max_iter=8
     )
 
     def assign(batches):
@@ -2428,7 +2401,7 @@ def semdedup(
         "group_id",
         "keeper_id",
         (F.col("vid") == F.col("keeper_id")).alias("keep"),
-        F.round("cos_center", round_dp).alias("cos_center"),
+        F.round("cos_center", ROUND_DP).alias("cos_center"),
     )
     zeros = zero.select(
         F.col("vid").alias(id_col),

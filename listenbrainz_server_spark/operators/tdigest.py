@@ -61,7 +61,8 @@ try:  # cloudpickle >= 2.0 (vendored in pyspark >= 3.3)
 except Exception:  # pragma: no cover - older pickler: import-path mode
     pass
 
-DEFAULT_DELTA = 100
+# Compression δ of every digest: O(δ) centroids per group.
+DELTA = 100
 
 
 def _compress(means: np.ndarray, weights: np.ndarray, delta: int):
@@ -100,22 +101,20 @@ def _compress(means: np.ndarray, weights: np.ndarray, delta: int):
     return out_m, out_w
 
 
-def build_digest(values: np.ndarray, delta: int = DEFAULT_DELTA):
+def build_digest(values: np.ndarray):
     """Digest of a raw value array: sort, then one compress pass
     (each value enters as a weight-1 centroid)."""
     v = np.sort(np.asarray(values, dtype=np.float64))
-    return _compress(v, np.ones(len(v)), delta)
+    return _compress(v, np.ones(len(v)), DELTA)
 
 
-def merge_centroid_sets(
-    means_list, weights_list, delta: int = DEFAULT_DELTA
-):
+def merge_centroid_sets(means_list, weights_list):
     """Combine any number of digests: concatenate centroids, sort by
     (mean, weight) — the deterministic tie order — and re-compress."""
     m = np.concatenate([np.asarray(x, dtype=np.float64) for x in means_list])
     w = np.concatenate([np.asarray(x, dtype=np.float64) for x in weights_list])
     order = np.lexsort((w, m))
-    return _compress(m[order], w[order], delta)
+    return _compress(m[order], w[order], DELTA)
 
 
 def quantile_of(means, weights, q: float) -> float:
@@ -144,7 +143,6 @@ def partition_digests(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    delta: int = DEFAULT_DELTA,
 ) -> DataFrame:
     """Stage 1: one digest per (group, input partition), built in a
     single mapInPandas pass — zero shuffle; only O(δ) centroids per
@@ -166,25 +164,21 @@ def partition_digests(
         if acc:
             rows = []
             for g in sorted(acc):
-                m, w = build_digest(np.concatenate(acc[g]), delta)
+                m, w = build_digest(np.concatenate(acc[g]))
                 rows.append((g, m, w))
             yield pd.DataFrame(rows, columns=[group_col, "means", "weights"])
 
     return df.select(group_col, value_col).mapInPandas(gen, schema)
 
 
-def merge_digests(
-    pdigests: DataFrame, group_col: str, delta: int = DEFAULT_DELTA
-) -> DataFrame:
+def merge_digests(pdigests: DataFrame, group_col: str) -> DataFrame:
     """Stage 2: reduce each group's partition digests to one digest —
     the shuffle carries sketches, not rows."""
     g_t = pdigests.schema[group_col].dataType.simpleString()
     schema = f"{group_col} {g_t}, means array<double>, weights array<double>"
 
     def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = merge_centroid_sets(
-            list(pdf["means"]), list(pdf["weights"]), delta
-        )
+        m, w = merge_centroid_sets(list(pdf["means"]), list(pdf["weights"]))
         return pd.DataFrame(
             {group_col: [pdf[group_col].iloc[0]], "means": [m], "weights": [w]}
         )
@@ -197,13 +191,10 @@ def group_tdigest_quantiles(
     group_col: str,
     value_col: str,
     qs: tuple = (0.5,),
-    delta: int = DEFAULT_DELTA,
 ) -> DataFrame:
     """End-to-end per-group quantile estimates: build → merge →
     interpolate. Returns (group, q, est) rows."""
-    merged = merge_digests(
-        partition_digests(df, group_col, value_col, delta), group_col, delta
-    )
+    merged = merge_digests(partition_digests(df, group_col, value_col), group_col)
     qs = tuple(float(q) for q in qs)
 
     def to_quantiles(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -221,13 +212,11 @@ def group_tdigest_quantiles(
     )
 
 
-def union_digests(
-    *digest_frames: DataFrame, group_col: str, delta: int = DEFAULT_DELTA
-) -> DataFrame:
+def union_digests(*digest_frames: DataFrame, group_col: str) -> DataFrame:
     """Mergeability surface: union already-persisted digest frames
     (e.g. per-day sketches) and reduce — the rolling-window pattern
     x_hll_rolling_distinct uses for distinct counts, for quantiles."""
     u = digest_frames[0]
     for d in digest_frames[1:]:
         u = u.unionByName(d)
-    return merge_digests(u, group_col, delta)
+    return merge_digests(u, group_col)

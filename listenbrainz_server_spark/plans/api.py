@@ -40,9 +40,12 @@ from listenbrainz_server_spark.plans.ranges import resolve_range
 
 def _registered(name: str) -> Callable:
     """Dispatch to a registered query provider (lazy import: the
-    registry imports operator modules, never this one)."""
+    registry imports operator modules, never this one). Registered
+    providers take no request params, so any param raises
+    ``TypeError``, as the reference's ``handler(**params)`` call does
+    (request_consumer.py:74)."""
 
-    def run(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from listenbrainz_server_spark.queries import load_all
 
         return load_all()[name].fn(spark, sf_dir)
@@ -59,7 +62,7 @@ def _events_handler(fn: Callable, **defaults):
     return run
 
 
-def _echo(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _echo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """echo.echo health check (listenbrainz_spark/echo/echo.py:1-8)."""
     return spark.createDataFrame([("echo", sf_dir)], "message string, data_dir string")
 
@@ -118,7 +121,6 @@ def _stats_genre_activity(
     sf_dir: str,
     stats_range: str | None = None,
     k: int = 2,
-    **params,
 ) -> DataFrame:
     """stats.user.genre_activity with the standard stats_range param
     (genre_activity.py:22-79 shape): top-k entity per hour over the
@@ -142,7 +144,6 @@ def _similar_users(
     sf_dir: str,
     max_num_users: int = 25,
     threshold: float = 0.15,
-    **params,
 ) -> DataFrame:
     """similarity.similar_users with the reference's params
     (request_manage.py:355-360)."""
@@ -194,6 +195,7 @@ def _stats_listening_activity(
     sf_dir: str,
     stats_range: str = "month",
     sitewide: bool = False,
+    granularity: str | None = None,
     **params,
 ) -> DataFrame:
     """listening_activity with buckets generated from the
@@ -210,7 +212,7 @@ def _stats_listening_activity(
     frm, to, default_granularity = resolve_activity_range(
         _anchor(events), stats_range
     )
-    granularity = params.pop("granularity", None) or default_granularity
+    granularity = granularity or default_granularity
 
     rows = []
     cur = frm
@@ -236,33 +238,30 @@ def _stats_listening_activity(
     )
     ev = events.where((F.col("ts") >= F.lit(frm)) & (F.col("ts") < F.lit(to)))
     if sitewide:
-        agg = (
-            ev.join(
-                F.broadcast(buckets),
-                (F.col("ts") >= F.col("start")) & (F.col("ts") < F.col("end")),
-            )
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("listen_count"))
-        )
-        return (
-            buckets.select("bucket")
-            .join(agg, "bucket", "left")
-            .select(
-                "bucket",
-                F.coalesce("listen_count", F.lit(0).cast("bigint")).alias(
-                    "listen_count"
-                ),
-            )
-        )
+        return handlers.sitewide_listening_activity(ev, buckets, **params)
     return handlers.listening_activity(ev, buckets, **params)
 
 
+def _all_time_orders(spark: SparkSession, sf_dir: str, stats_range: str) -> DataFrame:
+    """The era and artist-evolution stats read ``orders``, which has no
+    listen timestamp to range over: only ``all_time`` exists."""
+    if stats_range != "all_time":
+        raise ValueError(
+            f"stats_range={stats_range!r}: only 'all_time' is available "
+            "for stats read from orders"
+        )
+    return load_table(spark, sf_dir, "orders")
+
+
 def _era_activity(
-    spark: SparkSession, sf_dir: str, sitewide: bool = False, **params
+    spark: SparkSession,
+    sf_dir: str,
+    stats_range: str = "all_time",
+    sitewide: bool = False,
 ) -> DataFrame:
     """era_activity (era_activity.py:40-43): listens bucketed by the
     entity's era year; sitewide drops the user dimension."""
-    orders = load_table(spark, sf_dir, "orders")
+    orders = _all_time_orders(spark, sf_dir, stats_range)
     filtered = orders.where(F.year("o_orderdate") >= 1800)
     keys = (
         [F.year("o_orderdate").cast("bigint").alias("era_year")]
@@ -276,11 +275,14 @@ def _era_activity(
 
 
 def _artist_evolution_activity(
-    spark: SparkSession, sf_dir: str, sitewide: bool = False, **params
+    spark: SparkSession,
+    sf_dir: str,
+    stats_range: str = "all_time",
+    sitewide: bool = False,
 ) -> DataFrame:
     """artist_evolution_activity (artist_evolution_activity.py:33-54):
     entity × year counts; sitewide aggregates across users."""
-    orders = load_table(spark, sf_dir, "orders")
+    orders = _all_time_orders(spark, sf_dir, stats_range)
     keys = [
         F.year("o_orderdate").cast("bigint").alias("year"),
         F.col("o_orderpriority").alias("entity"),
@@ -293,7 +295,7 @@ def _artist_evolution_activity(
 # -- CF pipeline ------------------------------------------------------------
 
 
-def _cf_create_dataframes(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _cf_create_dataframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cf...create_dataframes (create_dataframes.py:166-183): playcounts
     with dense surrogate ids for both axes."""
     from listenbrainz_server_spark.operators.ids import surrogate_ids_scalable
@@ -312,86 +314,105 @@ def _cf_create_dataframes(spark: SparkSession, sf_dir: str, **params) -> DataFra
 # -- import.* compute -------------------------------------------------------
 
 
-def _import_full(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _import_archive(
+    spark: SparkSession,
+    archive: str,
+    out_path: str | None,
+    metadata_path: str | None,
+    dump_id: int,
+    dump_type: str,
+) -> DataFrame:
+    """The S6 dump-archive transport (import_*_dump_to_hdfs parity,
+    listens/dump.py:33-80): streaming tar extraction, atomic-swap land
+    (append for incremental dumps), import-registry upsert — returning
+    the 1-row import report the reference handler returns as JSON."""
+    from listenbrainz_server_spark.sources.dump import import_dump
+
+    work = tempfile.mkdtemp(prefix="lbs_import_")
+    return import_dump(
+        spark,
+        archive,
+        work,
+        out_path or os.path.join(work, "listens"),
+        metadata_path or os.path.join(work, "meta"),
+        dump_id=int(dump_id),
+        dump_type=dump_type,
+    )
+
+
+def _import_full(
+    spark: SparkSession,
+    sf_dir: str,
+    archive: str | None = None,
+    out_path: str | None = None,
+    metadata_path: str | None = None,
+    dump_id: int = 0,
+) -> DataFrame:
     """import.dump.full compute: full-dump swap-in (listens/dump.py:
-    204-208) — rewrite the events dataset atomically, return it.
-
-    With an ``archive`` param the request routes through the S6
-    dump-archive transport (import_full_dump_to_hdfs parity,
-    listens/dump.py:33-55): streaming tar extraction, atomic-swap
-    land, import-registry upsert — returning the 1-row import report
-    the reference handler returns as JSON."""
-    if params.get("archive"):
-        from listenbrainz_server_spark.sources.dump import import_dump
-
-        work = tempfile.mkdtemp(prefix="lbs_import_")
-        return import_dump(
-            spark,
-            params["archive"],
-            work,
-            params.get("out_path") or os.path.join(work, "listens"),
-            params.get("metadata_path") or os.path.join(work, "meta"),
-            dump_id=int(params.get("dump_id", 0)),
-            dump_type="full",
+    204-208) — rewrite the events dataset atomically, return it. With
+    an ``archive`` param the request routes through the S6 transport."""
+    if archive:
+        return _import_archive(
+            spark, archive, out_path, metadata_path, dump_id, "full"
         )
     from listenbrainz_server_spark.sources.sinks import atomic_swap_write
 
     ev = load_table(spark, sf_dir, "events")
-    out = params.get("out_path") or os.path.join(
+    out = out_path or os.path.join(
         tempfile.mkdtemp(prefix="lbs_import_"), "events_full"
     )
     atomic_swap_write(ev, out)
     return spark.read.parquet(out)
 
 
-def _import_incremental(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _import_incremental(
+    spark: SparkSession,
+    sf_dir: str,
+    archive: str | None = None,
+    out_path: str | None = None,
+    metadata_path: str | None = None,
+    dump_id: int = 0,
+    cutoff: str = "2024-01-20",
+) -> DataFrame:
     """import.dump.incremental compute: base ∪ incremental union
-    (listens/data.py:25-55) — cutoff split plays the two dumps.
-
-    With an ``archive`` param the request routes through the S6
-    transport in append mode (import_incremental_dump_to_hdfs parity,
-    listens/dump.py:57-80)."""
-    if params.get("archive"):
-        from listenbrainz_server_spark.sources.dump import import_dump
-
-        work = tempfile.mkdtemp(prefix="lbs_import_")
-        return import_dump(
-            spark,
-            params["archive"],
-            work,
-            params.get("out_path") or os.path.join(work, "listens"),
-            params.get("metadata_path") or os.path.join(work, "meta"),
-            dump_id=int(params.get("dump_id", 0)),
-            dump_type="incremental",
+    (listens/data.py:25-55) — cutoff split plays the two dumps. With
+    an ``archive`` param the request routes through the S6 transport
+    in append mode."""
+    if archive:
+        return _import_archive(
+            spark, archive, out_path, metadata_path, dump_id, "incremental"
         )
     from listenbrainz_server_spark.sources.readers import union_base_incremental
 
     ev = load_table(spark, sf_dir, "events")
-    cutoff = F.lit(params.get("cutoff", "2024-01-20")).cast("timestamp")
+    cut = F.lit(cutoff).cast("timestamp")
     return union_base_incremental(
-        ev.where(F.col("ts") < cutoff),
-        ev.where(F.col("ts") >= cutoff),
+        ev.where(F.col("ts") < cut),
+        ev.where(F.col("ts") >= cut),
         ev.schema,
         spark,
     )
 
 
-def _import_sample(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _import_sample(
+    spark: SparkSession, sf_dir: str, fraction: float = 0.1
+) -> DataFrame:
     """import.dump.sample compute: reproducible hash-sampled subset."""
     from listenbrainz_server_spark.operators.sampling import hash_sample
 
     ev = load_table(spark, sf_dir, "events")
-    return hash_sample(ev, "event_id", params.get("fraction", 0.1))
+    return hash_sample(ev, "event_id", fraction)
 
 
-def _import_mlhd(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _import_mlhd(
+    spark: SparkSession, sf_dir: str, csv_glob: str | None = None
+) -> DataFrame:
     """import.dump.mlhd compute: TSV→Parquet transform
     (mlhd/download.py:63-110). Reads a caller-provided csv_glob, or
     synthesizes a tiny fixture when none is given (no MLHD dump ships
     with the testdata)."""
     from listenbrainz_server_spark.sources.readers import mlhd_csv_ingest
 
-    csv_glob = params.get("csv_glob")
     if csv_glob is None:
         d = tempfile.mkdtemp(prefix="lbs_mlhd_")
         with open(os.path.join(d, "user0.txt"), "w") as f:
@@ -400,7 +421,7 @@ def _import_mlhd(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
     return mlhd_csv_ingest(spark, csv_glob)
 
 
-def _import_deleted(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _import_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """import.deleted_listens compute: tombstone anti join
     (listens/delete.py:27-60)."""
     from listenbrainz_server_spark.sources.readers import apply_tombstones
@@ -410,7 +431,9 @@ def _import_deleted(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
     return apply_tombstones(ev, tombstones, ["event_id"])
 
 
-def _import_compact(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _import_compact(
+    spark: SparkSession, sf_dir: str, out_path: str | None = None
+) -> DataFrame:
     """import.compact_listens compute: date-partitioned rewrite
     (listens/compact.py:36-45); returns the compacted dataset."""
     from listenbrainz_server_spark.sources.sinks import partitioned_overwrite
@@ -418,14 +441,16 @@ def _import_compact(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
     )
-    out = params.get("out_path") or os.path.join(
+    out = out_path or os.path.join(
         tempfile.mkdtemp(prefix="lbs_compact_"), "events_compact"
     )
     partitioned_overwrite(ev, out, ["day"])
     return spark.read.parquet(out)
 
 
-def _import_pg_tables(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+def _import_pg_tables(
+    spark: SparkSession, sf_dir: str, out_path: str | None = None
+) -> DataFrame:
     """import.pg_metadata_tables compute: refresh the small dimension
     tables into a registry (postgres/__init__.py analog — JDBC source
     swapped for the parquet dims in this container)."""
@@ -433,9 +458,7 @@ def _import_pg_tables(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
 
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
-    out = params.get("out_path") or os.path.join(
-        tempfile.mkdtemp(prefix="lbs_pg_"), "dims"
-    )
+    out = out_path or os.path.join(tempfile.mkdtemp(prefix="lbs_pg_"), "dims")
     dims = nation.join(
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select(

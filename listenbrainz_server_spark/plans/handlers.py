@@ -71,6 +71,28 @@ def listening_activity(
     ).select(user_col, "bucket", "listen_count")
 
 
+def sitewide_listening_activity(events: DataFrame, buckets: DataFrame) -> DataFrame:
+    """stats.sitewide.listening_activity: the global listen count per
+    time-range bucket, zero-filled; ``buckets`` as in
+    ``listening_activity``."""
+    agg = (
+        events.join(
+            F.broadcast(buckets),
+            (F.col("ts") >= F.col("start")) & (F.col("ts") < F.col("end")),
+        )
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("listen_count"))
+    )
+    return (
+        buckets.select("bucket")
+        .join(agg, "bucket", "left")
+        .select(
+            "bucket",
+            F.coalesce("listen_count", F.lit(0).cast("bigint")).alias("listen_count"),
+        )
+    )
+
+
 def popularity(
     events: DataFrame,
     entity_col: str = "event_type",

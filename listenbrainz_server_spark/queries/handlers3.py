@@ -11,6 +11,7 @@ from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.operators.joins import anti_join, dim_join
 from listenbrainz_server_spark.operators.sessionize import session_pairs, with_session_ids
 from listenbrainz_server_spark.operators.topk import global_top_k, top_k_per_group
+from listenbrainz_server_spark.plans.handlers import sitewide_listening_activity
 from listenbrainz_server_spark.queries import register
 
 
@@ -210,22 +211,7 @@ def h_sitewide_listening_activity(spark: SparkSession, sf_dir: str) -> DataFrame
         ],
         "bucket string, start timestamp, end timestamp",
     )
-    agg = (
-        ev.join(
-            F.broadcast(buckets),
-            (F.col("ts") >= F.col("start")) & (F.col("ts") < F.col("end")),
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("listen_count"))
-    )
-    return (
-        buckets.select("bucket")
-        .join(agg, "bucket", "left")
-        .select(
-            "bucket",
-            F.coalesce("listen_count", F.lit(0).cast("bigint")).alias("listen_count"),
-        )
-    )
+    return sitewide_listening_activity(ev, buckets)
 
 
 # --------------------------------------------------------------------------

@@ -458,7 +458,7 @@ def i_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # zero-groups is exact. Money is integer-cent quantized BEFORE
 # summation (float sums are not associative enough to survive
 # subtract-then-compare — the repo's order-free-sum convention).
-# only_affected prunes the combine to erased keys (P8): a small
+# retract prunes the combine to erased keys (P8): a small
 # erasure batch touches a small state slice; the untouched remainder
 # unions back verbatim. Oracle = direct recompute over the surviving
 # rows, so the gate proves retraction == rebuild.

@@ -322,53 +322,26 @@ def als_recommend_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 # train_models.py:71-252 / recommend.py:36-60,285-305 lifecycle.
 # Iterative factorization — rows-only driver check (no oracle entry).
 # --------------------------------------------------------------------------
-# Named CV-grid profiles (VERDICT r7 #8). "reference" is the
-# reference's FULL default grid — request_manage.py:295-299 /
-# train_models.py:129-193: ranks [100, 120] × lambdas [0.1, 10.0] ×
-# iterations [5, 10] × alphas [3.0] = the "eight models" its module
-# docstring describes (iterations is a genuine grid axis there, so
-# max_iter is a tuple here and joins the ParamGridBuilder).
-# "default" is the bench-time profile m_als_cv runs (documented
-# trade, VERDICT r3 #5).
-ALS_GRID_PROFILES = {
-    "default": dict(
-        ranks=(4, 8), reg_params=(0.1,), alphas=(1.0,), max_iters=(2,)
-    ),
-    "reference": dict(
-        ranks=(100, 120),
-        reg_params=(0.1, 10.0),
-        alphas=(3.0,),
-        max_iters=(5, 10),
-    ),
-}
-
-
-def resolve_als_profile(profile: str) -> dict:
-    """Grid kwargs for a named profile (KeyError on unknown names —
-    a typo must not silently fall back to the reduced grid)."""
-    return dict(ALS_GRID_PROFILES[profile])
-
-
+# The reference's full default grid (request_manage.py:295-299 /
+# train_models.py:129-193) is ranks [100, 120] × lambdas [0.1, 10.0] ×
+# iterations [5, 10] × alphas [3.0]: the "eight models" its module
+# docstring describes. Iterations is a genuine grid axis there, which
+# is why ``max_iter`` may be a tuple here. The grid below is the
+# bench-time trade: ranks from the caller, regParam 0.1, alpha 1.0,
+# 2-fold CV.
 def als_cv_lifecycle(
     spark: SparkSession,
     sf_dir: str,
     registry_dir: str,
     ranks=(4, 8),
-    reg_params=(0.1,),
-    alphas=(1.0,),
     max_iter=3,
-    num_folds: int = 2,
     parallelism: int = 2,
-    profile: str | None = None,
 ) -> DataFrame:
     """Returns one row per grid candidate (params, avg CV RMSE) plus
     the winner's held-out test RMSE and registered model_id.
 
-    ``profile`` (optional) overrides the four grid axes from
-    ``ALS_GRID_PROFILES`` — ``profile="reference"`` is the reference's
-    full 8-candidate grid. ``max_iter`` accepts a scalar (fixed, the
-    historical behavior) or a tuple (a grid axis, as the reference's
-    ``iterations`` is)."""
+    ``max_iter`` accepts a scalar (fixed) or a tuple (a grid axis, as
+    the reference's ``iterations`` is)."""
     from pyspark.ml.evaluation import RegressionEvaluator
     from pyspark.ml.recommendation import ALS
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
@@ -378,10 +351,6 @@ def als_cv_lifecycle(
     )
     from listenbrainz_server_spark.operators.sampling import hash_split
 
-    if profile is not None:
-        p = resolve_als_profile(profile)
-        ranks, reg_params, alphas = p["ranks"], p["reg_params"], p["alphas"]
-        max_iter = p["max_iters"]
     max_iters = tuple(max_iter) if hasattr(max_iter, "__iter__") else (max_iter,)
 
     pc = _playcounts(spark, sf_dir)
@@ -443,8 +412,8 @@ def als_cv_lifecycle(
     gb = (
         ParamGridBuilder()
         .addGrid(als.rank, list(ranks))
-        .addGrid(als.regParam, list(reg_params))
-        .addGrid(als.alpha, list(alphas))
+        .addGrid(als.regParam, [0.1])
+        .addGrid(als.alpha, [1.0])
     )
     # iterations as a grid axis only when more than one value is asked
     # for — a single-valued addGrid would still work, but keeping the
@@ -459,7 +428,7 @@ def als_cv_lifecycle(
         estimator=als,
         estimatorParamMaps=grid,
         evaluator=evaluator,
-        numFolds=num_folds,
+        numFolds=2,
         parallelism=parallelism,
         seed=45,
     )

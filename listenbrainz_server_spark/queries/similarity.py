@@ -1846,8 +1846,8 @@ _MMR_LAM = 0.7
 _MMR_PIN_STAGES = True
 
 
-def _mmr_exact_oracle_sql(k: int = _MMR_K, n_cands: int = _MMR_CANDS) -> str:
-    """Greedy MMR replayed in SQL: exact top-n_cands per query, then k
+def _mmr_exact_oracle_sql() -> str:
+    """Greedy MMR replayed in SQL: exact top-_MMR_CANDS per query, then _MMR_K
     unrolled argmax stages. The objective lives in EXACT INTEGER
     micro-units — obj_u = 7*score_u - 3*pen_u where score_u/pen_u are
     the 6dp-rounded cosines scaled to 1e6 (so obj_u is the objective
@@ -1872,7 +1872,7 @@ def _mmr_exact_oracle_sql(k: int = _MMR_K, n_cands: int = _MMR_CANDS) -> str:
             SELECT qid, nid, score, ROW_NUMBER() OVER (
                 PARTITION BY qid ORDER BY score DESC, nid) AS rn
             FROM scored
-        ) WHERE rn <= {n_cands}
+        ) WHERE rn <= {_MMR_CANDS}
     ),
     sims AS MATERIALIZED (
         SELECT c1.qid, c1.nid AS i, c2.nid AS j,
@@ -1898,7 +1898,7 @@ def _mmr_exact_oracle_sql(k: int = _MMR_K, n_cands: int = _MMR_CANDS) -> str:
             ON c.qid = s.qid AND c.nid = s.nid
     )"""
     ]
-    for j in range(2, k + 1):
+    for j in range(2, _MMR_K + 1):
         parts.append(
             f"""
     obj{j} AS MATERIALIZED (
@@ -1934,7 +1934,7 @@ def _mmr_exact_oracle_sql(k: int = _MMR_K, n_cands: int = _MMR_CANDS) -> str:
     SELECT qid, nid, score,
            CAST(obj_u AS DOUBLE) / 10000000.0 AS mmr_score,
            rank
-    FROM selall{k}
+    FROM selall{_MMR_K}
     ORDER BY qid, rank
     """
     )

@@ -375,7 +375,7 @@ def st_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        q.awaitTermination()
     # Update mode appends one row per key per trigger; the final state
     # per user is the one with the largest running count (monotonic).
     emitted = spark.table(sink_name)
@@ -910,7 +910,7 @@ def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        q.awaitTermination()
     return spark.table(sink).select(
         "user_id", "session_start", "session_end", "n_events"
     )
@@ -992,7 +992,7 @@ def st_replay_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .option("checkpointLocation", ckpt)
                 .start()
             )
-            q.awaitTermination(180)
+            q.awaitTermination()
 
     drain(root + "/ckpt1")
     first = spark.read.parquet(state).localCheckpoint(eager=True)

@@ -46,10 +46,8 @@ from listenbrainz_server_spark.sources.sinks import (
 IMPORT_METADATA_SCHEMA = "dump_id bigint, dump_type string, imported_at timestamp"
 
 
-def extract_dump_archive(
-    archive: str, local_dir: str, extension: str = ".parquet"
-) -> list[str]:
-    """Stream a dump archive and extract members with ``extension``
+def extract_dump_archive(archive: str, local_dir: str) -> list[str]:
+    """Stream a dump archive and extract its ``.parquet`` members
     into ``local_dir``; returns the extracted paths in archive order.
 
     Mirrors extract_and_upload_archive (hdfs/upload.py:23-54): member
@@ -61,7 +59,7 @@ def extract_dump_archive(
     extracted: list[str] = []
     with tarfile.open(archive, mode="r|*") as tar:
         for member in tar:
-            if not (member.isfile() and member.name.endswith(extension)):
+            if not (member.isfile() and member.name.endswith(".parquet")):
                 continue
             # The reference aborts the import on any TarError
             # (DumpInvalidException); same contract, same reason.

@@ -35,7 +35,6 @@ def apply_tombstones(
     deleted_rows: DataFrame | None,
     delete_keys: Sequence[str],
     history_cutoff: DataFrame | None = None,
-    user_col: str = "user_id",
     created_col: str = "created",
 ) -> DataFrame:
     """P4+P5 (listens/data.py:67-86): subtract exact tombstones, then
@@ -43,22 +42,17 @@ def apply_tombstones(
     if deleted_rows is not None:
         df = anti_join(df, deleted_rows, delete_keys)
     if history_cutoff is not None:
-        df = df.join(F.broadcast(history_cutoff), on=user_col, how="left").where(
+        df = df.join(F.broadcast(history_cutoff), on="user_id", how="left").where(
             F.col("max_created").isNull() | (F.col(created_col) >= F.col("max_created"))
         ).drop("max_created")
     return df
 
 
-def glob_scan(
-    spark: SparkSession, path: str, pattern: str, schema: StructType | None = None
-) -> DataFrame:
+def glob_scan(spark: SparkSession, path: str, pattern: str) -> DataFrame:
     """S8: glob-filtered Parquet scan (mlhd/download.py:45-52 chunk
     reads). Partition discovery lists only matching files — at scale
     this is how the 16-way MLHD chunking bounds a job's input."""
-    reader = spark.read.option("pathGlobFilter", pattern)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    return spark.read.option("pathGlobFilter", pattern).parquet(path)
 
 
 def jdbc_query(
@@ -86,7 +80,6 @@ def mlhd_csv_ingest(
     spark: SparkSession,
     csv_glob: str,
     out_path: str | None = None,
-    user_files: int = 4,
 ) -> DataFrame:
     """S7: MLHD+ TSV → Parquet ingest (mlhd/download.py:63-110).
 
@@ -106,7 +99,7 @@ def mlhd_csv_ingest(
     if out_path is not None:
         # Small fixed file count per chunk (the reference's "smaller
         # number of large parquet files" goal) — at 100 TB raise
-        # user_files or drop the coalesce and let AQE size outputs.
-        df.coalesce(user_files).write.mode("overwrite").parquet(out_path)
+        # the count or drop the coalesce and let AQE size outputs.
+        df.coalesce(4).write.mode("overwrite").parquet(out_path)
         return spark.read.parquet(out_path)
     return df

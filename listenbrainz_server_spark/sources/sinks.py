@@ -26,10 +26,11 @@ def partitioned_overwrite(
     df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
 
 
-def append_coalesced(df: DataFrame, path: str, files: int = 1) -> None:
+def append_coalesced(df: DataFrame, path: str) -> None:
     """S10 (listens/dump.py:229-233): small incremental append,
-    coalesced so daily deltas don't shatter into per-task files."""
-    df.coalesce(files).write.mode("append").parquet(path)
+    coalesced to one file so daily deltas don't shatter into per-task
+    files."""
+    df.coalesce(1).write.mode("append").parquet(path)
 
 
 def atomic_swap_write(

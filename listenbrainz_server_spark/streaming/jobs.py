@@ -19,6 +19,11 @@ tests/test_streaming.py proves stream-mode ≡ batch-mode on the same
 input (the property that makes the engine's incremental semantics
 trustworthy).
 
+The ``availableNow`` sinks block until the drain ends: such a run
+stops by itself once the source is consumed, and a failed run raises
+``StreamingQueryException``, so no sink returns while its query still
+runs.
+
 Scale notes: watermarks bound state (late events beyond the watermark
 drop); session_window state is per-user and merges on arrival — at
 1000 executors the state store partitions on the grouping key, so
@@ -83,12 +88,11 @@ def windowed_counts(
     ts_col: str,
     group_cols: list[str],
     window: str = "1 hour",
-    watermark: str | None = "2 hours",
 ) -> DataFrame:
     """Event-time tumbling-window counts (+sum of ``value`` when
     present). Watermark bounds streaming state; harmless in batch."""
-    if watermark is not None and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
+    if df.isStreaming:
+        df = df.withWatermark(ts_col, "2 hours")
     aggs = [F.count(F.lit(1)).alias("n")]
     if "value" in df.columns:
         aggs.append(F.sum("value").alias("total_value"))
@@ -100,13 +104,12 @@ def session_aggregate(
     ts_col: str,
     user_col: str,
     gap: str = "30 minutes",
-    watermark: str | None = "2 hours",
     extra_aggs: list[Column] | None = None,
 ) -> DataFrame:
     """Native session-window aggregation: events within ``gap`` of the
     running session end merge; state is per-``user_col``."""
-    if watermark is not None and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
+    if df.isStreaming:
+        df = df.withWatermark(ts_col, "2 hours")
     aggs = [F.count(F.lit(1)).alias("n_events")] + list(extra_aggs or [])
     return df.groupBy(
         F.session_window(F.col(ts_col), gap).alias("sw"), F.col(user_col)
@@ -186,7 +189,6 @@ def trending_rank_sink(
     slide: str = "1 hour",
     top_k: int = 3,
     watermark: str | None = "2 hours",
-    timeout_s: int = 120,
     state_partitions: int | None = None,
 ) -> None:
     """In-stream ranked trending top-k (VERDICT r7 #4): close the gap
@@ -251,10 +253,10 @@ def trending_rank_sink(
             .option("checkpointLocation", counts_path.rstrip("/") + "__ckpt")
             .start()
         )
-        q.awaitTermination(timeout_s)
+        q.awaitTermination()
 
 
-def quality_gate(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_gate(df: DataFrame) -> DataFrame:
     """Streaming corpus quality filter (NEXT round-5 candidate): the
     d_clean_corpus admission gate applied to a document stream. The
     gate is a pure column expression (functions.text.quality_flag), so
@@ -266,12 +268,10 @@ def quality_gate(df: DataFrame, text_col: str = "text") -> DataFrame:
     (tests/test_streaming.py proves stream ≡ batch)."""
     from listenbrainz_server_spark.functions.text import quality_flag
 
-    return df.where(quality_flag(F.col(text_col)))
+    return df.where(quality_flag(F.col("text")))
 
 
-def run_to_memory_sink(
-    stream_df: DataFrame, query_name: str, timeout_s: int = 120
-) -> None:
+def run_to_memory_sink(stream_df: DataFrame, query_name: str) -> None:
     """Drain a stream with the available-now trigger into an in-memory
     table (test/debug sink — S12's result-sink analog for streams)."""
     q = (
@@ -281,14 +281,13 @@ def run_to_memory_sink(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    q.awaitTermination()
 
 
 def stream_dedup(
     df: DataFrame,
     key_cols: list[str],
     ts_col: str,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming exact dedup: dropDuplicatesWithinWatermark on the
     identity keys — the streaming analog of the reference's ON CONFLICT
@@ -296,13 +295,13 @@ def stream_dedup(
     engine's batch exact_dedup.
 
     Watermark bounds the dedup state store: a duplicate arriving later
-    than ``watermark`` after the original is NOT suppressed (and a
+    than the 2-hour watermark after the original is NOT suppressed (and a
     correctly configured upstream should not produce one) — that is the
     state-size/completeness trade every streaming dedup makes. In batch
     mode plain dropDuplicates gives the exact answer.
     """
     if df.isStreaming:
-        return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        return df.withWatermark(ts_col, "2 hours").dropDuplicatesWithinWatermark(
             key_cols
         )
     return df.dropDuplicates(key_cols)
@@ -313,7 +312,6 @@ def foreach_batch_upsert(
     state_path: str,
     keys: list[str],
     sum_cols: list[str],
-    timeout_s: int = 120,
 ) -> None:
     """Drain a stream into a Parquet aggregate-state sink via
     ``foreachBatch``: each micro-batch is pre-aggregated (map-side
@@ -356,7 +354,7 @@ def foreach_batch_upsert(
         .option("checkpointLocation", state_path.rstrip("/") + "__ckpt")
         .start()
     )
-    q.awaitTermination(timeout_s)
+    q.awaitTermination()
 
 
 def merge_latest_into_state(
@@ -401,7 +399,6 @@ def foreach_batch_merge_latest(
     state_path: str,
     keys: list[str],
     order_cols: list[str],
-    timeout_s: int = 120,
 ) -> None:
     """CDC-style last-write-wins MERGE sink via ``foreachBatch``: the
     state keeps exactly one row per key — the version with the highest
@@ -427,7 +424,7 @@ def foreach_batch_merge_latest(
         .option("checkpointLocation", state_path.rstrip("/") + "__ckpt")
         .start()
     )
-    q.awaitTermination(timeout_s)
+    q.awaitTermination()
 
 
 def interval_join(
@@ -505,13 +502,11 @@ def interval_join_outer(
     return left.join(right, cond, "leftOuter")
 
 
-def stream_static_enrich(
-    stream: DataFrame, dim: DataFrame, on: str, how: str = "left"
-) -> DataFrame:
+def stream_static_enrich(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     """Stream-static dimension enrichment: join each micro-batch
     against a STATIC dimension table. Stateless in stream mode (no
     watermark, no state store — Spark re-plans the static side per
     micro-batch, picking up in-place refreshes of the dim snapshot);
     the broadcast hint keeps the stream side shuffle-free, exactly the
     J1 fact×dim discipline applied to the streaming path."""
-    return stream.join(F.broadcast(dim), on, how)
+    return stream.join(F.broadcast(dim), on, "left")

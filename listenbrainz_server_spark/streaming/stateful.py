@@ -103,7 +103,9 @@ _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap, microseconds
 
 
 def _make_session_cdc_update(gap_us: int):
-    """Build the per-key state-update closure. Defined as a factory so
+    """Build the per-key state-update closure: the per-row reference
+    that tests/test_streaming.py pins ``_make_session_cdc_update_vec``
+    (what ``session_cdc`` runs) against. Defined as a factory so
     the returned function cloudpickles BY VALUE (the repo's Pandas-UDF
     convention) — a module-level function would pickle by reference
     and require this package on every executor worker's import path."""
@@ -285,27 +287,16 @@ def _make_session_cdc_update_vec(gap_us: int):
     return _update
 
 
-# Vectorized update is the production path; the per-row reference
-# implementation stays for the equivalence pin
-# (tests/test_streaming.py::test_session_cdc_vec_matches_reference).
-_SESSION_CDC_VEC = True
-
-
 def session_cdc(stream_df: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     """Session-window aggregation over a (user_id, event_id, ts, op)
     changelog stream with delete retractions. Emits each session
     exactly once (append) when the event-time watermark passes its
     end; state holds only open-session events per user."""
-    make = (
-        _make_session_cdc_update_vec
-        if _SESSION_CDC_VEC
-        else _make_session_cdc_update
-    )
     return (
         stream_df.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            make(_GAP_US),
+            _make_session_cdc_update_vec(_GAP_US),
             outputStructType=SESSION_CDC_OUT_SCHEMA,
             stateStructType=SESSION_CDC_STATE_SCHEMA,
             outputMode="append",

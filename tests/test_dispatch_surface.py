@@ -94,6 +94,25 @@ def test_dispatch_param_plumbing(spark):
     assert k1.where("rank > 1").count() == 0
 
 
+@pytest.mark.parametrize(
+    "name, params, error",
+    [
+        ("year_in_music.top_stats", {"year": 2021}, TypeError),
+        ("stats.user.genre_activity", {"stats_rang": "week"}, TypeError),
+        ("stats.user.era_activity", {"stats_range": "week"}, ValueError),
+        ("import.dump.sample", {"fracton": 0.5}, TypeError),
+    ],
+)
+def test_dispatch_rejects_params_the_provider_does_not_read(
+    spark, name, params, error
+):
+    # The reference calls handler(**params) (request_consumer.py:74):
+    # a mistyped or unsupported param fails the request instead of
+    # silently answering a different question.
+    with pytest.raises(error):
+        dispatch(name, spark, SF, **params)
+
+
 def test_import_dump_archive_param_routes_s6_transport(spark, tmp_path):
     """import.dump.full/incremental with an ``archive`` param route
     through the S6 tar transport (import_*_dump_to_hdfs parity) and

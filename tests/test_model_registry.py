@@ -79,36 +79,12 @@ def test_als_cv_selects_params_from_grid(spark, tmp_path):
     assert meta.model_id == best[0].model_id
 
 
-def test_als_profile_grid_plumbs_through(spark, tmp_path):
-    """VERDICT r7 #8: the named-profile knob. 'reference' must resolve
-    to the reference's full default grid (request_manage.py:295-299 —
-    ranks 100/120 × lambdas 0.1/10.0 × iterations 5/10 × alphas 3.0 =
-    8 candidates) without fitting it; and a tuple max_iter must become
-    a REAL grid axis whose value lands in the output rows (fitted on a
-    deliberately tiny custom grid)."""
-    from listenbrainz_server_spark.queries.ml import (
-        ALS_GRID_PROFILES,
-        als_cv_lifecycle,
-        resolve_als_profile,
-    )
+def test_als_max_iter_tuple_is_grid_axis(spark, tmp_path):
+    """A tuple max_iter must become a REAL grid axis whose value lands
+    in the output rows, as the reference's ``iterations`` is
+    (train_models.py:129-193); fitted on a deliberately tiny grid."""
+    from listenbrainz_server_spark.queries.ml import als_cv_lifecycle
 
-    ref = resolve_als_profile("reference")
-    assert ref == dict(
-        ranks=(100, 120), reg_params=(0.1, 10.0), alphas=(3.0,),
-        max_iters=(5, 10),
-    )
-    n_candidates = (
-        len(ref["ranks"]) * len(ref["reg_params"]) * len(ref["alphas"])
-        * len(ref["max_iters"])
-    )
-    assert n_candidates == 8  # "Eight models are trained" — train_models.py:7
-    assert set(ALS_GRID_PROFILES) == {"default", "reference"}
-    import pytest as _pytest
-
-    with _pytest.raises(KeyError):
-        resolve_als_profile("referense")  # typos must not silently degrade
-
-    # max_iter as a grid axis, end to end on a tiny fit.
     out = als_cv_lifecycle(
         spark,
         "/root/testdata/sf0.001",

@@ -141,8 +141,8 @@ def test_message_float_rounding_contract(spark):
     """VERDICT r10 #6: floats are canonicalized to MESSAGE_FLOAT_DP
     decimals at the message boundary — including inside nested
     structs/arrays — so a float-emitting handler's stream is stable
-    under plan/partial-sum-order changes. float_dp=None passes raw
-    doubles through; pre-rounded values are untouched (identity)."""
+    under plan/partial-sum-order changes; pre-rounded values are
+    untouched (identity)."""
     df = spark.createDataFrame(
         [(1, 0.12345678901, [1.00000049, 2.0], {"s": 0.9999996})],
         "k int, x double, arr array<double>, st struct<s: double>",
@@ -152,10 +152,6 @@ def test_message_float_rounding_contract(spark):
     assert row["x"] == 0.123457
     assert row["arr"] == [1.0, 2.0]
     assert row["st"]["s"] == 1.0
-    raw = next(
-        iter_message_chunks(df, chunk_size=10, message_type="t", float_dp=None)
-    )["data"][0]
-    assert raw["x"] == 0.12345678901
     pre = spark.createDataFrame([(0.33617,)], "y double")
     assert next(iter_message_chunks(pre, 10, "t"))["data"][0]["y"] == 0.33617
 

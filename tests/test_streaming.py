@@ -45,6 +45,7 @@ def test_windowed_counts_stream_equals_batch(spark, event_dir):
     stream = read_parquet_stream(spark, event_dir, batch.schema)
     out = windowed_counts(stream, "ts", ["event_type"], window="1 hour")
     run_to_memory_sink(out, "wc_test")
+    assert not spark.streams.active  # the sink returns only after its drain ends
     got = spark.table("wc_test").select("w", "event_type", "n", "total_value")
     expect = windowed_counts(batch, "ts", ["event_type"], window="1 hour")
     cols = ["w", "event_type", "n", "total_value"]
@@ -139,6 +140,7 @@ def test_trending_rank_sink_ranked_stream_equals_batch(spark, tmp_path):
         stream, "ts", "event_type", counts_path, ranked_path,
         window="2 hours", slide="1 hour", top_k=2, watermark="2 hours",
     )
+    assert not spark.streams.active
     got = spark.read.parquet(ranked_path)
     expect = sliding_trending(
         batch, "ts", "event_type", window="2 hours", slide="1 hour", top_k=2
@@ -155,6 +157,7 @@ def test_trending_rank_sink_ranked_stream_equals_batch(spark, tmp_path):
         stream2, "ts", "event_type", counts_path, ranked_path,
         window="2 hours", slide="1 hour", top_k=2, watermark="2 hours",
     )
+    assert not spark.streams.active
     assert _rows(spark.read.parquet(ranked_path), cols) == _rows(expect, cols)
 
 
@@ -226,6 +229,7 @@ def test_foreach_batch_upsert_equals_batch(spark, event_dir, tmp_path):
         spark, multi_dir, spark.read.parquet(multi_dir).schema, max_files=1
     )
     jobs.foreach_batch_upsert(stream, state, keys=["user_id"], sum_cols=["n"])
+    assert not spark.streams.active
 
     got = {r.user_id: r.n for r in spark.read.parquet(state).collect()}
     want = {
@@ -593,7 +597,7 @@ def test_session_cdc_same_timestamp_delete_wins(spark, tmp_path):
     assert got == {(1, t(0), t(30), 1)}  # u2 erased, u1's t5 retracted
 
 
-def test_session_cdc_vec_matches_reference(spark, tmp_path):
+def test_session_cdc_vec_matches_reference(spark, tmp_path, monkeypatch):
     """The vectorized state update (production path) and the per-row
     reference implementation produce identical session sets on a
     mixed fixture: multi-session users, same-timestamp U/D ties,
@@ -632,35 +636,34 @@ def test_session_cdc_vec_matches_reference(spark, tmp_path):
             "append"
         ).parquet(log)
 
-    results = {}
-    # try/finally (ADVICE r10): a failure or timeout in the vec=False
-    # drain must not leave the per-row reference path active for every
-    # later test in the session.
-    try:
-        for vec in (False, True):
-            stf._SESSION_CDC_VEC = vec
-            sink = f"cdc_eq_{int(vec)}"
-            q = (
-                stf.session_cdc(
-                    read_parquet_stream(
-                        spark, log, spark.read.parquet(log).schema, max_files=1
-                    ),
-                    watermark="30 minutes",
-                )
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / f"ckpt{int(vec)}"))
-                .trigger(availableNow=True)
-                .start()
+    def drain(sink: str) -> set:
+        q = (
+            stf.session_cdc(
+                read_parquet_stream(
+                    spark, log, spark.read.parquet(log).schema, max_files=1
+                ),
+                watermark="30 minutes",
             )
-            q.awaitTermination(120)
-            results[vec] = {
-                (r.user_id, r.session_start, r.session_end, r.n_events)
-                for r in spark.table(sink).collect()
-            }
-    finally:
-        stf._SESSION_CDC_VEC = True
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{sink}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return {
+            (r.user_id, r.session_start, r.session_end, r.n_events)
+            for r in spark.table(sink).collect()
+        }
+
+    results = {True: drain("cdc_eq_vec")}
+    # monkeypatch restores the vectorized update after the test, even
+    # when the reference drain fails.
+    monkeypatch.setattr(
+        stf, "_make_session_cdc_update_vec", stf._make_session_cdc_update
+    )
+    results[False] = drain("cdc_eq_ref")
     assert results[True] == results[False]
     assert results[True] == {
         (1, t(0), t(45), 3),    # 102 deleted
