@@ -32,7 +32,8 @@ Each run executes under the Spark job group "bench:<name>:<i>". With
 --all / --only, the last timed run of each query is read back from
 Spark's own status stores into a per-query record (jobs, stages,
 tasks, executor time, shuffle and spill bytes, SQL executions and the
-executed plan-node counts), written under "records"; red_flags() is the
+executed plan-node counts, not counting a cached relation's plan),
+written under "records"; red_flags() is the
 one check on it. Profile one query with
 `python bench.py --only <name> --no-artifact`.
 """
@@ -121,13 +122,38 @@ def record(spark, group: str) -> dict:
     sql = spark._jsparkSession.sharedState().statusStore()
     ops: dict[str, int] = {}
     for eid in sorted(exec_ids):
-        it = sql.planGraph(eid).allNodes().iterator()
-        while it.hasNext():
-            op = it.next().name().strip()
-            if not op.startswith("WholeStageCodegen"):  # wrappers, not operators
-                ops[op] = ops.get(op, 0) + 1
+        for op in _executed_ops(sql.planGraph(eid)):
+            ops[op] = ops.get(op, 0) + 1
     rec["ops"] = dict(sorted(ops.items()))
     return rec
+
+
+def _executed_ops(graph) -> list[str]:
+    """Operator names of a SparkPlanGraph, walked from its roots along
+    its child -> parent edges. The walk stops at each InMemoryTableScan:
+    the graph hangs the cached relation's plan below it, and that plan
+    ran when the cache was filled, not in this execution."""
+    names, children, has_parent = {}, {}, set()
+    it = graph.allNodes().iterator()
+    while it.hasNext():
+        node = it.next()
+        names[node.id()] = node.name().strip()
+    it = graph.edges().iterator()
+    while it.hasNext():
+        edge = it.next()
+        children.setdefault(edge.toId(), []).append(edge.fromId())
+        has_parent.add(edge.fromId())
+    todo, seen, ops = [i for i in names if i not in has_parent], set(), []
+    while todo:
+        i = todo.pop()
+        if i in seen:
+            continue
+        seen.add(i)
+        if not names[i].startswith("WholeStageCodegen"):  # wrappers, not operators
+            ops.append(names[i])
+        if names[i] != "InMemoryTableScan":
+            todo.extend(children.get(i, ()))
+    return ops
 
 
 # MLlib's ALS recommendForAllUsers cross-joins blocks of the user and

@@ -241,7 +241,8 @@ def connected_components(
     component member's id, so the fixpoint is exactly the component
     minimum (at a fixpoint any edge (u,v) forces l(v) ≤ l(u) and
     symmetrically, hence equal labels per component).
-    ``max_iter`` is a safety bound, not the expected cost.
+    ``max_iter`` is a safety bound, not the expected cost: exceeding
+    it raises ``RuntimeError`` rather than return partial labels.
 
     When ``stats`` is passed, ``stats["rounds"]`` records the number
     of executed rounds (including the final no-change confirmation
@@ -322,7 +323,7 @@ def connected_components(
     phase = "plain"
     # The plain round that confirms a contraction fixpoint does not
     # count against max_iter: a contraction that converges on the last
-    # allowed round still gets its proof instead of a spurious warning.
+    # allowed round still gets its proof instead of a spurious error.
     while rounds < max_iter + (phase == "confirm"):
         rounds += 1
         if phase != "contract":
@@ -425,14 +426,10 @@ def connected_components(
                 # on the ORIGINAL edges before stopping.
                 phase = "confirm"
     else:
-        import warnings
-
-        warnings.warn(
+        # Partially propagated labels would be a silently wrong grouping.
+        raise RuntimeError(
             f"connected_components: not converged after {max_iter} rounds "
-            "(a component's diameter exceeds max_iter); group labels are "
-            "partially propagated — raise max_iter.",
-            RuntimeWarning,
-            stacklevel=2,
+            "(a component's diameter exceeds max_iter)."
         )
     if stats is not None:
         stats["rounds"] = rounds

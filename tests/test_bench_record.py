@@ -68,3 +68,19 @@ def test_other_job_groups_are_not_counted(spark):
     assert other["sql_executions"] == 2 and other["ops"].get("Exchange") == 2
     assert rec["sql_executions"] == 1 and "Exchange" not in rec["ops"]
     assert rec["jobs"] == 1 and rec["shuffle_write_bytes"] == 0
+
+
+def test_cached_subtree_is_not_counted(spark):
+    """The plan graph hangs a cached relation's plan below its
+    InMemoryTableScan; that plan ran when the cache was filled, under
+    another job group, so only the aggregation's own exchange counts."""
+    spark.sparkContext.setJobGroup("rec:fill", "rec:fill")
+    cached = spark.range(1000).repartition(3).cache()
+    cached.count()
+    try:
+        rec = _run(spark, "rec:cached",
+                   cached.groupBy((F.col("id") % 7).alias("k")).count())
+    finally:
+        cached.unpersist()
+    assert rec["ops"].get("InMemoryTableScan") == 1
+    assert rec["ops"].get("Exchange") == 1

@@ -1,36 +1,44 @@
-"""Blast-radius correctness of the standing sf0.1 gate (VERDICT r13 #2).
+"""The re-gate path of tools/endround.py: the changed-file -> stale-names
+map of the staleness rule, the one CHECK artifact writer and the A/B
+anchor's prior timings.
 
-The gate is insurance only if its changed-module -> affected-names
-computation cannot under-run. _stale_names fails SAFE on every
-anomaly (unknown head, git error, non-query file -> full pass); the
-one genuine under-run risk is cross-imports between query modules:
-dedup.py / extras.py use text.py's _QUALITY_EXPR, handlers4.py uses
-ml.py's user_cosine_pairs, api_variants.py uses handlers4's
-_COSINE_PAIRS_SQL. These tests pin that the AST dependency map sees
-those edges and that the expansion closes over them transitively, so
-a text.py change re-gates the dependents too.
+The stale set must not under-run. Query modules import from each other
+(dedup.py and extras.py use text.py's quality expression, handlers4.py
+uses ml.py's cosine pairs, api_variants.py uses handlers4's SQL) and
+from shared modules; these tests pin that the package import graph sees
+those edges and that the expansion closes over them transitively.
 
-No Spark session needed — everything here is pure file/AST work.
+No Spark session is needed; only the prior-timings test reads git.
 """
 
+import json
 import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from endround import (  # noqa: E402
-    _expand_query_deps,
-    _package_import_graph,
-    _query_module_deps,
-)
+import endround  # noqa: E402
+from endround import _expand_query_deps, _package_import_graph  # noqa: E402
 
 PKG = "listenbrainz_server_spark/queries"
 ROOT = "listenbrainz_server_spark"
+REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
+
+
+def _query_deps() -> dict[str, set[str]]:
+    """The package graph restricted to query modules and their edges to
+    sibling query modules (`from ...queries import register` is a
+    package import, not a module edge)."""
+    def is_mod(f):
+        return f.startswith(PKG + "/") and not f.endswith("__init__.py")
+
+    return {f: {m for m in ms if is_mod(m)}
+            for f, ms in _package_import_graph().items() if is_mod(f)}
 
 
 def test_dependency_map_sees_known_edges():
-    deps = _query_module_deps()
+    deps = _query_deps()
     # The four real edges in the codebase today. If one disappears
     # (helper moved/inlined), update BOTH the import and this pin.
     assert f"{PKG}/text.py" in deps[f"{PKG}/dedup.py"]
@@ -40,7 +48,7 @@ def test_dependency_map_sees_known_edges():
 
 
 def test_dependency_map_covers_every_query_module():
-    deps = _query_module_deps()
+    deps = _query_deps()
     pkg_dir = os.path.join(os.path.dirname(__file__), "..", PKG)
     expected = {
         f"{PKG}/{fn}" for fn in os.listdir(pkg_dir)
@@ -75,8 +83,7 @@ def test_expansion_is_transitive():
 def test_expansion_passes_non_query_files_through():
     deps = {"q/a.py": {"q/b.py"}, "q/b.py": set()}
     # An operators/ file is not in the map: it survives the expansion
-    # unchanged so the caller's unknown-file branch still forces the
-    # conservative FULL pass.
+    # unchanged, so the caller still sees it.
     out = _expand_query_deps(
         {"listenbrainz_server_spark/operators/joins.py"}, deps
     )
@@ -86,7 +93,7 @@ def test_expansion_passes_non_query_files_through():
 def test_real_ml_change_reaches_api_variants():
     """The two-hop chain in the real map: ml.py -> handlers4.py ->
     api_variants.py. A change to ml.py must stale all three."""
-    deps = _query_module_deps()
+    deps = _query_deps()
     out = _expand_query_deps({f"{PKG}/ml.py"}, deps)
     assert f"{PKG}/handlers4.py" in out
     assert f"{PKG}/api_variants.py" in out
@@ -165,31 +172,12 @@ def test_shared_module_change_reaches_nearly_every_query_module():
     )
 
 
-def test_aba_prior_fallback_resolves_the_r13_parsed_null_artifact():
-    """BENCH_r13.json is parsed:null (the r13 oversized-line defect).
-    The r14 anchor initially compared against an EMPTY prior map and
-    stamped 'no movers' — vacuous. _prior_query_map must fall back to
-    the committed full-sweep artifact at the prior round's recorded
-    head and return real per-query data, with a label that says the
-    fallback happened."""
-    import json
-
-    from endround import _prior_query_map
-
-    repo = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
-    prior_bench = os.path.join(repo, "BENCH_r13.json")
-    if not os.path.exists(prior_bench):
-        return  # artifact pruned — nothing to pin against
-    old_head = json.load(
-        open(os.path.join(repo, "CHECK_full_r13.json"))).get("git_head")
-    q, label = _prior_query_map(prior_bench, old_head)
-    assert len(q) >= 250, "fallback sweep should carry the registry"
-    assert label and "fallback" in label and old_head[:10] in label
-    # A parseable driver artifact must be preferred and carry no
-    # fallback label.
-    q12, label12 = _prior_query_map(
-        os.path.join(repo, "BENCH_r12.json"), old_head)
-    assert q12 and label12 is None
+def test_prior_timings_read_the_sweep_committed_at_the_r15_head():
+    """The A/B anchor's prior timings are the full sweep committed at
+    the previous CHECK_full artifact's head."""
+    with open(os.path.join(REPO, "CHECK_full_r15.json")) as f:
+        old_head = json.load(f)["git_head"]
+    assert len(endround._prior_timings(old_head)) >= 290
 
 
 def test_registry_files_live_in_the_queries_package():
@@ -203,13 +191,71 @@ def test_registry_files_live_in_the_queries_package():
 
     from listenbrainz_server_spark.queries import load_all
 
-    repo = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
     registry = load_all()
     assert len(registry) >= 294
     for name, q in registry.items():
         src = inspect.getsourcefile(q.fn)
-        rel = os.path.relpath(src, repo)
+        rel = os.path.relpath(src, REPO)
         assert rel.startswith(PKG + "/"), (
             f"{name} defined outside the queries package ({rel}) — "
             "the sf0.1 gate's blast radius no longer covers it"
         )
+
+
+def test_changed_producer_stales_its_own_artifacts_whole(monkeypatch):
+    """tools/check.py certified every CHECK row, so its change re-gates
+    the whole registry (None); it moves no bench number, and bench.py's
+    change is unbounded for the bench only."""
+    changed: set[str] = set()
+    monkeypatch.setattr(endround, "_changed_since", lambda head: set(changed))
+    registry = {"q_a": None, "q_b": None}
+    head = "0" * 40
+    changed.add("tools/check.py")
+    assert endround._stale_names(registry, head, "tools/check.py") is None
+    assert endround._stale_names(registry, head, "bench.py") == set()
+    changed.add("bench.py")
+    assert endround._stale_names(registry, head, "bench.py") is None
+    # A/B legs run this tree's bench.py on both sides: neither counts.
+    assert endround._stale_names(registry, head, None) == set()
+    # An artifact without a head cannot be diffed: unbounded.
+    assert endround._stale_names(registry, None, "bench.py") is None
+    assert set(endround.PRODUCERS) <= set(endround.GUARDED)
+
+
+def test_regate_merges_over_the_newest_rows_and_stamps_head(tmp_path, monkeypatch):
+    ok = {"status": "pass", "rows": 1}
+    with open(tmp_path / "CHECK_x_r07.json", "w") as f:
+        json.dump({"queries": {"q_old": ok, "q_keep": ok, "q_redo": ok,
+                               "q_gone": ok}, "git_head": "a" * 40}, f)
+    calls = []
+
+    def fake_check(sf_dir, names):
+        calls.append((sf_dir, names))
+        return {"q_redo": {"status": "fail", "err": "hash mismatch"}}
+
+    monkeypatch.setattr(endround, "_check", fake_check)
+    monkeypatch.setattr(endround, "_git_head", lambda: "b" * 40)
+    registry = {"q_old": 0, "q_keep": 0, "q_redo": 0, "q_new": 0}
+    out = tmp_path / "CHECK_x_r08.json"
+    errs = endround._regate("sfX", str(out), ["q_redo"], registry)
+    assert calls == [("sfX", ["q_redo"])]
+    art = json.loads(out.read_text())
+    # Prior rows kept, the re-run name overwritten, unregistered dropped.
+    assert art["queries"] == {"q_old": ok, "q_keep": ok,
+                              "q_redo": {"status": "fail", "err": "hash mismatch"}}
+    assert (art["n_pass"], art["n_fail"], art["n_rows_only"]) == (2, 1, 0)
+    assert art["n_registry"] == 4 and art["sf_dir"] == "sfX"
+    assert art["git_head"] == "b" * 40
+    assert errs == ["CHECK_x_r08.json: 1 oracle failures ['q_redo']",
+                    "CHECK_x_r08.json covers 3/4"]
+
+    # Nothing to re-run: no check call, the newest rows re-stamped.
+    monkeypatch.setattr(endround, "_git_head", lambda: "c" * 40)
+    errs = endround._regate("sfX", str(out), [], {"q_old": 0, "q_keep": 0})
+    assert len(calls) == 1 and errs == []
+    assert json.loads(out.read_text())["git_head"] == "c" * 40
+
+    # names=None re-gates the whole registry.
+    monkeypatch.setattr(endround, "_check",
+                        lambda sf_dir, names: {"q_old": ok, "q_keep": ok})
+    assert endround._regate("sfX", str(out), None, {"q_old": 0, "q_keep": 0}) == []

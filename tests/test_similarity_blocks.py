@@ -102,25 +102,19 @@ def test_connected_components_shuffled_chain_contracts(spark):
 
     # The confirming plain round is not counted against max_iter: with
     # max_iter set so the contraction converges on the last allowed
-    # round, the confirm round still runs, silently, with equal labels.
-    import warnings
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        tight = connected_components(
-            nodes, pairs, max_iter=stats["rounds"] - 1
-        )
-        assert {(r.id, r.group_id) for r in tight.collect()} == labels
+    # round, the confirm round still runs and nothing is raised.
+    tight = connected_components(nodes, pairs, max_iter=stats["rounds"] - 1)
+    assert {(r.id, r.group_id) for r in tight.collect()} == labels
 
 
-def test_connected_components_warns_when_not_converged(spark):
+def test_connected_components_raises_when_not_converged(spark):
     # A 6-node path graph has diameter 5; max_iter=1 cannot converge.
     nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "id_a long, id_b long"
     )
-    with pytest.warns(RuntimeWarning, match="not converged"):
-        connected_components(nodes, pairs, max_iter=1).collect()
+    with pytest.raises(RuntimeError, match="not converged"):
+        connected_components(nodes, pairs, max_iter=1)
     # And with enough rounds it converges to a single min-label group.
     out = connected_components(nodes, pairs, max_iter=10)
     assert {r.group_id for r in out.collect()} == {0}
