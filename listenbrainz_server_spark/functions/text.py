@@ -84,7 +84,7 @@ def quality_flag(text: Column | str) -> Column:
     (repetition proxy).
     Pure expression (tokenize + run-length fold) — zero shuffle, so it
     is usable identically in batch scans and streaming micro-batches
-    (see streaming.jobs.quality_gate)."""
+    (st_quality_gate; tests/test_streaming.py pins stream ≡ batch)."""
     toks = tokens(text)
     total = F.size(toks).cast("bigint")
     return (total >= 20) & (top_word_count(toks) * 1.0 / total <= 0.25)

@@ -27,10 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def group_count(df: DataFrame, keys: Sequence[str], count_name: str = "listen_count") -> DataFrame:
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(count_name))
-
-
 def capped_count(
     df: DataFrame,
     user_key: str,
@@ -69,7 +65,3 @@ def combine_aggregates(
     unioned = existing.unionByName(delta)
     aggs = [F.sum(c).alias(c) for c in sum_cols]
     return unioned.groupBy(*keys).agg(*aggs)
-
-
-def distinct_count(df: DataFrame, keys: Sequence[str], what: str, alias: str) -> DataFrame:
-    return df.groupBy(*keys).agg(F.countDistinct(what).alias(alias))

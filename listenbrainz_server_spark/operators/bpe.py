@@ -109,27 +109,3 @@ def bpe_train(
         ).localCheckpoint(eager=True)
     return merges
 
-
-def bpe_encode(df: DataFrame, text_col: str, merges: list[tuple]) -> DataFrame:
-    """Tokenize text with a trained merge list: whitespace words →
-    character symbols → each merge applied in rank order as a chained
-    pure-expression fold. ``merges`` accepts the tuples bpe_train
-    returns. Adds ``bpe_tokens`` (flattened subword array) and
-    ``bpe_token_count``.
-
-    The merge list is model state compiled INTO the plan (a few dozen
-    literals), so encoding is a map-only stage — the executor never
-    sees a lookup table.
-    """
-    words = F.split(F.col(text_col), " ")
-
-    def encode(w):
-        sym = F.filter(F.split(w, "(?!^)"), lambda s: s != "")
-        for m in merges:
-            sym = merge_pair(sym, m[1], m[2])
-        return sym
-
-    toks = F.flatten(F.transform(words, encode))
-    return df.withColumn("bpe_tokens", toks).withColumn(
-        "bpe_token_count", F.size("bpe_tokens").cast("bigint")
-    )

@@ -25,9 +25,9 @@ Scale notes:
   candidate volume: P(candidate) = 1-(1-j^R)^B. Callers pick per
   corpus; defaults H=16, B=8 target j≳0.3.
 - The Jaccard self-join shuffles on shingle; hot shingles (stopword
-  n-grams) are the skew risk — AQE skew-join handles moderate skew,
-  and a document-frequency cap (drop shingles in >D% of docs, the
-  standard trick) bounds it; exposed as ``max_shingle_df``.
+  n-grams) are the skew risk — AQE skew-join handles moderate skew;
+  ``d_hot_shingles`` reports the document frequencies and the pair
+  cost they induce.
 """
 
 from __future__ import annotations
@@ -48,9 +48,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingle_index(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, max_shingle_df: int | None = None
-) -> DataFrame:
+def shingle_index(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Distinct (id, shingle) inverted index.
 
     The doc-keyed repartition parallelizes the chars-proportional
@@ -63,25 +61,10 @@ def shingle_index(
     df = df.repartition(
         df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     )
-    idx = (
+    return (
         df.select(F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("shingle"))
         .distinct()
     )
-    if max_shingle_df is not None:
-        # Document-frequency cap: drop "hot" shingles present in more
-        # than max_shingle_df docs (stopword n-grams — the skew risk in
-        # the downstream shingle self-join). The DROP list is the small
-        # side (hot shingles are by definition few), so broadcast it
-        # and anti-join; broadcasting the keep list would ship nearly
-        # the whole shingle vocabulary to every executor.
-        hot = (
-            idx.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") > max_shingle_df)
-            .select("shingle")
-        )
-        idx = idx.join(F.broadcast(hot), "shingle", "left_anti")
-    return idx
 
 
 def jaccard_pairs(
@@ -156,8 +139,7 @@ def minhash_band_buckets(
     incremental probing) derives buckets here so the tiers can't
     silently disagree on the banding scheme."""
     # A non-divisible width would silently drop trailing hash
-    # components and weaken the LSH guarantee (simhash_pairs asserts
-    # the same invariant).
+    # components and weaken the LSH guarantee.
     assert num_hashes % bands == 0, (
         f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
     )
@@ -248,7 +230,7 @@ def connected_components(
     of executed rounds (including the final no-change confirmation
     round) — used by the chain-fixture bound test.
 
-    Per-round cost is ONE Spark job (VERDICT r8 #5 — the d_semdedup
+    Per-round cost is ONE Spark job (the d_semdedup
     profile showed per-round job *launches*, not data volume,
     dominating the CC stage): each round LAZY-localCheckpoints the new
     label frame and lets the convergence aggregate be the action that
@@ -275,7 +257,7 @@ def connected_components(
     paired_nodes = edges.select(F.col("src").alias("node")).distinct()
     labels = paired_nodes.withColumn("group_id", F.col("node"))
     rounds = 0
-    # Three-phase schedule (r15, guide §2.1 — fewer sequential jobs):
+    # Three-phase schedule (fewer sequential jobs):
     #
     #   plain    rounds 1..2: the original fused update
     #            l(v) ← min(l(v), min_nbr l(u), l(l(v))) over the
@@ -315,7 +297,7 @@ def connected_components(
     #            the result, only the round count.
     #
     # Every round in every phase stays ONE job: lazy localCheckpoint +
-    # the convergence agg as the materializing action (VERDICT r8 #5);
+    # the convergence agg as the materializing action;
     # the contraction round materializes its new labels AND its new
     # edge set in that one job by unioning them into a single tagged
     # state frame and splitting with post-materialization filters.
@@ -371,8 +353,8 @@ def connected_components(
         else:
             # Label-contracted round. All label-table reads below hit
             # the PREVIOUS round's materialized checkpoint — no
-            # lineage re-execution (the r8 fusion trap needed exactly
-            # this materialization). The round stays ONE job with a
+            # lineage re-execution (the one-job round fusion relies on
+            # exactly this materialization). The round stays ONE job with a
             # labels-only lazy checkpoint, same as the plain round.
             l1 = labels.select(
                 F.col("node").alias("_n1"), F.col("group_id").alias("_g1")
@@ -475,10 +457,9 @@ def exact_substring_contamination(
     text_col: str,
     k: int = 24,
     stride: int = 8,
-    max_gram_df: int | None = None,
 ) -> DataFrame:
     """Exact-substring contamination detection via rolling character
-    k-grams (VERDICT r3 #4): flags (train doc, benchmark doc) pairs
+    k-grams: flags (train doc, benchmark doc) pairs
     that share a VERBATIM normalized character run — catching leaks
     that word-n-gram containment misses when tokenization shifts
     (punctuation glued to words, casing, collapsed whitespace).
@@ -501,12 +482,9 @@ def exact_substring_contamination(
       all-pairs; counts are over distinct grams per side so repeated
       phrases don't inflate the match.
 
-    ``max_gram_df`` drops training grams present in more than that
-    many train docs (boilerplate runs — the hot-key skew risk at
-    100 TB), same broadcast-anti-join shape as ``shingle_index``'s DF
-    cap. Benchmark docs whose normalized text is shorter than ``k``
-    are undetectable by construction — pick k below the shortest
-    benchmark unit you care about.
+    Benchmark docs whose normalized text is shorter than ``k`` are
+    undetectable by construction — pick k below the shortest benchmark
+    unit you care about.
     """
     def gram_index(df: DataFrame, out_id: str, s: int) -> DataFrame:
         grams_expr = (
@@ -523,14 +501,6 @@ def exact_substring_contamination(
 
     tg = gram_index(train, "train_id", stride)
     bg = gram_index(bench, "bench_id", 1)
-    if max_gram_df is not None:
-        hot = (
-            tg.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") > max_gram_df)
-            .select("g")
-        )
-        tg = tg.join(F.broadcast(hot), "g", "left_anti")
     return (
         tg.join(bg, "g")
         .groupBy("train_id", "bench_id")
@@ -576,7 +546,7 @@ def exact_substring_pairs(
 
     base = _doc_keyed_norm_base(docs, id_col, text_col, k)
 
-    # No per-index .distinct() (r14 opt): the final per-pair metric is
+    # No per-index .distinct() (measured): the final per-pair metric is
     # COUNT(DISTINCT g), which already collapses within-doc repeats, so
     # pre-deduplicating each index buys nothing semantically and costs
     # a full extra shuffle of BOTH indexes (distinct shuffles the same
@@ -596,7 +566,7 @@ def exact_substring_pairs(
 
     cg = gram_index("cid", stride)
     fg = gram_index("fid", 1)
-    # shuffle_hash on the coarse side (r14 opt): post-gate size
+    # shuffle_hash on the coarse side (measured): post-gate size
     # estimates are unreliable enough that the planner was BROADCASTING
     # the stride-1 FINE index (the larger side — 1.25M rows at sf0.1,
     # corpus-chars-proportional at 100 TB, where it would hit the 8 GB
@@ -769,7 +739,7 @@ def exact_substring_spans(
     cg = _positioned_gram_index(docs, id_col, text_col, "cid", "cpos", k, stride)
     fg = _positioned_gram_index(docs, id_col, text_col, "fid", "fpos", k, 1)
 
-    # shuffle_hash on the coarse side (r14 opt): same rationale as
+    # shuffle_hash on the coarse side (measured): same rationale as
     # exact_substring_pairs — the planner's post-gate estimates had it
     # BROADCASTING the stride-1 fine positioned index (the big side;
     # 8 GB-cap hazard at 100 TB). Shuffled hash keyed on g builds from
@@ -913,33 +883,17 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
 
     Token multiset votes per bit; sign of the vote sum sets the bit.
     Zero votes (empty docs) resolve to '1' ('>=0' rule) — documented,
-    deterministic.
-
-    Votes come from md5 hex chars — 32 per digest — so the production
-    64-bit dial (Manku et al.; see ``simhash_pairs``) draws bits 32-63
-    from a SECOND independent digest md5(token || '\\x01'). Without it
-    those bits would silently read the empty string and vote a
-    constant +1 for every doc (r14 find: the documented 64-bit dial
-    was unusable — two of its four band keys would collapse to a
-    single bucket each, re-quadraticizing the candidate join).
-    Bits 0-31 are byte-identical to the pre-r14 form, so every
-    DuckDB-replayed oracle at bits <= 32 is unchanged.
+    deterministic. Votes come from the md5 hex chars of each token, 32
+    per digest, so ``bits`` is at most 32.
     """
-    assert bits <= 64, "simhash draws from two md5 digests: bits <= 64"
+    assert bits <= 32, "simhash draws from one md5 digest: bits <= 32"
     df = df.repartition(
         df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
     )  # doc-keyed parallelism for the token explode (see shingle_index)
     tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
     tok = tok.withColumn("th", F.md5("tok"))
-    if bits > 32:
-        tok = tok.withColumn("th2", F.md5(F.concat(F.col("tok"), F.lit("\x01"))))
     votes = tok.groupBy(id_col).agg(
-        *[
-            F.sum(
-                simhash_bit(F.col("th") if i < 32 else F.col("th2"), i % 32)
-            ).alias(f"v{i}")
-            for i in range(bits)
-        ]
+        *[F.sum(simhash_bit(F.col("th"), i)).alias(f"v{i}") for i in range(bits)]
     )
     bit_chars = [F.when(F.col(f"v{i}") >= 0, "1").otherwise("0") for i in range(bits)]
     return votes.select(F.col(id_col), F.concat(*bit_chars).alias("simhash"))
@@ -982,84 +936,4 @@ def contamination_pairs(
         .withColumn("containment", containment)
         .where(F.col("containment") >= min_containment)
         .select("train_id", "bench_id", "shared_ngrams", "containment")
-    )
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 16,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs: ids whose signatures differ in at most
-    ``max_hamming`` bits, found via band-bucket candidates — never an
-    all-pairs join.
-
-    Completeness by pigeonhole: with ``bands`` equal slices of the
-    signature and ``max_hamming < bands``, any pair within the Hamming
-    budget must agree EXACTLY on at least one band, so the band-key
-    equi join (distinct, canonicalized) finds every qualifying pair;
-    the Hamming filter then drops band-collision false positives.
-    Same bucketed-join scale shape as MinHash-LSH banding.
-
-    Scale note (r13, the fixed-dial audit): unlike the sign-LSH /
-    IVF probe dials, RECALL here cannot decay with n — pigeonhole
-    completeness is deterministic at any corpus size (pinned by the
-    planted-fixture test). The fixed dial's exposure is CANDIDATE
-    VOLUME: each band key is ``bits/bands`` wide, so expected bucket
-    population is n / 2^(bits/bands) and candidates grow ~
-    bands · n² / 2^(bits/bands+1) — QUADRATIC once buckets saturate
-    (measured: documents sf0.1 → sf1 candidate pairs 12.75M → 1.276B
-    at the 16/4 default, 100.07x at 10x rows — SCALING.json
-    simhash_pairs_candidates). ``bits`` is SEMANTIC (it defines the
-    Hamming metric max_hamming thresholds against), so it must not be
-    auto-resized per corpus; instead, size it ONCE for the target
-    scale before trusting the defaults: bounded buckets need
-    bits >= bands · ceil(log2(n / target_bucket_rows)), i.e. the
-    production dial for web-scale corpora is the Manku et al. 64-bit
-    simhash (bands=4 -> 16-bit band keys bound buckets to n/65536),
-    not the 16-bit fixture default. bands stays max_hamming + 1 (the
-    pigeonhole minimum — more bands = narrower keys = more
-    collisions for no recall gain).
-    """
-    assert bits % bands == 0, "bands must evenly slice the signature"
-    assert max_hamming < bands, "pigeonhole completeness needs max_hamming < bands"
-    width = bits // bands
-    sigs = simhash(df, id_col, text_col, bits)
-
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.substring("simhash", b * width + 1, width).alias("band_key"),
-        )
-        for b in range(bands)
-    ]
-    buckets = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_key")
-
-    a = buckets.select(F.col(id_col).alias("id_a"), "band_id", "band_key")
-    b = buckets.select(F.col(id_col).alias("id_b"), "band_id", "band_key")
-    cand = (
-        a.join(b, ["band_id", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sig_b"))
-    hamming = sum(
-        (
-            F.substring("sig_a", i + 1, 1) != F.substring("sig_b", i + 1, 1)
-        ).cast("int")
-        for i in range(bits)
-    )
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", hamming.cast("bigint").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
     )

@@ -5,38 +5,21 @@ mbid))`` — a single-partition window (create_dataframes.py:235-264),
 flagged in SURVEY.md §4.3 as the known 100 TB hazard: every row funnels
 through one task.
 
-Two implementations:
-- ``surrogate_ids_window``: parity with the reference (fine for
-  dimension-sized inputs, which is what ALS id maps are);
-- ``surrogate_ids_scalable``: sort-free two-phase assignment —
-  zipWithIndex over the sorted distinct keys gives the same dense,
-  collision-free ids without a global single-partition window
-  (ordering differs from the window version only in that it is
-  explicitly the sort order of the key, which is what the reference
-  orders by anyway).
+``surrogate_ids_scalable`` gives the same dense, collision-free ids
+without the single-partition window: zipWithIndex over the sorted
+distinct keys, so ids follow the key's sort order, which is what the
+reference orders by anyway.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
 
-def surrogate_ids_window(df: DataFrame, key_col: str, id_name: str) -> DataFrame:
-    """Dense 1-based ids by key order — single-partition window
-    (reference parity; use only on dimension-sized inputs)."""
-    w = Window.orderBy(key_col)
-    return (
-        df.select(key_col)
-        .distinct()
-        .withColumn(id_name, F.row_number().over(w).cast("bigint"))
-    )
-
-
 def surrogate_ids_scalable(df: DataFrame, key_col: str, id_name: str) -> DataFrame:
-    """Same dense ids via sortWithinPartitions + zipWithIndex — no
-    single-partition funnel; ids are 1-based in global key order."""
+    """Dense ids via a global sort + zipWithIndex — no single-partition
+    funnel; ids are 1-based in global key order."""
     spark = df.sparkSession
     distinct = df.select(key_col).distinct().sort(key_col)
     schema = StructType(distinct.schema.fields + [StructField(id_name, LongType())])

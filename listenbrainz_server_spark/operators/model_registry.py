@@ -33,13 +33,12 @@ def save_model_with_metadata(
     model,
     params: dict,
     metrics: dict,
-    model_id: str | None = None,
 ) -> str:
     """Persist a fitted MLWritable model + append its metadata row
-    (train_models.py:235-252 analog)."""
+    (train_models.py:235-252 analog); returns the new model_id."""
     from listenbrainz_server_spark.sources.sinks import registry_upsert
 
-    model_id = model_id or f"als_{int(time.time() * 1000)}"
+    model_id = f"als_{int(time.time() * 1000)}"
     model.write().overwrite().save(model_path(registry_dir, model_id))
     row = Row(
         model_id=model_id,

@@ -14,9 +14,10 @@ distributed form is implemented here:
 
 The result equals the single-task global window exactly (pinned in
 tests/test_operators.py::test_partitioned_running_sum_matches_global)
-while every row-scale stage runs one task per range partition.
+while every row-scale stage runs one task per range partition, one
+range partition per default-parallelism slot.
 
-Storage trade (r10): the ranged frame is pinned with an eager
+Storage trade: the ranged frame is pinned with an eager
 localCheckpoint before its two consumers — correctness requires both
 spark_partition_id() readings to see ONE physical partitioning (an
 AQE recompute could re-sample range bounds and silently mis-assign
@@ -41,7 +42,6 @@ def partitioned_running_sum(
     df: DataFrame,
     order_cols: list,
     value_cols: list,
-    n_partitions: int = 32,
 ) -> DataFrame:
     """Add ``"cum_" + c`` running-total columns (inclusive of the
     current row) for each value column, over the GLOBAL order given
@@ -56,7 +56,9 @@ def partitioned_running_sum(
     # running totals. localCheckpoint materializes one physical
     # partitioning both branches read.
     ranged = (
-        df.repartitionByRange(n_partitions, *order_cols)
+        df.repartitionByRange(
+            df.sparkSession.sparkContext.defaultParallelism, *order_cols
+        )
         .withColumn("_rpid", F.spark_partition_id())
         .localCheckpoint(eager=True)
     )
@@ -70,7 +72,8 @@ def partitioned_running_sum(
     )
 
     # Partition totals -> exclusive prefix over partition order. This
-    # frame has n_partitions rows; the single-task window is free.
+    # frame has one row per range partition; the single-task window is
+    # free.
     w_pid = (
         Window.orderBy("_rpid")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

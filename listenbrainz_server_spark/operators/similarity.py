@@ -49,8 +49,8 @@ def as_double(vec: Column) -> Column:
 
 def as_double_sql(col_name: str) -> str:
     """SQL fragment equal to ``as_double(F.col(col_name))`` — for the
-    string fast paths of ``lsh_signature``/``_probe_sig_array`` (r14
-    opt): a signature is sig_bits × dims literal components, and
+    string fast paths of ``lsh_signature``/``_probe_sig_array``: a
+    signature is sig_bits × dims literal components, and
     building it as nested Column ops costs one py4j round trip PER
     NODE (measured 0.75 s of pure driver time at dims=64, bits=9,
     per construction, before any Spark job). One F.expr parses the
@@ -67,10 +67,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def unit_vectors(
@@ -90,9 +86,9 @@ def unit_vectors(
     would SHRINK a many-split scan on a real cluster and over-split on
     the driver's low-core scaling legs.
 
-    ``pin`` (MEASURE per site — the r8 refactor that defaulted this to
-    True cost v_ivfpq_topk +1.6 s and d_semdedup +1.8 s in redundant
-    eager jobs): True materializes the norm through an eager
+    ``pin`` (MEASURE per site — defaulting this to True once cost
+    v_ivfpq_topk +1.6 s and d_semdedup +1.8 s in redundant eager
+    jobs): True materializes the norm through an eager
     checkpoint before the per-element divide, so CollapseProject can't
     inline the aggregate norm into the transform lambda (re-evaluated
     64× per row). Worth it ONLY when the returned frame itself feeds
@@ -129,7 +125,7 @@ def resolve_n_centroids(n_centroids, vectors: DataFrame) -> int:
     """Resolve the IVF coarse-quantizer list count.
 
     ``"auto"`` → ``max(8, round(sqrt(n)))`` — the measured scale dial
-    (SCALING.md r11): with nlist FIXED, per-bucket population grows
+    (SCALING.md): with nlist FIXED, per-bucket population grows
     O(n/nlist) and probe-candidate volume O(n²/nlist); growing nlist
     with √n (FAISS practice) keeps bucket population √n-bounded —
     re-measured at sf1, 132.7 s → 44.4 s for the OPQ-IVFPQ serving
@@ -145,7 +141,7 @@ def resolve_n_centroids(n_centroids, vectors: DataFrame) -> int:
 
 def resolve_oversample(oversample, n_probe: int) -> int:
     """Resolve IVFPQ's ADC re-rank budget. ``"auto"`` →
-    max(8, 2·n_probe) — the third dial leg (r12, found by the recall
+    max(8, 2·n_probe) — the third dial leg (found by the recall
     smoke's relative guard): per-query ADC candidate volume grows
     with the probe budget (n_probe·n/nlist), so a FIXED oversample
     re-ranks a shrinking fraction of an increasingly noisy candidate
@@ -164,7 +160,7 @@ def resolve_oversample(oversample, n_probe: int) -> int:
 
 def resolve_n_probe(n_probe, nlist: int) -> int:
     """Resolve the IVF probe count. ``"auto"`` → max(2, round(√nlist))
-    — the probe half of the scale dial (r12, found by the sf1 recall
+    — the probe half of the scale dial (found by the sf1 recall
     smoke): with nlist ∝ √n, a FIXED probe count scans a vanishing
     fraction of the lists and recall decays exactly on weakly
     clustered data (measured, sf0.1 uniform-ish fixture at the auto
@@ -225,14 +221,14 @@ def _iter_ref_blocks(
     no longer fits on the driver: driver memory is bounded by
     block_rows, never by corpus size.
 
-    Read amplification (VERDICT r2 #6): the corpus is scanned ONCE —
+    Read amplification: the corpus is scanned ONCE —
     a single hash-partitioned write materializes every block as its own
     partition directory; each loop iteration then reads only its block's
     files (partition pruning on the ``blk`` filter, no refilter of the
     full corpus). Total I/O is one scan + one write + one read,
     independent of n_blocks.
 
-    Staging location (ADVICE r3): blocks land under ``_scratch_root`` —
+    Staging location: blocks land under ``_scratch_root`` —
     configure ``spark.lbs.scratchDir`` (or ``LBS_SCRATCH_DIR``) to a
     shared filesystem on a multi-node cluster; the driver never probes
     the path with local-FS calls (reads go through Spark with partition
@@ -452,19 +448,19 @@ def hyperplane_component(h: int, d: int) -> int:
     return -1 if ch in "01234567" else 1
 
 
-def sized_sig_bits(
-    n_rows: int,
-    target_bucket_rows: int = 64,
-) -> int:
-    """Sign-LSH signature sizing rule (VERDICT r2 #4):
+TARGET_BUCKET_ROWS = 64
 
-        sig_bits = clamp(ceil(log2(n / target_bucket_rows)), 4, 24)
+
+def sized_sig_bits(n_rows: int) -> int:
+    """Sign-LSH signature sizing rule:
+
+        sig_bits = clamp(ceil(log2(n / TARGET_BUCKET_ROWS)), 4, 24)
 
     The in-bucket exact re-rank is quadratic in bucket population, and
     expected population is n / 2^sig_bits — so bits must GROW with the
     corpus or buckets grow as n and the re-rank degenerates toward
     all-pairs. This rule guarantees expected population ≤
-    ``target_bucket_rows`` by construction at any n (a 10× corpus adds
+    ``TARGET_BUCKET_ROWS`` by construction at any n (a 10× corpus adds
     ~3.3 bits). The 4-bit floor keeps tiny corpora bucketed; the
     24-bit cap bounds bucket-count metadata at 16M — raise it past
     ~10^9-row corpora.
@@ -473,7 +469,7 @@ def sized_sig_bits(
 
     if n_rows <= 0:
         return 4
-    bits = math.ceil(math.log2(max(1, n_rows / target_bucket_rows)))
+    bits = math.ceil(math.log2(max(1, n_rows / TARGET_BUCKET_ROWS)))
     return max(4, min(24, bits))
 
 
@@ -485,7 +481,7 @@ def lsh_signature(vec: Column | str, dims: int, sig_bits: int = 8) -> Column:
     is a pure column expression.
 
     ``vec`` as a str is a SQL fragment for the array<double> operand
-    (e.g. ``as_double_sql(name)``) — the fast path (r14 opt): the
+    (e.g. ``as_double_sql(name)``) — the fast path: the
     signature is sig_bits × dims literal components, and building it
     node-by-node through py4j costs ~0.75 s of driver time per
     construction at (dims=64, bits=9); one F.expr parses JVM-side in
@@ -754,7 +750,7 @@ def ivf_topk(
     bucket sizes stay balanced where hyperplanes would shear dense
     regions. Seeded + deterministic; scores are exact cosine.
 
-    PRECONDITION (ADVICE r11): ``vectors`` must have DETERMINISTIC
+    PRECONDITION: ``vectors`` must have DETERMINISTIC
     lineage — the assign pass is deliberately unpinned and its two
     consumers (members, probes) re-execute it, so a source whose
     re-execution can yield different rows or ids (un-seeded
@@ -781,7 +777,7 @@ def ivf_topk(
         as_double(F.col(vec_col)).alias("qv"),
     )
 
-    # Output id columns keep the INPUT id column's type (ADVICE r3: a
+    # Output id columns keep the INPUT id column's type (a
     # hardcoded bigint narrowed the operator to 64-bit integer ids;
     # string or other id types must survive the pandas path too).
     id_spark_t = vectors.schema[id_col].dataType.simpleString()
@@ -899,8 +895,7 @@ def _one_probe(sig: Column, positions: tuple[int, ...], sig_bits: int) -> Column
     flipped bit one F.when — ≤ 2f+1 nodes per probe. The previous
     nested-flip form copied the whole operand 3× per level (~3^f
     subexpression copies), which at (bits=24, f=3) made Catalyst carry
-    ~27 copies of the signature per probe × 2,325 probes
-    (advisor r13 #2).
+    ~27 copies of the signature per probe × 2,325 probes.
     """
     parts: list[Column] = []
     prev = 0
@@ -947,7 +942,7 @@ def _probe_sig_array(sig: Column | str, sig_bits: int, n_flip: int) -> Column:
     callers to the trained IVF tier.
 
     ``sig`` as a str is a SQL fragment (usually a backtick-quoted
-    column name) — the fast path (r14 opt): the probe set is fan-out ×
+    column name) — the fast path: the probe set is fan-out ×
     ~(2f+1) expression nodes, ~1 s of py4j round trips at (bits=9,
     f=2) when built node-by-node; one F.expr parses the whole array
     JVM-side in ~2 ms to the SAME expressions (value-equality pinned
@@ -986,7 +981,7 @@ def resolve_n_flip(n_flip: int | str, sig_bits: int) -> int:
     """``n_flip='auto'`` -> the probe-radius leg of the sized-signature
     dial: clamp(ceil(sig_bits / 6), 2, 3).
 
-    The r12 IVF lesson transplanted (VERDICT r12 next #5): a FIXED
+    The IVF dial lesson transplanted: a FIXED
     probe budget at a corpus-sized signature silently decays recall —
     ``sized_sig_bits`` grows bits ~ log2(n/64), per-bucket collision
     decays geometrically in bits, while the Hamming-1 fan-out grows
@@ -1003,7 +998,7 @@ def resolve_n_flip(n_flip: int | str, sig_bits: int) -> int:
     clustered data (0.385 at bits=5, below the 0.45 smoke floor).
     The cap of 3: fan-out is C(bits, f) and the f=3 reading at bits=9
     already spends 57% of brute force — past bits~18 (n ~ 16M rows at
-    target_bucket_rows=64) even radius 3 scans a vanishing bucket
+    TARGET_BUCKET_ROWS=64) even radius 3 scans a vanishing bucket
     fraction, and the honest serving path for corpora that size is
     the TRAINED coarse-quantizer tier (ivf_topk / ivfpq_topk with
     n_probe='auto'), not a wider LSH radius: a data-blind hyperplane
@@ -1030,7 +1025,7 @@ def lsh_multiprobe_topk(
     """Multi-probe sign-LSH ANN top-k. ``sig_bits=None`` auto-sizes
     from the corpus via ``sized_sig_bits`` (see ``lsh_bucketed_topk``);
     ``n_flip='auto'`` sizes the probe RADIUS with the signature via
-    ``resolve_n_flip`` — the two legs of one dial (r12 IVF discipline:
+    ``resolve_n_flip`` — the two legs of one dial (the IVF discipline:
     a fixed probe budget at a growing signature silently decays
     recall; measured in SCALING.json lsh_dial_recall).
 
@@ -1065,7 +1060,7 @@ def lsh_multiprobe_topk(
         as_double(F.col(vec_col)).alias("vec"),
         lsh_signature(as_double_sql(vec_col), dims, sig_bits).alias("sig"),
     ).withColumn("nrm", norm(F.col("vec")))
-    # Pin base (r14 opt): it feeds the member side AND the probe side
+    # Pin base (measured): it feeds the member side AND the probe side
     # (and the vectorized cogroup reads both), so the scan+signature
     # projection executed twice per action without a lineage cut.
     base = base.localCheckpoint(eager=True)
@@ -1215,7 +1210,7 @@ def assign_buckets(v, centers):
     encode (the two floating-point formulations of squared distance
     do not agree at ties).
 
-    Blockwise (ADVICE r11): peak memory is (block × k), never
+    Blockwise: peak memory is (block × k), never
     (n × k) — at the nlist ∝ √n dial (k = 10⁴) a 400k-row training
     sample would otherwise allocate a 32 GB distance matrix on the
     driver."""
@@ -1261,7 +1256,7 @@ def lloyd_kmeans(data, k: int, seed: int, max_iter: int = 8):
     keep their previous center. Deterministic given (data order, k,
     seed). Returns a (k', dims) float64 ndarray, k' = min(k, len(data)).
 
-    Memory bound (the real one, ADVICE r11): peak extra allocation is
+    Memory bound (the real one): peak extra allocation is
     max(block × k, n × dims) float64 with block = 2²⁵/k rows — ~256 MB
     for the distance blocks plus the sample itself, NOT the old
     (n × k) full distance matrix (32 GB at the √n dial's nlist=10⁴ ×
@@ -1296,7 +1291,7 @@ def lloyd_kmeans(data, k: int, seed: int, max_iter: int = 8):
         idx = int(rng.choice(n, p=d2 / tot)) if tot > 0 else int(rng.integers(n))
         centers[i] = data[idx]
         d2 = np.minimum(d2, ((data - centers[i]) ** 2).sum(axis=1))
-    # Lloyd loop, memory-bounded (ADVICE r11): assignment goes through
+    # Lloyd loop, memory-bounded: assignment goes through
     # the shared blockwise assign_buckets (peak (block × k), never
     # (n × k) — at the √n dial, nlist=10⁴ on a 400k sample is a 32 GB
     # matrix the old full-matrix pass would have allocated), and the
@@ -1318,7 +1313,7 @@ def lloyd_kmeans(data, k: int, seed: int, max_iter: int = 8):
 
 
 def _train_sample(vectors: DataFrame, vec_expr, n_pull: int, what: str):
-    """THE bounded training-sample pull, single-sourced (ADVICE r11)
+    """THE bounded training-sample pull, single-sourced
     across every driver-side trainer — ``coarse_train_centroids``,
     ``_ivfpq_train_from_unit``, ``pq_train_codebooks``, ``opq_train``.
     Orders by the md5 content hash of the comma-joined vector
@@ -1454,7 +1449,7 @@ def pq_train_codebooks(
     if len(data) < k_sub:
         raise ValueError(f"need >= {k_sub} vectors to train, got {len(data)}")
 
-    # Single-sourced fit (ADVICE r10): delegate to the same per-subspace
+    # Single-sourced fit: delegate to the same per-subspace
     # Lloyd's that OPQ warm-starts from — opq_train's "trace[0] equals
     # plain-PQ MSE" contract depends on the two paths never drifting.
     centers = _fit_subspace_books(
@@ -1697,7 +1692,7 @@ def pq_topk(
         train = hash_sample(unit, "vid", train_fraction)
     books = pq_train_codebooks(train, "vec", dims, m=m, k_sub=k_sub, seed=SEED)
 
-    # Pin the index pass (r14 opt): base feeds FOUR consumers
+    # Pin the index pass (measured): base feeds FOUR consumers
     # (members, probes, and both re-rank vector sides) and nothing
     # else cuts the lineage, so the Arrow index-builder executed up
     # to 4× per action. One eager checkpoint runs it once — this IS
@@ -1821,8 +1816,8 @@ def ivfpq_topk(
         unit, n_centroids, m=m, k_sub=k_sub, seed=SEED
     )
 
-    # Output id columns keep the INPUT id column's type (ADVICE r11 —
-    # same rule ivf_topk adopted in r3: a hardcoded bigint narrowed
+    # Output id columns keep the INPUT id column's type (the same
+    # rule as ivf_topk: a hardcoded bigint narrowed
     # the operator to 64-bit integer ids; string ids must survive the
     # Arrow passes and the cogroup schema too).
     id_spark_t = vectors.schema[id_col].dataType.simpleString()
@@ -1946,11 +1941,10 @@ def ivfpq_train_artifacts(
     dims: int,
     n_centroids: int | str = 8,
     m: int = 4,
-    k_sub: int = 16,
 ):
     """Train the IVFPQ model artifacts ONLY — coarse centers + residual
     codebooks — without encoding anything. The artifacts are the unit
-    of index maintenance (VERDICT r7 #6): a delta batch is encoded
+    of index maintenance: a delta batch is encoded
     against FROZEN artifacts by ``ivfpq_encode`` (pure per-row work, no
     refit), and a refit replaces the artifacts + re-encodes.
 
@@ -1967,7 +1961,7 @@ def ivfpq_train_artifacts(
     unit = unit_vectors(vectors, id_col, vec_col)
     n_centroids = resolve_n_centroids(n_centroids, vectors)
     centers_np, cb = _ivfpq_train_from_unit(
-        unit, n_centroids, m=m, k_sub=k_sub, seed=SEED
+        unit, n_centroids, m=m, k_sub=16, seed=SEED
     )
     centers = [[float(x) for x in c] for c in centers_np]
     books = [[[float(v) for v in c] for c in cb[j]] for j in range(m)]
@@ -2031,7 +2025,7 @@ def ivfpq_encode(
                 out["vec"] = pdf["vec"].to_numpy()
             yield pd.DataFrame(out)
 
-    # Keep the input id type (ADVICE r11, same rule as ivf/ivfpq_topk)
+    # Keep the input id type (same rule as ivf/ivfpq_topk)
     # — a delta batch with string ids must encode too.
     id_spark_t = vectors.schema[id_col].dataType.simpleString()
     schema = f"nid {id_spark_t}, bucket int, codes array<int>"
@@ -2043,7 +2037,7 @@ def ivfpq_encode(
 def ivf_drift_report(encoded_delta: DataFrame, centers) -> DataFrame:
     """Per-coarse-list drift of a delta batch vs the FROZEN centers —
     the v_embedding_drift centroid-shift stat repurposed as the
-    refit-vs-append trigger (VERDICT r7 #6): per bucket, the L2
+    refit-vs-append trigger: per bucket, the L2
     distance between the delta's mean unit vector and the stored
     center. A delta drawn from the indexed distribution lands near its
     centers; an encoder change / distribution shift pushes the shift
@@ -2119,7 +2113,7 @@ def mmr_rerank(
     The greedy loop is inherently sequential PER QUERY but embarrassing
     across queries, so the physical shape is one keyed join (candidates
     → candidate vectors) plus ``applyInPandas`` grouped by a COARSE
-    hash bucket of the query id (r14 opt, guide §4): grouping by qid
+    hash bucket of the query id (measured): grouping by qid
     itself paid the fixed Arrow/pandas per-group cost once per query
     (~200 µs × |queries| dominated the stage at 20-row groups —
     measured 1.64 s vs 0.80 s at sf0.1); one bucket now serves
@@ -2154,7 +2148,7 @@ def mmr_rerank(
 
         # Deterministic processing order inside the query's candidate
         # set: (score desc, nid asc) — NaN relevance sorts last under
-        # both sort implementations, matching the pre-r14 pandas
+        # both sort implementations, matching pandas'
         # sort_values behavior.
         if nids.dtype == object:
             order = (
@@ -2256,9 +2250,9 @@ def semdedup(
     3. GROUPS: connected components via a LOCAL union-find fused into
        the same Arrow pass — every >= tau edge is within-cluster by
        construction, so no component spans the group a worker already
-       holds; zero distributed propagation rounds (r9: replaced the
-       generic CC operator here, whose per-round job launches were
-       the measured scheduling floor).
+       holds; zero distributed propagation rounds (the generic CC
+       operator this replaced paid per-round job launches, the
+       measured scheduling floor).
     4. KEEP RULE: per group, keep the member with the LOWEST cosine
        to its cluster centroid (the paper's rule — retain the least
        prototypical example; ties to the smallest id). Singleton
@@ -2345,9 +2339,9 @@ def semdedup(
 
     id_t = vectors.schema[id_col].dataType.simpleString()
 
-    # CC fused into the gram pass (VERDICT r8 #5 — the ~3 s CC
-    # scheduling floor): every >= tau edge is WITHIN-cluster by
-    # construction, so components never span the Arrow group already
+    # CC fused into the gram pass (the ~3 s CC scheduling floor):
+    # every >= tau edge is WITHIN-cluster by construction, so
+    # components never span the Arrow group already
     # holding the full similarity matrix in memory — a local
     # union-find over the kept pairs labels the whole cluster in the
     # SAME pass, where the previous distributed

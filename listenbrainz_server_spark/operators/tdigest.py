@@ -3,7 +3,7 @@ extremely accurate quantiles using t-digests", arXiv:1902.04023 —
 public algorithm; this is an independent implementation of the
 MERGING variant).
 
-Why this exists (VERDICT r8 #8): the repo's robust-stats queries
+Why this exists: the repo's robust-stats queries
 (w_mad_outliers) document their 100 TB path as "swap the exact
 per-group percentile for a mergeable sketch" — this is that sketch.
 approx_percentile (x_approx_percentile) already covers the built-in
@@ -210,13 +210,3 @@ def group_tdigest_quantiles(
     return merged.groupBy(group_col).applyInPandas(
         to_quantiles, f"{group_col} {g_t}, q double, est double"
     )
-
-
-def union_digests(*digest_frames: DataFrame, group_col: str) -> DataFrame:
-    """Mergeability surface: union already-persisted digest frames
-    (e.g. per-day sketches) and reduce — the rolling-window pattern
-    x_hll_rolling_distinct uses for distinct counts, for quantiles."""
-    u = digest_frames[0]
-    for d in digest_frames[1:]:
-        u = u.unionByName(d)
-    return merge_digests(u, group_col)

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from listenbrainz_server_spark.incremental.engine import IncrementalEngine, IncrementalStat
+from listenbrainz_server_spark.incremental.engine import IncrementalStat
 from listenbrainz_server_spark.operators.topk import top_k_per_group
 
 
@@ -134,21 +134,3 @@ def final_user_entity_stats(
         order_by=[F.col("listen_count").desc(), F.col(entity_col)],
         k=k,
     ).withColumn("rank", F.col("rank").cast("bigint"))
-
-
-def run_incremental_user_entity(
-    engine: IncrementalEngine,
-    full_df: DataFrame,
-    delta_df: DataFrame,
-    from_date: str,
-    to_date: str,
-    created: str,
-    k: int = 1000,
-    only_affected: bool = False,
-) -> DataFrame:
-    """Full handler lifecycle: partial/delta/combine → final stats."""
-    stat = user_entity_stat()
-    combined = engine.run(
-        stat, full_df, delta_df, from_date, to_date, created, only_affected=only_affected
-    )
-    return final_user_entity_stats(combined, k=k)

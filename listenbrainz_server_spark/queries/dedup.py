@@ -256,7 +256,7 @@ def d_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Exact-substring contamination (VERDICT r3 #4): verbatim character-run
+# Exact-substring contamination: verbatim character-run
 # detection that survives tokenization shifts — word n-gram containment
 # (d_contamination above) misses a leak re-punctuated or re-cased;
 # normalized char k-grams do not. Bench grams at every offset, train
@@ -372,7 +372,7 @@ def d_exact_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Verbatim-span EXTENTS (VERDICT r4 #8): once d_exact_substring_pairs
+# Verbatim-span EXTENTS: once d_exact_substring_pairs
 # says two docs share text, this reports WHERE — maximal matched runs
 # with 1-based offsets into the normalized text of both docs. Anchors
 # from the positioned fine×coarse gram join sit on one diagonal
@@ -556,7 +556,7 @@ def d_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full-corpus exchanges before the pipeline even started.
     from listenbrainz_server_spark.functions.text import quality_flag
 
-    # Pin the quality-gated frame ONCE (guide §2.1, r15): it feeds
+    # Pin the quality-gated frame ONCE (fewer sequential jobs): it feeds
     # the exact-dedup build side, the survivor semi-join's left side
     # (both inside the sdocs pin job), and (in the funnel) the
     # n_quality count — the per-doc sorted-token quality expression
@@ -863,7 +863,7 @@ def d_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from listenbrainz_server_spark.operators.packing import pack_sequences
 
     docs = load_table(spark, sf_dir, "documents")
-    # Pin the quality-gated frame ONCE (guide §2.1, r15): it feeds
+    # Pin the quality-gated frame ONCE (fewer sequential jobs): it feeds
     # the exact-dedup build side, the survivor semi-join's left side
     # (both inside the sdocs pin job), and (in the funnel) the
     # n_quality count — the per-doc sorted-token quality expression
@@ -1020,7 +1020,7 @@ def d_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Incremental verbatim-span maintenance (VERDICT r5 #6): the span
+# Incremental verbatim-span maintenance: the span
 # tier's delta-only form. New-batch docs (md5-sliced analog: doc_id %
 # 10 == 3 plays the arriving crawl batch) explode at stride 1 and
 # probe the EXISTING corpus's coarse positioned index — fine-gram work
@@ -1245,8 +1245,8 @@ def d_best_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
 # v_bucket_stats: the top-20 shingles by document frequency, each with
 # its share of the corpus and the pair-join cost it would induce
 # (df·(df-1)/2 candidate pairs from that shingle alone). This is the
-# evidence behind jaccard_pairs' max_shingle_df cap: at 100 TB one
-# boilerplate shingle ("all rights reserved") can otherwise dominate
+# evidence a document-frequency cap on jaccard_pairs would act on: at
+# 100 TB one boilerplate shingle ("all rights reserved") can otherwise dominate
 # the entire candidate join. One shingle-keyed aggregate over the
 # inverted index, then TakeOrdered(20) — no global sort.
 # --------------------------------------------------------------------------
@@ -1264,7 +1264,7 @@ def d_best_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     doc="top-20 hottest shingles by document frequency with induced "
-    "pair-join cost (the skew evidence behind the max_shingle_df cap)",
+    "pair-join cost (the skew evidence for a document-frequency cap)",
 )
 def d_hot_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1670,7 +1670,7 @@ def d_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# d_cdc_chunks (r9): content-defined chunking dedup report
+# d_cdc_chunks: content-defined chunking dedup report
 # (operators/chunking.py — Gear rolling hash, LBFS/FastCDC family).
 # Sub-document granularity closes the gap between d_exact_dedup
 # (whole-doc only) and the span queries (pairwise): a boilerplate
@@ -1678,7 +1678,7 @@ def d_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONE groupBy(chunk_hash) — no pair enumeration at all. Chunking is a
 # pure map stage (no shuffle); boundaries are content-local, so an
 # edit re-chunks only its neighborhood (shift-invariance pinned in
-# tests). Registered form (r11 value-oracle upgrade): per-source
+# tests). Registered form (a value oracle): per-source
 # chunk census where n_chunks is an EXACTLY RECOMPUTED value — the
 # oracle REPLAYS the full Gear rolling hash in SQL: the 127-entry
 # gear table is derived in-query (gear[b] = first 16 hex chars of
@@ -1799,7 +1799,7 @@ def d_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_bytes").cast("bigint").alias("total_bytes"),
             # Exact boundary count — the oracle replays the full Gear
-            # rolling hash in SQL and recounts it (r11 upgrade).
+            # rolling hash in SQL and recounts it.
             F.sum("nc").cast("bigint").alias("n_chunks"),
             F.every(F.col("conserved")).alias("bytes_conserved"),
             F.every(F.col("bounded")).alias("bounds_ok"),

@@ -10,8 +10,8 @@ analog: rank suppliers for a customer cohort) — in the Spark-native
 iterative-DataFrame shape, and both run over ONE shared pinned graph
 build (``_trade_graph``).
 
-Round-8 redesign (VERDICT r7 #2 — measured at sf0.1, median-of-3
-warm, 4.2 s → 2.4 s):
+Design (measured at sf0.1, median-of-3 warm, 4.2 s → 2.4 s against
+the string-keyed, two-scan form it replaced):
 
 * **bigint node ids, not strings.** Nodes are ``custkey*2`` /
   ``suppkey*2+1``; every shuffle/join/agg keys on a bigint, and the
@@ -66,11 +66,13 @@ _DAMP = 0.85
 _ITERS = 5
 _TOPK = 50
 _SEED_NATION = 0  # g_ppr seed cohort: customers of this nation
+# Partitions of the pinned trade graph. Measured on a 4-core host:
+# defaultParallelism (4) in its place made g_label_prop 1.16x slower
+# (old side faster in 3/3 interleaved tools/ab.py pairs, 4.10 vs 3.55 s).
+_GRAPH_PARTITIONS = 32
 
 
-def _trade_graph(
-    spark: SparkSession, sf_dir: str, partitions: int = 32
-) -> tuple[DataFrame, DataFrame]:
+def _trade_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Pinned symmetric customer↔supplier trade graph.
 
     Returns ``(contrib, outdeg)`` — both cached:
@@ -106,7 +108,7 @@ def _trade_graph(
     # groupBy(dst) reuses the cached layout (exchange-free, verified
     # in the executed plan).
     w = (
-        edges.repartition(partitions, "dst")
+        edges.repartition(_GRAPH_PARTITIONS, "dst")
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -217,7 +219,7 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ((1 - _DAMP) / F.col("n") + _DAMP * F.col("mass")).alias("pr"),
             )
         )
-    # Determinism note (advisor r7): ROUND(pr, 8) is deliberately
+    # Determinism note: ROUND(pr, 8) is deliberately
     # TIGHTER than the repo's usual 6-dp ratio convention — it must
     # absorb only summation-order ULP drift plus DuckDB's DECIMAL
     # 0.85/1.0 literals vs Python-float damping, and 8 dp leaves the
@@ -478,7 +480,7 @@ _COSUPPLY_MIN_SHARED = 5
 _TRI_TOPK = 50
 
 
-def triangle_counts(edges: DataFrame, partitions: int = 32) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over a canonical undirected edge list.
 
     ``edges`` must be (a, b) with a < b, one row per undirected edge.
@@ -529,7 +531,9 @@ def triangle_counts(edges: DataFrame, partitions: int = 32) -> DataFrame:
         )
     )
     adj = (
-        oriented.repartition(partitions, "src")
+        oriented.repartition(
+            edges.sparkSession.sparkContext.defaultParallelism, "src"
+        )
         .groupBy("src")
         .agg(F.array_sort(F.collect_list("dst")).alias("ns"))
     )

@@ -137,7 +137,7 @@ def i_affected_key_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# i_cdc_merge (r8): changelog application with full insert / update /
+# i_cdc_merge: changelog application with full insert / update /
 # delete semantics — the batch MERGE INTO analog (Delta/Iceberg MERGE,
 # Flink upsert-compaction). The reference's incremental-dump flow
 # (listenbrainz_spark/dump loaders) only ever appends; a real CDC feed
@@ -254,7 +254,7 @@ def i_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# i_deletion_apply (r8): the reference's two-tier listen-deletion
+# i_deletion_apply: the reference's two-tier listen-deletion
 # semantics (listenbrainz_spark/listens/delete.py:43,67 import jobs;
 # listens/data.py:67 filter_deleted_listens), applied and audited:
 #
@@ -359,7 +359,7 @@ def i_deletion_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# i_time_travel (r9): snapshot-versioned table + as-of read
+# i_time_travel: snapshot-versioned table + as-of read
 # (sources/versioned.py — the Delta/Iceberg commit-log idea on plain
 # Parquet, mirroring the reference's side-by-side dump generations +
 # registry pointer, SURVEY §2.1 S2/S14). The lifecycle exercised end
@@ -369,7 +369,7 @@ def i_deletion_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recomputes both snapshots from base data — so the v1 read proves
 # the old version is still byte-faithful after a newer commit landed
 # (the reproducible-report guarantee), and the diff proves latest
-# resolution. Manifest/vacuum/rollback mechanics are pytest-pinned.
+# resolution. Manifest and rollback mechanics are pytest-pinned.
 # --------------------------------------------------------------------------
 @register(
     "i_time_travel",
@@ -397,7 +397,7 @@ def i_deletion_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "v1 (pre-1997 per-customer order aggregate), commit v2 (full "
     "recompute), read v1 AS-OF while v2 is latest and diff -- the "
     "old report stays reproducible after new data lands; manifest "
-    "swap/vacuum/rollback pytest-pinned",
+    "swap/rollback pytest-pinned",
 )
 def i_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
@@ -450,7 +450,7 @@ def i_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# i_retraction_combine (r9): GDPR-style erasure applied to AGGREGATE
+# i_retraction_combine: GDPR-style erasure applied to AGGREGATE
 # STATE — deletions enter the incremental engine's ordinary combine
 # with negated measures instead of forcing the reference's
 # full-history recompute (listens/delete.py tombstones + stats

@@ -75,7 +75,7 @@ def user_cosine_pairs(
     (sitewide/entity.py:50-59) applied on the item axis; DIMSUM's
     sampling bounds the same term probabilistically.
 
-    The cap is ON by default (VERDICT r2 #3): every serving path —
+    The cap is ON by default: every serving path —
     ``similarity.similar_users`` dispatch, ``h_similar_users``, the
     bench headline — runs the bounded plan. Pass ``None`` explicitly
     for the exact all-pairs form (oracle fixture
@@ -110,7 +110,7 @@ def cosine_pairs_from_playcounts(
         w = Window.partitionBy("item_id").orderBy(
             F.col("playcount").desc(), F.col("user_id")
         )
-        # NOT pinned (r15, measured): the cap window's exchange is
+        # NOT pinned (measured): the cap window's exchange is
         # partitioned by item_id — exactly the self-join key — so both
         # join sides reuse that partitioning and the join adds no
         # exchange of its own. A localCheckpoint here breaks that
@@ -327,13 +327,15 @@ def als_recommend_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 # iterations [5, 10] × alphas [3.0]: the "eight models" its module
 # docstring describes. Iterations is a genuine grid axis there, which
 # is why ``max_iter`` may be a tuple here. The grid below is the
-# bench-time trade: ranks from the caller, regParam 0.1, alpha 1.0,
+# bench-time trade: ranks _ALS_CV_RANKS, regParam 0.1, alpha 1.0,
 # 2-fold CV.
+_ALS_CV_RANKS = (4, 8)
+
+
 def als_cv_lifecycle(
     spark: SparkSession,
     sf_dir: str,
     registry_dir: str,
-    ranks=(4, 8),
     max_iter=3,
     parallelism: int = 2,
 ) -> DataFrame:
@@ -411,7 +413,7 @@ def als_cv_lifecycle(
     )
     gb = (
         ParamGridBuilder()
-        .addGrid(als.rank, list(ranks))
+        .addGrid(als.rank, list(_ALS_CV_RANKS))
         .addGrid(als.regParam, [0.1])
         .addGrid(als.alpha, [1.0])
     )
@@ -503,7 +505,7 @@ def als_cv_lifecycle(
     "als_cv_lifecycle",
 )
 def m_als_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fast default profile (VERDICT r3 #5): still a REAL grid search —
+    """Fast default profile: still a REAL grid search —
     two rank candidates, 2-fold CV, held-out test RMSE, registry append
     — but with maxIter=2 and all candidate×fold fits running
     concurrently (parallelism=4), roughly halving the #1 wall-clock
@@ -720,7 +722,7 @@ def m_item_cosine_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# m_item_cf_topk (r9): item-item neighborhood CF — the classic
+# m_item_cf_topk: item-item neighborhood CF — the classic
 # memory-based recommender (Sarwar et al. WWW'01 / the "customers
 # who bought X" shape), the neighbor-based sibling of the
 # model-based m_als_recommend and the ITEM-axis twin of
@@ -806,8 +808,8 @@ def m_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Generate each unordered pair ONCE (item_a < item_b) and mirror
     # after the aggregate (guide §2.3 — shuffle fewer bytes): the old
     # `item_a != item_b` emitted both orientations of every pair into
-    # the partial agg + exchange (the r15 profile's single 5.6 s map
-    # stage), twice the rows for values that are symmetric anyway.
+    # the partial agg + exchange (a single 5.6 s map stage in the
+    # sf0.1 profile), twice the rows for values that are symmetric anyway.
     # Value-safe: dot and n_common are integer sums (order-free), and
     # cosine divides by sqrt(na)*sqrt(nb) — commutative product — so
     # the mirrored row carries bit-identical doubles to what the

@@ -70,8 +70,8 @@ def v_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sign-LSH bucketed ANN top-k — the 100TB path: bucket on a hyperplane
 # signature, exact re-rank within buckets only.
 #
-# Signature sizing (VERDICT r2 #4): the operator default auto-sizes
-# sig_bits = ceil(log2(n / target_bucket_rows)) from the corpus
+# Signature sizing: the operator default auto-sizes
+# sig_bits = ceil(log2(n / TARGET_BUCKET_ROWS)) from the corpus
 # (operators/similarity.py sized_sig_bits) so expected bucket
 # population — and with it the quadratic in-bucket re-rank — stays
 # bounded as n grows. The REGISTERED fixtures below pin sig_bits=8
@@ -221,8 +221,8 @@ def v_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Recall-audit harness for the trained-quantizer ANN tiers (VERDICT
-# r8 #1): KMeans/PCA training is not SQL-expressible, so the raw
+# Recall-audit harness for the trained-quantizer ANN tiers:
+# KMeans/PCA training is not SQL-expressible, so the raw
 # top-k can't be hashed cross-engine — but the CHECK can. Each tier's
 # registered form joins its own top-5 against the exact brute-force
 # top-5 computed in the same query and emits one row: the exact
@@ -292,11 +292,11 @@ def v_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from listenbrainz_server_spark.operators.similarity import ivfpq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r13: the registered audit runs the AUTO triple, not pinned
-    # integers. The r13 sf0.1 oracle sweep (CHECK_sf01_r13) caught the
+    # The registered audit runs the AUTO triple, not pinned
+    # integers. The sf0.1 oracle sweep (CHECK_sf01_r13) caught the
     # old fixed dial (n_centroids=8, n_probe=2, oversample=8, tuned at
     # sf0.001/0.01) reading recall < 0.40 at sf0.1 — the same decay
-    # mode the r12 smoke found for fixed n_probe: a fixed candidate
+    # mode the recall smoke found for fixed n_probe: a fixed candidate
     # budget scans a vanishing fraction as n grows. The audit's
     # "recall >= floor" claim must hold at every gated scale, so it
     # audits the dial a scale operator would actually run; the oracle
@@ -312,7 +312,7 @@ def v_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# OPQ-encoded IVFPQ (r10): the serving composition of the
+# OPQ-encoded IVFPQ: the serving composition of the
 # v_opq_rotation tier — rotate the corpus with the learned OPQ R
 # (one Arrow matmul pass; R is orthogonal, so rotation commutes with
 # unit-normalization and cosine ranking is preserved exactly), then
@@ -379,9 +379,8 @@ def v_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source column type — the downstream quantizer re-normalizes and
     # re-rounds, so the cast costs nothing the PQ didn't already.
     # Scratch lives under _scratch_root (cluster-reachable URI) and is
-    # deleted in the finally — VERDICT r10 #3: the earlier
-    # tempfile.mkdtemp form stranded a corpus-sized parquet copy in
-    # /tmp per invocation. The audit result is a 1-row aggregate, so
+    # deleted in the finally: a tempfile.mkdtemp form stranded a
+    # corpus-sized parquet copy in /tmp per invocation. The audit result is a 1-row aggregate, so
     # eagerly checkpointing it before the delete is free and the
     # UnsafeRow-rescans trap above doesn't apply to the OUTPUT.
     scratch = _scratch_root(spark).rstrip("/") + (
@@ -394,7 +393,7 @@ def v_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             scratch
         )
         rotated = spark.read.parquet(scratch)
-        # r13: auto dial triple, same reasoning as v_ivfpq_topk — the
+        # Auto dial triple, same reasoning as v_ivfpq_topk — the
         # fixed (8, 2, 8) dial read recall < 0.42 at sf0.1 in the
         # CHECK_sf01_r13 sweep; the oracle is dial-independent.
         approx = ivfpq_topk(
@@ -505,7 +504,7 @@ def v_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The SERVING dial of the multiprobe family, driver-gated (r13): the
+# The SERVING dial of the multiprobe family, driver-gated: the
 # corpus-sized signature (sized_sig_bits) + the radius scaled with it
 # (resolve_n_flip('auto') = clamp(ceil(bits/6), 2, 3)) — the v_lsh_topk
 # / v_lsh_multiprobe audits above keep their FIXED fixture dials (their
@@ -741,7 +740,7 @@ def v_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Delta-only IVFPQ index maintenance (VERDICT r7 #6): the LSH tier's
+# Delta-only IVFPQ index maintenance: the LSH tier's
 # v_incremental_index extended to the trained-artifact tier. The base
 # corpus trains coarse centers + residual codebooks ONCE; a delta
 # batch is encoded against the FROZEN artifacts (ivfpq_encode — a pure
@@ -935,7 +934,7 @@ def v_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
 
     # Two F.expr aggregate arrays instead of 2×_DIMS Column-built
-    # aggs (r14 opt, the lsh_signature fast-path pattern): the wide
+    # aggs (the lsh_signature fast-path pattern): the wide
     # form cost ~1 s of py4j round trips per construction; one JVM
     # parse builds the same MIN/MAX-then-CAST aggregates. Spark []
     # array indexing is 0-based, matching F.get.
@@ -959,7 +958,7 @@ def v_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = F.least(F.lit(255.0), F.floor((xv - mn) / step).cast("double"))
         return F.when(step > 0, mn + (qv + 0.5) * step).otherwise(mn)
 
-    # Pin the dequantized frame (r14 opt): brute_force_topk's block
+    # Pin the dequantized frame (measured): brute_force_topk's block
     # iterator counts it, collects it for the broadcast side, AND
     # executes it again as the query side — without the pin the
     # stats-agg + dequantize lineage ran 3×. n×dims doubles, the
@@ -1371,7 +1370,7 @@ def v_pca_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pca_prefix_topk_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serving form: raw PCA-prefix top-5 (qid, nid, score, rank).
 
-    Candidate budget scales with the corpus (r13): a FIXED budget at a
+    Candidate budget scales with the corpus: a FIXED budget at a
     growing n decays recall as distractors crowd the 16-dim prefix
     ranking — the CHECK_sf01_r13 sweep measured the fixed _SQ_CAND=20
     at recall 0.237 on sf0.1 (audit floor 0.42). Measured knee at
@@ -1431,7 +1430,7 @@ def _knn_vote_pred(emb: DataFrame, topk: DataFrame) -> DataFrame:
 # candidates). Tie-breaks are total: score ties rank by neighbor id,
 # vote ties pick the smallest label.
 #
-# FIXTURE-SCALE VERIFICATION BASELINE (VERDICT r10 #2): the neighbor
+# FIXTURE-SCALE VERIFICATION BASELINE: the neighbor
 # search is the blocked broadcast-matmul exact tier — driver memory is
 # block-bounded but compute is O(n²/block) at any scale, so this
 # registered form is the per-vector value oracle the ANN serving tier
@@ -1501,7 +1500,7 @@ def knn_classify_ann_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact tier. This is the 100 TB path: no all-pairs stage anywhere;
     every shuffle is keyed by bucket or query id. BOTH dial halves
     follow the measured scale rule (n_centroids="auto" = max(8, √n),
-    SCALING.md r11; n_probe="auto" = max(2, √nlist), r12 — a fixed
+    SCALING.md; n_probe="auto" = max(2, √nlist) — a fixed
     probe count at a growing nlist decays recall on weakly clustered
     data, tools/recall_smoke.py); the registered v_knn_classify_ann
     audit pins the pipeline at the fixture dial (8, 2) where its
@@ -1525,7 +1524,7 @@ def knn_classify_ann_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ANN kNN classification (r11, VERDICT r10 #2): the scale path for
+# ANN kNN classification: the scale path for
 # v_knn_classify — IVF candidate neighbors feed the identical majority
 # vote. Registered form is the agreement audit against the exact tier:
 # n_vectors and the EXACT tier's correct count are real DuckDB-checked
@@ -1731,7 +1730,7 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# OPQ rotation tier (VERDICT r9 #8 optional widening): Optimized
+# OPQ rotation tier: Optimized
 # Product Quantization (Ge et al., CVPR 2013) — learn an orthonormal
 # rotation before the PQ subspace split so quantization stops paying
 # for variance that straddles block boundaries. Training is the
@@ -1816,7 +1815,7 @@ def v_opq_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Exact-candidate MMR with a full VALUE oracle (VERDICT r9 #7): the
+# Exact-candidate MMR with a full VALUE oracle: the
 # same greedy objective as v_mmr_rerank, but over exact cosine top-20
 # candidates — which makes every number in the output independently
 # recomputable in SQL. The greedy loop has a FIXED depth (k=5), so it
@@ -2005,7 +2004,7 @@ def mmr_exact_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"qid": out_q, "i": out_i, "j": out_j, "s_u": out_s}
         )
 
-    # Coarse hash-bucket grouping, not per-qid (r14 opt, guide §4):
+    # Coarse hash-bucket grouping, not per-qid (measured):
     # same fixed Arrow-group-overhead amortization as mmr_rerank —
     # the per-query numpy math is unchanged, one batch just serves
     # many queries. sq, not qid: applyInPandas re-emits the grouping

@@ -186,7 +186,7 @@ def st_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.repartition(4).write.mode("overwrite").parquet(log_dir)
     # max_files=2 -> two triggers: the second still merges into
     # EXISTING state, so the combine path stays genuinely multi-batch
-    # at half the per-trigger overhead (r14 A/B; the additive
+    # at half the per-trigger overhead (measured by A/B; the additive
     # partial+combine is batch-split-invariant — the same property
     # st_trending_ranked's dial comment pins for LWW).
     stream = read_parquet_stream(
@@ -237,7 +237,7 @@ def st_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir, state = root + "/log", root + "/state"
     ev.repartition(4).write.mode("overwrite").parquet(log_dir)
     # max_files=2: two triggers keep the merge-into-existing-state path
-    # live at half the trigger cost (r14 A/B) — argmax over
+    # live at half the trigger cost (measured by A/B) — argmax over
     # state ∪ batch is batch-split-invariant (the property
     # st_replay_idempotent pins end to end).
     stream = read_parquet_stream(
@@ -250,7 +250,7 @@ def st_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# In-stream RANKED trending (VERDICT r7 #4): st_sliding_trending's
+# In-stream RANKED trending: st_sliding_trending's
 # streaming branch returns only the stateful (w, key, n) stage because
 # row_number is unsupported on streams; trending_rank_sink closes the
 # loop by ranking inside a foreachBatch sink (the st_upsert_latest
@@ -507,7 +507,7 @@ def st_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in stream mode)",
 )
 def st_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from listenbrainz_server_spark.streaming.jobs import interval_join_outer
+    from listenbrainz_server_spark.streaming.jobs import interval_join
 
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
@@ -518,9 +518,9 @@ def st_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("p_ts"),
     )
-    out = interval_join_outer(
+    out = interval_join(
         clicks, purchases, key=("user_id", "p_user_id"),
-        left_ts="c_ts", right_ts="p_ts", upper="1 hour",
+        left_ts="c_ts", right_ts="p_ts", upper="1 hour", how="left_outer",
     )
     return out.select(
         "user_id",
@@ -632,7 +632,7 @@ def a_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# st_cdc_merge (r8): streaming CDC apply WITH RETRACTIONS — the
+# st_cdc_merge: streaming CDC apply WITH RETRACTIONS — the
 # Flink-upsert-stream / Delta-streaming-MERGE shape, and the streaming
 # sibling of i_cdc_merge (same declared changelog derivation, same
 # final state; tests pin stream ≡ batch).
@@ -760,7 +760,7 @@ def st_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Sessionized CDC with retractions (VERDICT r8 #7): a time-ordered
+# Sessionized CDC with retractions: a time-ordered
 # changelog of event upserts + deletes streamed through the
 # event-granular session operator (streaming/stateful.py session_cdc)
 # — deletes retract their event from the open session that holds it
@@ -842,9 +842,9 @@ def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = root + "/log"
     # ts-range changelog files, oldest ts first: the file source
     # replays in mtime order, so time-order across triggers is what
-    # makes this a CDC replay. r9 wrote each slice as its own
-    # sequential coalesce(1) job (quantile cuts + N single-task
-    # writes); r10 writes all slices in ONE distributed job —
+    # makes this a CDC replay. Rather than one sequential coalesce(1)
+    # job per slice (quantile cuts + N single-task writes), all slices
+    # are written in ONE distributed job —
     # repartitionByRange(N, ts) assigns ascending ts ranges to
     # ascending partition ids, so the part-file NAME order IS the ts
     # order and an explicit os.utime stamp (2 s apart, safely above
@@ -875,13 +875,13 @@ def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition(1), NOT coalesce(1): createDataFrame parallelizes
     # the local row into defaultParallelism python-serialized slices,
     # and coalesce folds all 32 into one task that pays a worker
-    # round-trip per slice (~4.5 s for ONE ROW, measured r10);
+    # round-trip per slice (~4.5 s for ONE ROW, measured);
     # repartition shuffles them down for ~0.5 s.
     sentinel.repartition(1).write.mode("append").parquet(log_dir)
-    # Stamp the sentinel's mtime EXPLICITLY past every data slice
-    # (ADVICE r10): its natural write-time mtime (~base + 60) only
-    # happens to exceed base + 2*i while _CDC_SLICES < ~30 — above
-    # that, later data slices would out-mtime the sentinel and the
+    # Stamp the sentinel's mtime EXPLICITLY past every data slice:
+    # its natural write-time mtime (~base + 60) only happens to exceed
+    # base + 2*i while _CDC_SLICES < ~30 — above that, later data
+    # slices would out-mtime the sentinel and the
     # watermark flush would replay BEFORE them, silently dropping
     # retractions. base + 2*n + 2 is ordered for ANY slice count.
     sentinel_mtime = base + 2 * len(data_parts) + 2
@@ -893,8 +893,8 @@ def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # max_files=2 with _CDC_SLICES=2: both data slices land in
         # trigger 1 (within a trigger the update sorts ops by ts, so
         # intra-trigger file order is irrelevant), the sentinel lands
-        # alone in trigger 2 -- 2 triggers (r10 A/B vs the r9
-        # 4-slice/3-trigger form: ~3 s faster same-session at sf0.1,
+        # alone in trigger 2 -- 2 triggers (A/B vs a 4-slice/3-trigger
+        # form: ~3 s faster same-session at sf0.1,
         # identical stream==batch output). Cross-trigger retraction
         # (a delete arriving a trigger AFTER its upsert entered
         # state) stays pinned by the max_files=1 unit tests.
@@ -917,7 +917,7 @@ def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# st_replay_idempotent (r9): exactly-once-under-redelivery audit for
+# st_replay_idempotent: exactly-once-under-redelivery audit for
 # the LWW streaming MERGE sink. File-source + checkpoint already give
 # each batch exactly-once PROCESSING; what this pins is the stronger
 # operational property the sink's design claims (jobs.py

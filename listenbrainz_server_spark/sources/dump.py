@@ -121,19 +121,3 @@ def import_dump(
         "dump_id bigint, dump_type string, n_members int, "
         "n_rows bigint, n_rows_total bigint",
     )
-
-
-def latest_import(spark: SparkSession, metadata_path: str) -> DataFrame:
-    """The get_latest_full_dump lookup (listens/dump.py:102-110): the
-    most recent import per dump_type from the metadata registry."""
-    meta = spark.read.parquet(metadata_path)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("dump_type").orderBy(
-        F.col("imported_at").desc(), F.col("dump_id").desc()
-    )
-    return (
-        meta.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )

@@ -34,17 +34,10 @@ def apply_tombstones(
     df: DataFrame,
     deleted_rows: DataFrame | None,
     delete_keys: Sequence[str],
-    history_cutoff: DataFrame | None = None,
-    created_col: str = "created",
 ) -> DataFrame:
-    """P4+P5 (listens/data.py:67-86): subtract exact tombstones, then
-    drop rows at-or-before each user's history-delete cutoff."""
+    """P4 (listens/data.py:67-78): subtract exact tombstones."""
     if deleted_rows is not None:
         df = anti_join(df, deleted_rows, delete_keys)
-    if history_cutoff is not None:
-        df = df.join(F.broadcast(history_cutoff), on="user_id", how="left").where(
-            F.col("max_created").isNull() | (F.col(created_col) >= F.col("max_created"))
-        ).drop("max_created")
     return df
 
 

@@ -14,10 +14,7 @@ Parquet:
   * reads resolve through the manifest: latest by default,
     ``version=N`` for time travel — an old report stays reproducible
     after new data lands, and a bad commit is one manifest edit away
-    from rollback;
-  * ``vacuum`` drops data directories older than the retention count
-    (manifest first, directories after — a reader holding the old
-    manifest can still finish its scan before the files go).
+    from rollback.
 
 Scale notes: data writes are ordinary distributed Parquet jobs; the
 manifest is O(versions) driver-side JSON, the same bookkeeping weight
@@ -96,26 +93,3 @@ def read_version(
             f"(committed: {m['versions']})"
         )
     return spark.read.parquet(os.path.join(root, f"v={v}"))
-
-
-def vacuum(root: str, keep_last: int = 2) -> list:
-    """Drop all but the newest ``keep_last`` versions. Returns the
-    dropped version numbers. Manifest updates first so no new reader
-    resolves a doomed version. The version ``latest`` resolves to is
-    always kept, even when a rollback pointed it at an old snapshot —
-    otherwise vacuum would delete the directory every default read
-    names."""
-    m = _read_manifest(root)
-    keep = set(m["versions"][-keep_last:]) if keep_last > 0 else set()
-    if m["latest"] is not None:
-        keep.add(m["latest"])
-    dropped = [v for v in m["versions"] if v not in keep]
-    if not dropped:
-        return []
-    m["versions"] = [v for v in m["versions"] if v in keep]
-    _swap_manifest(root, m)
-    for v in dropped:
-        d = os.path.join(root, f"v={v}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    return dropped

@@ -142,11 +142,11 @@ def sliding_trending(
     """
     if df.isStreaming:
         if top_k is not None:
-            # Advisor r7 + r8 review: None is the explicit "default"
-            # sentinel, so ANY caller-supplied top_k on a stream gets
-            # the signal that the ranking stage was dropped (the old
-            # `!= 3` check silently swallowed an explicit top_k=3,
-            # and would have drifted if the default changed).
+            # None is the explicit "default" sentinel, so ANY
+            # caller-supplied top_k on a stream gets the signal that
+            # the ranking stage was dropped (a `!= 3` check would
+            # swallow an explicit top_k=3, and drift if the default
+            # changed).
             import warnings
 
             warnings.warn(
@@ -185,16 +185,14 @@ def trending_rank_sink(
     key_col: str,
     counts_path: str,
     ranked_path: str,
-    window: str = "2 hours",
-    slide: str = "1 hour",
     top_k: int = 3,
     watermark: str | None = "2 hours",
     state_partitions: int | None = None,
 ) -> None:
-    """In-stream ranked trending top-k (VERDICT r7 #4): close the gap
-    ``sliding_trending`` leaves on streams, where row_number is a
-    non-time window and unsupported, by ranking inside a
-    ``foreachBatch`` sink — the ``st_upsert_latest`` pattern.
+    """In-stream ranked trending top-k over 2-hour windows sliding by
+    1 hour: close the gap ``sliding_trending`` leaves on streams, where
+    row_number is a non-time window and unsupported, by ranking inside
+    a ``foreachBatch`` sink — the ``st_upsert_latest`` pattern.
 
     Per micro-batch (update mode, so each emitted row is the NEW
     running total for its (window, key)):
@@ -223,7 +221,7 @@ def trending_rank_sink(
     from listenbrainz_server_spark.sources.sinks import atomic_swap_write
 
     counts = sliding_trending(
-        stream_df, ts_col, key_col, window=window, slide=slide,
+        stream_df, ts_col, key_col, window="2 hours", slide="1 hour",
         watermark=watermark,
     )
 
@@ -254,34 +252,6 @@ def trending_rank_sink(
             .start()
         )
         q.awaitTermination()
-
-
-def quality_gate(df: DataFrame) -> DataFrame:
-    """Streaming corpus quality filter (NEXT round-5 candidate): the
-    d_clean_corpus admission gate applied to a document stream. The
-    gate is a pure column expression (functions.text.quality_flag), so
-    this stage is STATELESS — no watermark, no state store — and an
-    ingest pipeline can drop junk documents at the earliest possible
-    point, before any stateful dedup/agg pays shuffle or state for
-    them. Works identically on batch DataFrames (the oracle-checked
-    form, st_quality_gate) and on readStream inputs
-    (tests/test_streaming.py proves stream ≡ batch)."""
-    from listenbrainz_server_spark.functions.text import quality_flag
-
-    return df.where(quality_flag(F.col("text")))
-
-
-def run_to_memory_sink(stream_df: DataFrame, query_name: str) -> None:
-    """Drain a stream with the available-now trigger into an in-memory
-    table (test/debug sink — S12's result-sink analog for streams)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_dedup(
@@ -434,19 +404,30 @@ def interval_join(
     left_ts: str,
     right_ts: str,
     upper: str = "1 hour",
-    watermark: str = "2 hours",
+    how: str = "inner",
 ) -> DataFrame:
     """Stream-stream interval equi join: pair each left event with the
     right events of the same ``key`` arriving in ``[left_ts, left_ts +
     upper]`` — the attribution-join shape (click → purchase within the
-    window).
+    window). ``how="left_outer"`` also emits the left rows with no
+    match in their interval, right side null (the unattributed-clicks
+    shape).
 
-    In stream mode BOTH sides carry watermarks and the join condition
-    bounds event-time distance, so Spark's state store evicts a
-    buffered row as soon as the other side's watermark passes its
-    interval — state is bounded by ``watermark + upper`` of traffic,
-    never the stream history. In batch mode the same plan is a plain
-    range-predicate join (AQE free to pick the strategy).
+    In stream mode BOTH sides carry 2-hour watermarks and the join
+    condition bounds event-time distance, so Spark's state store evicts
+    a buffered row as soon as the other side's watermark passes its
+    interval — state is bounded by the watermark plus ``upper`` of
+    traffic, never the stream history. In batch mode the same plan is a
+    plain range-predicate join (AQE free to pick the strategy).
+
+    The outer form's semantics are watermark-driven in stream mode:
+    Spark can only declare a left row unmatched once the right
+    watermark has passed the row's whole interval, so null-padded rows
+    surface with watermark delay, and the final micro-batch of a
+    bounded run may retain tail rows in state — the batch form is the
+    converged answer. Both sides MUST carry watermarks and the
+    condition must bound event-time distance or the unmatched check
+    never closes; Spark rejects the query otherwise.
 
     The reference has no stream-stream joins (its request-queue model
     recomputes batch joins); this is the Structured Streaming native
@@ -455,58 +436,12 @@ def interval_join(
     """
     lkey, rkey = (key, key) if isinstance(key, str) else key
     if left.isStreaming:
-        left = left.withWatermark(left_ts, watermark)
+        left = left.withWatermark(left_ts, "2 hours")
     if right.isStreaming:
-        right = right.withWatermark(right_ts, watermark)
+        right = right.withWatermark(right_ts, "2 hours")
     cond = (
         (left[lkey] == right[rkey])
         & (right[right_ts] >= left[left_ts])
         & (right[right_ts] <= left[left_ts] + F.expr(f"INTERVAL {upper}"))
     )
-    return left.join(right, cond)
-
-
-def interval_join_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str | tuple[str, str],
-    left_ts: str,
-    right_ts: str,
-    upper: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: like ``interval_join``,
-    but left rows with NO matching right row inside their interval are
-    still emitted (right side null) — the unattributed-clicks shape.
-
-    In stream mode the outer semantics are watermark-driven: Spark can
-    only declare a left row unmatched once the right watermark has
-    passed the row's whole interval, so null-padded rows surface with
-    watermark delay (and the final micro-batch of a bounded run may
-    retain tail rows in state — the batch form is the converged
-    answer). Both sides MUST carry watermarks and the condition must
-    bound event-time distance or the unmatched check never closes;
-    Spark rejects the query otherwise. State stays bounded exactly as
-    in the inner form.
-    """
-    lkey, rkey = (key, key) if isinstance(key, str) else key
-    if left.isStreaming:
-        left = left.withWatermark(left_ts, watermark)
-    if right.isStreaming:
-        right = right.withWatermark(right_ts, watermark)
-    cond = (
-        (left[lkey] == right[rkey])
-        & (right[right_ts] >= left[left_ts])
-        & (right[right_ts] <= left[left_ts] + F.expr(f"INTERVAL {upper}"))
-    )
-    return left.join(right, cond, "leftOuter")
-
-
-def stream_static_enrich(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
-    """Stream-static dimension enrichment: join each micro-batch
-    against a STATIC dimension table. Stateless in stream mode (no
-    watermark, no state store — Spark re-plans the static side per
-    micro-batch, picking up in-place refreshes of the dim snapshot);
-    the broadcast hint keeps the stream side shuffle-free, exactly the
-    J1 fact×dim discipline applied to the streaming path."""
-    return stream.join(F.broadcast(dim), on, "left")
+    return left.join(right, cond, how)

@@ -207,9 +207,10 @@ def test_changed_producer_stales_its_own_artifacts_whole(monkeypatch):
     the whole registry (None); it moves no bench number, and bench.py's
     change is unbounded for the bench only."""
     changed: set[str] = set()
-    monkeypatch.setattr(endround, "_changed_since", lambda head: set(changed))
+    monkeypatch.setattr(endround, "_changed_since",
+                        lambda head, blobs=None: set(changed))
     registry = {"q_a": None, "q_b": None}
-    head = "0" * 40
+    head = {"git_head": "0" * 40}
     changed.add("tools/check.py")
     assert endround._stale_names(registry, head, "tools/check.py") is None
     assert endround._stale_names(registry, head, "bench.py") == set()
@@ -218,7 +219,7 @@ def test_changed_producer_stales_its_own_artifacts_whole(monkeypatch):
     # A/B legs run this tree's bench.py on both sides: neither counts.
     assert endround._stale_names(registry, head, None) == set()
     # An artifact without a head cannot be diffed: unbounded.
-    assert endround._stale_names(registry, None, "bench.py") is None
+    assert endround._stale_names(registry, {}, "bench.py") is None
     assert set(endround.PRODUCERS) <= set(endround.GUARDED)
 
 
@@ -259,3 +260,47 @@ def test_regate_merges_over_the_newest_rows_and_stamps_head(tmp_path, monkeypatc
     monkeypatch.setattr(endround, "_check",
                         lambda sf_dir, names: {"q_old": ok, "q_keep": ok})
     assert endround._regate("sfX", str(out), None, {"q_old": 0, "q_keep": 0}) == []
+
+
+def test_stamp_on_a_dirty_tree_certifies_the_commit_that_follows(tmp_path, monkeypatch):
+    """An artifact re-gated before its change is committed records the
+    blob of each changed GUARDED path, so after the commit nothing is
+    stale and --assert-head passes; a further edit is stale again."""
+    import subprocess
+
+    def git(*args):
+        subprocess.run(["git", "-c", "user.name=t", "-c", "user.email=t@t",
+                        *args], cwd=tmp_path, check=True, capture_output=True)
+
+    mod = tmp_path / ROOT / "mod.py"
+    gone = tmp_path / ROOT / "gone.py"
+    mod.parent.mkdir()
+    mod.write_text("x = 1\n")
+    gone.write_text("y = 1\n")
+    (tmp_path / "bench.py").write_text("")
+    git("init", "-q")
+    git("add", "-A")
+    git("commit", "-qm", "parent")
+    monkeypatch.setattr(endround, "REPO", str(tmp_path))
+
+    mod.write_text("x = 2\n")  # the change, re-gated before its commit
+    gone.unlink()
+    (tmp_path / ROOT / "new.py").write_text("z = 1\n")
+    stamp = endround._stamp()
+    assert set(stamp["git_blobs"]) == {f"{ROOT}/mod.py", f"{ROOT}/gone.py",
+                                      f"{ROOT}/new.py"}
+    assert stamp["git_blobs"][f"{ROOT}/gone.py"] is None
+    with open(tmp_path / "CHECK_full_r01.json", "w") as f:
+        json.dump(stamp, f)
+    git("add", "-A", ROOT)
+    git("commit", "-qm", "change")
+
+    assert endround._changed_since(stamp["git_head"], stamp["git_blobs"]) == set()
+    assert endround.assert_head() == 0
+    # Without the recorded blobs the committed change reads as stale.
+    assert endround._changed_since(stamp["git_head"]) == set(stamp["git_blobs"])
+
+    mod.write_text("x = 3\n")
+    assert endround._changed_since(stamp["git_head"], stamp["git_blobs"]) == {
+        f"{ROOT}/mod.py"}
+    assert endround.assert_head() == 1

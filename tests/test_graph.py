@@ -21,7 +21,7 @@ from tests.conftest import SF_SMOKE
 
 def _iterates(spark, k):
     """First k PageRank iterates as python dicts node -> pr."""
-    contrib, outdeg = _trade_graph(spark, SF_SMOKE, partitions=4)
+    contrib, outdeg = _trade_graph(spark, SF_SMOKE)
     nodes = outdeg.select(F.col("src").alias("node"))
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
     rank = nodes.crossJoin(F.broadcast(nn)).select(
@@ -117,7 +117,7 @@ def test_label_prop_matches_pure_python_reference(spark):
         g_label_prop,
     )
 
-    contrib, outdeg = _trade_graph(spark, SF_SMOKE, partitions=4)
+    contrib, outdeg = _trade_graph(spark, SF_SMOKE)
     w = defaultdict(int)
     for r in contrib.select("src", "dst", "w").collect():
         w[(r.src, r.dst)] = r.w
@@ -180,7 +180,7 @@ def test_triangle_counts_matches_brute_force(spark):
     df = spark.createDataFrame(edges, "a: bigint, b: bigint")
     got = {
         r.node: (r.triangles, r.degree)
-        for r in triangle_counts(df, partitions=4).collect()
+        for r in triangle_counts(df).collect()
     }
     assert {v: t for v, (t, _) in got.items()} == expect
     for v, (_, d) in got.items():

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from listenbrainz_server_spark.incremental.engine import IncrementalEngine
 from listenbrainz_server_spark.plans.incremental_stats import (
     final_user_entity_stats,
-    run_incremental_user_entity,
     user_entity_stat,
 )
 
@@ -35,19 +34,26 @@ ROWS = [
 ]
 
 
+def _run_user_entity(engine, df, k, only_affected=False):
+    """The handler lifecycle as ``plans.api`` runs it: partial + delta
+    + combine through ``IncrementalEngine.run``, then the final top-K."""
+    cutoff = F.lit("2024-01-20").cast("timestamp")
+    combined = engine.run(
+        user_entity_stat(),
+        df.where(F.col("ts") < cutoff),
+        df.where(F.col("ts") >= cutoff),
+        "2024-01-01",
+        "2024-02-01",
+        "2024-01-20",
+        only_affected=only_affected,
+    )
+    return final_user_entity_stats(combined, k=k)
+
+
 def test_incremental_handler_equals_batch_handler(spark, tmp_path):
     df = _events(spark, ROWS)
-    cutoff = F.lit("2024-01-20").cast("timestamp")
     engine = IncrementalEngine(spark, str(tmp_path))
-    inc = run_incremental_user_entity(
-        engine,
-        full_df=df.where(F.col("ts") < cutoff),
-        delta_df=df.where(F.col("ts") >= cutoff),
-        from_date="2024-01-01",
-        to_date="2024-02-01",
-        created="2024-01-20",
-        k=10,
-    )
+    inc = _run_user_entity(engine, df, k=10)
     batch = final_user_entity_stats(user_entity_stat().aggregate(df), k=10)
     assert inc.columns == batch.columns
     assert set(inc.collect()) == set(batch.collect())
@@ -55,18 +61,8 @@ def test_incremental_handler_equals_batch_handler(spark, tmp_path):
 
 def test_incremental_handler_affected_only(spark, tmp_path):
     df = _events(spark, ROWS)
-    cutoff = F.lit("2024-01-20").cast("timestamp")
     engine = IncrementalEngine(spark, str(tmp_path))
-    out = run_incremental_user_entity(
-        engine,
-        full_df=df.where(F.col("ts") < cutoff),
-        delta_df=df.where(F.col("ts") >= cutoff),
-        from_date="2024-01-01",
-        to_date="2024-02-01",
-        created="2024-01-20",
-        k=10,
-        only_affected=True,
-    )
+    out = _run_user_entity(engine, df, k=10, only_affected=True)
     users = {r.user_id for r in out.select("user_id").distinct().collect()}
     # Only keys touched by the delta: (2,like), (1,play), (3,skip).
     assert users == {1, 2, 3}

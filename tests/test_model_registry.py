@@ -37,20 +37,19 @@ def _tiny_model(spark, seed=1):
 def test_save_load_latest_and_subset_recommend(spark, tmp_path):
     registry = str(tmp_path / "registry")
     m1 = _tiny_model(spark, seed=1)
-    save_model_with_metadata(
-        spark, registry, m1, params={"rank": 2}, metrics={"rmse": 1.0},
-        model_id="als_first",
+    first = save_model_with_metadata(
+        spark, registry, m1, params={"rank": 2}, metrics={"rmse": 1.0}
     )
     m2 = _tiny_model(spark, seed=2)
-    save_model_with_metadata(
-        spark, registry, m2, params={"rank": 2}, metrics={"rmse": 0.9},
-        model_id="als_second",
+    second = save_model_with_metadata(
+        spark, registry, m2, params={"rank": 2}, metrics={"rmse": 0.9}
     )
+    assert first != second
     meta = latest_model_meta(spark, registry)
-    assert meta.model_id == "als_second"  # O5 latest-model lookup
+    assert meta.model_id == second  # O5 latest-model lookup
 
     loaded, meta2 = load_latest_als_model(spark, registry)
-    assert meta2.model_id == "als_second"
+    assert meta2.model_id == second
     users = spark.createDataFrame([(0,), (3,)], "user int")
     recs = recommend_for_user_subset(loaded, users, limit=2)
     got = recs.collect()
@@ -66,13 +65,12 @@ def test_als_cv_selects_params_from_grid(spark, tmp_path):
         spark,
         "/root/testdata/sf0.001",
         str(tmp_path / "registry"),
-        ranks=(2, 4),
         max_iter=2,
     ).collect()
     assert len(out) == 2  # one row per grid candidate
     best = [r for r in out if r.is_best]
     assert len(best) == 1
-    assert best[0].rank in (2, 4)
+    assert best[0].rank in (4, 8)
     assert best[0].model_id and best[0].test_rmse is not None
     # The registered best model is loadable and serves recommendations.
     loaded, meta = load_latest_als_model(spark, str(tmp_path / "registry"))
@@ -89,11 +87,10 @@ def test_als_max_iter_tuple_is_grid_axis(spark, tmp_path):
         spark,
         "/root/testdata/sf0.001",
         str(tmp_path / "registry"),
-        ranks=(2,),
         max_iter=(1, 2),
     ).collect()
-    assert len(out) == 2
-    assert sorted(r.max_iter for r in out) == [1, 2]
-    assert all(r.rank == 2 for r in out)
+    assert len(out) == 4  # ranks (4, 8) x max_iter (1, 2)
+    assert sorted((r.rank, r.max_iter) for r in out) == [
+        (4, 1), (4, 2), (8, 1), (8, 2)]
     best = [r for r in out if r.is_best]
     assert len(best) == 1 and best[0].model_id

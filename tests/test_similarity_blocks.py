@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
-from listenbrainz_server_spark.operators.dedup import connected_components, shingle_index
+from listenbrainz_server_spark.operators.dedup import connected_components
 from listenbrainz_server_spark.operators.similarity import (
     brute_force_topk,
     neardup_pairs,
@@ -40,23 +40,6 @@ def test_neardup_pairs_blocked_equals_single(spark):
     blocked = neardup_pairs(emb, "vec_id", "embedding", threshold=0.4, block_rows=13)
     canon = lambda df: sorted((r.id_a, r.id_b, round(r.score, 6)) for r in df.collect())
     assert canon(blocked) == canon(single)
-
-
-def test_shingle_df_cap_drops_hot_shingle(spark):
-    # "the the the" 3-gram appears in every doc (hot); unique tails don't.
-    docs = spark.createDataFrame(
-        [(i, f"the the the unique{i} tail{i} word{i}") for i in range(6)],
-        "doc_id long, body string",
-    )
-    uncapped = shingle_index(docs, "doc_id", "body", n=3)
-    capped = shingle_index(docs, "doc_id", "body", n=3, max_shingle_df=3)
-    hot = {r.shingle for r in uncapped.groupBy("shingle").count().where("count > 3").collect()}
-    assert hot  # fixture really has a hot shingle
-    kept = {r.shingle for r in capped.select("shingle").distinct().collect()}
-    assert not (hot & kept), "df-capped index must drop hot shingles"
-    # max_shingle_df=0 must drop EVERYTHING (regression: old ternary
-    # silently disabled the filter for 0).
-    assert shingle_index(docs, "doc_id", "body", n=3, max_shingle_df=0).count() == 0
 
 
 def test_connected_components_chain_rounds_logarithmic(spark):
@@ -334,7 +317,7 @@ def test_sized_sig_bits_rule_and_bucket_population_bound(spark):
 
     # Construction guarantee: n / 2^bits <= target for any n.
     for n in (100, 1_000, 10_000, 1_000_000, 10**9):
-        bits = sized_sig_bits(n, target_bucket_rows=64)
+        bits = sized_sig_bits(n)
         assert n / 2**bits <= 64 or bits == 24  # max_bits clamp at 1e9
     # A 10× corpus adds bits instead of growing buckets.
     assert sized_sig_bits(50_000) > sized_sig_bits(5_000)
@@ -346,7 +329,7 @@ def test_sized_sig_bits_rule_and_bucket_population_bound(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    bits = sized_sig_bits(n, target_bucket_rows=64)  # ceil(log2(78)) = 7
+    bits = sized_sig_bits(n)  # ceil(log2(78)) = 7
     assert bits == 7
     pops = (
         df.select(lsh_signature(as_double(F.col("embedding")), dims, bits).alias("sig"))
@@ -445,7 +428,7 @@ def test_sized_sig_bits_choice_sits_on_measured_sweep_knee(spark):
 
     sf = "/root/testdata/sf0.01"
     n = load_table(spark, sf, "embeddings").count()
-    bits = sized_sig_bits(n, target_bucket_rows=64)
+    bits = sized_sig_bits(n)
 
     sweep = {
         r.sig_bits: (r.candidate_pairs, r.recall)
@@ -824,7 +807,7 @@ def test_ivfpq_topk_and_encode_preserve_string_ids(spark):
     assert got == want and len(got) > 0
 
     centers, books = ivfpq_train_artifacts(
-        emb, "vec_id", "embedding", dims=64, n_centroids=4, m=8, k_sub=16
+        emb, "vec_id", "embedding", dims=64, n_centroids=4, m=8
     )
     enc_int = {
         (str(r.nid), r.bucket, tuple(r.codes))

@@ -10,10 +10,22 @@ import pytest
 
 from listenbrainz_server_spark.streaming.jobs import (
     read_parquet_stream,
-    run_to_memory_sink,
     session_aggregate,
     windowed_counts,
 )
+
+
+def run_to_memory_sink(stream_df, query_name: str) -> None:
+    """Drain a stream with the available-now trigger into the in-memory
+    table ``query_name``."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 @pytest.fixture(scope="module")
@@ -138,7 +150,7 @@ def test_trending_rank_sink_ranked_stream_equals_batch(spark, tmp_path):
     ranked_path = str(tmp_path / "ranked")
     trending_rank_sink(
         stream, "ts", "event_type", counts_path, ranked_path,
-        window="2 hours", slide="1 hour", top_k=2, watermark="2 hours",
+        top_k=2, watermark="2 hours",
     )
     assert not spark.streams.active
     got = spark.read.parquet(ranked_path)
@@ -155,7 +167,7 @@ def test_trending_rank_sink_ranked_stream_equals_batch(spark, tmp_path):
     stream2 = read_parquet_stream(spark, log, batch.schema, max_files=1)
     trending_rank_sink(
         stream2, "ts", "event_type", counts_path, ranked_path,
-        window="2 hours", slide="1 hour", top_k=2, watermark="2 hours",
+        top_k=2, watermark="2 hours",
     )
     assert not spark.streams.active
     assert _rows(spark.read.parquet(ranked_path), cols) == _rows(expect, cols)
@@ -288,43 +300,6 @@ def test_interval_join_stream_equals_batch(spark, tmp_path):
     assert got == want
 
 
-def test_stream_static_enrich_equals_batch(spark, tmp_path):
-    """Stream-static dim join ≡ batch dim join (stateless; broadcast
-    keeps the stream side shuffle-free)."""
-    from pyspark.sql import functions as F
-
-    import listenbrainz_server_spark.streaming.jobs as jobs
-    from listenbrainz_server_spark.catalog import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "event_type", "value"
-    )
-    dim = spark.createDataFrame(
-        [("click", 1.0), ("purchase", 5.0), ("view", 0.5)],
-        "event_type string, weight double",
-    )
-    want = sorted(
-        (r.event_id, r.weight)
-        for r in jobs.stream_static_enrich(ev, dim, "event_type").collect()
-    )
-
-    ev_dir = str(tmp_path / "ev")
-    ev.write.parquet(ev_dir)
-    out = jobs.stream_static_enrich(
-        jobs.read_parquet_stream(spark, ev_dir, ev.schema), dim, "event_type"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sse_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted((r.event_id, r.weight) for r in spark.table("sse_sink").collect())
-    assert got == want
-
-
 def test_merge_latest_out_of_order_and_idempotent(spark, tmp_path):
     """The LWW merge must take the argmax over state UNION batch: an
     out-of-order micro-batch carrying an OLDER version of a key must
@@ -377,9 +352,9 @@ def test_interval_join_outer_stream_emits_unmatched(spark, tmp_path):
         left_ts="c_ts",
         right_ts="p_ts",
         upper="4 hours",
-        watermark="2 hours",
+        how="left_outer",
     )
-    batch = jobs.interval_join_outer(clicks, purchases, **args).collect()
+    batch = jobs.interval_join(clicks, purchases, **args).collect()
     batch_matched = sorted(
         (r.click_id, r.purchase_id) for r in batch if r.purchase_id is not None
     )
@@ -391,7 +366,7 @@ def test_interval_join_outer_stream_emits_unmatched(spark, tmp_path):
     c_dir, p_dir = str(tmp_path / "clicks"), str(tmp_path / "purchases")
     clicks.write.parquet(c_dir)
     purchases.write.parquet(p_dir)
-    got_df = jobs.interval_join_outer(
+    got_df = jobs.interval_join(
         jobs.read_parquet_stream(spark, c_dir, clicks.schema),
         jobs.read_parquet_stream(spark, p_dir, purchases.schema),
         **args,
@@ -426,16 +401,23 @@ def test_interval_join_outer_stream_emits_unmatched(spark, tmp_path):
 
 
 def test_quality_gate_stream_equals_batch(spark, tmp_path):
-    """The quality gate is stateless, so streaming it over the
-    documents table file-by-file must admit exactly the docs the batch
-    form admits — in every micro-batch, with no watermark or state."""
+    """The quality gate (st_quality_gate's ``quality_flag``) is
+    stateless, so streaming it over the documents table file-by-file
+    must admit exactly the docs the batch form admits — in every
+    micro-batch, with no watermark or state."""
+    from pyspark.sql import functions as F
+
     import listenbrainz_server_spark.streaming.jobs as jobs
     from listenbrainz_server_spark.catalog import load_table
+    from listenbrainz_server_spark.functions.text import quality_flag
+
+    def quality_gate(df):
+        return df.where(quality_flag(F.col("text")))
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text", "source"
     )
-    batch_ids = _rows(jobs.quality_gate(docs), ["doc_id"])
+    batch_ids = _rows(quality_gate(docs), ["doc_id"])
     assert 0 < len(batch_ids) < docs.count()  # gate discriminates
 
     doc_dir = str(tmp_path / "doc_stream")
@@ -444,7 +426,7 @@ def test_quality_gate_stream_equals_batch(spark, tmp_path):
         spark, doc_dir, spark.read.parquet(doc_dir).schema, max_files=1
     )
     q = (
-        jobs.quality_gate(stream)
+        quality_gate(stream)
         .writeStream.format("memory")
         .queryName("quality_gate_sink")
         .outputMode("append")

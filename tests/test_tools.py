@@ -74,7 +74,8 @@ def test_ab_pairs_alternate_first_side_and_share_bench_bytes(git_repo):
         with open(os.path.join(side_dir, "bench.py")) as f:
             calls.append(("new" if side_dir == git_repo else "old", f.read()))
         seconds = 1.0 if side_dir == git_repo else 2.0
-        return {n: seconds for n in names if n != "q_missing"}
+        return ({n: seconds for n in names if n != "q_missing"},
+                {n: {"jobs": 2, "ops": {"Exchange": 1}} for n in names})
 
     out = ab.compare("HEAD", ["q1", "q_missing"], pairs=4,
                      run_leg=fake_leg, repo=git_repo)
@@ -84,6 +85,8 @@ def test_ab_pairs_alternate_first_side_and_share_bench_bytes(git_repo):
     q1 = out["queries"]["q1"]
     assert [leg["first"] for leg in q1["legs"]] == ["new", "old", "new", "old"]
     assert (q1["ab_confirmed"], q1["direction"]) == (True, "improved")
+    # Faster with identical counters: the record says the host moved.
+    assert q1["counters_equal"] is True
     assert out["queries"]["q_missing"]["ab_confirmed"] is None
     assert out["pairs"] == 4
 
@@ -95,7 +98,7 @@ def test_ab_removes_worktree_when_a_leg_raises(git_repo):
         seen.append(side_dir)
         if side_dir != git_repo:
             raise RuntimeError("leg exited 1")
-        return {n: 1.0 for n in names}
+        return {n: 1.0 for n in names}, {}
 
     with pytest.raises(RuntimeError, match="leg exited 1"):
         ab.compare("HEAD", ["q1"], run_leg=failing_leg, repo=git_repo)
@@ -104,6 +107,23 @@ def test_ab_removes_worktree_when_a_leg_raises(git_repo):
     listed = subprocess.run(["git", "worktree", "list"], cwd=git_repo,
                             capture_output=True, text=True, check=True).stdout
     assert len(listed.splitlines()) == 1, listed
+
+
+def test_ab_counters_diff_first_legs_and_flag_equality():
+    new = {"jobs": 3, "stages": 4, "tasks": 9, "shuffle_write_bytes": 100,
+           "sql_executions": 1, "ops": {"Exchange": 2, "Sort": 1},
+           "executor_run_s": 1.5}
+    old = {**new, "jobs": 2, "ops": {"Exchange": 1, "Sort": 1, "Window": 1},
+           "executor_run_s": 9.0}
+    got = ab.counters(new, old)
+    assert got["counters_equal"] is False
+    diff = got["counters"]["diff"]
+    assert diff == {"jobs": 1, "stages": 0, "tasks": 0, "shuffle_write_bytes": 0,
+                    "sql_executions": 0, "ops": {"Exchange": 1, "Window": -1}}
+    # Only counters are compared: run seconds drift, so they are left out.
+    assert "executor_run_s" not in got["counters"]["new"]
+    assert ab.counters(new, dict(new, executor_run_s=0.1))["counters_equal"] is True
+    assert ab.counters(new, None) == {"counters": None, "counters_equal": None}
 
 
 def test_ab_cli_parsing():

@@ -20,6 +20,11 @@ least 9/10 of the pairs, ties counting for neither, and the medians
 differ by more than the interquartile range of the old legs. Otherwise
 `ab_confirmed` is false, or None when a leg has no reading for the name.
 
+Beside the verdict each name carries the execution-record counters of
+its first new and old legs and their difference. Counters do not drift
+with the host, so when `counters_equal` is true a wall delta is the
+host's, not the code's.
+
 Prints the table on stderr and the JSON record on stdout.
 """
 
@@ -37,6 +42,8 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+COUNTERS = ("jobs", "stages", "tasks", "shuffle_write_bytes",
+            "sql_executions", "ops")
 
 
 @contextlib.contextmanager
@@ -56,8 +63,9 @@ def worktree(ref: str, repo: str = REPO):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def run_leg(side: str, names: list[str]) -> dict[str, float]:
-    """Run `side`'s bench.py once over `names`; return {name: seconds}."""
+def run_leg(side: str, names: list[str]) -> tuple[dict[str, float], dict[str, dict]]:
+    """Run `side`'s bench.py once over `names`; return ({name: seconds},
+    {name: execution record})."""
     r = subprocess.run(
         [sys.executable, "bench.py", "--only", ",".join(names), "--no-artifact"],
         cwd=side, capture_output=True, text=True,
@@ -65,7 +73,8 @@ def run_leg(side: str, names: list[str]) -> dict[str, float]:
     if r.returncode == 0:
         for ln in reversed(r.stdout.splitlines()):
             if ln.startswith("{"):
-                return json.loads(ln).get("queries", {})
+                out = json.loads(ln)
+                return out.get("queries", {}), out.get("records", {})
     raise RuntimeError(f"leg in {side} exited {r.returncode} with no JSON "
                        f"line; stderr tail:\n{r.stderr[-2000:]}")
 
@@ -90,11 +99,28 @@ def judge(new: list, old: list) -> dict:
             "direction": direction}
 
 
+def counters(new: dict | None, old: dict | None) -> dict:
+    """One name's counters in a new and an old record, and new - old
+    (for `ops`, the plan nodes whose count moved)."""
+    if not new or not old:
+        return {"counters": None, "counters_equal": None}
+    new = {k: new.get(k) for k in COUNTERS}
+    old = {k: old.get(k) for k in COUNTERS}
+    diff = {k: (new[k] or 0) - (old[k] or 0) for k in COUNTERS if k != "ops"}
+    ops_new, ops_old = new["ops"] or {}, old["ops"] or {}
+    diff["ops"] = {op: ops_new.get(op, 0) - ops_old.get(op, 0)
+                   for op in sorted(set(ops_new) | set(ops_old))
+                   if ops_new.get(op, 0) != ops_old.get(op, 0)}
+    return {"counters": {"new": new, "old": old, "diff": diff},
+            "counters_equal": not any(diff.values())}
+
+
 def compare(old_ref: str, names: list[str], pairs: int = 3,
             run_leg=run_leg, repo: str = REPO) -> dict:
     """Run `pairs` (at least 3) interleaved old/new legs over `names`
     and judge each."""
     legs: dict[str, list[dict]] = {"new": [], "old": []}
+    records: dict[str, list[dict]] = {"new": [], "old": []}
     firsts = ["new" if i % 2 == 0 else "old" for i in range(pairs)]
     with worktree(old_ref, repo) as old_dir:
         for i, first in enumerate(firsts):
@@ -103,8 +129,9 @@ def compare(old_ref: str, names: list[str], pairs: int = 3,
                     shutil.copyfile(os.path.join(repo, "bench.py"),
                                     os.path.join(old_dir, "bench.py"))
                 t0 = time.time()
-                got = run_leg(repo if side == "new" else old_dir, names)
+                got, recs = run_leg(repo if side == "new" else old_dir, names)
                 legs[side].append(got)
+                records[side].append(recs)
                 print(f"pair {i} {side}: {time.time() - t0:.1f}s "
                       f"{json.dumps(got, sort_keys=True)}",
                       file=sys.stderr, flush=True)
@@ -116,6 +143,7 @@ def compare(old_ref: str, names: list[str], pairs: int = 3,
             "legs": [{"first": f, "new": a, "old": b}
                      for f, a, b in zip(firsts, new, old)],
             **judge(new, old),
+            **counters(records["new"][0].get(n), records["old"][0].get(n)),
         }
     return {"old_ref": old_ref, "pairs": pairs, "queries": queries}
 
@@ -134,14 +162,15 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
 def main() -> None:
     args = parse_args(sys.argv[1:])
     out = compare(args.old_ref, args.names, args.pairs)
-    print(f"\n{'query':30s} new_med old_med new/old  wins n:o  verdict",
-          file=sys.stderr)
+    print(f"\n{'query':30s} new_med old_med new/old  wins n:o  "
+          "counters_equal  verdict", file=sys.stderr)
     for n, q in out["queries"].items():
         if q["ab_confirmed"] is None:
             print(f"{n:30s} leg missing", file=sys.stderr)
             continue
         print(f"{n:30s} {q['new_median']:7.2f} {q['old_median']:7.2f} "
               f"{q['ratio'] or 0:7.3f}  {q['new_wins']:4d}:{q['old_wins']:<4d} "
+              f"{str(q['counters_equal']):14s}  "
               f"{q['direction'] or 'unconfirmed'}", file=sys.stderr)
     print(json.dumps(out, indent=1, sort_keys=True))
 

@@ -29,9 +29,13 @@ Steps, and what each one guards:
 Steps 1 and 3 each write one artifact through _regate, and every step
 reports its failures and coverage shortfall; any of them exits 1.
 
-Each artifact records the git head its rows were certified at. Its
-stale names are those defined in the import closure of the package
-files changed since that head, working tree included. The stale set is
+Each artifact records the git head its rows were certified at and,
+for each GUARDED path that differed from that head when it was
+written, the path's blob id (None for a deleted path), so an artifact
+re-gated before its change is committed still certifies the committed
+tree. Its stale names are those defined in the import closure of the
+package files changed since that head, working tree included, less the
+paths whose blob still matches the recorded one. The stale set is
 unbounded, meaning the whole registry, when the head is missing, git
 fails, a changed path is outside the package graph, or the artifact's
 producer changed (tools/check.py for the CHECK artifacts, bench.py for
@@ -188,25 +192,50 @@ def _git_head() -> str | None:
     return out.strip() if out else None
 
 
-def _changed_since(head: str) -> set[str] | None:
+def _blobs(paths) -> dict[str, str | None]:
+    """The blob id of each path in the working tree; None if it is gone."""
+    present = sorted(p for p in paths if os.path.isfile(os.path.join(REPO, p)))
+    out = _git("hash-object", "--", *present) if present else ""
+    ids = dict(zip(present, (out or "").split()))
+    return {p: ids.get(p) for p in paths}
+
+
+def _changed_since(head: str, blobs: dict | None = None) -> set[str] | None:
     """GUARDED paths changed since `head`: committed, in the working
-    tree or untracked. None on a git error."""
+    tree or untracked, less those whose blob still matches the one in
+    `blobs`, an artifact's record of the tree it certified. None on a
+    git error."""
     diff = _git("diff", "--name-only", head, "--", *GUARDED)
     new = _git("ls-files", "--others", "--exclude-standard", "--", *GUARDED)
     if diff is None or new is None:
         return None
-    return set(diff.split()) | set(new.split())
+    changed = set(diff.split()) | set(new.split())
+    recorded = {p: b for p, b in (blobs or {}).items() if p in changed}
+    if recorded:
+        now = _blobs(recorded)
+        changed -= {p for p, b in recorded.items() if now[p] == b}
+    return changed
 
 
-def _stale_names(registry, head: str | None, producer: str | None) -> set[str] | None:
-    """Names whose results may have moved since `head`; None means
-    unbounded, the whole registry. `producer` is the tool that wrote
-    the artifact: its change is unbounded, the other producers' changes
-    move nothing here. None excludes both, as for A/B legs, which run
-    this tree's bench.py on both sides."""
+def _stamp() -> dict:
+    """The certificate an artifact carries: HEAD and the blob of each
+    GUARDED path that differs from it."""
+    head = _git_head()
+    changed = _changed_since(head) if head else None
+    return {"git_head": head, "git_blobs": _blobs(sorted(changed or ()))}
+
+
+def _stale_names(registry, prior: dict, producer: str | None) -> set[str] | None:
+    """Names whose results may have moved since the tree the `prior`
+    artifact certified; None means unbounded, the whole registry.
+    `producer` is the tool that wrote the artifact: its change is
+    unbounded, the other producers' changes move nothing here. None
+    excludes both, as for A/B legs, which run this tree's bench.py on
+    both sides."""
     import inspect
 
-    changed = _changed_since(head) if head else None
+    head = prior.get("git_head")
+    changed = _changed_since(head, prior.get("git_blobs")) if head else None
     if changed is None:
         return None
     changed -= set(PRODUCERS) - {producer}
@@ -249,7 +278,7 @@ def _to_run(registry, prior: dict, producer: str, delta: bool) -> list[str] | No
     the names missing from its rows plus the stale ones."""
     if not delta:
         return None
-    stale = _stale_names(registry, prior.get("git_head"), producer)
+    stale = _stale_names(registry, prior, producer)
     if stale is None:
         return None
     return sorted((set(registry) - set(prior.get("queries", {}))) | stale)
@@ -275,7 +304,7 @@ def _check(sf_dir: str, names: list[str] | None) -> dict[str, dict]:
 def _regate(sf_dir: str, out_path: str, names: list[str] | None, registry) -> list[str]:
     """Re-gate `names` (None: the whole registry) at `sf_dir`, merge the
     verdicts over the rows of the newest artifact in out_path's series,
-    stamp HEAD and write out_path. Returns the failures and the
+    stamp the tree and write out_path. Returns the failures and the
     coverage shortfall."""
     label = os.path.basename(out_path)
     series = _series(re.sub(r"\d+\.json$", "", out_path))
@@ -295,7 +324,7 @@ def _regate(sf_dir: str, out_path: str, names: list[str] | None, registry) -> li
         json.dump({"queries": rows, "n_pass": len(by["pass"]),
                    "n_fail": len(by["fail"]), "n_rows_only": len(by["rows_only"]),
                    "n_registry": len(registry), "sf_dir": sf_dir,
-                   "git_head": _git_head()}, f, indent=1, sort_keys=True)
+                   **_stamp()}, f, indent=1, sort_keys=True)
     errs = []
     if by["fail"]:
         errs.append(f"{label}: {len(by['fail'])} oracle failures {by['fail'][:10]}")
@@ -305,8 +334,8 @@ def _regate(sf_dir: str, out_path: str, names: list[str] | None, registry) -> li
 
 
 def run_bench(registry, delta: bool) -> list[str]:
-    """Step 2: sweep the names the bench artifact needs, stamp HEAD on
-    it and check its coverage, records and red flags."""
+    """Step 2: sweep the names the bench artifact needs, stamp the tree
+    on it and check its coverage, records and red flags."""
     names = _to_run(registry, _load(BENCH), BENCH_PY, delta)
     if names is None or names:
         args = ["--all"] if names is None else ["--only", ",".join(names)]
@@ -318,7 +347,7 @@ def run_bench(registry, delta: bool) -> list[str]:
     else:
         print("  bench: nothing missing or stale")
     bench = _load(BENCH)
-    bench["git_head"] = _git_head()
+    bench.update(_stamp())
     with open(BENCH, "w") as f:
         json.dump(bench, f, indent=1)
     timed = set(bench.get("queries", {}))
@@ -365,7 +394,7 @@ def _judge_movers(aba: dict, check_path: str, registry, threshold: float) -> str
         key=lambda n: abs(math.log(ratios[n])), reverse=True)[:10]
     # Touched names: a ratio is what a drifted window poisons, so names
     # whose code changed are judged too, the slowest first.
-    touched = _stale_names(registry, old_head, None)
+    touched = _stale_names(registry, {"git_head": old_head}, None)
     touched = sorted((n for n in (set(registry) if touched is None else touched)
                       if n in cur and n not in ratio_movers),
                      key=lambda n: cur[n], reverse=True)
@@ -414,14 +443,15 @@ def run_aba(rnd: int, check_path: str, registry, threshold: float = 1.3) -> str 
 
 def assert_head() -> int:
     """Pass only when no GUARDED path changed since the newest
-    CHECK_full artifact's git_head; doc-only commits stay legal."""
+    CHECK_full artifact's certified tree; doc-only commits stay legal."""
     paths = _series(os.path.join(REPO, "CHECK_full_r"))
-    head = _load(paths[-1]).get("git_head") if paths else None
+    prior = _load(paths[-1]) if paths else {}
+    head = prior.get("git_head")
     if not head:
         print("ASSERT-HEAD FAIL: no CHECK_full_r*.json with a git_head")
         return 1
     name = os.path.basename(paths[-1])
-    changed = _changed_since(head)
+    changed = _changed_since(head, prior.get("git_blobs"))
     if changed is None:
         print(f"ASSERT-HEAD FAIL: git diff against {head[:10]} failed")
         return 1

@@ -55,11 +55,10 @@ HEAVIES = [
     "x_tdigest_rolling",
     "st_session_cdc",
     "w_mad_tdigest",
-    # r10 additions (VERDICT r9 #4): the r9 tail — basket-capped
-    # item-item CF (pair volume under the top-50 cap), FFD packing,
-    # exact-size weighted reservoir, snapshot time travel (as-of read
-    # + vacuum under 10× versions... the version COUNT is fixed by
-    # the query, so this measures commit+read cost at 10× rows).
+    # Basket-capped item-item CF (pair volume under the top-50 cap),
+    # FFD packing, exact-size weighted reservoir, snapshot time travel
+    # (as-of read; the version COUNT is fixed by the query, so this
+    # measures commit+read cost at 10× rows).
     "m_item_cf_topk",
     "t_pack_ffd",
     "x_reservoir_sample",
