@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 from collections.abc import Callable
 from datetime import datetime
 
@@ -70,10 +71,24 @@ def _echo(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- parameterized stats handlers -------------------------------------------
 
 
+# events handle -> its max(ts). ``load_table`` returns one handle per
+# (application, path, mtime) while the cache is on, so a rewritten
+# table or ``cache_disabled()`` yields a fresh handle and so a fresh
+# anchor; weak keys let a dropped handle take its anchor with it.
+_ANCHORS: weakref.WeakKeyDictionary[DataFrame, datetime] = (
+    weakref.WeakKeyDictionary()
+)
+
+
 def _anchor(events: DataFrame) -> datetime:
     """Ranges anchor to the latest listen, not wall clock
-    (stats/__init__.py:150-218)."""
-    return events.agg(F.max("ts")).first()[0]
+    (stats/__init__.py:150-218). Computed once per events handle: the
+    aggregate is a shuffle job plus a result job on every ranged
+    request otherwise, and a full fact scan at scale (Spark does not
+    push MAX into parquet)."""
+    if events not in _ANCHORS:
+        _ANCHORS[events] = events.agg(F.max("ts")).first()[0]
+    return _ANCHORS[events]
 
 
 def _range_filtered_events(

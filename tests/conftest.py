@@ -21,3 +21,11 @@ def spark():
     s = get_session("tests", master="local[4]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+def group_jobs(spark, group: str) -> int:
+    """Spark jobs run so far under job group ``group``, read once the
+    listener bus has delivered every event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

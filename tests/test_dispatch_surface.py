@@ -5,9 +5,15 @@ DataFrame on the smoke dataset.
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
+
 import pytest
 
+from listenbrainz_server_spark.catalog import cache_disabled
+from listenbrainz_server_spark.plans import api
 from listenbrainz_server_spark.plans.api import QUERY_MAP, dispatch
+from listenbrainz_server_spark.schemas import TABLE_SCHEMAS
+from tests.conftest import group_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -144,3 +150,52 @@ def test_import_dump_archive_param_routes_s6_transport(spark, tmp_path):
     ).collect()[0]
     assert (rep2.dump_type, rep2.n_rows) == ("incremental", 2)
     assert spark.read.parquet(out).count() == 4
+
+
+# -- the range anchor: one max(ts) per events handle ---------------------
+
+
+def _ranged(spark, sf_dir: str, group: str) -> int:
+    """Jobs a ranged dispatch runs before its result is drained."""
+    spark.sparkContext.setJobGroup(group, group)
+    dispatch("stats.user.entity", spark, sf_dir, stats_range="month")
+    return group_jobs(spark, group)
+
+
+def test_ranged_dispatch_reuses_the_cached_handles_anchor(spark):
+    _ranged(spark, SF, "anchor:first")
+    assert _ranged(spark, SF, "anchor:second") == 0
+
+
+def test_rewritten_events_get_a_fresh_anchor(spark, tmp_path, monkeypatch):
+    anchors = []
+    resolve = api.resolve_range
+    monkeypatch.setattr(
+        api, "resolve_range", lambda a, r: anchors.append(a) or resolve(a, r)
+    )
+    path = str(tmp_path / "events.parquet")
+
+    def write_events(day: int) -> None:
+        rows = [
+            (i, datetime(2024, 1, day, 12), i % 3, "play", 1.0, None)
+            for i in range(6)
+        ]
+        spark.createDataFrame(rows, TABLE_SCHEMAS["events"]).write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    write_events(10)
+    _ranged(spark, str(tmp_path), "anchor:before-rewrite")
+    write_events(20)
+    _ranged(spark, str(tmp_path), "anchor:after-rewrite")
+    # The new handle's anchor is memoised in turn.
+    assert _ranged(spark, str(tmp_path), "anchor:after-rewrite:again") == 0
+    assert len(anchors) == 3
+    assert anchors[1] - anchors[0] == timedelta(days=10)
+    assert anchors[2] == anchors[1]
+
+
+def test_bare_scan_computes_the_anchor_per_request(spark):
+    with cache_disabled():
+        assert _ranged(spark, SF, "anchor:bare:0") > 0
+        assert _ranged(spark, SF, "anchor:bare:1") > 0

@@ -7,8 +7,9 @@ JSON stream against a committed golden file. These tests reproduce
 that as one harness: plans.api.dispatch → messages.iter_message_chunks
 → canonical stream == tests/golden/*.json.
 
-Row order inside the stream is not guaranteed (toLocalIterator walks
-partitions), so the golden stores the SORTED multiset of
+Row order inside the stream is not guaranteed (the drain walks result
+partitions in order, and which rows land in which partition follows
+the plan), so the golden stores the SORTED multiset of
 JSON-canonicalized rows plus the stream shape (message count, chunk
 size, message type) — chunk sizes are a deterministic function of row
 count, so the shape is stable even where order isn't.

@@ -34,7 +34,16 @@ ALLOWED = {
     # Refit trigger: one 1-row weighted-mean aggregate — the pull IS
     # the boolean decision (r8 delta-IVFPQ maintenance).
     ("operators/similarity.py", "ivfpq_should_refit"),
+    # The message drain: one Spark job per result partition, each
+    # drained before the next job, so the driver holds one result
+    # partition at a time, as the reference's toLocalIterator does.
+    ("messages.py", "_iter_rows"),
 }
+
+# Every way this package pulls rows to the driver.
+PULL = re.compile(
+    r"\.collect\(\)|\.toPandas\(\)|\.toArrow\(\)|\.toLocalIterator\(|PythonRDD\.runJob"
+)
 
 
 def _enclosing_functions(path: pathlib.Path) -> list[tuple[int, int, str]]:
@@ -50,13 +59,12 @@ def _enclosing_functions(path: pathlib.Path) -> list[tuple[int, int, str]]:
 
 
 def test_no_unbounded_driver_collects():
-    pattern = re.compile(r"\.collect\(\)|\.toPandas\(\)")
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
         rel = str(path.relative_to(PKG))
         spans = None
         for lineno, line in enumerate(path.read_text().splitlines(), 1):
-            if not pattern.search(line):
+            if not PULL.search(line):
                 continue
             if spans is None:
                 spans = _enclosing_functions(path)
@@ -73,13 +81,12 @@ def test_no_unbounded_driver_collects():
 def test_allowlist_entries_still_exist():
     """An allowlist entry whose function no longer contains a driver
     pull is stale — prune it so the guard stays tight."""
-    pattern = re.compile(r"\.collect\(\)|\.toPandas\(\)")
     for rel, func in sorted(ALLOWED):
         path = PKG / rel
         spans = _enclosing_functions(path)
         span = next(((lo, hi) for lo, hi, name in spans if name == func), None)
         assert span, f"{rel}: allowlisted function {func} not found"
         lines = path.read_text().splitlines()[span[0] - 1 : span[1]]
-        assert any(pattern.search(ln) for ln in lines), (
+        assert any(PULL.search(ln) for ln in lines), (
             f"{rel}:{func} allowlisted but contains no driver pull — stale entry"
         )

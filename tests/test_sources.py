@@ -20,6 +20,7 @@ from listenbrainz_server_spark.sources.sinks import (
     partitioned_overwrite,
     registry_upsert,
 )
+from tests.conftest import group_jobs
 
 SCHEMA = "user_id int, item string, created timestamp"
 
@@ -129,6 +130,57 @@ def test_message_chunking(spark):
     assert [len(m["data"]) for m in msgs] == [3, 3, 1]
     assert all(m["type"] == "t" for m in msgs)
     assert msgs[0]["data"][0] == {"v": 0}
+
+
+def test_message_drain_runs_one_job_per_partition(spark):
+    # Four partitions of tiny rows, no shuffle: each partition is its
+    # own job, so the driver never holds more than one of them.
+    df = spark.range(0, 10, 1, 4).selectExpr("id", "id * 2 AS twice")
+    want = [r.asDict() for r in df.collect()]
+    spark.sparkContext.setJobGroup("drain:4parts", "drain:4parts")
+    msgs = list(iter_message_chunks(df, chunk_size=3, message_type="t"))
+    assert group_jobs(spark, "drain:4parts") == 4
+    assert [len(m["data"]) for m in msgs] == [3, 3, 3, 1]
+    assert [r for m in msgs for r in m["data"]] == want
+
+
+def test_message_drain_rows_equal_collect_for_every_type(spark):
+    # The drain reads pyspark's own pickled rows over a private call;
+    # every value type must come back as collect() returns it.
+    df = spark.sql(
+        """SELECT * FROM VALUES
+             (1, named_struct('a', 1, 'b', 'x'), array(1, 2), map('k', 3),
+              timestamp'2024-01-02 03:04:05.123456', date'2024-01-02',
+              CAST(12.345 AS DECIMAL(10, 3)), 'v'),
+             (2, NULL, NULL, NULL, NULL, NULL, NULL, NULL)
+           AS t(id, st, arr, m, ts, d, dec, s)"""
+    ).repartition(2, "id")
+    want = sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda r: r["id"])
+    got = sorted(
+        (r for m in iter_message_chunks(df, 10, "t") for r in m["data"]),
+        key=lambda r: r["id"],
+    )
+    assert got == want
+    assert got[0]["m"] == {"k": 3} and got[0]["st"] == {"a": 1, "b": "x"}
+
+
+def test_message_drain_empty_result_yields_nothing(spark):
+    df = spark.range(0, 10, 1, 3).where("id < 0")
+    assert list(iter_message_chunks(df, 5, "t")) == []
+
+
+def test_message_drain_closed_early_leaves_session_usable(spark):
+    # Partitions of ~2 MB, more than a socket buffer holds, so the
+    # stream is abandoned with most of the first partition unread.
+    df = spark.range(0, 200_000, 1, 4).selectExpr("id", "repeat('x', 40) AS pad")
+    spark.sparkContext.setJobGroup("drain:closed", "drain:closed")
+    stream = iter_message_chunks(df, chunk_size=5, message_type="t")
+    first = next(stream)
+    stream.close()
+    assert [r["id"] for r in first["data"]] == [0, 1, 2, 3, 4]
+    # Only the first partition was pulled, and the next query runs.
+    assert group_jobs(spark, "drain:closed") == 1
+    assert spark.range(7).count() == 7
 
 
 def test_message_float_rounding_contract(spark):

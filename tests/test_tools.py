@@ -133,3 +133,30 @@ def test_ab_cli_parsing():
     for bad in (["HEAD~1", "q1", "2"], ["HEAD~1", "q1", "--tag", "x"]):
         with pytest.raises(SystemExit):
             ab.parse_args(bad)
+
+
+def test_no_tool_puts_a_literal_absolute_path_on_sys_path():
+    # A tool must import the checkout it lives in, wherever that is.
+    import ast
+
+    tools = os.path.join(os.path.dirname(__file__), "..", "tools")
+    offenders = []
+    for fname in sorted(os.listdir(tools)):
+        if not fname.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(tools, fname)).read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+                and any(
+                    isinstance(a, ast.Constant)
+                    and isinstance(a.value, str)
+                    and os.path.isabs(a.value)
+                    for a in node.args
+                )
+            ):
+                offenders.append(f"{fname}:{node.lineno}")
+    assert not offenders, offenders

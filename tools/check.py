@@ -16,12 +16,14 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from listenbrainz_server_spark.catalog import TPCH_TABLES, table_path
 from listenbrainz_server_spark.queries import load_all
@@ -72,8 +74,6 @@ def main() -> int:
             # per table; Spark-written scale dirs (tools/gen_scale.py,
             # .scale/sf1) are DIRECTORIES of part files — DuckDB needs
             # the glob for those (r13: first sf1 oracle run).
-            import os
-
             src = f"{p}/*.parquet" if os.path.isdir(p) else p
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"

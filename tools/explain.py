@@ -5,9 +5,11 @@ python tools/explain.py <query> [...] [--sf DIR]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from listenbrainz_server_spark.queries import load_all
 from listenbrainz_server_spark.session import get_session

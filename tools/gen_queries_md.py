@@ -4,9 +4,11 @@ Usage: python tools/gen_queries_md.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from listenbrainz_server_spark.queries import load_all
 
@@ -29,7 +31,7 @@ def main() -> None:
     for name, q in sorted(registry.items()):
         oracle = "yes" if q.oracle else "*(rows-only)*"
         lines.append(f"| `{name}` | {oracle} | {q.doc} |")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md with {len(registry)} entries")
 
