@@ -45,7 +45,7 @@ import os
 import sys
 import time
 
-from py4j.protocol import Py4JJavaError
+from py4j.protocol import Py4JJavaError, Py4JNetworkError
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -57,6 +57,22 @@ from listenbrainz_server_spark.session import get_session
 # recorded parsed:null). Budget the emitted line below that with
 # headroom.
 LINE_BUDGET = 1900
+
+
+# Exit status of a run that lost its JVM. Once the Py4J gateway is gone
+# every later query fails the same way, so the run stops at the first
+# such error instead of recording each remaining name as a failure.
+JVM_LOST = 3
+
+
+def jvm_lost(e: BaseException | None) -> bool:
+    """Whether ``e``, or an exception it was raised from, means the Py4J
+    gateway to the JVM is gone."""
+    while e is not None:
+        if isinstance(e, (Py4JNetworkError, ConnectionRefusedError)):
+            return True
+        e = e.__cause__ or e.__context__
+    return False
 
 
 def headline_line(out: dict) -> str:
@@ -354,6 +370,9 @@ def main() -> None:
             timings[name] = round(sorted(samples)[len(samples) // 2], 2)
             samples_by_query[name] = [round(s, 2) for s in samples]
         except Exception as e:  # noqa: BLE001 — one bad query must not kill the bench
+            if jvm_lost(e):
+                print(f"JVM lost at {name}: {str(e).splitlines()[0][:120]}")
+                raise SystemExit(JVM_LOST) from e
             errors[name] = str(e).splitlines()[0][:120]
         # Per-query isolation: drop cached frames AND the Python refs
         # whose GC releases accumulated localCheckpoint RDD blocks —

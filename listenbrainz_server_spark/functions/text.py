@@ -100,6 +100,18 @@ def quality_score(text: Column | str) -> Column:
     return F.round(length_ok * 0.5 + sw * 2.0 - punct_ratio(text), 6)
 
 
+# The DuckDB twin of ``quality_score`` for oracle SQL: an expression over
+# a CTE that exposes ``text`` and its space-split tokens ``t``.
+_EN_SQL = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
+QUALITY_SCORE_SQL = f"""ROUND(
+             (CASE WHEN len(t) BETWEEN 10 AND 1000 THEN 1.0 ELSE 0.0 END) * 0.5
+             + (len(list_filter(t, x -> x IN ({_EN_SQL}))) * 1.0
+                / GREATEST(len(t), 1)) * 2.0
+             - ((LENGTH(text) - LENGTH(regexp_replace(text, '[^\\w\\s]', '', 'g')))
+                * 1.0 / GREATEST(LENGTH(text), 1)),
+           6)"""
+
+
 def lang_id(text: Column | str) -> Column:
     """Stopword-vote language ID: the language whose stopword set hits
     the most tokens; 'und' (undetermined) when nothing hits.

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.operators.aggregates import combine_aggregates
 from listenbrainz_server_spark.operators.joins import semi_join
+from listenbrainz_server_spark.sources.sinks import atomic_swap_write
 
 
 @dataclass
@@ -79,9 +80,11 @@ class IncrementalEngine:
             return None
 
     def _write_meta(self, stat: IncrementalStat, meta: dict) -> None:
-        os.makedirs(os.path.dirname(self._meta_path(stat)), exist_ok=True)
-        with open(self._meta_path(stat), "w") as f:
+        path = self._meta_path(stat)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path + ".tmp", "w") as f:
             json.dump(meta, f)
+        os.replace(path + ".tmp", path)  # atomic on posix
 
     def partial_usable(
         self, stat: IncrementalStat, from_date: str, to_date: str
@@ -106,8 +109,7 @@ class IncrementalEngine:
         created: str,
     ) -> DataFrame:
         """Aggregate the base data and persist (lineage barrier)."""
-        agg = stat.aggregate(full_df)
-        agg.write.mode("overwrite").parquet(self._agg_path(stat))
+        atomic_swap_write(stat.aggregate(full_df), self._agg_path(stat))
         self._write_meta(
             stat,
             {"from_date": from_date, "to_date": to_date, "created": created},
@@ -173,20 +175,16 @@ class IncrementalEngine:
         advance that lets incremental batches STACK (the reference's
         dump-import flow: incremental dump N folds into the
         materialized base that dump N+1 then builds on,
-        listenbrainz_spark/tests/__init__.py:69-72). Writes to a temp
-        directory and swaps, because ``combined``'s lazy plan READS
+        listenbrainz_spark/tests/__init__.py:69-72). Written through
+        ``atomic_swap_write``, because ``combined``'s lazy plan READS
         the current partial — overwriting it in place would pull the
-        input out from under the scan. Bumps the ``created``
-        high-water mark; the (from, to) range is unchanged."""
-        import shutil
-
+        input out from under the scan — and the swap renames the old
+        partial aside before deleting it, so a reader finds a complete
+        partial at every point but the instant between two renames.
+        Bumps the ``created`` high-water mark; the (from, to) range is
+        unchanged."""
         meta = self._read_meta(stat) or {}
-        final = self._agg_path(stat)
-        tmp = final + "__next"
-        combined.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        atomic_swap_write(combined, self._agg_path(stat))
         self._write_meta(stat, {**meta, "created": created})
         return self.load_partial(stat)
 

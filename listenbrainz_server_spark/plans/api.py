@@ -162,7 +162,7 @@ def _similar_users(
 ) -> DataFrame:
     """similarity.similar_users with the reference's params
     (request_manage.py:355-360)."""
-    from listenbrainz_server_spark.queries.handlers4 import similar_users_handler
+    from listenbrainz_server_spark.plans.cf import similar_users_handler
 
     return similar_users_handler(
         spark, sf_dir, max_num_users=max_num_users, threshold=threshold
@@ -314,9 +314,9 @@ def _cf_create_dataframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cf...create_dataframes (create_dataframes.py:166-183): playcounts
     with dense surrogate ids for both axes."""
     from listenbrainz_server_spark.operators.ids import surrogate_ids_scalable
-    from listenbrainz_server_spark.queries.ml import _playcounts
+    from listenbrainz_server_spark.plans.cf import playcounts
 
-    pc = _playcounts(spark, sf_dir)
+    pc = playcounts(spark, sf_dir)
     users = surrogate_ids_scalable(pc, "user_id", "spark_user_id")
     items = surrogate_ids_scalable(pc, "item_id", "recording_id")
     return (

@@ -50,23 +50,27 @@ def register(name: str, oracle: str | None, doc: str = ""):
 def load_all() -> dict[str, Query]:
     """Import every query module so the registry is populated."""
     from listenbrainz_server_spark.queries import (  # noqa: F401
+        analytics,
         api_variants,
+        audits,
+        curation,
         dedup,
-        extras,
         graph,
-        handlers,
-        handlers2,
-        handlers3,
-        handlers4,
         incremental,
+        layout,
         ml,
         multimodal,
+        olap,
+        recommendations,
         relational,
         similarity,
+        sketches,
+        stats,
         streaming,
         temporal,
         text,
         windows,
+        year_in_music,
     )
 
     return REGISTRY

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from listenbrainz_server_spark.plans.api import dispatch
+from listenbrainz_server_spark.plans.cf import similar_users_sql
 from listenbrainz_server_spark.queries import register
 
 # --------------------------------------------------------------------------
@@ -430,30 +431,9 @@ def api_genre_activity_this_week(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dispatch to "single most similar user" — discriminating against the
 # default (the fixture's densest user has 3 similars).
 # --------------------------------------------------------------------------
-def _similar_users_sql(k: int) -> str:
-    from listenbrainz_server_spark.queries.handlers4 import _COSINE_PAIRS_SQL
-
-    return f"""
-    WITH {_COSINE_PAIRS_SQL},
-    sym_pairs AS (
-        SELECT user_a AS user_id, user_b AS other_user_id, sim FROM pairs
-        UNION ALL
-        SELECT user_b AS user_id, user_a AS other_user_id, sim FROM pairs
-    )
-    SELECT user_id, other_user_id, ROUND(sim, 6) AS similarity
-    FROM (
-        SELECT user_id, other_user_id, sim,
-               ROW_NUMBER() OVER (
-                   PARTITION BY user_id ORDER BY sim DESC, other_user_id
-               ) AS rn
-        FROM sym_pairs
-    ) WHERE rn <= {k}
-    """
-
-
 @register(
     "api_similar_users_top1",
-    _similar_users_sql(1),
+    similar_users_sql(1),
     doc="similarity.similar_users dispatched with max_num_users=1",
 )
 def api_similar_users_top1(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
+from listenbrainz_server_spark.functions.text import QUALITY_SCORE_SQL
 from listenbrainz_server_spark.operators.dedup import (
     connected_components,
     contamination_pairs,
@@ -21,7 +22,6 @@ from listenbrainz_server_spark.operators.dedup import (
     simhash,
 )
 from listenbrainz_server_spark.queries import register
-from listenbrainz_server_spark.queries.text import _QUALITY_EXPR
 
 _SHINGLE_CTE = """
     toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
@@ -1193,7 +1193,7 @@ def d_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     groups AS (SELECT id AS doc_id, MIN(reach) AS group_id FROM closure GROUP BY id),
     qtoks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-    q AS (SELECT doc_id, {_QUALITY_EXPR} AS quality FROM qtoks),
+    q AS (SELECT doc_id, {QUALITY_SCORE_SQL} AS quality FROM qtoks),
     ranked AS (
         SELECT g.group_id, g.doc_id, q.quality,
                ROW_NUMBER() OVER (PARTITION BY g.group_id

@@ -10,22 +10,13 @@ from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.operators.ids import surrogate_ids_scalable
+from listenbrainz_server_spark.plans.cf import (
+    ITEM_DEGREE_CAP,
+    cosine_pairs_from_playcounts,
+    playcounts,
+    user_cosine_pairs,
+)
 from listenbrainz_server_spark.queries import register
-
-
-def _playcounts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """user×item interaction counts (create_dataframes.py:166-183
-    shape): customer bought part, capped confidence transform."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("user_id"),
-            F.col("l_partkey").alias("item_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("playcount"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -52,100 +43,6 @@ def m_surrogate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (similarity/user.py:89-115): normalize per user, join on shared
 # item, sum of products. Exact (threshold=0 DIMSUM), no sampling.
 # --------------------------------------------------------------------------
-# Default per-item degree cap for the cosine self-join. 20 follows the
-# reference's own magnitude-capping precedent (the LEAST(listen_count,
-# cap) rule, sitewide/entity.py:50-59) applied on the item axis; at
-# 100 TB one viral item otherwise contributes |users(item)|²/2 pairs.
-_ITEM_DEGREE_CAP = 20
-
-
-def user_cosine_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.15,
-    item_degree_cap: int | None = _ITEM_DEGREE_CAP,
-) -> DataFrame:
-    """Cosine pairs (user_a < user_b, similarity_raw ≥ threshold).
-
-    ``item_degree_cap``: per-item cap on participating users — the
-    shared-item self-join generates |users(item)|²/2 rows per item, so
-    one viral item is a straight scale-killer at 100×. Capping keeps
-    the top-C users per item by playcount (deterministic user tie-break)
-    before the join — the reference's own per-user LEAST cap precedent
-    (sitewide/entity.py:50-59) applied on the item axis; DIMSUM's
-    sampling bounds the same term probabilistically.
-
-    The cap is ON by default: every serving path —
-    ``similarity.similar_users`` dispatch, ``h_similar_users``, the
-    bench headline — runs the bounded plan. Pass ``None`` explicitly
-    for the exact all-pairs form (oracle fixture
-    ``m_user_cosine_uncapped`` only).
-    """
-    pc = _playcounts(spark, sf_dir)
-    return cosine_pairs_from_playcounts(pc, threshold, item_degree_cap)
-
-
-def cosine_pairs_from_playcounts(
-    pc: DataFrame,
-    threshold: float = 0.15,
-    item_degree_cap: int | None = _ITEM_DEGREE_CAP,
-) -> DataFrame:
-    """Core of ``user_cosine_pairs``, taking a (user_id, item_id,
-    playcount) frame directly — unit tests feed skewed fixtures here.
-    """
-    # The playcount frame feeds three branches (norms, and — through
-    # the degree-cap window — both sides of the shared-item self-join);
-    # pin it once so the upstream scan→join→agg lineage executes a
-    # single time. ~|interactions| rows of 3 narrow columns.
-    pc = pc.localCheckpoint(eager=True)
-    # Norms over the FULL vector (capping affects candidate pairs, not
-    # the definition of a user's vector length).
-    norms = pc.groupBy("user_id").agg(
-        F.sqrt(F.sum(F.col("playcount") * F.col("playcount") * F.lit(1.0))).alias("nrm")
-    )
-    joined_pc = pc
-    if item_degree_cap is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("item_id").orderBy(
-            F.col("playcount").desc(), F.col("user_id")
-        )
-        # NOT pinned (measured): the cap window's exchange is
-        # partitioned by item_id — exactly the self-join key — so both
-        # join sides reuse that partitioning and the join adds no
-        # exchange of its own. A localCheckpoint here breaks that
-        # property and forces two fresh item_id exchanges; interleaved
-        # A/B read 1.21x SLOWER with the pin (m_user_cosine_capped
-        # 3.13 -> 3.80 s, api_similar_users_top1 3.00 -> 3.64 s,
-        # plans/r15/AB_pins_batch1.json). The duplicated window
-        # subtree is the cheaper of the two evils.
-        joined_pc = (
-            pc.withColumn("_idr", F.row_number().over(w))
-            .where(F.col("_idr") <= item_degree_cap)
-            .drop("_idr")
-        )
-    a = joined_pc.select(
-        F.col("user_id").alias("user_a"), "item_id", F.col("playcount").alias("pc_a")
-    )
-    b = joined_pc.select(
-        F.col("user_id").alias("user_b"), "item_id", F.col("playcount").alias("pc_b")
-    )
-    dots = (
-        a.join(b, "item_id")
-        .where(F.col("user_a") < F.col("user_b"))
-        .groupBy("user_a", "user_b")
-        .agg(F.sum(F.col("pc_a") * F.col("pc_b") * F.lit(1.0)).alias("dot"))
-    )
-    na = norms.select(F.col("user_id").alias("user_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("user_id").alias("user_b"), F.col("nrm").alias("nb"))
-    return (
-        dots.join(na, "user_a")
-        .join(nb, "user_b")
-        .withColumn("similarity_raw", F.col("dot") / (F.col("na") * F.col("nb")))
-        .where(F.col("similarity_raw") >= threshold)
-    )
-
-
 _COSINE_SQL = """
     WITH pc AS (
         SELECT o_custkey AS user_id, l_partkey AS item_id, COUNT(*) AS playcount
@@ -195,7 +92,7 @@ def m_user_cosine_uncapped(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ORDER BY playcount DESC, user_id
                    ) AS idr
             FROM pc
-        ) WHERE idr <= {_ITEM_DEGREE_CAP}
+        ) WHERE idr <= {ITEM_DEGREE_CAP}
     ),""",
         pair_src="capped",
     ),
@@ -204,7 +101,7 @@ def m_user_cosine_uncapped(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m_user_cosine_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return user_cosine_pairs(
-        spark, sf_dir, threshold=0.15, item_degree_cap=_ITEM_DEGREE_CAP
+        spark, sf_dir, threshold=0.15, item_degree_cap=ITEM_DEGREE_CAP
     ).select("user_a", "user_b", F.round("similarity_raw", 6).alias("similarity"))
 
 
@@ -235,7 +132,7 @@ def m_user_cosine_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interaction catalog; serving form = als_recommend_raw",
 )
 def m_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pc = _playcounts(spark, sf_dir)
+    pc = playcounts(spark, sf_dir)
     recs = als_recommend_raw(spark, sf_dir).localCheckpoint(eager=True)
     per_user = recs.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_recs"))
     items = pc.select(F.col("item_id").cast("bigint")).distinct()
@@ -273,7 +170,7 @@ def als_serving_fit(spark: SparkSession, sf_dir: str):
     Returns the fitted ALSModel."""
     from pyspark.ml.recommendation import ALS
 
-    pc = _playcounts(spark, sf_dir)
+    pc = playcounts(spark, sf_dir)
     # Confidence transform (create_dataframes.py:172-183: capped count).
     # localCheckpoint: ALS's internal block construction evaluates the
     # input lineage more than once (user/item block building + the
@@ -355,7 +252,7 @@ def als_cv_lifecycle(
 
     max_iters = tuple(max_iter) if hasattr(max_iter, "__iter__") else (max_iter,)
 
-    pc = _playcounts(spark, sf_dir)
+    pc = playcounts(spark, sf_dir)
     ratings = pc.select(
         F.col("user_id").cast("int").alias("user"),
         F.col("item_id").cast("int").alias("item"),
@@ -540,7 +437,7 @@ def m_als_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         == "train"
     )
-    counts = _playcounts(spark, sf_dir).agg(
+    counts = playcounts(spark, sf_dir).agg(
         F.count_if(is_train).cast("bigint").alias("n_train"),
         F.count_if(~is_train).cast("bigint").alias("n_test"),
     )
@@ -684,7 +581,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ORDER BY playcount DESC, item_id
                    ) AS udr
             FROM pc
-        ) WHERE udr <= {_ITEM_DEGREE_CAP}
+        ) WHERE udr <= {ITEM_DEGREE_CAP}
     ),
     norms AS (
         SELECT item_id, sqrt(SUM(playcount * playcount * 1.0)) AS nrm
@@ -707,13 +604,13 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "m_user_cosine_capped; the similarity.recording axis)",
 )
 def m_item_cosine_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pc = _playcounts(spark, sf_dir).select(
+    pc = playcounts(spark, sf_dir).select(
         F.col("item_id").alias("user_id"),  # roles swapped: items are
         F.col("user_id").alias("item_id"),  # the "users" of the core
         "playcount",
     )
     return cosine_pairs_from_playcounts(
-        pc, threshold=0.1, item_degree_cap=_ITEM_DEGREE_CAP
+        pc, threshold=0.1, item_degree_cap=ITEM_DEGREE_CAP
     ).select(
         F.col("user_a").alias("item_a"),
         F.col("user_b").alias("item_b"),
@@ -787,7 +684,7 @@ def m_item_cosine_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    pc = _playcounts(spark, sf_dir)
+    pc = playcounts(spark, sf_dir)
     wcap = Window.partitionBy("user_id").orderBy(
         F.col("playcount").desc(), "item_id"
     )

@@ -1,5 +1,11 @@
-"""Handler-API coverage, part 3: capped-contribution similarity and
-the composed troi periodic-jams pipeline (SURVEY.md §2.12).
+"""Similarity and recommendation handlers (SURVEY.md §2.12): the
+reference's `similarity.*`, `cf.*`, `releases.fresh` and `troi.*`
+entries.
+
+- similarity: `h_similar_entities`, `h_similar_capped`,
+  `h_similar_weighted`, `h_similar_users`;
+- recommendation: `h_discovery`, `h_missing_data`, `h_fresh_releases`;
+- playlists: `h_playlist_picks`, `h_troi_periodic_jams`.
 """
 
 from __future__ import annotations
@@ -8,11 +14,60 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
-from listenbrainz_server_spark.operators.joins import anti_join, dim_join
-from listenbrainz_server_spark.operators.sessionize import session_pairs, with_session_ids
+from listenbrainz_server_spark.operators.joins import anti_join
+from listenbrainz_server_spark.operators.sessionize import (
+    session_pairs,
+    with_session_ids,
+)
 from listenbrainz_server_spark.operators.topk import global_top_k, top_k_per_group
-from listenbrainz_server_spark.plans.handlers import sitewide_listening_activity
+from listenbrainz_server_spark.plans.api import dispatch
+from listenbrainz_server_spark.plans.cf import similar_users_handler, similar_users_sql
 from listenbrainz_server_spark.queries import register
+
+
+# --------------------------------------------------------------------------
+# similarity.recording — sessionized co-occurrence similarity
+# (similarity/recording/common.py:59-172).
+# --------------------------------------------------------------------------
+@register(
+    "h_similar_entities",
+    """
+    WITH gaps AS (
+        SELECT user_id, event_id, ts, event_type,
+               DATE_DIFF('second',
+                         LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
+                         ts) AS gap_s
+        FROM events
+    ),
+    sessions AS (
+        SELECT user_id, event_type,
+               SUM(CASE WHEN gap_s > 1800 THEN 1 ELSE 0 END) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+        FROM gaps
+    ),
+    pairs AS (
+        SELECT a.event_type AS item_a, b.event_type AS item_b, COUNT(*) AS score
+        FROM sessions a
+        JOIN sessions b ON a.user_id = b.user_id AND a.session_id = b.session_id
+                        AND a.event_type < b.event_type
+        GROUP BY 1, 2
+    )
+    SELECT * FROM (
+        SELECT item_a, item_b, score,
+               CAST(RANK() OVER (
+                   PARTITION BY item_a ORDER BY score DESC, item_b) AS BIGINT) AS rank
+        FROM pairs WHERE score > 1
+    ) WHERE rank <= 100
+    """,
+    doc="similarity.recording handler: sessionize → pair counts → rank limit",
+)
+def h_similar_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # events ordering tie-break is handled inside sessionize via ts only;
+    # events have unique (user, ts) at this scale — rank method matches.
+    return dispatch(
+        "similarity.recording", spark, sf_dir, session_gap_s=1800, threshold=1, limit=100
+    )
 
 
 # --------------------------------------------------------------------------
@@ -91,8 +146,6 @@ def h_similar_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="similarity.artist weighted pairs: featured-credit 0.25 weighting",
 )
 def h_similar_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from listenbrainz_server_spark.operators.sessionize import with_session_ids
-
     ev = load_table(spark, sf_dir, "events")
     sess = with_session_ids(ev, "user_id", "ts", 1800, tiebreak=("event_id",))
     weighted = sess.withColumn(
@@ -111,39 +164,20 @@ def h_similar_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# popularity.popularity per-artist variant (popularity/main.py:15-33):
-# per (artist, recording) totals — brand plays artist, part plays
-# recording.
+# similarity.similar_users (similarity/user.py:63-86): cosine pairs
+# (i<j) expanded symmetrically, row_number per user by similarity,
+# top-N kept. The handler and its oracle twin live in plans/cf.py with
+# the degree-capped cosine pair source they share with the m_user_cosine
+# queries and the dispatch table.
 # --------------------------------------------------------------------------
 @register(
-    "h_popularity_per_artist",
-    """
-    SELECT p.p_brand AS artist, l.l_partkey AS recording_id,
-           COUNT(*) AS total_listen_count,
-           COUNT(DISTINCT o.o_custkey) AS total_user_count
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN part p ON l.l_partkey = p.p_partkey
-    GROUP BY 1, 2
-    """,
-    doc="popularity per-artist variant: per (artist, item) totals + distinct listeners",
+    "h_similar_users",
+    similar_users_sql(25),
+    doc="similarity.similar_users handler: symmetric expansion + top-25 "
+    "(similarity/user.py:70-86)",
 )
-def h_popularity_per_artist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(
-            F.col("p_brand").alias("artist"),
-            F.col("l_partkey").alias("recording_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("total_listen_count"),
-            F.countDistinct("o_custkey").alias("total_user_count"),
-        )
-    )
+def h_similar_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return similar_users_handler(spark, sf_dir)
 
 
 # --------------------------------------------------------------------------
@@ -174,44 +208,34 @@ def h_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# stats.sitewide.listening_activity (sitewide variant of
-# listening_activity.py:63-84): global counts per time bucket,
-# zero-filled buckets included.
+# cf.missing_mb_data (missing_mb_data/missing_mb_data.py:13-57): top
+# recent "unmapped" rows per user — P-status orders play the unmapped
+# role; row_number by recency.
 # --------------------------------------------------------------------------
 @register(
-    "h_sitewide_listening_activity",
+    "h_missing_data",
     """
-    WITH buckets(bucket, bstart, bend) AS (
-        VALUES ('week1', TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-08'),
-               ('week2', TIMESTAMP '2024-01-08', TIMESTAMP '2024-01-15'),
-               ('week3', TIMESTAMP '2024-01-15', TIMESTAMP '2024-01-22'),
-               ('week4', TIMESTAMP '2024-01-22', TIMESTAMP '2024-01-29'),
-               ('week5', TIMESTAMP '2024-01-29', TIMESTAMP '2024-02-05'),
-               ('week6', TIMESTAMP '2024-02-05', TIMESTAMP '2024-02-12')
-    ),
-    agg AS (
-        SELECT b.bucket, COUNT(*) AS listen_count
-        FROM events e JOIN buckets b ON e.ts >= b.bstart AND e.ts < b.bend
-        GROUP BY 1
-    )
-    SELECT b.bucket, COALESCE(a.listen_count, 0) AS listen_count
-    FROM buckets b LEFT JOIN agg a ON a.bucket = b.bucket
+    SELECT * FROM (
+        SELECT o_custkey AS user_id, o_orderkey, o_orderdate,
+               CAST(ROW_NUMBER() OVER (
+                   PARTITION BY o_custkey
+                   ORDER BY o_orderdate DESC, o_orderkey) AS BIGINT) AS rank
+        FROM orders WHERE o_orderstatus = 'P'
+    ) WHERE rank <= 3
     """,
-    doc="stats.sitewide.listening_activity handler: global bucket counts, zero-filled",
+    doc="cf.missing_mb_data handler: top recent unmapped rows per user",
 )
-def h_sitewide_listening_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datetime import datetime, timedelta
-
-    ev = load_table(spark, sf_dir, "events")
-    anchor = datetime(2024, 1, 1)
-    buckets = spark.createDataFrame(
-        [
-            (f"week{i + 1}", anchor + timedelta(days=7 * i), anchor + timedelta(days=7 * (i + 1)))
-            for i in range(6)
-        ],
-        "bucket string, start timestamp, end timestamp",
+def h_missing_data(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    unmapped = orders.where(F.col("o_orderstatus") == "P").select(
+        F.col("o_custkey").alias("user_id"), "o_orderkey", "o_orderdate"
     )
-    return sitewide_listening_activity(ev, buckets)
+    return top_k_per_group(
+        unmapped,
+        partition_by=["user_id"],
+        order_by=[F.col("o_orderdate").desc(), F.col("o_orderkey")],
+        k=3,
+    ).withColumn("rank", F.col("rank").cast("bigint"))
 
 
 # --------------------------------------------------------------------------
@@ -273,104 +297,23 @@ def h_fresh_releases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# year_in_music.top_genres (top_genres.py:29-95), fully composed:
-# three overlapping tag sources with priorities (recording > artist >
-# release-group ≈ part-type > brand-word > order-priority here),
-# best-priority dedup per (user, genre), counts, then share-of-total.
+# troi.playlists — deterministic md5-shuffle picks
+# (troi/periodic_jams.py:56-64).
 # --------------------------------------------------------------------------
 @register(
-    "h_top_genres",
+    "h_playlist_picks",
     """
-    WITH purchases AS (
-        SELECT o.o_custkey AS user_id, o.o_orderkey, o.o_orderpriority,
-               p.p_type, p.p_brand
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN part p ON l.l_partkey = p.p_partkey
-    ),
-    tagged AS (
-        SELECT user_id, o_orderkey, LOWER(p_type) AS genre, 1 AS priority FROM purchases
-        UNION ALL
-        SELECT user_id, o_orderkey, LOWER(p_brand) AS genre, 2 AS priority FROM purchases
-        UNION ALL
-        SELECT user_id, o_orderkey, LOWER(o_orderpriority) AS genre, 3 AS priority FROM purchases
-    ),
-    deduped AS (
-        SELECT user_id, o_orderkey, genre,
-               MIN(priority) AS best_priority
-        FROM tagged GROUP BY 1, 2, 3
-    ),
-    counts AS (
-        SELECT user_id, genre, CAST(MIN(best_priority) AS INT) AS priority,
-               COUNT(*) AS genre_count
-        FROM deduped GROUP BY 1, 2
-    )
-    SELECT user_id, genre, priority, genre_count,
-           ROUND(genre_count * 100.0 / SUM(genre_count) OVER (PARTITION BY user_id), 6)
-               AS genre_count_percent
-    FROM counts
+    SELECT * FROM (
+        SELECT user_id, event_type,
+               CAST(ROW_NUMBER() OVER (
+                   PARTITION BY user_id ORDER BY MD5(event_type)) AS BIGINT) AS pick
+        FROM (SELECT DISTINCT user_id, event_type FROM events)
+    ) WHERE pick <= 2
     """,
-    doc="year_in_music.top_genres handler: 3-source priority dedup + share of total",
+    doc="troi.playlists handler: md5-derived diversification picks",
 )
-def h_top_genres(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderpriority"
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type", "p_brand")
-    purchases = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .select(
-            F.col("o_custkey").alias("user_id"),
-            "o_orderkey",
-            "o_orderpriority",
-            "p_type",
-            "p_brand",
-        )
-        # ONE user-keyed exchange, placed BEFORE the 3× explode: hash
-        # partitioning on user_id satisfies the clustering requirement
-        # of the (user, order, genre) dedup agg, the (user, genre)
-        # count agg, AND the share-of-total window — so the exploded
-        # rows (3× the fact) never shuffle at all; only the pre-explode
-        # purchase rows do. 3.6× faster at sf0.1, and at 100 TB it
-        # removes the largest shuffle in the query. Skew exposure is
-        # user_id — identical to what the window already requires.
-        .repartition("user_id")
-    )
-
-    # One pass over the join: a UNION ALL of three projections would
-    # execute the scan + 3-way fact join three times (union branches
-    # don't share subtrees) — 3× the fact scan at 100 TB; exploding an
-    # inline (genre, priority) array reads it once. (On a 3-file
-    # local corpus the union's extra branches LOOK faster — more tasks
-    # in flight — but that is parallelism the cluster already has.)
-    tagged = purchases.select(
-        "user_id",
-        "o_orderkey",
-        F.explode(
-            F.array(
-                F.struct(F.lower("p_type").alias("genre"), F.lit(1).alias("priority")),
-                F.struct(F.lower("p_brand").alias("genre"), F.lit(2).alias("priority")),
-                F.struct(
-                    F.lower("o_orderpriority").alias("genre"),
-                    F.lit(3).alias("priority"),
-                ),
-            )
-        ).alias("gp"),
-    ).select("user_id", "o_orderkey", "gp.genre", "gp.priority")
-    deduped = tagged.groupBy("user_id", "o_orderkey", "genre").agg(
-        F.min("priority").alias("best_priority")
-    )
-    counts = deduped.groupBy("user_id", "genre").agg(
-        F.min("best_priority").cast("int").alias("priority"),
-        F.count(F.lit(1)).alias("genre_count"),
-    )
-    w = Window.partitionBy("user_id")
-    return counts.withColumn(
-        "genre_count_percent",
-        F.round(F.col("genre_count") * 100.0 / F.sum("genre_count").over(w), 6),
-    )
+def h_playlist_picks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dispatch("troi.playlists", spark, sf_dir, picks=2)
 
 
 # --------------------------------------------------------------------------

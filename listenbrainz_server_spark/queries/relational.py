@@ -7,7 +7,7 @@ operator-library modules these compose.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
@@ -412,8 +412,6 @@ def j4_densify_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="J15/A13 grand total alongside groups (sitewide/artist.py:91-95)",
 )
 def j15_grand_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     orders = load_table(spark, sf_dir, "orders")
     agg = orders.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
     return agg.withColumn("total_n", F.sum("n").over(Window.partitionBy()))
@@ -685,4 +683,197 @@ def f_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(F.avg("value"), 6).alias("avg_value"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# J12: lateral explode with position (LATERAL VIEW explode,
+# artist_evolution_activity.py:52-54) — array built per user, then
+# posexploded; positions are well-defined because the array is sorted.
+# --------------------------------------------------------------------------
+@register(
+    "j12_posexplode",
+    """
+    WITH distinct_types AS (SELECT DISTINCT user_id, event_type FROM events)
+    SELECT user_id,
+           CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_type) - 1
+                AS INT) AS pos,
+           event_type
+    FROM distinct_types
+    """,
+    doc="J12 lateral/positional explode (artist_evolution_activity.py:52-54)",
+)
+def j12_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    arrays = (
+        ev.select("user_id", "event_type")
+        .distinct()
+        .groupBy("user_id")
+        .agg(F.sort_array(F.collect_list("event_type")).alias("types"))
+    )
+    return arrays.select(
+        "user_id", F.posexplode("types").alias("pos", "event_type")
+    )
+
+
+# --------------------------------------------------------------------------
+# O3: array_sort with a lambda comparator (recommend.py:113-133,
+# fresh_releases.py:87-111) — sort struct array by count desc, name
+# asc; emitted as a joined string for engine-independent comparison.
+# --------------------------------------------------------------------------
+@register(
+    "o3_array_sort_lambda",
+    """
+    WITH counts AS (
+        SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n
+        FROM orders GROUP BY 1, 2
+    )
+    SELECT o_orderpriority,
+           STRING_AGG(o_orderstatus || ':' || n, ',' ORDER BY n DESC, o_orderstatus)
+               AS ranked_statuses
+    FROM counts
+    GROUP BY o_orderpriority
+    """,
+    doc="O3 array_sort w/ SQL lambda comparator (recommend.py:113-133)",
+)
+def o3_array_sort_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    counts = orders.groupBy("o_orderpriority", "o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    packed = counts.groupBy("o_orderpriority").agg(
+        F.collect_list(F.struct("o_orderstatus", "n")).alias("arr")
+    )
+    sorted_arr = F.expr(
+        """
+        array_sort(arr, (l, r) -> CASE
+            WHEN l.n > r.n THEN -1 WHEN l.n < r.n THEN 1
+            WHEN l.o_orderstatus < r.o_orderstatus THEN -1
+            WHEN l.o_orderstatus > r.o_orderstatus THEN 1 ELSE 0 END)
+        """
+    )
+    return packed.select(
+        "o_orderpriority",
+        F.array_join(
+            F.transform(
+                sorted_arr, lambda s: F.concat_ws(":", s.o_orderstatus, s.n)
+            ),
+            ",",
+        ).alias("ranked_statuses"),
+    )
+
+
+# --------------------------------------------------------------------------
+# U3: 3-source UNION ALL + priority dedup (top_genres.py:29-63 —
+# recording/artist/release-group genre sources, best priority wins).
+# --------------------------------------------------------------------------
+@register(
+    "u3_priority_merge",
+    """
+    WITH merged AS (
+        SELECT o_custkey, o_orderkey, 1 AS priority FROM orders WHERE o_orderstatus = 'F'
+        UNION ALL
+        SELECT o_custkey, o_orderkey, 2 AS priority FROM orders WHERE o_orderstatus = 'O'
+        UNION ALL
+        SELECT o_custkey, o_orderkey, 3 AS priority FROM orders WHERE o_orderstatus = 'P'
+    )
+    SELECT o_custkey, CAST(MIN(priority) AS INT) AS best_priority,
+           COUNT(*) AS n_orders
+    FROM merged
+    GROUP BY o_custkey
+    """,
+    doc="U3 multi-source union + priority pick (top_genres.py:29-63)",
+)
+def u3_priority_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+
+    def src(status: str, prio: int) -> DataFrame:
+        return orders.where(F.col("o_orderstatus") == status).select(
+            "o_custkey", "o_orderkey", F.lit(prio).alias("priority")
+        )
+
+    merged = src("F", 1).unionByName(src("O", 2)).unionByName(src("P", 3))
+    return merged.groupBy("o_custkey").agg(
+        F.min("priority").cast("int").alias("best_priority"),
+        F.count(F.lit(1)).alias("n_orders"),
+    )
+
+
+# --------------------------------------------------------------------------
+# A10: boolean aggregate over a window (any(...) OVER w featured-artist
+# detection, similarity/artist.py:28-36).
+# --------------------------------------------------------------------------
+@register(
+    "a10_bool_or_window",
+    """
+    SELECT DISTINCT user_id,
+           BOOL_OR(event_type = 'purchase') OVER (PARTITION BY user_id) AS has_purchase
+    FROM events
+    """,
+    doc="A10 any()/bool_or over window (similarity/artist.py:28-36)",
+)
+def a10_bool_or_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id")
+    return ev.select(
+        "user_id",
+        F.bool_or(F.col("event_type") == "purchase").over(w).alias("has_purchase"),
+    ).distinct()
+
+
+# --------------------------------------------------------------------------
+# J13: explode-both-sides equi join instead of arrays_overlap — the
+# reference's documented 3h→2min rewrite
+# (new_releases_of_top_artists.py:39-43). Array sides are built from
+# events (user→types, hour→types); overlap pairs come from the
+# exploded equi join, never a nested loop.
+# --------------------------------------------------------------------------
+@register(
+    "j13_explode_equi_join",
+    """
+    WITH user_types AS (SELECT DISTINCT user_id, event_type FROM events),
+         hour_types AS (
+            SELECT DISTINCT CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hour, event_type
+            FROM events
+         )
+    SELECT u.user_id, COUNT(DISTINCT h.hour) AS overlapping_hours
+    FROM user_types u JOIN hour_types h ON u.event_type = h.event_type
+    GROUP BY u.user_id
+    """,
+    doc="J13 explode-to-equi-join arrays_overlap rewrite (3h->2min lesson)",
+)
+def j13_explode_equi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from listenbrainz_server_spark.operators.joins import explode_equi_join
+
+    ev = load_table(spark, sf_dir, "events")
+    left = ev.groupBy("user_id").agg(F.collect_set("event_type").alias("types_a"))
+    right = ev.groupBy(F.hour("ts").cast("bigint").alias("hour")).agg(
+        F.collect_set("event_type").alias("types_b")
+    )
+    joined = explode_equi_join(left, "types_a", right, "types_b")
+    return joined.groupBy("user_id").agg(
+        F.countDistinct("hour").alias("overlapping_hours")
+    )
+
+
+# --------------------------------------------------------------------------
+# P10: string-prefix chunk filter (user_id LIKE 'c%' 16-way chunking,
+# similarity/recording/mlhd.py:32-35).
+# --------------------------------------------------------------------------
+@register(
+    "p10_prefix_chunk",
+    """
+    SELECT p_brand, COUNT(*) AS n
+    FROM part
+    WHERE p_brand LIKE 'Brand#1%'
+    GROUP BY p_brand
+    """,
+    doc="P10 prefix chunk filter (similarity/recording/mlhd.py:32-35)",
+)
+def p10_prefix_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    part = load_table(spark, sf_dir, "part")
+    return (
+        part.where(F.col("p_brand").startswith("Brand#1"))
+        .groupBy("p_brand")
+        .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.functions.text import (
     LANG_STOPWORDS,
+    QUALITY_SCORE_SQL,
     fingerprint,
     lang_id,
     quality_score,
@@ -55,22 +56,12 @@ def t_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Quality score: length band + stopword ratio − punctuation ratio.
 # --------------------------------------------------------------------------
-_EN = _sql_in_list(LANG_STOPWORDS["en"])
-# The scalar quality expression (over a `toks` CTE exposing text + t),
-# shared by t_quality_score and the per-domain calibration query.
-_QUALITY_EXPR = f"""ROUND(
-             (CASE WHEN len(t) BETWEEN 10 AND 1000 THEN 1.0 ELSE 0.0 END) * 0.5
-             + (len(list_filter(t, x -> x IN ({_EN}))) * 1.0
-                / GREATEST(len(t), 1)) * 2.0
-             - ((LENGTH(text) - LENGTH(regexp_replace(text, '[^\\w\\s]', '', 'g')))
-                * 1.0 / GREATEST(LENGTH(text), 1)),
-           6)"""
 _QUALITY_SQL = f"""
     WITH toks AS (
         SELECT doc_id, text, string_split(text, ' ') AS t FROM documents
     )
     SELECT doc_id,
-           {_QUALITY_EXPR} AS quality
+           {QUALITY_SCORE_SQL} AS quality
     FROM toks
 """
 
@@ -101,7 +92,7 @@ def t_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     q AS (
         SELECT doc_id, source,
-               {_QUALITY_EXPR} AS quality
+               {QUALITY_SCORE_SQL} AS quality
         FROM toks
     )
     SELECT doc_id, source, quality,
@@ -167,7 +158,7 @@ _DRIFT_BATCH = 5
         FROM documents
     ),
     q AS (
-        SELECT doc_id, source, {_QUALITY_EXPR} AS quality FROM toks
+        SELECT doc_id, source, {QUALITY_SCORE_SQL} AS quality FROM toks
     ),
     qq AS (
         SELECT source,
@@ -1072,7 +1063,7 @@ def t_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, source, text, string_split(text, ' ') AS t FROM documents
     ),
     q AS (
-        SELECT doc_id, source, {_QUALITY_EXPR} AS quality FROM toks
+        SELECT doc_id, source, {QUALITY_SCORE_SQL} AS quality FROM toks
     ),
     binned AS (
         SELECT doc_id, source, quality,
@@ -1221,83 +1212,6 @@ def t_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.round(F.avg("lp"), 6).alias("avg_logprob"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Curriculum ordering — the training-order artifact: documents are
-# assigned a curriculum phase from their GLOBAL quality percentile
-# (histogram-CDF, same no-corpus-sort machinery as
-# t_quality_calibrated_hist but without the per-source dimension) and
-# a deterministic md5 order key within the phase. Phase 0 = top
-# quality quartile (train on the cleanest data first), phase 3 = the
-# tail; consumers range-partition on (phase, order_key) — no global
-# sort of documents ever runs inside the query.
-# --------------------------------------------------------------------------
-@register(
-    "x_curriculum_order",
-    f"""
-    WITH toks AS (
-        SELECT doc_id, source, text, string_split(text, ' ') AS t FROM documents
-    ),
-    q AS (
-        SELECT doc_id, {_QUALITY_EXPR} AS quality FROM toks
-    ),
-    binned AS (
-        SELECT doc_id, quality,
-               CAST(LEAST(69, GREATEST(0,
-                    FLOOR((quality + 1.0) / 0.05))) AS INT) AS bin
-        FROM q
-    ),
-    bc AS (SELECT bin, COUNT(*) AS n FROM binned GROUP BY 1),
-    cum AS (
-        SELECT bin,
-               COALESCE(SUM(n) OVER (ORDER BY bin
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS below,
-               SUM(n) OVER () AS tot
-        FROM bc
-    )
-    SELECT b.doc_id, b.quality,
-           ROUND(c.below * 1.0 / c.tot, 6) AS pctile,
-           CAST(3 - LEAST(3, FLOOR((c.below * 1.0 / c.tot) * 4)) AS INT)
-               AS phase,
-           md5(CAST(b.doc_id AS VARCHAR) || ':curriculum') AS order_key
-    FROM binned b JOIN cum c USING (bin)
-    """,
-    doc="curriculum ordering: phase from global histogram-CDF quality "
-    "quartile (0 = cleanest first) + deterministic md5 order key",
-)
-def x_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    binned = docs.select(
-        "doc_id", quality_score(F.col("text")).alias("quality")
-    ).withColumn(
-        "bin",
-        F.least(
-            F.lit(69),
-            F.greatest(F.lit(0), F.floor((F.col("quality") + 1.0) / 0.05)),
-        ).cast("int"),
-    )
-    bc = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("n"))
-    w_below = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
-    w_tot = Window.partitionBy()
-    cum = bc.select(
-        "bin",
-        F.coalesce(F.sum("n").over(w_below), F.lit(0)).alias("below"),
-        F.sum("n").over(w_tot).alias("tot"),
-    )
-    pct = F.col("below") * 1.0 / F.col("tot")
-    return binned.join(F.broadcast(cum), "bin").select(
-        "doc_id",
-        "quality",
-        F.round(pct, 6).alias("pctile"),
-        (F.lit(3) - F.least(F.lit(3), F.floor(pct * 4))).cast("int").alias("phase"),
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":curriculum"))).alias(
-            "order_key"
-        ),
     )
 
 
@@ -1813,7 +1727,7 @@ def t_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     base AS (
         SELECT doc_id, source, lang,
                CAST(len(t) AS BIGINT) AS n_tokens,
-               {_QUALITY_EXPR} AS quality,
+               {QUALITY_SCORE_SQL} AS quality,
                md5(regexp_replace(LOWER(TRIM(text)), '\\s+', ' ', 'g')) AS fp
         FROM toks
     ),

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
-from listenbrainz_server_spark.operators.sessionize import session_pairs, with_session_ids
+from listenbrainz_server_spark.operators.sessionize import session_pairs
 from listenbrainz_server_spark.operators.topk import global_top_k, top_k_per_group
 from listenbrainz_server_spark.queries import register
 
@@ -916,4 +916,40 @@ def w_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n_days), "event_type")
         .select("event_type", "n_days", "n_pairs", "slope_per_day")
         .orderBy("event_type")
+    )
+
+
+# --------------------------------------------------------------------------
+# RANGE-frame rolling window: 24h trailing count per user (beyond
+# reference — its windows are all default ROWS frames, SURVEY §2.5).
+# Timestamps truncated to seconds on both sides so the frame boundary
+# is engine-identical.
+# --------------------------------------------------------------------------
+@register(
+    "x_rolling_window",
+    """
+    WITH e AS (
+        SELECT user_id, event_id, date_trunc('second', ts) AS tsec FROM events
+    )
+    SELECT user_id, event_id,
+           CAST(COUNT(*) OVER (
+               PARTITION BY user_id ORDER BY tsec
+               RANGE BETWEEN INTERVAL '24 hours' PRECEDING AND CURRENT ROW
+           ) AS BIGINT) AS n_trailing_24h
+    FROM e
+    """,
+    doc="RANGE-frame rolling 24h trailing count per user",
+)
+def x_rolling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    tsec = F.date_trunc("second", F.col("ts")).cast("long")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(tsec)
+        .rangeBetween(-24 * 3600, Window.currentRow)
+    )
+    return ev.select(
+        "user_id",
+        "event_id",
+        F.count(F.lit(1)).over(w).cast("bigint").alias("n_trailing_24h"),
     )

@@ -92,12 +92,10 @@ def test_als_objective_quality_pinned_by_replay(spark):
     0.05 of each other. A broken trainer (wrong confidence transform,
     ignored ratings, unconverged fit) fails the floor; a trainer
     optimizing a DIFFERENT objective drifts out of the band."""
-    from listenbrainz_server_spark.queries.ml import (
-        _playcounts,
-        als_serving_fit,
-    )
+    from listenbrainz_server_spark.plans.cf import playcounts
+    from listenbrainz_server_spark.queries.ml import als_serving_fit
 
-    pc = _playcounts(spark, SF).collect()
+    pc = playcounts(spark, SF).collect()
     rows = [
         (int(r.user_id), int(r.item_id), min(int(r.playcount), 20))
         for r in pc

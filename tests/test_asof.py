@@ -226,7 +226,7 @@ def test_user_lifecycle_states_fixture(spark):
     new@W1, churned@W2, and NOT churned again later (one churn event
     per dormancy spell); user C active W4 only -> new@W4 and no churn
     row (W5 is past the data horizon)."""
-    from listenbrainz_server_spark.queries.extras import user_lifecycle_states
+    from listenbrainz_server_spark.queries.analytics import user_lifecycle_states
 
     rows = [
         ("A", "2024-01-02"), ("A", "2024-01-03"),  # W1 twice (distinct)

@@ -2,11 +2,14 @@
 map of the staleness rule, the one CHECK artifact writer and the A/B
 anchor's prior timings.
 
-The stale set must not under-run. Query modules import from each other
-(dedup.py and extras.py use text.py's quality expression, handlers4.py
-uses ml.py's cosine pairs, api_variants.py uses handlers4's SQL) and
-from shared modules; these tests pin that the package import graph sees
-those edges and that the expansion closes over them transitively.
+The stale set must not under-run. It is the import closure of the
+changed files, so it is sound only while every dependency is an import:
+nothing in the package registers a temp view or UDF by name, and no
+query module looks another up by name or imports a sibling. What two
+query modules share lives in functions/, operators/ or plans/, so a
+one-module change re-gates only that module's names. These tests pin
+that leaf rule, and that the package graph sees the shared edges and
+closes over them transitively.
 
 No Spark session is needed; only the prior-timings test reads git.
 """
@@ -35,16 +38,6 @@ def _query_deps() -> dict[str, set[str]]:
 
     return {f: {m for m in ms if is_mod(m)}
             for f, ms in _package_import_graph().items() if is_mod(f)}
-
-
-def test_dependency_map_sees_known_edges():
-    deps = _query_deps()
-    # The four real edges in the codebase today. If one disappears
-    # (helper moved/inlined), update BOTH the import and this pin.
-    assert f"{PKG}/text.py" in deps[f"{PKG}/dedup.py"]
-    assert f"{PKG}/text.py" in deps[f"{PKG}/extras.py"]
-    assert f"{PKG}/ml.py" in deps[f"{PKG}/handlers4.py"]
-    assert f"{PKG}/handlers4.py" in deps[f"{PKG}/api_variants.py"]
 
 
 def test_dependency_map_covers_every_query_module():
@@ -90,13 +83,62 @@ def test_expansion_passes_non_query_files_through():
     assert out == {"listenbrainz_server_spark/operators/joins.py"}
 
 
-def test_real_ml_change_reaches_api_variants():
-    """The two-hop chain in the real map: ml.py -> handlers4.py ->
-    api_variants.py. A change to ml.py must stale all three."""
-    deps = _query_deps()
-    out = _expand_query_deps({f"{PKG}/ml.py"}, deps)
-    assert f"{PKG}/handlers4.py" in out
-    assert f"{PKG}/api_variants.py" in out
+def test_query_modules_are_leaves():
+    """Each query module imports no sibling and looks no query up by
+    name; plans/ reaches the registry only through _registered's
+    load_all; so a one-module change re-gates that module's names and
+    no others. No module holds more than 40 names."""
+    import ast
+    import inspect
+    from collections import Counter
+
+    from listenbrainz_server_spark.queries import load_all
+
+    pkg = f"{ROOT}.queries"
+    graph = _package_import_graph()
+    mods = sorted(f for f in graph
+                  if f.startswith(PKG + "/") and not f.endswith("__init__.py"))
+    registry_api = {"register", "Query", "QueryFn"}
+    for f in mods:
+        tree = ast.parse(open(os.path.join(REPO, f)).read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                assert not node.level, f"{f}:{node.lineno} relative import"
+                if node.module == pkg:
+                    assert {a.name for a in node.names} <= registry_api, (
+                        f"{f}:{node.lineno} imports {[a.name for a in node.names]}")
+                else:
+                    assert not (node.module or "").startswith(pkg + "."), (
+                        f"{f}:{node.lineno} imports sibling {node.module}")
+            elif isinstance(node, ast.Import):
+                assert not any(a.name.startswith(pkg) for a in node.names), f
+            elif isinstance(node, (ast.Name, ast.Attribute)):
+                ident = node.id if isinstance(node, ast.Name) else node.attr
+                assert ident not in ("load_all", "REGISTRY"), (
+                    f"{f}:{node.lineno} looks a query up by name")
+        closure = _expand_query_deps({f}, graph)
+        assert closure & set(mods) == {f}, (f, sorted(closure & set(mods)))
+
+    for f in sorted(graph):
+        if not f.startswith(f"{ROOT}/plans/"):
+            continue
+        tree = ast.parse(open(os.path.join(REPO, f)).read())
+        allowed = set()
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "_registered":
+                allowed |= {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(pkg):
+                assert id(node) in allowed and node.module == pkg and [
+                    a.name for a in node.names] == ["load_all"], (
+                    f"{f}:{node.lineno} imports {node.module}")
+            elif isinstance(node, ast.Import):
+                assert not any(a.name.startswith(pkg) for a in node.names), f
+
+    per_module = Counter(os.path.relpath(inspect.getsourcefile(q.fn), REPO)
+                         for q in load_all().values())
+    assert max(per_module.values()) <= 40, per_module.most_common(3)
+    assert set(per_module) == set(mods)
 
 
 def test_package_graph_covers_every_module_and_known_shared_edges():
@@ -129,7 +171,7 @@ def test_operator_change_stales_its_dependents_not_everything():
     assert f"{PKG}/similarity.py" in out
     # tdigest is imported by a handful of modules, not everything:
     out_td = _expand_query_deps({f"{ROOT}/operators/tdigest.py"}, graph)
-    assert f"{PKG}/extras.py" in out_td or f"{PKG}/windows.py" in out_td
+    assert {f"{PKG}/sketches.py", f"{PKG}/windows.py"} <= out_td
     assert len(out_td) < len(graph)
 
 

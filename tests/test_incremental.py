@@ -212,8 +212,8 @@ def test_advance_partial_stacks_batches(spark, tmp_path):
     partial so incremental batches STACK: after advancing batch 2 into
     state, combining batch 3 must equal a from-scratch aggregate over
     all three batches; the created high-water mark bumps, the (from,
-    to) range survives, and a leftover __next dir from a crashed
-    advance is absorbed by the next one."""
+    to) range survives, and the __tmp and __old dirs a crashed swap
+    leaves behind are absorbed by the next one."""
     import os
 
     from pyspark.sql import functions as F
@@ -237,8 +237,9 @@ def test_advance_partial_stacks_batches(spark, tmp_path):
 
     eng.create_partial(stat, b1, "2024-01-01", "2024-02-01", "2024-01-10")
     c2 = eng.combine(stat, eng.delta_aggregate(stat, b2))
-    # simulate a crashed previous advance leaving a stale __next dir
-    os.makedirs(eng._agg_path(stat) + "__next", exist_ok=True)
+    # simulate a crashed previous swap leaving stale __tmp and __old dirs
+    for leftover in ("__tmp", "__old"):
+        os.makedirs(eng._agg_path(stat) + leftover, exist_ok=True)
     eng.advance_partial(stat, c2, created="2024-01-20")
     meta = eng._read_meta(stat)
     assert meta["created"] == "2024-01-20"
@@ -246,7 +247,54 @@ def test_advance_partial_stacks_batches(spark, tmp_path):
     c3 = eng.combine(stat, eng.delta_aggregate(stat, b3))
     got = {(r.k, r.n) for r in c3.collect()}
     assert got == {(1, 2), (2, 1), (3, 2)}  # == aggregate over b1∪b2∪b3
-    assert not os.path.exists(eng._agg_path(stat) + "__next")
+    for leftover in ("__tmp", "__old"):
+        assert not os.path.exists(eng._agg_path(stat) + leftover)
+
+
+def test_partial_writes_never_delete_the_live_partial(spark, tmp_path, monkeypatch):
+    """create_partial and advance_partial write through
+    atomic_swap_write: the old partial is renamed aside before any tree
+    delete, so no rmtree during a fold targets the live aggregate
+    directory, and the bookkeeping is replaced, not rewritten in place."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from listenbrainz_server_spark.incremental.engine import (
+        IncrementalEngine,
+        IncrementalStat,
+    )
+
+    stat = IncrementalStat(
+        name="swap",
+        aggregate=lambda df: df.groupBy("k").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n")
+        ),
+        keys=("k",),
+        sum_cols=("n",),
+    )
+    eng = IncrementalEngine(spark, str(tmp_path))
+    live = os.path.normpath(eng._agg_path(stat))
+    deleted = []
+    real_rmtree = shutil.rmtree
+
+    def spy(path, *args, **kwargs):
+        deleted.append(os.path.normpath(str(path)))
+        return real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", spy)
+    mk = lambda rows: spark.createDataFrame(rows, "k int, v int")  # noqa: E731
+    eng.create_partial(stat, mk([(1, 0)]), "2024-01-01", "2024-02-01", "2024-01-10")
+    eng.create_partial(stat, mk([(1, 0), (2, 0)]), "2024-01-01", "2024-02-01", "2024-01-10")
+    for day, rows in enumerate(([(1, 0)], [(3, 0)])):
+        combined = eng.combine(stat, eng.delta_aggregate(stat, mk(rows)))
+        eng.advance_partial(stat, combined, created=f"2024-01-2{day}")
+    assert deleted and live not in deleted
+    assert {(r.k, r.n) for r in eng.load_partial(stat).collect()} == {
+        (1, 2), (2, 1), (3, 1)}
+    assert eng._read_meta(stat)["created"] == "2024-01-21"
+    assert not os.path.exists(eng._meta_path(stat) + ".tmp")
 
 
 def test_retract_full_group_erasure_and_pruning(spark, tmp_path):

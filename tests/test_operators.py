@@ -291,7 +291,7 @@ def test_item_degree_cap_bounds_viral_item(spark):
     are the top-5 by playcount (deterministic tie-break)."""
     from pyspark.sql import functions as F
 
-    from listenbrainz_server_spark.queries.ml import cosine_pairs_from_playcounts
+    from listenbrainz_server_spark.plans.cf import cosine_pairs_from_playcounts
 
     # Viral item 99: users 1..40, playcount = user id (10 > 9 > ...).
     rows = [(u, 99, u) for u in range(1, 41)]
@@ -1105,7 +1105,7 @@ def test_dp_counts_seed_is_load_bearing(spark):
     ADVICE r6). The default public seed reproduces the registered
     demo output exactly."""
     from listenbrainz_server_spark.queries import load_all
-    from listenbrainz_server_spark.queries.extras import x_dp_counts
+    from listenbrainz_server_spark.queries.audits import x_dp_counts
 
     sf = "/root/testdata/sf0.001"
     pub = {r.source: r.n_noisy for r in x_dp_counts(spark, sf).collect()}
@@ -1185,7 +1185,7 @@ def test_cms_heavy_hitters_invariants(spark):
     """CMS guarantees: est(k) >= exact(k) for every key (min over rows
     of counters that each include all of k's increments), and the
     sketch is CONSTANT-size (<= D*W cells regardless of input)."""
-    from listenbrainz_server_spark.queries.extras import (
+    from listenbrainz_server_spark.queries.sketches import (
         _CMS_D,
         _CMS_W,
         x_heavy_hitters,

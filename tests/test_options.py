@@ -97,7 +97,7 @@ TEST_ONLY_OPTIONS = {
         "seam: on the 50-vector sf0.001 corpus 8-bit buckets leave the "
         "probes almost no candidates; 3 bits feeds the ADC scoring and "
         "exact re-rank",
-    "queries/extras.py x_dp_counts(release_seed)":
+    "queries/audits.py x_dp_counts(release_seed)":
         "api: the release seed is a credential; the noise is private only "
         "under a secret seed, and the registered default is public",
     "sources/readers.py jdbc_query(properties)":

@@ -9,7 +9,12 @@ responsible for rounding (see queries/__init__.py determinism rules).
 Usage: python tools/check.py [sf_dir] [query_name ...] [--json PATH]
 
 ``--json PATH`` additionally writes the per-query verdicts as a JSON
-artifact (the committed at-head oracle-gate record, VERDICT r4 #1).
+artifact (the committed at-head oracle-gate record).
+
+Exits 2 on a name not in the registry, before starting Spark. Exits
+bench.JVM_LOST at the first error that means the JVM is gone, naming
+the query that was running; the JSON artifact then holds only
+``{"jvm_lost": name}``.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import JVM_LOST, jvm_lost
 from listenbrainz_server_spark.catalog import TPCH_TABLES, table_path
 from listenbrainz_server_spark.queries import load_all
 from listenbrainz_server_spark.session import get_session
@@ -64,6 +70,10 @@ def main() -> int:
     only = set(argv[1:])
 
     registry = load_all()
+    unknown = sorted(only - set(registry))
+    if unknown:
+        print(f"not in the registry: {unknown}")
+        return 2
     spark = get_session("check")
 
     con = duckdb.connect()
@@ -93,6 +103,12 @@ def main() -> int:
             s_cols = sdf.columns
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
+            if jvm_lost(e):
+                print(f"JVM lost at {name}: {e}")
+                if json_path:
+                    with open(json_path, "w") as f:
+                        json.dump({"jvm_lost": name}, f)
+                return JVM_LOST
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
             verdicts[name] = {"status": "fail", "err": str(e).splitlines()[0][:200]}

@@ -27,7 +27,9 @@ Steps, and what each one guards:
      auto ANN dials' recall against brute force at sf0.1 and sf1.
 
 Steps 1 and 3 each write one artifact through _regate, and every step
-reports its failures and coverage shortfall; any of them exits 1.
+reports its failures and coverage shortfall; any of them exits 1. A
+step whose JVM dies (tools/check.py and bench.py exit bench.JVM_LOST)
+reports "JVM lost at <name>" and merges no rows into its artifact.
 
 Each artifact records the git head its rows were certified at and,
 for each GUARDED path that differed from that head when it was
@@ -60,7 +62,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from __spark_entry__ import SMOKE_SF_DIR  # noqa: E402
-from bench import red_flags  # noqa: E402
+from bench import JVM_LOST, red_flags  # noqa: E402
 from listenbrainz_server_spark.queries import load_all  # noqa: E402
 
 PKG = "listenbrainz_server_spark"
@@ -81,12 +83,13 @@ def _package_import_graph() -> dict[str, set[str]]:
     submod` resolved; every ancestor package __init__ is an edge,
     because importing a.b.c executes a/__init__ and a/b/__init__.
 
-    Query modules import from each other (text.py's quality expression,
-    ml.py's cosine pairs) and from shared modules (operators/,
-    functions/, catalog.py), so a changed file must stale the names of
-    every module that reaches it. Nothing in the package registers a
-    temp view or UDF by name, so the static graph is sound; a changed
-    path outside it makes the stale set unbounded.
+    Query modules import shared modules (operators/, functions/,
+    plans/, catalog.py), so a changed shared file must stale the names
+    of every module that reaches it. Nothing in the package registers a
+    temp view or UDF by name, and no query module looks another up by
+    name or imports a sibling, so the static graph is sound and a
+    changed query module stales only its own names; a changed path
+    outside the graph makes the stale set unbounded.
     """
     import ast
 
@@ -293,9 +296,12 @@ def _check(sf_dir: str, names: list[str] | None) -> dict[str, dict]:
     try:
         r = subprocess.run([sys.executable, os.path.join(REPO, CHECK_PY),
                             sf_dir, *(names or []), "--json", tmp], cwd=REPO)
-        verdicts = _load(tmp).get("queries") if os.path.getsize(tmp) else None
+        out = _load(tmp) if os.path.getsize(tmp) else {}
     finally:
         os.remove(tmp)
+    if r.returncode == JVM_LOST:
+        raise RuntimeError(f"JVM lost at {out.get('jvm_lost')}")
+    verdicts = out.get("queries")
     if verdicts is None:
         raise RuntimeError(f"{CHECK_PY} exited {r.returncode} with no verdicts")
     return verdicts
@@ -341,7 +347,10 @@ def run_bench(registry, delta: bool) -> list[str]:
         args = ["--all"] if names is None else ["--only", ",".join(names)]
         print(f"  bench.py {args[0]} ({len(names) if names else 'all'} names)")
         r = subprocess.run([sys.executable, os.path.join(REPO, BENCH_PY), *args],
-                           cwd=REPO)
+                           cwd=REPO, stdout=subprocess.PIPE, text=True)
+        sys.stdout.write(r.stdout)
+        if r.returncode == JVM_LOST:  # its last line names the query
+            return [r.stdout.strip().splitlines()[-1]]
         if r.returncode:
             return [f"bench.py exited {r.returncode}"]
     else:
