@@ -31,10 +31,10 @@ of this script.
 Each run executes under the Spark job group "bench:<name>:<i>". With
 --all / --only, the last timed run of each query is read back from
 Spark's own status stores into a per-query record (jobs, stages,
-tasks, executor time, shuffle and spill bytes, SQL executions and the
-executed plan-node counts, not counting a cached relation's plan),
-written under "records"; red_flags() is the
-one check on it. Profile one query with
+tasks, executor time, shuffle and spill bytes, SQL executions, the
+executed plan-node counts, not counting a cached relation's plan, and
+the classes codegen compiled), written under "records"; red_flags() is
+the one check on it. Profile one query with
 `python bench.py --only <name> --no-artifact`.
 """
 
@@ -94,12 +94,22 @@ def headline_line(out: dict) -> str:
     return line
 
 
-def record(spark, group: str) -> dict:
+def codegen_compiles(spark) -> int:
+    """Classes Spark's whole-stage and expression codegen has compiled
+    in this JVM so far (a compile is a miss in its generated-class
+    cache)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def record(spark, group: str, compiles_before: int | None = None) -> dict:
     """What the jobs of `group` executed, read from Spark's status
     stores: the AppStatusStore for jobs and stages, the
     SQLAppStatusStore for the plan graph of each SQL execution that ran
-    one of those jobs (final plans: AQE re-plans update the graph). Uses
-    only pyspark and JVM APIs, so tools/ab.py can run it on old trees."""
+    one of those jobs (final plans: AQE re-plans update the graph).
+    With `compiles_before`, codegen_compiles() read before the run,
+    the record carries the classes the run compiled. Uses only pyspark
+    and JVM APIs, so tools/ab.py can run it on old trees."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()  # the stores lag the scheduler
     app = jsc.statusStore()
@@ -141,6 +151,8 @@ def record(spark, group: str) -> dict:
         for op in _executed_ops(sql.planGraph(eid)):
             ops[op] = ops.get(op, 0) + 1
     rec["ops"] = dict(sorted(ops.items()))
+    if compiles_before is not None:
+        rec["codegen_compiles"] = codegen_compiles(spark) - compiles_before
     return rec
 
 
@@ -347,6 +359,9 @@ def main() -> None:
     errors: dict[str, str] = {}
     for name in names:
         samples: list[float] = []
+        # Read after each run: nothing runs between two runs of a name,
+        # so the last two readings bound the last run's compiles.
+        compiles_after: list[int] = []
 
         def one_run(run: int | str) -> None:
             spark.sparkContext.setJobGroup(f"bench:{name}:{run}", name)
@@ -355,6 +370,7 @@ def main() -> None:
             # Force full execution of every operator in the plan.
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.time() - t0)
+            compiles_after.append(codegen_compiles(spark))
 
         try:
             if run_all:
@@ -366,7 +382,8 @@ def main() -> None:
                 one_run(runs)
                 one_run(runs + 1)
             if run_all:
-                records[name] = record(spark, f"bench:{name}:{len(samples) - 1}")
+                records[name] = record(spark, f"bench:{name}:{len(samples) - 1}",
+                                       compiles_after[-2])
             timings[name] = round(sorted(samples)[len(samples) // 2], 2)
             samples_by_query[name] = [round(s, 2) for s in samples]
         except Exception as e:  # noqa: BLE001 — one bad query must not kill the bench

@@ -37,6 +37,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from listenbrainz_server_spark.operators.aggregates import combine_aggregates
 from listenbrainz_server_spark.operators.joins import semi_join
@@ -59,10 +60,16 @@ class IncrementalStat:
     sum_cols: Sequence[str]
 
 
+def _columns(schema: StructType) -> list[tuple]:
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
 class IncrementalEngine:
     def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
         self.state_dir = state_dir
+        # stat name -> the stored partial's schema (see load_partial)
+        self._schemas: dict[str, StructType] = {}
 
     # -- state paths -------------------------------------------------
     def _agg_path(self, stat: IncrementalStat) -> str:
@@ -109,15 +116,39 @@ class IncrementalEngine:
         created: str,
     ) -> DataFrame:
         """Aggregate the base data and persist (lineage barrier)."""
-        atomic_swap_write(stat.aggregate(full_df), self._agg_path(stat))
+        self._write_partial(stat, stat.aggregate(full_df))
         self._write_meta(
             stat,
             {"from_date": from_date, "to_date": to_date, "created": created},
         )
-        return self.spark.read.parquet(self._agg_path(stat))
+        return self.load_partial(stat)
 
     def load_partial(self, stat: IncrementalStat) -> DataFrame:
-        return self.spark.read.parquet(self._agg_path(stat))
+        """The stored partial. Only the first read per stat on this
+        handle infers the schema, which runs a ``parquet at`` job over
+        the footers (~25-40 ms); later reads pass it to
+        ``spark.read.schema``, so a fold's two reads (``combine``, then
+        ``advance_partial``) run no job before the fold's own. The
+        handle owns ``state_dir``: ``_write_partial`` keeps the memo
+        only while the written columns match it.
+
+        Measured and rejected: keeping the combined partial cached in
+        memory instead of re-reading it. The cached lineage chains from
+        fold to fold, and a fold grew from 0.73 to 2.6 s over four
+        folds."""
+        path = self._agg_path(stat)
+        schema = self._schemas.get(stat.name)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[stat.name] = df.schema
+        return df
+
+    def _write_partial(self, stat: IncrementalStat, df: DataFrame) -> None:
+        memo = self._schemas.get(stat.name)
+        if memo is not None and _columns(memo) != _columns(df.schema):
+            del self._schemas[stat.name]
+        atomic_swap_write(df, self._agg_path(stat))
 
     def delta_aggregate(
         self, stat: IncrementalStat, delta_df: DataFrame, created_col: str | None = None
@@ -184,7 +215,7 @@ class IncrementalEngine:
         Bumps the ``created`` high-water mark; the (from, to) range is
         unchanged."""
         meta = self._read_meta(stat) or {}
-        atomic_swap_write(combined, self._agg_path(stat))
+        self._write_partial(stat, combined)
         self._write_meta(stat, {**meta, "created": created})
         return self.load_partial(stat)
 

@@ -18,6 +18,8 @@ import time
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
+from listenbrainz_server_spark.session import local_frame
+
 
 def model_path(registry_dir: str, model_id: str) -> str:
     return os.path.join(registry_dir, "models", model_id)
@@ -40,13 +42,17 @@ def save_model_with_metadata(
 
     model_id = f"als_{int(time.time() * 1000)}"
     model.write().overwrite().save(model_path(registry_dir, model_id))
-    row = Row(
-        model_id=model_id,
-        model_created=float(time.time()),
-        params_json=json.dumps(params, sort_keys=True),
-        metrics_json=json.dumps(metrics, sort_keys=True),
+    row = (
+        model_id,
+        float(time.time()),
+        json.dumps(params, sort_keys=True),
+        json.dumps(metrics, sort_keys=True),
     )
-    meta_df = spark.createDataFrame([row])
+    meta_df = local_frame(
+        spark,
+        [row],
+        "model_id string, model_created double, params_json string, metrics_json string",
+    )
     registry_upsert(spark, _metadata_path(registry_dir), meta_df, ["model_id"])
     return model_id
 

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.operators.topk import top_k_per_group
+from listenbrainz_server_spark.session import local_frame
 
 # Every score these operators return is ROUNDed to 6 places, the
 # precision the DuckDB oracles compare at.
@@ -2049,7 +2050,8 @@ def ivf_drift_report(encoded_delta: DataFrame, centers) -> DataFrame:
     combinable), broadcast join with the tiny center table — no
     corpus access, delta-sized.
     """
-    center_df = encoded_delta.sparkSession.createDataFrame(
+    center_df = local_frame(
+        encoded_delta.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
         "bucket int, center array<double>",
     )
@@ -2311,7 +2313,8 @@ def semdedup(
     assigned = unit.mapInPandas(
         assign, schema=f"vid {id_t_assign}, vec array<double>, cluster int"
     )
-    centroids = vectors.sparkSession.createDataFrame(
+    centroids = local_frame(
+        vectors.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
         "cluster int, center array<double>",
     )

@@ -37,6 +37,7 @@ from listenbrainz_server_spark.plans.incremental_stats import (
     user_entity_stat,
 )
 from listenbrainz_server_spark.plans.ranges import resolve_range
+from listenbrainz_server_spark.session import local_frame
 
 
 def _registered(name: str) -> Callable:
@@ -65,7 +66,7 @@ def _events_handler(fn: Callable, **defaults):
 
 def _echo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """echo.echo health check (listenbrainz_spark/echo/echo.py:1-8)."""
-    return spark.createDataFrame([("echo", sf_dir)], "message string, data_dir string")
+    return local_frame(spark, [("echo", sf_dir)], "message string, data_dir string")
 
 
 # -- parameterized stats handlers -------------------------------------------
@@ -248,9 +249,7 @@ def _stats_listening_activity(
             label = cur.strftime("%Y")
         rows.append((label, cur, nxt))
         cur = nxt
-    buckets = spark.createDataFrame(
-        rows, "bucket string, start timestamp, end timestamp"
-    )
+    buckets = local_frame(spark, rows, "bucket string, start timestamp, end timestamp")
     ev = events.where((F.col("ts") >= F.lit(frm)) & (F.col("ts") < F.lit(to)))
     if sitewide:
         return handlers.sitewide_listening_activity(ev, buckets, **params)

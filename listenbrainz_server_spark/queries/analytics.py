@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.queries import register
+from listenbrainz_server_spark.session import local_frame
 
 
 # --------------------------------------------------------------------------
@@ -306,8 +307,8 @@ def x_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("min_age_d"),
         )
     )
-    cuts = ev.sparkSession.createDataFrame(
-        [(c,) for c in (7, 14, 30, 60, 90)], "keep_days int"
+    cuts = local_frame(
+        ev.sparkSession, [(c,) for c in (7, 14, 30, 60, 90)], "keep_days int"
     )
     ev_counts = (
         cuts.join(F.broadcast(daily), daily["age_d"] < cuts["keep_days"], "left")

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.queries import register
+from listenbrainz_server_spark.session import local_frame
 
 
 # --------------------------------------------------------------------------
@@ -243,7 +244,8 @@ def x_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_obs")
     )
     totals = counts.groupBy("event_type").agg(F.sum("n_obs").alias("total"))
-    benford = spark.createDataFrame(
+    benford = local_frame(
+        spark,
         [
             (1, 0.301030), (2, 0.176091), (3, 0.124939), (4, 0.096910),
             (5, 0.079181), (6, 0.066947), (7, 0.057992), (8, 0.051153),

@@ -17,6 +17,7 @@ from listenbrainz_server_spark.plans.cf import (
     user_cosine_pairs,
 )
 from listenbrainz_server_spark.queries import register
+from listenbrainz_server_spark.session import local_frame
 
 
 # --------------------------------------------------------------------------
@@ -365,7 +366,8 @@ def als_cv_lifecycle(
         )
         for i, (pm, m) in enumerate(zip(grid, cv_model.avgMetrics))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "rank int, reg_param double, alpha double, max_iter int, "
         "cv_rmse double, is_best boolean, model_id string, test_rmse double",

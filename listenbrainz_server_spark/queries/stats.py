@@ -28,6 +28,7 @@ from listenbrainz_server_spark.plans.handlers import (
     sitewide_listening_activity,
 )
 from listenbrainz_server_spark.queries import register
+from listenbrainz_server_spark.session import local_frame
 
 
 # --------------------------------------------------------------------------
@@ -235,7 +236,8 @@ def _week_buckets(spark: SparkSession, n: int) -> DataFrame:
     the (bucket, start, end) frame the listening-activity providers
     take."""
     anchor = datetime(2024, 1, 1)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (f"week{i + 1}", anchor + timedelta(days=7 * i), anchor + timedelta(days=7 * (i + 1)))
             for i in range(n)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.queries import register
+from listenbrainz_server_spark.session import local_frame
 from listenbrainz_server_spark.streaming.jobs import (
     session_aggregate,
     sliding_trending,
@@ -864,20 +865,17 @@ def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_parts = sorted(_glob.glob(log_dir + "/part-*"))
     for i, f in enumerate(data_parts):
         _os.utime(f, (base + 2 * i, base + 2 * i))
-    sentinel = spark.createDataFrame(
-        [(0, 0, "F")], "user_id bigint, event_id bigint, op string"
+    sentinel = local_frame(
+        spark, [(0, 0, "F")], "user_id bigint, event_id bigint, op string"
     ).select(
         "user_id",
         "event_id",
         (F.lit(mx) + F.expr("INTERVAL 300 MINUTES")).alias("ts"),
         "op",
     )
-    # repartition(1), NOT coalesce(1): createDataFrame parallelizes
-    # the local row into defaultParallelism python-serialized slices,
-    # and coalesce folds all 32 into one task that pays a worker
-    # round-trip per slice (~4.5 s for ONE ROW, measured);
-    # repartition shuffles them down for ~0.5 s.
-    sentinel.repartition(1).write.mode("append").parquet(log_dir)
+    # One row in a LocalTableScan is one partition, so the append
+    # writes one file.
+    sentinel.write.mode("append").parquet(log_dir)
     # Stamp the sentinel's mtime EXPLICITLY past every data slice:
     # its natural write-time mtime (~base + 60) only happens to exceed
     # base + 2*i while _CDC_SLICES < ~30 — above that, later data

@@ -20,6 +20,7 @@ from listenbrainz_server_spark.functions.text import (
     token_count,
 )
 from listenbrainz_server_spark.queries import register
+from listenbrainz_server_spark.session import local_frame
 
 
 def _sql_in_list(words) -> str:
@@ -1575,7 +1576,8 @@ def bpe_train_corpus(spark: SparkSession, sf_dir: str) -> list[tuple]:
 
 def bpe_train_corpus_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serving form: the merge table as a DataFrame."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         bpe_train_corpus(spark, sf_dir),
         "rank bigint, left string, right string, merged string, pair_count bigint",
     )

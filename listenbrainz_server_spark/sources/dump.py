@@ -37,6 +37,7 @@ import tarfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from listenbrainz_server_spark.session import local_frame
 from listenbrainz_server_spark.sources.sinks import (
     append_coalesced,
     atomic_swap_write,
@@ -105,8 +106,8 @@ def import_dump(
     # coincide; for an incremental they deliberately differ).
     n_total = spark.read.parquet(listens_path).count()
 
-    meta = spark.createDataFrame(
-        [(dump_id, dump_type)], "dump_id bigint, dump_type string"
+    meta = local_frame(
+        spark, [(dump_id, dump_type)], "dump_id bigint, dump_type string"
     ).withColumn("imported_at", F.current_timestamp())
     registry_upsert(spark, metadata_path, meta, key_cols=("dump_id", "dump_type"))
 
@@ -116,7 +117,8 @@ def import_dump(
 
     shutil.rmtree(extract_dir, ignore_errors=True)
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(dump_id, dump_type, len(members), n_imported, n_total)],
         "dump_id bigint, dump_type string, n_members int, "
         "n_rows bigint, n_rows_total bigint",

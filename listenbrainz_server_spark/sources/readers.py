@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from listenbrainz_server_spark.operators.joins import anti_join
+from listenbrainz_server_spark.session import local_frame
 
 
 def union_base_incremental(
@@ -21,7 +22,7 @@ def union_base_incremental(
 ) -> DataFrame:
     """S2: base/ ∪ incremental/ with an empty seed when either side is
     missing (listens/data.py:25-55)."""
-    empty = spark.createDataFrame([], schema)
+    empty = local_frame(spark, [], schema)
     out = empty
     if base is not None:
         out = out.unionByName(base)

@@ -84,3 +84,17 @@ def test_cached_subtree_is_not_counted(spark):
         cached.unpersist()
     assert rec["ops"].get("InMemoryTableScan") == 1
     assert rec["ops"].get("Exchange") == 1
+
+
+def test_a_repeated_run_records_no_compile(spark):
+    df = spark.range(1000).groupBy((F.col("id") % 13).alias("k")).agg(
+        F.sum("id").alias("s"))
+    recs = []
+    for run in range(2):
+        before = bench.codegen_compiles(spark)
+        spark.sparkContext.setJobGroup(f"rec:compile:{run}", "rec:compile")
+        df.write.format("noop").mode("overwrite").save()
+        recs.append(bench.record(spark, f"rec:compile:{run}", before))
+    assert recs[0]["codegen_compiles"] > 0
+    assert recs[1]["codegen_compiles"] == 0
+    assert "codegen_compiles" not in bench.record(spark, "rec:compile:1")

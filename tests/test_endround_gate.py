@@ -265,6 +265,25 @@ def test_changed_producer_stales_its_own_artifacts_whole(monkeypatch):
     assert set(endround.PRODUCERS) <= set(endround.GUARDED)
 
 
+def test_deleted_package_module_stales_only_the_changed_files(monkeypatch):
+    """A query module deleted with its names moved into another module
+    re-gates the module that now defines them, not the registry. A
+    path outside the graph that still exists stays unbounded."""
+    from listenbrainz_server_spark.queries import load_all
+
+    changed = {f"{PKG}/extras.py", f"{PKG}/layout.py"}
+    monkeypatch.setattr(endround, "_changed_since",
+                        lambda head, blobs=None: set(changed))
+    registry = load_all()
+    head = {"git_head": "0" * 40}
+    stale = endround._stale_names(registry, head, "bench.py")
+    layout = {n for n, q in registry.items()
+              if q.fn.__module__.endswith(".queries.layout")}
+    assert layout and stale == layout
+    changed.add(f"{ROOT}/queries/QUERIES.txt")
+    assert endround._stale_names(registry, head, "bench.py") is None
+
+
 def test_regate_merges_over_the_newest_rows_and_stamps_head(tmp_path, monkeypatch):
     ok = {"status": "pass", "rows": 1}
     with open(tmp_path / "CHECK_x_r07.json", "w") as f:

@@ -207,6 +207,38 @@ def test_versioned_table_lifecycle(spark, tmp_path):
     ) == v3_before
 
 
+def test_warm_engine_loads_the_partial_without_a_job(spark, stat, tmp_path):
+    """Only the first read of a stat's partial on an engine handle
+    infers its schema, a ``parquet at`` job; after a fold, reading the
+    partial runs no job, and it reads what a fresh handle reads. A
+    write whose columns differ from the memo drops it."""
+    from tests.conftest import group_jobs
+
+    eng = IncrementalEngine(spark, str(tmp_path))
+    eng.create_partial(stat, _events(spark, rows_for([("a", 1), ("b", 2)])),
+                       "2024-01-01", "2024-02-01", "2024-01-10")
+    delta = eng.delta_aggregate(stat, _events(spark, rows_for([("a", 20)])))
+    eng.advance_partial(stat, eng.combine(stat, delta), created="2024-01-20")
+    spark.sparkContext.setJobGroup("inc:warm-load", "inc:warm-load")
+    partial = eng.load_partial(stat)
+    assert group_jobs(spark, "inc:warm-load") == 0
+    fresh = IncrementalEngine(spark, str(tmp_path)).load_partial(stat)
+    assert partial.schema == fresh.schema
+    assert sorted(partial.collect()) == sorted(fresh.collect())
+    assert {r.user: r.n for r in partial.collect()} == {"a": 2, "b": 1}
+
+    wider = IncrementalStat(
+        name=stat.name,
+        aggregate=lambda df: df.groupBy("user").agg(
+            F.count(F.lit(1)).alias("n"), F.max("ts").alias("last")),
+        keys=("user",),
+        sum_cols=("n",),
+    )
+    eng.create_partial(wider, _events(spark, rows_for([("c", 3)])),
+                       "2024-01-01", "2024-03-01", "2024-01-10")
+    assert eng.load_partial(stat).columns == ["user", "n", "last"]
+
+
 def test_advance_partial_stacks_batches(spark, tmp_path):
     """advance_partial persists a combined aggregate as the new
     partial so incremental batches STACK: after advancing batch 2 into

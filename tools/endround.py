@@ -39,9 +39,9 @@ tree. Its stale names are those defined in the import closure of the
 package files changed since that head, working tree included, less the
 paths whose blob still matches the recorded one. The stale set is
 unbounded, meaning the whole registry, when the head is missing, git
-fails, a changed path is outside the package graph, or the artifact's
-producer changed (tools/check.py for the CHECK artifacts, bench.py for
-the bench). A full pass re-runs the whole registry in every step.
+fails, a changed path other than a deleted package module is outside
+the package graph, or the artifact's producer changed (tools/check.py
+for the CHECK artifacts, bench.py for the bench). A full pass re-runs the whole registry in every step.
 --delta re-runs only missing and stale names and skips steps 4 and 5.
 
 --assert-head passes only when nothing under GUARDED changed since the
@@ -245,6 +245,12 @@ def _stale_names(registry, prior: dict, producer: str | None) -> set[str] | None
     if not changed:
         return set()
     graph = _package_import_graph()
+    # A deleted package module bounds nothing: no file in the tree can
+    # import it, its importers changed too, and the names it held are
+    # defined in changed files now.
+    changed -= {p for p in changed - set(graph)
+                if p.startswith(PKG + "/") and p.endswith(".py")
+                and not os.path.exists(os.path.join(REPO, p))}
     unbounded = changed - set(graph)
     if unbounded:
         print(f"  stale since {head[:10]}: whole registry ({sorted(unbounded)[:3]} changed)")
