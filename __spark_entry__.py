@@ -31,23 +31,17 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry["a1_pricing_summary"].fn(spark, SMOKE_SF_DIR)
 
 
-# Round 4 (VERDICT r3 #3): least-recently-verified ordering. With the
-# never-verified tail closed in round 3, plain never-verified-first
-# degenerated to alphabetical — a regression in a late-alphabet query
-# (v_*/w_*/x_*) wouldn't be re-checked for ~3 rounds on a 50-name
-# sweep budget. Sorting by the LAST round each name got a PASS verdict
-# rotates the whole registry through the sweep every ~3 rounds, so any
-# regression surfaces within that window. Never-verified names (round
-# 0) still front the queue by construction.
-#
-# Round 11 (VERDICT r10 What's-wrong #1): only PASS verdicts count.
-# Previously a name's sort key was the last round it APPEARED in any
-# artifact — an error or a rows-only ("no_oracle") entry counted as
-# "verified", so a freshly-failed name (st_session_cdc, errored r9)
-# sorted to position ~260/292 and would not be re-driven for rounds.
-# Now an entry bumps the round only when err is falsy AND rows/schema/
-# hash all matched; failures and oracle-less checks sort as their last
-# true pass (or round 0, fronting the queue).
+# Least-recently-passed ordering: names are sorted by the last round
+# whose committed CORRECTNESS artifact records a full PASS for them, so
+# the driver's bounded sweep rotates through the whole registry and a
+# regression in any name, late-alphabet ones included, is re-checked
+# within a few rounds. Plain never-verified-first degenerates to
+# alphabetical once every name has been verified once. Only full passes
+# count (no error, rows, schema and hash all matched): an error, a
+# mismatch or an oracle-less check leaves the name at its last true
+# pass, or round 0, instead of counting as verified now, which would
+# bury a freshly failed name at the back of the queue. Never-verified
+# names (round 0) front the queue by construction.
 
 
 def _is_pass(entry) -> bool:

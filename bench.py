@@ -9,8 +9,7 @@ multimodal, incremental) — the full 100+ registry sweep is available
 with --all, but the default output stays small enough for a log-tail
 parser to recover the JSON line intact.
 
-Each query is timed to full materialization (noop-format write — same
-work the correctness gate does, minus driver-side collection).
+Each timed run forces full materialization with a noop-format write.
 
 Headline timings are the MEDIAN OF 3 runs per query: single-shot
 numbers mix first-touch costs (JIT, Arrow worker spin-up, parquet
@@ -22,6 +21,13 @@ single timed pass, promoting any query whose warm run exceeds 2 s to
 median-of-3; every sample plus per-query warm-up seconds land in
 BENCH_full_latest.json, and queries whose cold run exceeded 1.5x their
 warm median are listed under "cold_start".
+
+The sweep's warm-up is also the oracle gate: it collects the frame and,
+outside the timed span, compares it with the query's DuckDB oracle the
+way the driver's correctness gate does (row count, column names and an
+order-insensitive value hash; oracle_verdict). The verdicts go on the
+stdout line under "oracle", not into BENCH_full_latest.json;
+tools/check.py makes the same comparison through the same functions.
 
 Seconds from different runs of this script drift up to ±40% between
 windows on unchanged code (measured on a 4-core host); judge a
@@ -40,15 +46,18 @@ the one check on it. Profile one query with
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
 import time
 
+import duckdb
 from py4j.protocol import Py4JJavaError, Py4JNetworkError
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from listenbrainz_server_spark.catalog import TPCH_TABLES, table_path
 from listenbrainz_server_spark.queries import load_all
 from listenbrainz_server_spark.session import get_session
 
@@ -78,20 +87,102 @@ def jvm_lost(e: BaseException | None) -> bool:
 def headline_line(out: dict) -> str:
     """Serialize the headline JSON line, enforcing LINE_BUDGET chars.
 
-    Progressive trim order if over budget: the aba verdict map (full
-    adjudication lives in ABA_latest.json), then the per-query timings
-    (value always survives). Dropped keys are recorded under "trimmed"
-    so a reader knows the omission was deliberate.
+    If over budget, the per-query timings are dropped (value always
+    survives) and "trimmed" records the omission, so a reader knows it
+    was deliberate.
     """
     line = json.dumps(out, separators=(",", ":"))
-    for trim in ("aba", "queries"):
-        if len(line) <= LINE_BUDGET:
-            break
-        if trim in out:
-            out = {k: v for k, v in out.items() if k != trim}
-            out["trimmed"] = out.get("trimmed", []) + [trim]
-            line = json.dumps(out, separators=(",", ":"))
+    if len(line) > LINE_BUDGET and "queries" in out:
+        out = {k: v for k, v in out.items() if k != "queries"}
+        out["trimmed"] = ["queries"]
+        line = json.dumps(out, separators=(",", ":"))
     return line
+
+
+def first_line(e: BaseException) -> str:
+    """The first line of an error's message (a Java one runs on into its
+    stack trace)."""
+    return str(e).partition("\n")[0]
+
+
+def canon_value(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, float):
+        if v != v:
+            return "NaN"
+        # repr keeps full precision; queries pre-round so this is stable.
+        return repr(v)
+    if isinstance(v, bool):
+        return str(int(v))
+    return str(v)
+
+
+def frame_hash(cols: list[str], rows: list[tuple]) -> tuple[str, list[str]]:
+    """An order-insensitive value hash of a frame, and the sorted
+    canonical rows it hashed: each row's values in column-name order,
+    canonicalized to strings."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    canon_rows = sorted("\x1f".join(canon_value(r[i]) for i in order) for r in rows)
+    return hashlib.sha256("\x1e".join(canon_rows).encode()).hexdigest(), canon_rows
+
+
+def oracle_db(sf_dir: str):
+    """A DuckDB connection with one view per TPCH_TABLES table at
+    `sf_dir`; a table missing there has no view."""
+    con = duckdb.connect()
+    for t in TPCH_TABLES:
+        p = table_path(sf_dir, t)
+        # Two on-disk layouts: the driver's testdata is one file per
+        # table; Spark-written scale dirs (tools/gen_scale.py,
+        # .scale/sf1) are DIRECTORIES of part files, which DuckDB
+        # reads through a glob.
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        try:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+        except duckdb.Error:
+            pass
+    return con
+
+
+def failed(what: str, e: BaseException) -> dict:
+    """The "fail" verdict on a query whose `what` side ("spark" or
+    "duckdb") raised `e`."""
+    return {"status": "fail", "err": f"{what} error: {first_line(e)}"[:200]}
+
+
+def oracle_verdict(con, oracle: str | None, cols: list[str],
+                   rows: list[tuple], secs: float) -> dict:
+    """The driver gate's verdict on one query's collected `cols` and
+    `rows`: "pass" when the DuckDB `oracle` run on `con` gives the same
+    column names, row count and frame_hash, "rows_only" when the query
+    has no oracle, else "fail" with the reason in "err". `secs` is the
+    Spark run's; a pass adds the oracle's."""
+    if oracle is None:
+        return {"status": "rows_only", "rows": len(rows), "secs": round(secs, 2)}
+    t0 = time.time()
+    try:
+        res = con.execute(oracle)
+        d_cols = [d[0] for d in res.description]
+        d_rows = res.fetchall()
+    except Exception as e:  # noqa: BLE001 — any oracle error is a verdict
+        return failed("duckdb", e)
+    problems = []
+    if sorted(cols) != sorted(d_cols):
+        problems.append(f"cols spark={sorted(cols)} duck={sorted(d_cols)}")
+    if len(rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(rows)} duck={len(d_rows)}")
+    if not problems:
+        s_hash, s_canon = frame_hash(cols, rows)
+        d_hash, d_canon = frame_hash(d_cols, d_rows)
+        if s_hash != d_hash:
+            only_s = sorted(set(s_canon) - set(d_canon))[:3]
+            only_d = sorted(set(d_canon) - set(s_canon))[:3]
+            problems.append(f"hash mismatch; spark-only={only_s} duck-only={only_d}")
+    if problems:
+        return {"status": "fail", "err": " | ".join(problems)[:200]}
+    return {"status": "pass", "rows": len(rows),
+            "secs": round(secs + time.time() - t0, 2)}
 
 
 def codegen_compiles(spark) -> int:
@@ -220,8 +311,8 @@ HEADLINE = (
     "d_dup_groups",
     "v_lsh_topk",
     "v_cosine_topk",
-    # r3: the serving default is the degree-capped plan; the uncapped
-    # form survives only as the m_user_cosine_uncapped oracle fixture.
+    # The serving default is the degree-capped plan; the uncapped form
+    # survives only as the m_user_cosine_uncapped oracle fixture.
     "m_user_cosine_capped",
     "m_als_recommend",
     "t_token_stats",
@@ -231,7 +322,7 @@ HEADLINE = (
     "st_session_window",
 )
 
-# Families added after the r01 bench; kept separate so the historical
+# Families added after the first bench; kept separate so the historical
 # total stays comparable ("value_comparable" = HEADLINE subtotal).
 HEADLINE_NEW = (
     "v_pq_topk",
@@ -239,37 +330,37 @@ HEADLINE_NEW = (
     "d_contamination",
     "t_repetition_signals",
     "t_sequence_pack",
-    # r4 families: verbatim-span dedup, quantized ANN, epoch mixing,
-    # histogram-CDF calibration.
+    # Verbatim-span dedup, quantized ANN, epoch mixing, histogram-CDF
+    # calibration.
     "d_exact_substring_pairs",
     "v_sq8_topk",
     "x_interleave_domains",
     "t_quality_calibrated_hist",
-    # r4 session-3 families: RAG chunking, kNN label propagation,
-    # MMR diversified re-rank, PMI collocations.
+    # RAG chunking, kNN label propagation, MMR diversified re-rank, PMI
+    # collocations.
     "t_chunk_documents",
     "v_knn_classify",
     "v_mmr_rerank",
     "t_pmi_cooccurrence",
-    # r5 families: verbatim-span extents, embedding decontamination,
-    # Markov power iteration.
+    # Verbatim-span extents, embedding decontamination, Markov power
+    # iteration.
     "d_substring_spans",
     "v_semantic_contamination",
     "w_markov_power",
-    # r6 families: nearest as-of, banded radius search, IVF-PQ,
-    # growth accounting, perceptual-hash dedup, sparse lexical cosine.
+    # Nearest as-of, banded radius search, IVF-PQ, growth accounting,
+    # perceptual-hash dedup, sparse lexical cosine.
     "j_asof_nearest",
     "v_range_search",
     "v_ivfpq_topk",
     "w_user_lifecycle",
     "mm_phash_dedup",
-    # r9: the UNCAPPED t_tfidf_cosine_pairs left the headline set —
-    # it is the exact all-pairs baseline, fixture-scale only
-    # (measured 67x at 10x data); the capped form is the serving path.
+    # Not the UNCAPPED t_tfidf_cosine_pairs: it is the exact all-pairs
+    # baseline, fixture-scale only (measured 67x at 10x data); the
+    # capped form is the serving path.
     "t_tfidf_cosine_pairs_capped",
-    # r7/r8 families: iterative graph, semantic dedup, CMS sketch,
-    # Bloom runtime pruning, DSIR selection, CDC retraction merge,
-    # triangle/clustering, EWMA, MAD outliers, two-tier deletion.
+    # Iterative graph, semantic dedup, CMS sketch, Bloom runtime
+    # pruning, DSIR selection, CDC retraction merge, triangle/clustering,
+    # EWMA, MAD outliers, two-tier deletion.
     "g_pagerank",
     "g_triangle_count",
     "d_semdedup",
@@ -280,10 +371,9 @@ HEADLINE_NEW = (
     "i_deletion_apply",
     "w_ewma",
     "w_mad_outliers",
-    # r9 families: sessionized CDC retraction, sweep-line overlap
-    # census (the 86x->2.8x fix), t-digest sketch quantiles, weighted
-    # reservoir, content-defined chunking, aggregate-state erasure,
-    # robust trend.
+    # Sessionized CDC retraction, sweep-line overlap census (the
+    # 86x->2.8x fix), t-digest sketch quantiles, weighted reservoir,
+    # content-defined chunking, aggregate-state erasure, robust trend.
     "st_session_cdc",
     "j_overlap_census_sweep",
     "w_mad_tdigest",
@@ -292,6 +382,45 @@ HEADLINE_NEW = (
     "i_retraction_combine",
     "w_theil_sen",
 )
+
+
+# The per-query maps of BENCH_full_latest.json. Per-run samples let a
+# reader separate noise from regression without re-running;
+# query_window stamps WHEN each number was taken, because a merged
+# artifact mixes windows.
+PER_QUERY = ("queries", "samples", "warmup_secs", "records", "query_window", "errors")
+
+
+def write_artifact(run: dict, sf_dir: str, merge: bool) -> None:
+    """Write BENCH_full_latest.json, the side artifact that tracks the
+    full registry: this sweep's `run`, with each PER_QUERY map merged
+    over the prior artifact's when `merge` (--only). The other fields
+    come from this run alone, so fields an older bench.py wrote do not
+    ride along forever."""
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "BENCH_full_latest.json")
+    prior = {}
+    if merge and os.path.exists(path):
+        with open(path) as f:
+            prior = json.load(f)
+        if prior.get("sf_dir", sf_dir) != sf_dir:
+            raise SystemExit(f"--only merge refused: prior artifact sf_dir="
+                             f"{prior.get('sf_dir')} != current {sf_dir}")
+    art = {**run, "sf_dir": sf_dir}
+    for key in PER_QUERY:
+        art[key] = {**prior.get(key, {}), **run[key]}
+    for n in run["queries"]:  # a now-passing query clears its old error
+        art["errors"].pop(n, None)
+    if not art["errors"]:
+        del art["errors"]
+    queries = art["queries"]
+    art["value"] = round(sum(queries.values()), 2)
+    art["cold_start"] = {n: w for n, w in sorted(art["warmup_secs"].items())
+                         if n in queries and w > 1.5 * max(queries[n], 0.01)}
+    if merge:
+        art["merged"] = True
+    with open(path, "w") as f:
+        json.dump(art, f, indent=1)
 
 
 def main() -> None:
@@ -350,32 +479,45 @@ def main() -> None:
     # 2-3x phantom regressions (mm_decode_features, g_pagerank); its
     # seconds are recorded per query (warmup_secs) and any query whose
     # cold run exceeds 1.5x its warm median is flagged in cold_start.
+    # The warm-up collects the frame, and outside the timed span its
+    # rows are checked against the query's oracle.
     runs = 1 if run_all else 3
     HEAVY_SECS = 2.0
+    con = oracle_db(sf_dir) if run_all else None
     timings: dict[str, float] = {}
     samples_by_query: dict[str, list[float]] = {}
     warmup_by_query: dict[str, float] = {}
     records: dict[str, dict] = {}
     errors: dict[str, str] = {}
+    oracle: dict[str, dict] = {}
     for name in names:
         samples: list[float] = []
         # Read after each run: nothing runs between two runs of a name,
         # so the last two readings bound the last run's compiles.
         compiles_after: list[int] = []
 
-        def one_run(run: int | str) -> None:
+        def one_run(run: int | str) -> tuple[list[str], list[tuple]] | None:
+            """One run under its job group. The warm-up collects the frame
+            and returns its columns and rows for the oracle check."""
             spark.sparkContext.setJobGroup(f"bench:{name}:{run}", name)
             t0 = time.time()
             df = registry[name].fn(spark, sf_dir)
-            # Force full execution of every operator in the plan.
-            df.write.format("noop").mode("overwrite").save()
+            result = None
+            if run == "warmup":
+                result = df.columns, [tuple(r) for r in df.collect()]
+            else:  # Force full execution of every operator in the plan.
+                df.write.format("noop").mode("overwrite").save()
             samples.append(time.time() - t0)
             compiles_after.append(codegen_compiles(spark))
+            return result
 
         try:
             if run_all:
-                one_run("warmup")
+                cols, rows = one_run("warmup")
                 warmup_by_query[name] = round(samples.pop(), 2)
+                oracle[name] = oracle_verdict(con, registry[name].oracle, cols,
+                                              rows, warmup_by_query[name])
+                del rows  # not held through the timed runs
             for i in range(runs):
                 one_run(i)
             if run_all and samples[0] > HEAVY_SECS:
@@ -388,9 +530,10 @@ def main() -> None:
             samples_by_query[name] = [round(s, 2) for s in samples]
         except Exception as e:  # noqa: BLE001 — one bad query must not kill the bench
             if jvm_lost(e):
-                print(f"JVM lost at {name}: {str(e).splitlines()[0][:120]}")
+                print(f"JVM lost at {name}: {first_line(e)[:120]}")
                 raise SystemExit(JVM_LOST) from e
-            errors[name] = str(e).splitlines()[0][:120]
+            errors[name] = first_line(e)[:120]
+            oracle.setdefault(name, failed("spark", e))
         # Per-query isolation: drop cached frames AND the Python refs
         # whose GC releases accumulated localCheckpoint RDD blocks —
         # without this, block-manager pressure from ~200 earlier
@@ -402,131 +545,33 @@ def main() -> None:
         spark.catalog.clearCache()
         _gc.collect()
 
-    total = round(sum(timings.values()), 2)
     out = {
         "metric": "headline_query_wall_seconds" if not run_all else "total_query_wall_seconds",
-        "value": total,
+        "value": round(sum(timings.values()), 2),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
         "runs_per_query": runs,
     }
-    if run_all:
-        out["records"] = records
-        out["cold_start"] = {
-            n: warmup_by_query[n]
-            for n in sorted(timings)
-            if n in warmup_by_query
-            and warmup_by_query[n] > 1.5 * max(timings[n], 0.01)
-        }
+    if errors:
+        out["errors"] = errors
     if not run_all:
         out["value_comparable"] = round(
             sum(t for n, t in timings.items() if n in HEADLINE), 2
         )
-    if errors:
-        out["errors"] = errors
-    if not run_all:
-        # Attach the endround A/B verdicts (ABA_latest.json, written by
-        # tools/endround.py) so the headline artifact of record carries
-        # ab_confirmed per mover: a cross-window headline ratio alone
-        # cannot tell a code effect from drift. head_moved
-        # flags whether query-affecting paths changed since the A/B ran,
-        # in which case it describes an older engine state.
-        aba_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "ABA_latest.json"
-        )
-        if os.path.exists(aba_path):
-            with open(aba_path) as f:
-                aba = json.load(f)
-            head_moved = True
-            if aba.get("git_head"):
-                import subprocess
-
-                r = subprocess.run(
-                    ["git", "diff", "--name-only", aba["git_head"], "HEAD",
-                     "--", "listenbrainz_server_spark", "__spark_entry__.py",
-                     "bench.py"],
-                    cwd=os.path.dirname(os.path.abspath(__file__)),
-                    capture_output=True, text=True,
-                )
-                head_moved = bool(r.returncode) or bool(r.stdout.strip())
-            # Verdicts only ({name: ab_confirmed}) plus a pointer: the
-            # per-mover legs pushed the line past the 2,000-char parse
-            # window (LINE_BUDGET). Legs, ratios and heads stay in the file.
-            out["aba"] = {
-                "round": aba.get("round"),
-                "head_moved": head_moved,
-                "movers": {
-                    n: bool(m.get("ab_confirmed"))
-                    for n, m in aba.get("movers", {}).items()
-                },
-                "ref": "ABA_latest.json",
-            }
-    if run_all and not no_artifact:
-        # Side artifact for regression tracking of the full registry —
-        # the stdout line stays the headline parse target. Per-run
-        # samples let a reader separate noise from regression without
-        # re-running. query_window stamps WHEN each number was taken,
-        # because a merged artifact mixes windows.
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH_full_latest.json")
-        window_id = time.strftime("%Y-%m-%dT%H:%M:%S")
-        artifact = {
-            **out,
-            "samples": samples_by_query,
-            "warmup_secs": warmup_by_query,
-            "sf_dir": sf_dir,
-            "query_window": {n: window_id for n in timings},
-        }
-        if only and os.path.exists(path):
-            with open(path) as f:
-                prior = json.load(f)
-            if prior.get("sf_dir", sf_dir) != sf_dir:
-                raise SystemExit(
-                    f"--only merge refused: prior artifact sf_dir="
-                    f"{prior.get('sf_dir')} != current {sf_dir}"
-                )
-            merged_q = {**prior.get("queries", {}), **timings}
-            merged_s = {**prior.get("samples", {}), **samples_by_query}
-            merged_wu = {**prior.get("warmup_secs", {}), **warmup_by_query}
-            merged_r = {**prior.get("records", {}), **records}
-            merged_cs = {
-                n: w
-                for n, w in merged_wu.items()
-                if n in merged_q and w > 1.5 * max(merged_q[n], 0.01)
-            }
-            merged_e = {**prior.get("errors", {}), **errors}
-            for n in timings:  # a now-passing query clears its old error
-                merged_e.pop(n, None)
-            merged_qw = {**prior.get("query_window", {}),
-                         **{n: window_id for n in timings}}
-            # Built from this run's keys, not the prior's, so fields an
-            # older bench.py wrote do not ride along forever.
-            artifact = {
-                **out,
-                "queries": merged_q,
-                "samples": merged_s,
-                "warmup_secs": merged_wu,
-                "records": merged_r,
-                "cold_start": merged_cs,
-                "value": round(sum(merged_q.values()), 2),
-                "merged": True,
-                "sf_dir": sf_dir,
-                "query_window": merged_qw,
-            }
-            if merged_e:
-                artifact["errors"] = merged_e
-            else:
-                artifact.pop("errors", None)
-        with open(path, "w") as f:
-            json.dump(artifact, f, indent=1)
-    if run_all:
-        # The --all sweep's stdout is not the driver's parse target
-        # (BENCH_full_latest.json is its artifact of record) — no
-        # budget applies.
-        print(json.dumps(out, separators=(",", ":")))
-    else:
         print(headline_line(out))
+        return
+    out["records"] = records
+    if not no_artifact:
+        window_id = time.strftime("%Y-%m-%dT%H:%M:%S")
+        write_artifact({**out, "errors": errors, "samples": samples_by_query,
+                        "warmup_secs": warmup_by_query,
+                        "query_window": {n: window_id for n in timings}},
+                       sf_dir, merge=bool(only))
+    # The --all sweep's stdout is not the driver's parse target
+    # (BENCH_full_latest.json is its artifact of record): no budget
+    # applies.
+    print(json.dumps({**out, "oracle": oracle}, separators=(",", ":")))
 
 
 if __name__ == "__main__":

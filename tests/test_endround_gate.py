@@ -1,6 +1,5 @@
 """The re-gate path of tools/endround.py: the changed-file -> stale-names
-map of the staleness rule, the one CHECK artifact writer and the A/B
-anchor's prior timings.
+map of the staleness rule and the one CHECK artifact writer.
 
 The stale set must not under-run. It is the import closure of the
 changed files, so it is sound only while every dependency is an import:
@@ -11,7 +10,7 @@ one-module change re-gates only that module's names. These tests pin
 that leaf rule, and that the package graph sees the shared edges and
 closes over them transitively.
 
-No Spark session is needed; only the prior-timings test reads git.
+No Spark session is needed.
 """
 
 import json
@@ -214,14 +213,6 @@ def test_shared_module_change_reaches_nearly_every_query_module():
     )
 
 
-def test_prior_timings_read_the_sweep_committed_at_the_r15_head():
-    """The A/B anchor's prior timings are the full sweep committed at
-    the previous CHECK_full artifact's head."""
-    with open(os.path.join(REPO, "CHECK_full_r15.json")) as f:
-        old_head = json.load(f)["git_head"]
-    assert len(endround._prior_timings(old_head)) >= 290
-
-
 def test_registry_files_live_in_the_queries_package():
     """_stale_names maps git-diff paths to registered names via
     inspect.getsourcefile + os.path.relpath. That only works if every
@@ -245,23 +236,26 @@ def test_registry_files_live_in_the_queries_package():
 
 
 def test_changed_producer_stales_its_own_artifacts_whole(monkeypatch):
-    """tools/check.py certified every CHECK row, so its change re-gates
-    the whole registry (None); it moves no bench number, and bench.py's
-    change is unbounded for the bench only."""
+    """CHECK_full's rows come from tools/check.py and the comparison it
+    imports from bench.py, so a change to either re-gates the whole
+    registry (None). CHECK_sf01's and the bench's rows come from
+    bench.py alone: tools/check.py's change moves nothing there."""
     changed: set[str] = set()
     monkeypatch.setattr(endround, "_changed_since",
                         lambda head, blobs=None: set(changed))
     registry = {"q_a": None, "q_b": None}
     head = {"git_head": "0" * 40}
+    check_full, sweep = endround.PRODUCERS, ("bench.py",)
     changed.add("tools/check.py")
-    assert endround._stale_names(registry, head, "tools/check.py") is None
-    assert endround._stale_names(registry, head, "bench.py") == set()
+    assert endround._stale_names(registry, head, check_full) is None
+    assert endround._stale_names(registry, head, sweep) == set()
+    changed.clear()
     changed.add("bench.py")
-    assert endround._stale_names(registry, head, "bench.py") is None
-    # A/B legs run this tree's bench.py on both sides: neither counts.
-    assert endround._stale_names(registry, head, None) == set()
+    assert endround._stale_names(registry, head, check_full) is None
+    assert endround._stale_names(registry, head, sweep) is None
     # An artifact without a head cannot be diffed: unbounded.
-    assert endround._stale_names(registry, {}, "bench.py") is None
+    changed.clear()
+    assert endround._stale_names(registry, {}, sweep) is None
     assert set(endround.PRODUCERS) <= set(endround.GUARDED)
 
 
@@ -276,12 +270,12 @@ def test_deleted_package_module_stales_only_the_changed_files(monkeypatch):
                         lambda head, blobs=None: set(changed))
     registry = load_all()
     head = {"git_head": "0" * 40}
-    stale = endround._stale_names(registry, head, "bench.py")
+    stale = endround._stale_names(registry, head, ("bench.py",))
     layout = {n for n, q in registry.items()
               if q.fn.__module__.endswith(".queries.layout")}
     assert layout and stale == layout
     changed.add(f"{ROOT}/queries/QUERIES.txt")
-    assert endround._stale_names(registry, head, "bench.py") is None
+    assert endround._stale_names(registry, head, ("bench.py",)) is None
 
 
 def test_regate_merges_over_the_newest_rows_and_stamps_head(tmp_path, monkeypatch):
@@ -289,18 +283,12 @@ def test_regate_merges_over_the_newest_rows_and_stamps_head(tmp_path, monkeypatc
     with open(tmp_path / "CHECK_x_r07.json", "w") as f:
         json.dump({"queries": {"q_old": ok, "q_keep": ok, "q_redo": ok,
                                "q_gone": ok}, "git_head": "a" * 40}, f)
-    calls = []
-
-    def fake_check(sf_dir, names):
-        calls.append((sf_dir, names))
-        return {"q_redo": {"status": "fail", "err": "hash mismatch"}}
-
-    monkeypatch.setattr(endround, "_check", fake_check)
     monkeypatch.setattr(endround, "_git_head", lambda: "b" * 40)
     registry = {"q_old": 0, "q_keep": 0, "q_redo": 0, "q_new": 0}
     out = tmp_path / "CHECK_x_r08.json"
-    errs = endround._regate("sfX", str(out), ["q_redo"], registry)
-    assert calls == [("sfX", ["q_redo"])]
+    errs = endround._regate("sfX", str(out), ["q_redo"],
+                            {"q_redo": {"status": "fail", "err": "hash mismatch"}},
+                            registry)
     art = json.loads(out.read_text())
     # Prior rows kept, the re-run name overwritten, unregistered dropped.
     assert art["queries"] == {"q_old": ok, "q_keep": ok,
@@ -311,16 +299,22 @@ def test_regate_merges_over_the_newest_rows_and_stamps_head(tmp_path, monkeypatc
     assert errs == ["CHECK_x_r08.json: 1 oracle failures ['q_redo']",
                     "CHECK_x_r08.json covers 3/4"]
 
-    # Nothing to re-run: no check call, the newest rows re-stamped.
+    # Nothing to re-run: the newest rows re-stamped.
     monkeypatch.setattr(endround, "_git_head", lambda: "c" * 40)
-    errs = endround._regate("sfX", str(out), [], {"q_old": 0, "q_keep": 0})
-    assert len(calls) == 1 and errs == []
+    errs = endround._regate("sfX", str(out), [], {}, {"q_old": 0, "q_keep": 0})
+    assert errs == []
     assert json.loads(out.read_text())["git_head"] == "c" * 40
 
-    # names=None re-gates the whole registry.
-    monkeypatch.setattr(endround, "_check",
-                        lambda sf_dir, names: {"q_old": ok, "q_keep": ok})
-    assert endround._regate("sfX", str(out), None, {"q_old": 0, "q_keep": 0}) == []
+    # A re-gated name without a verdict loses its prior row: a shortfall.
+    errs = endround._regate("sfX", str(out), ["q_keep"], {}, {"q_old": 0, "q_keep": 0})
+    assert errs == ["CHECK_x_r08.json covers 1/2"]
+
+    # names=None re-gates the whole registry: no prior row survives.
+    assert endround._regate("sfX", str(out), None, {"q_old": ok, "q_keep": ok},
+                            {"q_old": 0, "q_keep": 0}) == []
+    assert endround._regate("sfX", str(out), None, {"q_old": ok},
+                            {"q_old": 0, "q_keep": 0}) == [
+        "CHECK_x_r08.json covers 1/2"]
 
 
 def test_stamp_on_a_dirty_tree_certifies_the_commit_that_follows(tmp_path, monkeypatch):

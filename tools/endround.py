@@ -10,26 +10,23 @@ Steps, and what each one guards:
      every registered query against its DuckDB oracle: row count,
      columns and an order-insensitive value hash, the comparison the
      driver's correctness gate makes.
-  2. Bench sweep -> BENCH_full_latest.json. bench.py times each query
-     at sf0.1 and reads its execution record from Spark's status
-     stores. The sweep must time every name with a record, and
-     bench.red_flags must find nothing in the records: no row-at-a-time
-     Python UDF, no stray CartesianProduct.
-  3. sf0.1 oracle gate -> CHECK_sf01_rNN.json. The same comparison at
-     sf0.1, where scale defects show that sf0.01 hides: ANN dials
-     decaying below their recall floors, a fixed candidate budget, a
-     1-ulp percentile divergence were all found this way.
-  4. A/B anchor -> ABA_latest.json (full pass only). The sweep's movers
-     against the previous CHECK_full artifact's head are judged by
-     tools/ab.py's interleaved old/new pairs. Sweeps from different
-     windows drift up to ±40% on this code, so a ratio only nominates.
-  5. Recall smoke (full pass only). tools/recall_smoke.py holds the
+  2. Bench sweep at sf0.1 -> BENCH_full_latest.json and
+     CHECK_sf01_rNN.json, from one pass. bench.py times each query and
+     reads its execution record from Spark's status stores; the sweep
+     must time every name with a record, and bench.red_flags must find
+     nothing in the records: no row-at-a-time Python UDF, no stray
+     CartesianProduct. Its untimed warm-up of each name is the same
+     oracle comparison at sf0.1, where scale defects show that sf0.01
+     hides: ANN dials decaying below their recall floors, a fixed
+     candidate budget, a 1-ulp percentile divergence were all found
+     this way. The sweep runs the names either artifact needs.
+  3. Recall smoke (full pass only). tools/recall_smoke.py holds the
      auto ANN dials' recall against brute force at sf0.1 and sf1.
 
-Steps 1 and 3 each write one artifact through _regate, and every step
-reports its failures and coverage shortfall; any of them exits 1. A
-step whose JVM dies (tools/check.py and bench.py exit bench.JVM_LOST)
-reports "JVM lost at <name>" and merges no rows into its artifact.
+Both CHECK artifacts are written by _regate, and every step reports its
+failures and coverage shortfall; any of them exits 1. A step whose JVM
+dies (tools/check.py and bench.py exit bench.JVM_LOST) reports "JVM
+lost at <name>" and writes none of its artifacts.
 
 Each artifact records the git head its rows were certified at and,
 for each GUARDED path that differed from that head when it was
@@ -40,9 +37,12 @@ package files changed since that head, working tree included, less the
 paths whose blob still matches the recorded one. The stale set is
 unbounded, meaning the whole registry, when the head is missing, git
 fails, a changed path other than a deleted package module is outside
-the package graph, or the artifact's producer changed (tools/check.py
-for the CHECK artifacts, bench.py for the bench). A full pass re-runs the whole registry in every step.
---delta re-runs only missing and stale names and skips steps 4 and 5.
+the package graph, or one of the artifact's producers changed
+(tools/check.py and bench.py for CHECK_full, bench.py for CHECK_sf01
+and the bench). A full pass re-runs the whole registry in steps 1 and
+2 and adds the recall smoke; --delta re-runs only missing and stale
+names. Wall-time A/B judgements are tools/ab.py's, run by hand on the
+names a change touches.
 
 --assert-head passes only when nothing under GUARDED changed since the
 newest CHECK_full artifact's head, so a commit that can move a result
@@ -72,8 +72,6 @@ PRODUCERS = (CHECK_PY, BENCH_PY)
 GUARDED = (PKG, "__spark_entry__.py", *PRODUCERS)
 TESTDATA = os.path.dirname(SMOKE_SF_DIR)
 BENCH = os.path.join(REPO, "BENCH_full_latest.json")
-ABA = os.path.join(REPO, "ABA_latest.json")
-ABA_MAX_MOVERS = 20
 
 
 def _package_import_graph() -> dict[str, set[str]]:
@@ -228,20 +226,18 @@ def _stamp() -> dict:
     return {"git_head": head, "git_blobs": _blobs(sorted(changed or ()))}
 
 
-def _stale_names(registry, prior: dict, producer: str | None) -> set[str] | None:
+def _stale_names(registry, prior: dict, producers: tuple[str, ...]) -> set[str] | None:
     """Names whose results may have moved since the tree the `prior`
     artifact certified; None means unbounded, the whole registry.
-    `producer` is the tool that wrote the artifact: its change is
-    unbounded, the other producers' changes move nothing here. None
-    excludes both, as for A/B legs, which run this tree's bench.py on
-    both sides."""
+    `producers` are the tools that wrote the artifact's rows: their
+    change is unbounded, another producer's change moves nothing here."""
     import inspect
 
     head = prior.get("git_head")
     changed = _changed_since(head, prior.get("git_blobs")) if head else None
     if changed is None:
         return None
-    changed -= set(PRODUCERS) - {producer}
+    changed -= set(PRODUCERS) - set(producers)
     if not changed:
         return set()
     graph = _package_import_graph()
@@ -281,13 +277,20 @@ def _series(prefix: str) -> list[str]:
     return sorted(glob.glob(glob.escape(prefix) + "*.json"))
 
 
-def _to_run(registry, prior: dict, producer: str, delta: bool) -> list[str] | None:
+def _newest(out_path: str) -> dict:
+    """The newest artifact in out_path's series."""
+    series = _series(re.sub(r"\d+\.json$", "", out_path))
+    return _load(series[-1] if series else None)
+
+
+def _to_run(registry, prior: dict, producers: tuple[str, ...],
+            delta: bool) -> list[str] | None:
     """The names an artifact must re-run, or None for the whole
     registry: everything on a full pass or an unbounded stale set, else
     the names missing from its rows plus the stale ones."""
     if not delta:
         return None
-    stale = _stale_names(registry, prior, producer)
+    stale = _stale_names(registry, prior, producers)
     if stale is None:
         return None
     return sorted((set(registry) - set(prior.get("queries", {}))) | stale)
@@ -297,6 +300,8 @@ def _check(sf_dir: str, names: list[str] | None) -> dict[str, dict]:
     """tools/check.py's verdicts for `names` (None: all) at `sf_dir`."""
     import tempfile
 
+    if names == []:
+        return {}
     fd, tmp = tempfile.mkstemp(suffix=".json")
     os.close(fd)
     try:
@@ -313,22 +318,18 @@ def _check(sf_dir: str, names: list[str] | None) -> dict[str, dict]:
     return verdicts
 
 
-def _regate(sf_dir: str, out_path: str, names: list[str] | None, registry) -> list[str]:
-    """Re-gate `names` (None: the whole registry) at `sf_dir`, merge the
-    verdicts over the rows of the newest artifact in out_path's series,
-    stamp the tree and write out_path. Returns the failures and the
-    coverage shortfall."""
+def _regate(sf_dir: str, out_path: str, names: list[str] | None,
+            verdicts: dict[str, dict], registry) -> list[str]:
+    """Write out_path from `verdicts`, the re-gate of `names` (None: the
+    whole registry) at `sf_dir`, merged over the other rows of the
+    newest artifact in out_path's series, and stamp the tree. Returns
+    the failures and the coverage shortfall; a re-gated name with no
+    verdict is a shortfall."""
     label = os.path.basename(out_path)
-    series = _series(re.sub(r"\d+\.json$", "", out_path))
-    rows = _load(series[-1] if series else None).get("queries", {})
-    if names is None or names:
-        print(f"  {label}: re-gating {len(names) if names else 'all'} names at {sf_dir}")
-        try:
-            rows = {**rows, **_check(sf_dir, names)}
-        except RuntimeError as e:
-            return [f"{label}: {e}"]
-    else:
-        print(f"  {label}: nothing missing or stale")
+    print(f"  {label}: {len(names) if names is not None else 'all'} names "
+          f"re-gated at {sf_dir}")
+    prior = {} if names is None else _newest(out_path).get("queries", {})
+    rows = {**{n: v for n, v in prior.items() if n not in names}, **verdicts}
     rows = {n: v for n, v in rows.items() if n in registry}
     by = {s: sorted(n for n, v in rows.items() if v.get("status") == s)
           for s in ("pass", "fail", "rows_only")}
@@ -345,28 +346,50 @@ def _regate(sf_dir: str, out_path: str, names: list[str] | None, registry) -> li
     return errs
 
 
-def run_bench(registry, delta: bool) -> list[str]:
-    """Step 2: sweep the names the bench artifact needs, stamp the tree
-    on it and check its coverage, records and red flags."""
-    names = _to_run(registry, _load(BENCH), BENCH_PY, delta)
+def run_check(registry, delta: bool, out_path: str) -> list[str]:
+    """Step 1: tools/check.py re-gates the names CHECK_full needs at
+    sf0.01, and _regate writes out_path."""
+    sf_dir = os.path.join(TESTDATA, "sf0.01")
+    names = _to_run(registry, _newest(out_path), PRODUCERS, delta)
+    try:
+        verdicts = _check(sf_dir, names)
+    except RuntimeError as e:
+        return [f"{os.path.basename(out_path)}: {e}"]
+    return _regate(sf_dir, out_path, names, verdicts, registry)
+
+
+def run_sweep(registry, delta: bool, check_path: str) -> list[str]:
+    """Step 2: one bench.py sweep over the names the bench artifact or
+    CHECK_sf01 needs. bench.py writes BENCH_full_latest.json, this step
+    stamps it and checks its coverage, records and red flags, and the
+    sweep's oracle verdicts become check_path through _regate."""
+    to_bench = _to_run(registry, _load(BENCH), (BENCH_PY,), delta)
+    to_check = _to_run(registry, _newest(check_path), (BENCH_PY,), delta)
+    names = (None if to_bench is None or to_check is None
+             else sorted(set(to_bench) | set(to_check)))
+    verdicts = {}
     if names is None or names:
         args = ["--all"] if names is None else ["--only", ",".join(names)]
         print(f"  bench.py {args[0]} ({len(names) if names else 'all'} names)")
         r = subprocess.run([sys.executable, os.path.join(REPO, BENCH_PY), *args],
                            cwd=REPO, stdout=subprocess.PIPE, text=True)
         sys.stdout.write(r.stdout)
+        lines = r.stdout.strip().splitlines()
         if r.returncode == JVM_LOST:  # its last line names the query
-            return [r.stdout.strip().splitlines()[-1]]
+            return [lines[-1]]
         if r.returncode:
             return [f"bench.py exited {r.returncode}"]
+        verdicts = json.loads(next(ln for ln in reversed(lines)
+                                   if ln.startswith("{")))["oracle"]
     else:
         print("  bench: nothing missing or stale")
+    errs = _regate(os.path.join(TESTDATA, "sf0.1"), check_path, names, verdicts,
+                   registry)
     bench = _load(BENCH)
     bench.update(_stamp())
     with open(BENCH, "w") as f:
         json.dump(bench, f, indent=1)
     timed = set(bench.get("queries", {}))
-    errs = []
     if len(timed | set(bench.get("errors", {}))) != len(registry):
         errs.append(f"BENCH_full covers {len(timed)}/{len(registry)}")
     if bench.get("errors"):
@@ -375,85 +398,6 @@ def run_bench(registry, delta: bool) -> list[str]:
     if timed - set(records):
         errs.append(f"BENCH_full has no record for {sorted(timed - set(records))}")
     return errs + [f"red flag: {f}" for f in red_flags(records)]
-
-
-def _prior_timings(old_head: str) -> dict[str, float]:
-    """The per-query seconds of the sweep committed at `old_head`."""
-    out = _git("show", f"{old_head}:BENCH_full_latest.json")
-    return json.loads(out).get("queries", {}) if out else {}
-
-
-def _judge_movers(aba: dict, check_path: str, registry, threshold: float) -> str | None:
-    """Fill `aba` with the movers' verdicts, or a note saying why there
-    are none. Returns an error string or None."""
-    import math
-
-    import ab
-
-    older = [p for p in _series(os.path.join(REPO, "CHECK_full_r")) if p < check_path]
-    old_head = _load(older[-1]).get("git_head") if older else None
-    if not old_head:
-        aba["note"] = f"no CHECK_full artifact before {os.path.basename(check_path)} has a git_head"
-        return None
-    prior = _prior_timings(old_head)
-    aba.update(old_head=old_head, prior_artifact=f"BENCH_full_latest.json@{old_head[:10]}")
-    if not prior:
-        aba["note"] = f"no sweep committed at {old_head[:10]}"
-        return None
-    cur = _load(BENCH).get("queries", {})
-    # Sub-half-second ratios are scheduler noise and move no total.
-    ratios = {n: cur[n] / p for n, p in prior.items()
-              if cur.get(n) and p > 0 and max(cur[n], p) >= 0.5}
-    ratio_movers = sorted(
-        (n for n, r in ratios.items() if r > threshold or r < 1 / threshold),
-        key=lambda n: abs(math.log(ratios[n])), reverse=True)[:10]
-    # Touched names: a ratio is what a drifted window poisons, so names
-    # whose code changed are judged too, the slowest first.
-    touched = _stale_names(registry, {"git_head": old_head}, None)
-    touched = sorted((n for n in (set(registry) if touched is None else touched)
-                      if n in cur and n not in ratio_movers),
-                     key=lambda n: cur[n], reverse=True)
-    candidates = ratio_movers + touched
-    movers = candidates[:ABA_MAX_MOVERS]
-    if candidates[ABA_MAX_MOVERS:]:
-        aba["movers_capped"] = {"cap": ABA_MAX_MOVERS,
-                                "n_dropped": len(candidates) - ABA_MAX_MOVERS,
-                                "dropped_head": candidates[ABA_MAX_MOVERS:][:10]}
-    if not movers:
-        aba["note"] = f"no movers beyond {threshold}x and no touched names in the sweep"
-        return None
-    print(f"  movers ({len(ratio_movers)} by ratio, "
-          f"{len(movers) - len(ratio_movers)} touched): {movers}")
-    try:
-        result = ab.compare(old_head, movers, pairs=3)
-    except (RuntimeError, OSError) as e:
-        return f"A/B legs failed: {e}"
-    aba["pairs"] = result["pairs"]
-    for n in movers:
-        aba["movers"][n] = {
-            "prior_round": prior.get(n), "this_sweep": cur[n],
-            "sweep_ratio": round(ratios[n], 3) if n in ratios else None,
-            **({} if n in ratios else {"selected_by": "touched"}),
-            **result["queries"][n],
-        }
-    n_conf = sum(1 for m in aba["movers"].values() if m["ab_confirmed"])
-    print(f"  {n_conf}/{len(movers)} movers confirmed by {result['pairs']} pairs")
-    return None
-
-
-def run_aba(rnd: int, check_path: str, registry, threshold: float = 1.3) -> str | None:
-    """Step 4: judge the sweep's movers and write ABA_latest.json, which
-    bench.py's headline mode attaches to its output."""
-    import time
-
-    aba = {"round": rnd, "git_head": _git_head(), "threshold": threshold,
-           "generated": time.strftime("%Y-%m-%dT%H:%M:%S"), "movers": {}}
-    err = _judge_movers(aba, check_path, registry, threshold)
-    if "note" in aba:
-        print(f"  {aba['note']}")
-    with open(ABA, "w") as f:
-        json.dump(aba, f, indent=1, sort_keys=True)
-    return err
 
 
 def assert_head() -> int:
@@ -488,26 +432,14 @@ def main() -> int:
     rnd = int(args[0]) if args else 0
     registry = load_all()
     print(f"registry: {len(registry)} queries")
-    check_path = os.path.join(REPO, f"CHECK_full_r{rnd:02d}.json")
-
-    def gate(prefix: str, sf: str) -> list[str]:
-        series = _series(os.path.join(REPO, prefix))
-        prior = _load(series[-1] if series else None)
-        return _regate(os.path.join(TESTDATA, sf),
-                       os.path.join(REPO, f"{prefix}{rnd:02d}.json"),
-                       _to_run(registry, prior, CHECK_PY, delta), registry)
+    full, sf01 = (os.path.join(REPO, f"{prefix}{rnd:02d}.json")
+                  for prefix in ("CHECK_full_r", "CHECK_sf01_r"))
 
     print("== sf0.01 oracle gate")
-    failures = gate("CHECK_full_r", "sf0.01")
-    print("== bench sweep")
-    failures += run_bench(registry, delta)
-    print("== sf0.1 oracle gate")
-    failures += gate("CHECK_sf01_r", "sf0.1")
+    failures = run_check(registry, delta, full)
+    print("== bench sweep and sf0.1 oracle gate")
+    failures += run_sweep(registry, delta, sf01)
     if not delta:
-        print("== A/B anchor")
-        err = run_aba(rnd, check_path, registry)
-        if err:
-            failures.append(f"aba: {err}")
         print("== recall smoke")
         r = subprocess.run([sys.executable, os.path.join(REPO, "tools/recall_smoke.py")],
                            cwd=REPO)
@@ -519,7 +451,7 @@ def main() -> int:
             print(" -", x)
         return 1
     print(f"ENDROUND OK: {len(registry)} queries covered by "
-          f"{os.path.basename(check_path)}, CHECK_sf01_r{rnd:02d}.json and "
+          f"{os.path.basename(full)}, {os.path.basename(sf01)} and "
           "BENCH_full_latest.json (records, no red flags)")
     return 0
 
