@@ -24,11 +24,19 @@ A table is read one of two ways:
 
 The memo key includes the parquet directory's mtime, so a sink that
 overwrites a path invalidates the stale handle on the next load.
+
+``recorded_loads()`` lists the handles ``load_table`` returns while it
+is open, so a caller that keeps something built from them (the
+prepared request plans of ``plans.api.dispatch``) can later ask
+whether each is still the memoized handle.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
@@ -84,6 +92,40 @@ _TABLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 
 _CACHE_ENABLED = True
 
+# SparkContext -> its applicationId, read over Py4J once per context
+# instead of on every load.
+_APP_IDS: weakref.WeakKeyDictionary[SparkContext, str] = weakref.WeakKeyDictionary()
+
+# While ``recorded_loads()`` is open: (base_dir, name) -> the handle
+# load_table returned.
+_LOADS: dict[tuple[str, str], DataFrame] | None = None
+
+
+def cache_enabled() -> bool:
+    """False inside ``cache_disabled()``."""
+    return _CACHE_ENABLED
+
+
+def app_id(spark: SparkSession) -> str:
+    """``spark``'s applicationId, without a Py4J call after the first."""
+    sc = spark.sparkContext
+    if sc not in _APP_IDS:
+        _APP_IDS[sc] = sc.applicationId
+    return _APP_IDS[sc]
+
+
+@contextmanager
+def recorded_loads() -> Iterator[dict[tuple[str, str], DataFrame]]:
+    """Yield a dict that maps the (base_dir, name) of every
+    ``load_table`` call made while the block runs to the handle it
+    returned."""
+    global _LOADS
+    prev, _LOADS = _LOADS, {}
+    try:
+        yield _LOADS
+    finally:
+        _LOADS = prev
+
 
 class cache_disabled:
     """Context manager: bare parquet scans, the shape every table takes
@@ -97,8 +139,8 @@ class cache_disabled:
         self._prev = _CACHE_ENABLED
         _CACHE_ENABLED = False
         sc = SparkContext._active_spark_context
-        for (app_id, _path, _mtime), df in _TABLE_CACHE.items():
-            if sc is not None and app_id == sc.applicationId:
+        for (app, _path, _mtime), df in _TABLE_CACHE.items():
+            if sc is not None and app == sc.applicationId:
                 df.unpersist()
         _TABLE_CACHE.clear()
         return self
@@ -145,6 +187,13 @@ def load_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     will see its unrelated timestamp rendering change; a RuntimeWarning
     is emitted when that override actually flips a non-UTC setting.
     """
+    df = _load_table(spark, base_dir, name)
+    if _LOADS is not None:
+        _LOADS[(base_dir, name)] = df
+    return df
+
+
+def _load_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
@@ -152,7 +201,7 @@ def load_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     key = None
     if _CACHE_ENABLED:
         size, mtime = _path_stats(path)
-        key = (spark.sparkContext.applicationId, os.path.abspath(path), mtime)
+        key = (app_id(spark), os.path.abspath(path), mtime)
         hit = _TABLE_CACHE.get(key)
         if hit is not None:
             # ``is_cached`` records that we cached it and survives
@@ -181,7 +230,7 @@ def load_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
                 f"{prev_tz!r} with UTC for nano-timestamp parity; this "
                 "affects timestamp rendering session-wide.",
                 RuntimeWarning,
-                stacklevel=2,
+                stacklevel=3,
             )
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(path)

@@ -19,6 +19,9 @@ local harness and, via the same knobs, for a large cluster:
   warmed run of that mix the JIT compiler threads were the largest CPU
   consumer, 0.20 of 0.72 CPU-s per request. Metaspace ended near 190
   MB after two passes with either cache size.
+- Driver memory is half of what this process may use (the lower of
+  ``MemTotal`` and the cgroup memory limit), between 1g and 8g, unless
+  ``SPARK_GRAFT_DRIVER_MEM`` sets it.
 - Frames built from driver-side rows go through ``local_frame``: an
   Arrow local relation plans as ``LocalTableScan``, where
   ``createDataFrame(list, ddl)`` plans as ``Scan ExistingRDD`` and
@@ -44,6 +47,42 @@ _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffini
 # Generated classes Spark keeps compiled: the whole dispatch table's
 # working set (579 at sf0.01) with room to spare.
 CODEGEN_CACHE_ENTRIES = 1000
+
+# Files that bound this process's memory; a missing cgroup file, or its
+# "max", reads as no limit.
+_MEMINFO = "/proc/meminfo"
+_CGROUP_MEMORY_MAX = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def driver_memory(meminfo: str, cgroup_max: str | None) -> str:
+    """Half the memory this process may use, floored at 1g and capped
+    at 8g: the lower of ``MemTotal`` in ``meminfo`` (the text of
+    /proc/meminfo) and the cgroup limit ``cgroup_max`` (bytes, or
+    "max"). Two 8g sessions on a 15 GB host got one JVM OOM-killed."""
+    limits = [
+        int(ln.split()[1]) * 1024  # kB
+        for ln in meminfo.splitlines() if ln.startswith("MemTotal:")
+    ]
+    if cgroup_max is not None and cgroup_max.strip() != "max":
+        limits.append(int(cgroup_max))
+    half_mb = min(limits, default=2**63) // 2 // 2**20
+    return f"{min(8192, max(1024, half_mb))}m"
+
+
+def _read(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
+def _host_driver_memory() -> str:
+    cgroup_max = next((t for t in map(_read, _CGROUP_MEMORY_MAX) if t is not None), None)
+    return driver_memory(_read(_MEMINFO) or "", cgroup_max)
 
 
 def get_session(
@@ -86,7 +125,10 @@ def get_session(
         .config("spark.sql.parquet.enableVectorizedReader", "true")
         # Static: a repeated request must find its classes compiled.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
         .config("spark.executor.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")

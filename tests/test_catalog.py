@@ -56,3 +56,30 @@ def test_default_cpus_follow_affinity(monkeypatch):
     finally:
         monkeypatch.undo()
         importlib.reload(session)
+
+
+MEMINFO = "MemTotal:       16479424 kB\nMemFree:         1000000 kB\n"
+
+
+def test_driver_memory_is_half_the_memory_this_process_may_use():
+    # 16,479,424 kB is 16,093 MiB; "max" and no cgroup file read as
+    # no limit.
+    assert session.driver_memory(MEMINFO, "max\n") == "8046m"
+    assert session.driver_memory(MEMINFO, None) == "8046m"
+    assert session.driver_memory(MEMINFO, f"{6 * 2**30}\n") == "3072m"
+    # Floored at 1g, capped at 8g.
+    assert session.driver_memory(MEMINFO, str(2**30)) == "1024m"
+    assert session.driver_memory("MemTotal: 67108864 kB\n", "max") == "8192m"
+    assert session.driver_memory("", None) == "8192m"
+
+
+def test_driver_memory_reads_meminfo_and_the_cgroup_limit(tmp_path, monkeypatch):
+    meminfo, v2, v1 = (tmp_path / n for n in ("meminfo", "memory.max", "limit"))
+    meminfo.write_text(MEMINFO)
+    v2.write_text("max\n")
+    v1.write_text(f"{4 * 2**30}\n")
+    monkeypatch.setattr(session, "_MEMINFO", str(meminfo))
+    monkeypatch.setattr(session, "_CGROUP_MEMORY_MAX", (str(v2), str(v1)))
+    assert session._host_driver_memory() == "8046m"
+    monkeypatch.setattr(session, "_CGROUP_MEMORY_MAX", (str(tmp_path / "none"), str(v1)))
+    assert session._host_driver_memory() == "2048m"

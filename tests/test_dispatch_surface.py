@@ -5,15 +5,27 @@ DataFrame on the smoke dataset.
 
 from __future__ import annotations
 
+import gc
+import json
+import os
+import sys
+from collections import OrderedDict
 from datetime import datetime, timedelta
+from urllib.parse import urlparse
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 
-from listenbrainz_server_spark.catalog import cache_disabled
+from listenbrainz_server_spark.catalog import cache_disabled, table_path
+from listenbrainz_server_spark.messages import CHUNK_USER_STATS, iter_message_chunks
 from listenbrainz_server_spark.plans import api
 from listenbrainz_server_spark.plans.api import QUERY_MAP, dispatch
 from listenbrainz_server_spark.schemas import TABLE_SCHEMAS
-from tests.conftest import group_jobs
+from tests.conftest import SF_CHECK, group_jobs
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -167,30 +179,37 @@ def test_ranged_dispatch_reuses_the_cached_handles_anchor(spark):
     assert _ranged(spark, SF, "anchor:second") == 0
 
 
+def _write_events(spark, path: str, day: int, n: int = 6) -> None:
+    rows = [
+        (i, datetime(2024, 1, day, 12), i % 3, "play", 1.0, None)
+        for i in range(n)
+    ]
+    spark.createDataFrame(rows, TABLE_SCHEMAS["events"]).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
 def test_rewritten_events_get_a_fresh_anchor(spark, tmp_path, monkeypatch):
     anchors = []
     resolve = api.resolve_range
     monkeypatch.setattr(
         api, "resolve_range", lambda a, r: anchors.append(a) or resolve(a, r)
     )
+    builds = _spy_builds(monkeypatch)
     path = str(tmp_path / "events.parquet")
 
-    def write_events(day: int) -> None:
-        rows = [
-            (i, datetime(2024, 1, day, 12), i % 3, "play", 1.0, None)
-            for i in range(6)
-        ]
-        spark.createDataFrame(rows, TABLE_SCHEMAS["events"]).write.mode(
-            "overwrite"
-        ).parquet(path)
-
-    write_events(10)
+    _write_events(spark, path, 10)
     _ranged(spark, str(tmp_path), "anchor:before-rewrite")
-    write_events(20)
+    _write_events(spark, path, 20)
     _ranged(spark, str(tmp_path), "anchor:after-rewrite")
-    # The new handle's anchor is memoised in turn.
+    # The repeat is a prepared hit: no build, no job, no range resolved.
     assert _ranged(spark, str(tmp_path), "anchor:after-rewrite:again") == 0
-    assert len(anchors) == 3
+    assert len(builds) == 2 and len(anchors) == 2
+    # Another request over the new handle builds, on its memoised anchor.
+    spark.sparkContext.setJobGroup("anchor:after-rewrite:week", "week")
+    dispatch("stats.user.entity", spark, str(tmp_path), stats_range="week")
+    assert group_jobs(spark, "anchor:after-rewrite:week") == 0
+    assert len(builds) == 3 and len(anchors) == 3
     assert anchors[1] - anchors[0] == timedelta(days=10)
     assert anchors[2] == anchors[1]
 
@@ -199,3 +218,150 @@ def test_bare_scan_computes_the_anchor_per_request(spark):
     with cache_disabled():
         assert _ranged(spark, SF, "anchor:bare:0") > 0
         assert _ranged(spark, SF, "anchor:bare:1") > 0
+
+
+# -- prepared request plans ----------------------------------------------
+
+
+def _spy_builds(monkeypatch) -> list[str]:
+    """Give ``dispatch`` an empty prepared map; the returned list grows
+    by one for every request it builds instead of serving from it."""
+    monkeypatch.setattr(api, "_PREPARED", OrderedDict())
+    builds: list[str] = []
+    recorded = api.recorded_loads
+
+    def spy():
+        builds.append("build")
+        return recorded()
+
+    monkeypatch.setattr(api, "recorded_loads", spy)
+    return builds
+
+
+def _served(spark, df, group: str) -> tuple[list[str], dict]:
+    """``df``'s messages as a sorted multiset of rows, and the jobs,
+    stages and tasks that draining it ran."""
+    spark.sparkContext.setJobGroup(group, group)
+    rows = sorted(
+        json.dumps(row, sort_keys=True, default=str)
+        for m in iter_message_chunks(df, CHUNK_USER_STATS, "x")
+        for row in m["data"]
+    )
+    rec = bench.record(spark, group)
+    return rows, {k: rec[k] for k in ("jobs", "stages", "tasks")}
+
+
+def _leaves(df) -> list:
+    it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    leaves = []
+    while it.hasNext():
+        leaves.append(it.next())
+    return leaves
+
+
+@pytest.mark.parametrize("name", sorted(api.PREPARED))
+def test_a_prepared_hit_serves_what_a_fresh_build_serves(spark, monkeypatch, name):
+    builds = _spy_builds(monkeypatch)
+    _served(spark, dispatch(name, spark, SF_CHECK), f"prepared:first:{name}")
+    # The handler's warm second build runs no Spark job: nothing in
+    # dispatch is skipped by a hit but planning.
+    group = f"prepared:build:{name}"
+    spark.sparkContext.setJobGroup(group, group)
+    fresh = api.get_query_handler(name)(spark, SF_CHECK)
+    hit = dispatch(name, spark, SF_CHECK)
+    assert group_jobs(spark, group) == 0
+    assert len(builds) == 1
+    assert _served(spark, hit, f"prepared:hit:{name}") == _served(
+        spark, fresh, f"prepared:fresh:{name}"
+    )
+    # Every leaf is a local relation or a scan of a table the build
+    # loaded, so the handle check sees every rewrite the plan reads.
+    (entry,) = api._PREPARED.values()
+    loaded = {os.path.abspath(table_path(d, t)) for d, t in entry.loads}
+    for leaf in _leaves(hit):
+        kind = leaf.getClass().getSimpleName()
+        assert kind in ("LogicalRelation", "LocalRelation", "OneRowRelation", "Range")
+        if kind == "LogicalRelation":
+            roots = leaf.relation().location().rootPaths()
+            assert {urlparse(roots.apply(i).toString()).path
+                    for i in range(roots.size())} <= loaded
+
+
+def test_a_warm_hit_makes_few_py4j_commands(spark, monkeypatch):
+    builds = _spy_builds(monkeypatch)
+    for _ in range(2):
+        dispatch("stats.user.entity", spark, SF, stats_range="week")
+    gc.collect()  # so no finalizer's release command lands in the count
+    commands = []
+    send = ClientServerConnection.send_command
+    monkeypatch.setattr(
+        ClientServerConnection, "send_command",
+        lambda self, command, *a, **k: commands.append(command)
+        or send(self, command, *a, **k),
+    )
+    dispatch("stats.user.entity", spark, SF, stats_range="week")
+    monkeypatch.setattr(ClientServerConnection, "send_command", send)
+    assert len(builds) == 1
+    assert len(commands) <= 10
+
+
+def test_rewritten_events_are_read_fresh(spark, tmp_path, monkeypatch):
+    builds = _spy_builds(monkeypatch)
+    path = str(tmp_path / "events.parquet")
+
+    def listens() -> int:
+        df = dispatch("stats.sitewide.entity", spark, str(tmp_path))
+        return sum(r["listen_count"] for r in df.collect())
+
+    _write_events(spark, path, 10, n=6)
+    assert listens() == 6 and listens() == 6
+    assert len(builds) == 1
+    _write_events(spark, path, 10, n=9)
+    assert listens() == 9
+    assert len(builds) == 2
+
+
+def test_nothing_is_prepared_under_cache_disabled(spark, monkeypatch):
+    builds = _spy_builds(monkeypatch)
+    with cache_disabled():
+        for _ in range(2):
+            dispatch("popularity.popularity", spark, SF)
+    assert builds == [] and not api._PREPARED
+
+
+def test_a_session_time_zone_change_forces_a_rebuild(spark, monkeypatch):
+    builds = _spy_builds(monkeypatch)
+    for _ in range(2):
+        dispatch("stats.sitewide.era_activity", spark, SF)
+    assert len(builds) == 1
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        dispatch("stats.sitewide.era_activity", spark, SF)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert len(builds) == 2
+    dispatch("stats.sitewide.era_activity", spark, SF)
+    assert len(builds) == 2
+
+
+def test_import_names_are_never_prepared(spark, monkeypatch):
+    imports = [n for n in QUERY_MAP if n.startswith("import.")]
+    assert imports and not api.PREPARED & set(imports)
+    builds = _spy_builds(monkeypatch)
+    for _ in range(2):
+        dispatch("import.dump.sample", spark, SF)
+    assert builds == [] and not api._PREPARED
+
+
+def test_the_prepared_map_is_bounded_and_skips_unhashable_params(spark, monkeypatch):
+    builds = _spy_builds(monkeypatch)
+    monkeypatch.setattr(api, "PREPARED_PLANS", 2)
+    for k in (1, 2, 3):
+        dispatch("stats.entity.listeners", spark, SF, k=k)
+    assert len(api._PREPARED) == 2 and len(builds) == 3
+    dispatch("stats.entity.listeners", spark, SF, k=3)  # kept
+    dispatch("stats.entity.listeners", spark, SF, k=1)  # evicted first
+    assert len(builds) == 4
+    # A list param has no key; such a request builds and keeps nothing.
+    df = dispatch("similarity.recording", spark, SF, tiebreak=["event_id"])
+    assert df.columns and len(api._PREPARED) == 2

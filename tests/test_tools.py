@@ -126,6 +126,23 @@ def test_ab_counters_diff_first_legs_and_flag_equality():
     assert ab.counters(new, None) == {"counters": None, "counters_equal": None}
 
 
+def test_ab_exempts_the_names_whose_counters_vary_between_runs():
+    rec = {"jobs": 15, "stages": 4, "tasks": 9, "shuffle_write_bytes": 100,
+           "sql_executions": 1, "ops": {"Exchange": 6}}
+    moved = {**rec, "jobs": 17, "ops": {"Exchange": 8}}
+    assert set(ab.VARIABLE_COUNTERS) == {
+        "v_pq_topk", "v_embedding_dup_groups", "m_als_cv", "d_semdedup"}
+    for name in ab.VARIABLE_COUNTERS:
+        got = ab.name_counters(name, moved, rec)
+        assert got["counters_equal"] == "exempt"
+        assert got["exempt_reason"] == ab.VARIABLE_COUNTERS[name]
+        assert got["counters"]["diff"]["jobs"] == 2
+        # Equal counters still read as equal.
+        assert ab.name_counters(name, rec, dict(rec))["counters_equal"] is True
+        assert ab.name_counters(name, rec, None)["counters_equal"] is None
+    assert ab.name_counters("a1_pricing_summary", moved, rec)["counters_equal"] is False
+
+
 def test_ab_cli_parsing():
     args = ab.parse_args(["HEAD~1", "q1,q2", "5"])
     assert (args.old_ref, args.names, args.pairs) == ("HEAD~1", ["q1", "q2"], 5)

@@ -23,7 +23,9 @@ differ by more than the interquartile range of the old legs. Otherwise
 Beside the verdict each name carries the execution-record counters of
 its first new and old legs and their difference. Counters do not drift
 with the host, so when `counters_equal` is true a wall delta is the
-host's, not the code's.
+host's, not the code's. A few names' counters differ between runs of
+one tree (VARIABLE_COUNTERS); when theirs differ, `counters_equal` is
+"exempt" and `exempt_reason` gives the measured variance.
 
 Prints the table on stderr and the JSON record on stdout.
 """
@@ -44,6 +46,19 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 COUNTERS = ("jobs", "stages", "tasks", "shuffle_write_bytes",
             "sql_executions", "ops")
+
+# Names whose counters do not repeat between two `bench.py --only <name>
+# --no-artifact` processes of the same tree (4-core host), each with the
+# difference measured.
+VARIABLE_COUNTERS = {
+    "v_pq_topk": "jobs 15 then 17 (Exchange 6 then 8), and shuffle bytes",
+    "v_embedding_dup_groups":
+        "jobs 70 then 68 (Exchange 35 then 33), and shuffle bytes",
+    "m_als_cv": "sql_executions 12 against 14, Exchange 19 against 22, "
+                "BroadcastHashJoin 8 against 10; jobs 95, 94 and 97",
+    "d_semdedup": "ops Filter 4 then 5, Sort 5 then 6, "
+                  "FlatMapGroupsInPandas 1 then 2 at equal jobs and tasks",
+}
 
 
 @contextlib.contextmanager
@@ -115,6 +130,15 @@ def counters(new: dict | None, old: dict | None) -> dict:
             "counters_equal": not any(diff.values())}
 
 
+def name_counters(name: str, new: dict | None, old: dict | None) -> dict:
+    """counters(new, old), with a VARIABLE_COUNTERS name's difference
+    reported as "exempt" beside its measured reason."""
+    out = counters(new, old)
+    if out["counters_equal"] is False and name in VARIABLE_COUNTERS:
+        out.update(counters_equal="exempt", exempt_reason=VARIABLE_COUNTERS[name])
+    return out
+
+
 def compare(old_ref: str, names: list[str], pairs: int = 3,
             run_leg=run_leg, repo: str = REPO) -> dict:
     """Run `pairs` (at least 3) interleaved old/new legs over `names`
@@ -143,7 +167,7 @@ def compare(old_ref: str, names: list[str], pairs: int = 3,
             "legs": [{"first": f, "new": a, "old": b}
                      for f, a, b in zip(firsts, new, old)],
             **judge(new, old),
-            **counters(records["new"][0].get(n), records["old"][0].get(n)),
+            **name_counters(n, records["new"][0].get(n), records["old"][0].get(n)),
         }
     return {"old_ref": old_ref, "pairs": pairs, "queries": queries}
 
