@@ -38,9 +38,9 @@ Each run executes under the Spark job group "bench:<name>:<i>". With
 --all / --only, the last timed run of each query is read back from
 Spark's own status stores into a per-query record (jobs, stages,
 tasks, executor time, shuffle and spill bytes, SQL executions, the
-executed plan-node counts, not counting a cached relation's plan, the
-classes codegen compiled and the JIT's compile milliseconds), written
-under "records"; red_flags() is the one check on it. Profile one query with
+executed plan-node counts, not counting a cached relation's plan, and
+the classes codegen compiled), written under "records"; red_flags() is
+the one check on it. Profile one query with
 `python bench.py --only <name> --no-artifact`.
 """
 
@@ -193,26 +193,14 @@ def codegen_compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def compile_counters(spark) -> tuple[int, int]:
-    """(codegen_compiles(), milliseconds HotSpot's JIT compilers have
-    spent compiling in this JVM so far). The JIT is the largest CPU
-    consumer on a warmed request path: in a steady-state run of the
-    request benchmark's small-stats mix (4-core host) its compiler
-    threads used 0.159 CPU-s per request against the executor tasks'
-    0.088, compiling Catalyst (org.apache.spark.sql) most of all."""
-    mx = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-    return codegen_compiles(spark), mx.getTotalCompilationTime()
-
-
-def record(spark, group: str, compiles_before: tuple[int, int] | None = None) -> dict:
+def record(spark, group: str, compiles_before: int | None = None) -> dict:
     """What the jobs of `group` executed, read from Spark's status
     stores: the AppStatusStore for jobs and stages, the
     SQLAppStatusStore for the plan graph of each SQL execution that ran
     one of those jobs (final plans: AQE re-plans update the graph).
-    With `compiles_before`, compile_counters() read before the run,
-    the record carries the classes codegen compiled and the JIT's
-    compile milliseconds during the run. Uses only pyspark and JVM
-    APIs, so tools/ab.py can run it on old trees."""
+    With `compiles_before`, codegen_compiles() read before the run,
+    the record carries the classes the run compiled. Uses only pyspark
+    and JVM APIs, so tools/ab.py can run it on old trees."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()  # the stores lag the scheduler
     app = jsc.statusStore()
@@ -255,9 +243,7 @@ def record(spark, group: str, compiles_before: tuple[int, int] | None = None) ->
             ops[op] = ops.get(op, 0) + 1
     rec["ops"] = dict(sorted(ops.items()))
     if compiles_before is not None:
-        codegen, jit_ms = compile_counters(spark)
-        rec["codegen_compiles"] = codegen - compiles_before[0]
-        rec["jit_compile_ms"] = jit_ms - compiles_before[1]
+        rec["codegen_compiles"] = codegen_compiles(spark) - compiles_before
     return rec
 
 
@@ -508,7 +494,7 @@ def main() -> None:
         samples: list[float] = []
         # Read after each run: nothing runs between two runs of a name,
         # so the last two readings bound the last run's compiles.
-        compiles_after: list[tuple[int, int]] = []
+        compiles_after: list[int] = []
 
         def one_run(run: int | str) -> tuple[list[str], list[tuple]] | None:
             """One run under its job group. The warm-up collects the frame
@@ -522,7 +508,7 @@ def main() -> None:
             else:  # Force full execution of every operator in the plan.
                 df.write.format("noop").mode("overwrite").save()
             samples.append(time.time() - t0)
-            compiles_after.append(compile_counters(spark))
+            compiles_after.append(codegen_compiles(spark))
             return result
 
         try:

@@ -17,9 +17,9 @@ base∪incremental union — is what the import.* entries run.
 **Prepared request plans.** ``dispatch`` keeps the analyzed plan of a
 request's first build and serves repeats from it:
 
-- *Key:* (applicationId, handler object, sf_dir, sorted params,
-  session time zone), in a map of at most ``PREPARED_PLANS`` entries,
-  least recently used evicted first.
+- *Key:* (applicationId, handler object, sf_dir, sorted params with
+  each value's type, session time zone), in a map of at most
+  ``PREPARED_PLANS`` entries, least recently used evicted first.
 - *Validity:* a repeat is served from the plan only while the catalog
   cache is on and every ``load_table`` handle the first build used is
   still the memoized handle (``catalog.recorded_loads``). A rewritten
@@ -38,6 +38,19 @@ stage output is reused; only the handler's Python and the analysis
 request kinds of the request benchmark's small-stats mix, alternated in
 one session on a 4-core host, a hit dispatched in 0.9 ms against 42 ms
 for a build, and execution took the same time after either.
+
+The layer pays only on traffic that repeats a (name, params) pair
+between rewrites of the tables it reads. The small-stats mix is such
+traffic: nine fixed requests, warmed before timing, so every timed
+request is a hit. The reference's stats requests are not: they are
+sent on a schedule, one per (entity, range), between the daily imports
+that append listens, so a key rarely meets an unchanged table twice
+and nearly every request misses. A miss pays the build plus
+four Py4J round trips (two time-zone reads and the analyzed plan).
+With every request of the small-stats mix a miss (the bound set to 0,
+so each plan is kept and evicted at once), 21 alternated runs of the
+request benchmark on a 4-core host gave a median latency of 0.227 s,
+against 0.232 s before the layer and 0.223 s with it switched off.
 """
 
 from __future__ import annotations
@@ -610,16 +623,22 @@ PREPARED_PLANS = 128
 class _Prepared(NamedTuple):
     plan: JavaObject  # the first build's analyzed logical plan
     loads: dict[tuple[str, str], DataFrame]  # (base_dir, table) -> handle it used
-    of_rows: JavaMember  # Dataset.ofRows, looked up once per entry
 
 
-# (applicationId, handler, sf_dir, sorted params, session time zone)
+# (applicationId, handler, sf_dir, sorted (name, type, value) params,
+# session time zone). A value's type is part of the key: k=1, k=1.0 and
+# k=True compare equal, yet build different plans or fail differently.
 _PREPARED: OrderedDict[tuple, _Prepared] = OrderedDict()
+
+# applicationId -> Dataset.ofRows, looked up once per application (the
+# lookup is seven Py4J round trips).
+_OF_ROWS: dict[str, JavaMember] = {}
 
 
 def _prepared_key(handler, spark: SparkSession, sf_dir: str, params: dict) -> tuple:
     return (
-        app_id(spark), handler, sf_dir, tuple(sorted(params.items())),
+        app_id(spark), handler, sf_dir,
+        tuple(sorted((k, type(v), v) for k, v in params.items())),
         spark.conf.get("spark.sql.session.timeZone"),
     )
 
@@ -642,21 +661,20 @@ def dispatch(name: str, spark: SparkSession, sf_dir: str, **params) -> DataFrame
         hit = _PREPARED.get(key)
     except TypeError:  # an unhashable param value
         return handler(spark, sf_dir, **params)
+    app = key[0]
     if hit is not None and all(
         load_table(spark, d, t) is h for (d, t), h in hit.loads.items()
     ):
         _PREPARED.move_to_end(key)
-        return DataFrame(hit.of_rows(spark._jsparkSession, hit.plan), spark)
+        return DataFrame(_OF_ROWS[app](spark._jsparkSession, hit.plan), spark)
     with recorded_loads() as loads:
         df = handler(spark, sf_dir, **params)
+    if app not in _OF_ROWS:
+        _OF_ROWS[app] = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
     # Keyed after the build: loading events pins the session to UTC.
     key = _prepared_key(handler, spark, sf_dir, params)
     _PREPARED.pop(key, None)
-    _PREPARED[key] = _Prepared(
-        df._jdf.queryExecution().analyzed(),
-        loads,
-        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows,
-    )
+    _PREPARED[key] = _Prepared(df._jdf.queryExecution().analyzed(), loads)
     if len(_PREPARED) > PREPARED_PLANS:
         _PREPARED.popitem(last=False)
     return df

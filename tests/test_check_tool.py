@@ -108,7 +108,7 @@ def _run_bench(monkeypatch, tmp_path, registry: dict[str, Query], names: str):
     monkeypatch.setattr(pyspark.ml.recommendation, "ALS", FakeALS)
     monkeypatch.setattr(bench, "load_all", lambda: registry)
     monkeypatch.setattr(bench, "get_session", lambda app: spark)
-    monkeypatch.setattr(bench, "compile_counters", lambda spark: (0, 0))
+    monkeypatch.setattr(bench, "codegen_compiles", lambda spark: 0)
     monkeypatch.setattr(bench, "record", lambda spark, group, before: {"jobs": 1})
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
     monkeypatch.setattr(sys, "argv", ["bench.py", "--only", names, "--no-artifact"])
