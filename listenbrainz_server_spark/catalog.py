@@ -22,8 +22,9 @@ A table is read one of two ways:
   Entering it un-caches the memoized handles, since Spark would
   otherwise substitute a cached copy whose plan equals the plain scan.
 
-The memo key includes the parquet directory's mtime, so a sink that
-overwrites a path invalidates the stale handle on the next load.
+The memo keeps one handle per (session, path) with its files' newest
+mtime; a load that sees another mtime (a sink rewrote the path)
+unpersists the superseded handle and memoizes a new one.
 
 ``recorded_loads()`` lists the handles ``load_table`` returns while it
 is open, so a caller that keeps something built from them (the
@@ -59,9 +60,9 @@ def table_path(base_dir: str, name: str) -> str:
     return os.path.join(base_dir, f"{name}.parquet")
 
 
-# Columns stored as parquet TIMESTAMP(NANOS): Spark reads them as long
-# (spark.sql.legacy.parquet.nanosAsLong) and we convert to micros
-# timestamps here — same truncation DuckDB applies reading TIMESTAMP_NS.
+# Timestamp columns made micros TimestampType by `_load_table`, whose
+# branches name the input each serves. A UTC-adjusted timestamp (the
+# request benchmark's listens) reads as TimestampType and passes as is.
 _NANO_TS_COLS = {"events": ("ts",)}
 
 _CACHE_MAX_BYTES = 512 * 1024 * 1024
@@ -87,8 +88,8 @@ _CACHE_MAX_BYTES = 512 * 1024 * 1024
 # without repartitioning); panel totals 5.35 / 5.12 / 6.38 / 9.61 s.
 _CACHE_PARTITION_BYTES = 1024 * 1024
 
-# (applicationId, abspath, mtime_ns) -> DataFrame
-_TABLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+# (applicationId, abspath) -> (newest mtime_ns, DataFrame)
+_TABLE_CACHE: dict[tuple[str, str], tuple[int, DataFrame]] = {}
 
 _CACHE_ENABLED = True
 
@@ -139,7 +140,7 @@ class cache_disabled:
         self._prev = _CACHE_ENABLED
         _CACHE_ENABLED = False
         sc = SparkContext._active_spark_context
-        for (app, _path, _mtime), df in _TABLE_CACHE.items():
+        for (app, _path), (_mtime, df) in _TABLE_CACHE.items():
             if sc is not None and app == sc.applicationId:
                 df.unpersist()
         _TABLE_CACHE.clear()
@@ -201,9 +202,11 @@ def _load_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     key = None
     if _CACHE_ENABLED:
         size, mtime = _path_stats(path)
-        key = (app_id(spark), os.path.abspath(path), mtime)
-        hit = _TABLE_CACHE.get(key)
-        if hit is not None:
+        key = (app_id(spark), os.path.abspath(path))
+        hit_mtime, hit = _TABLE_CACHE.get(key, (None, None))
+        if hit is not None and hit_mtime != mtime:
+            hit.unpersist()  # superseded by a rewrite of the path
+        elif hit is not None:
             # ``is_cached`` records that we cached it and survives
             # clearCache(); the storage level is what Spark holds now.
             if hit.is_cached and not hit._jdf.storageLevel().useMemory():
@@ -239,13 +242,16 @@ def _load_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
             continue
         dtype = df.schema[col].dataType
         if isinstance(dtype, LongType):
-            # Integer `div` — float division loses precision at 1e18 ns.
+            # An older generation's TIMESTAMP(NANOS), read as long
+            # (nanosAsLong); truncated to micros as DuckDB reads
+            # TIMESTAMP_NS. Integer `div` — float division loses
+            # precision at 1e18 ns.
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
         elif isinstance(dtype, TimestampNTZType):
-            # Newer testdata stores native parquet timestamps with
-            # isAdjustedToUTC=false; normalize to TimestampType so both
-            # generations present one schema (wall clock preserved —
-            # rendering happens in the same session timezone). Cast via
+            # The testdata's timestamp[us] with isAdjustedToUTC=false;
+            # normalize to TimestampType so both generations present
+            # one schema (wall clock preserved — rendering happens in
+            # the same session timezone). Cast via
             # the explicit type object: the "timestamp" DDL keyword
             # resolves to TIMESTAMP_NTZ (a no-op cast) when a session
             # sets spark.sql.timestampType=TIMESTAMP_NTZ.
@@ -266,6 +272,6 @@ def _load_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
             if nparts > 1:
                 df = df.repartition(nparts)
             df = df.cache()
-        _TABLE_CACHE[key] = df
+        _TABLE_CACHE[key] = (mtime, df)
     return df
 

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.operators.topk import top_k_per_group
-from listenbrainz_server_spark.session import local_frame
+from listenbrainz_server_spark.session import local_frame, scratch_root
 
 # Every score these operators return is ROUNDed to 6 places, the
 # precision the DuckDB oracles compare at.
@@ -178,37 +178,6 @@ def resolve_n_probe(n_probe, nlist: int) -> int:
     return int(n_probe)
 
 
-def _scratch_root(spark) -> str:
-    """Resolve the staging location for multi-stage operators.
-
-    Order: Spark conf ``spark.lbs.scratchDir`` → env ``LBS_SCRATCH_DIR``
-    → a driver-local tempdir. The first two accept any Hadoop-compatible
-    URI (hdfs://, s3a://, shared NFS mount) and one of them is REQUIRED
-    on a multi-node cluster: executors write the staged data, so the
-    path must be visible to every node. The tempdir fallback is correct
-    only where driver and executors share a filesystem (local mode /
-    single-node), which is the test harness's situation.
-    """
-    import tempfile
-
-    configured = spark.conf.get("spark.lbs.scratchDir", None)
-    if not configured:
-        import os
-
-        configured = os.environ.get("LBS_SCRATCH_DIR")
-    return configured or tempfile.mkdtemp(prefix="lbs_scratch_")
-
-
-def _hadoop_delete(spark, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API — works for
-    any scheme the cluster can reach (hdfs://, s3a://, file:/), unlike
-    driver-side shutil which only sees the driver's local disk."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
-
-
 def _iter_ref_blocks(
     vectors: DataFrame, id_col: str, vec_col: str, block_rows: int
 ):
@@ -229,14 +198,12 @@ def _iter_ref_blocks(
     full corpus). Total I/O is one scan + one write + one read,
     independent of n_blocks.
 
-    Staging location: blocks land under ``_scratch_root`` —
-    configure ``spark.lbs.scratchDir`` (or ``LBS_SCRATCH_DIR``) to a
-    shared filesystem on a multi-node cluster; the driver never probes
-    the path with local-FS calls (reads go through Spark with partition
-    pruning, cleanup through the Hadoop FS API), so any URI scheme the
-    executors can reach works.
+    Staging location: blocks land in a directory under
+    ``session.scratch_root`` (a shared mount on a multi-node cluster,
+    set by ``spark.lbs.scratchDir``), removed when the loop ends.
     """
-    import uuid
+    import shutil
+    import tempfile
 
     import numpy as np
 
@@ -256,12 +223,11 @@ def _iter_ref_blocks(
             yield _to_broadcast(sc, pdf)
         return
 
-    # NOTE: partition column must not start with "_" — underscore-
-    # prefixed paths are hidden from Hadoop file listings.
-    blocks_path = _scratch_root(spark).rstrip("/") + (
-        f"/bf_ref_blocks_{uuid.uuid4().hex}"
-    )
+    blocks_dir = tempfile.mkdtemp(prefix="bf_ref_blocks_", dir=scratch_root(spark))
+    blocks_path = blocks_dir + "/blocks"
     try:
+        # NOTE: partition column must not start with "_" — underscore-
+        # prefixed paths are hidden from Hadoop file listings.
         (
             vectors.select(id_col, vec_col)
             .withColumn("blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)))
@@ -282,7 +248,7 @@ def _iter_ref_blocks(
                 continue
             yield _to_broadcast(sc, pdf)
     finally:
-        _hadoop_delete(spark, blocks_path)
+        shutil.rmtree(blocks_dir, ignore_errors=True)
 
 
 def _materialize_partial(df: DataFrame, bcast) -> DataFrame:

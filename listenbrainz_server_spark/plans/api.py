@@ -83,7 +83,7 @@ from listenbrainz_server_spark.plans.incremental_stats import (
     user_entity_stat,
 )
 from listenbrainz_server_spark.plans.ranges import resolve_range
-from listenbrainz_server_spark.session import local_frame
+from listenbrainz_server_spark.session import local_frame, scratch_root
 
 
 def _registered(name: str) -> Callable:
@@ -388,7 +388,7 @@ def _import_archive(
     the 1-row import report the reference handler returns as JSON."""
     from listenbrainz_server_spark.sources.dump import import_dump
 
-    work = tempfile.mkdtemp(prefix="lbs_import_")
+    work = tempfile.mkdtemp(prefix="lbs_import_", dir=scratch_root(spark))
     return import_dump(
         spark,
         archive,
@@ -419,7 +419,8 @@ def _import_full(
 
     ev = load_table(spark, sf_dir, "events")
     out = out_path or os.path.join(
-        tempfile.mkdtemp(prefix="lbs_import_"), "events_full"
+        tempfile.mkdtemp(prefix="lbs_import_", dir=scratch_root(spark)),
+        "events_full",
     )
     atomic_swap_write(ev, out)
     return spark.read.parquet(out)
@@ -474,7 +475,7 @@ def _import_mlhd(
     from listenbrainz_server_spark.sources.readers import mlhd_csv_ingest
 
     if csv_glob is None:
-        d = tempfile.mkdtemp(prefix="lbs_mlhd_")
+        d = tempfile.mkdtemp(prefix="lbs_mlhd_", dir=scratch_root(spark))
         with open(os.path.join(d, "user0.txt"), "w") as f:
             f.write("100\tmb1\trel1\trec1\n")
         csv_glob = os.path.join(d, "*.txt")
@@ -502,7 +503,8 @@ def _import_compact(
         "day", F.to_date("ts")
     )
     out = out_path or os.path.join(
-        tempfile.mkdtemp(prefix="lbs_compact_"), "events_compact"
+        tempfile.mkdtemp(prefix="lbs_compact_", dir=scratch_root(spark)),
+        "events_compact",
     )
     partitioned_overwrite(ev, out, ["day"])
     return spark.read.parquet(out)
@@ -518,7 +520,9 @@ def _import_pg_tables(
 
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
-    out = out_path or os.path.join(tempfile.mkdtemp(prefix="lbs_pg_"), "dims")
+    out = out_path or os.path.join(
+        tempfile.mkdtemp(prefix="lbs_pg_", dir=scratch_root(spark)), "dims"
+    )
     dims = nation.join(
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select(

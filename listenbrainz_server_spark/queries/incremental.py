@@ -6,8 +6,8 @@ invariant (SURVEY.md §7.4 hard part #1).
 
 from __future__ import annotations
 
-import atexit
-import shutil
+import hashlib
+import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -16,30 +16,24 @@ from pyspark.sql import functions as F
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.incremental.engine import IncrementalEngine, IncrementalStat
 from listenbrainz_server_spark.queries import register
+from listenbrainz_server_spark.session import scratch_root
 
 _CUTOFF = "2024-01-20"
 
-_STATE_ROOT: str | None = None
 
-
-def _state_dir(sf_dir: str) -> str:
-    """Process-lifetime incremental state dir, one subdir per input
-    dataset (a partial built over sf0.001 must never satisfy the
-    freshness check for an sf0.01 run — the date range alone matches).
+def _state_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Process-lifetime incremental state dir under the scratch root,
+    one subdir per input dataset (a partial built over sf0.001 must
+    never satisfy the freshness check for an sf0.01 run — the date
+    range alone matches). A stable path, so a later call in the same
+    process reuses the stored partial.
 
     Outlives the returned DataFrame's lazy plan (the plan reads the
     Parquet partial on execution — a driver-side collect to 'rescue'
     rows from a vanishing temp dir would be a hot-path anti-pattern at
-    aggregate cardinality ×100). Cleaned at interpreter exit."""
-    global _STATE_ROOT
-    if _STATE_ROOT is None:
-        _STATE_ROOT = tempfile.mkdtemp(prefix="lbs_incr_state_")
-        atexit.register(shutil.rmtree, _STATE_ROOT, ignore_errors=True)
-    import hashlib
-
+    aggregate cardinality ×100)."""
     sub = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = f"{_STATE_ROOT}/{sub}"
-    return path
+    return os.path.join(scratch_root(spark), "incr_state", sub)
 
 
 def _user_type_stat() -> IncrementalStat:
@@ -73,7 +67,7 @@ def _user_type_stat() -> IncrementalStat:
 def i_incremental_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cutoff = F.lit(_CUTOFF).cast("timestamp")
-    engine = IncrementalEngine(spark, _state_dir(sf_dir))
+    engine = IncrementalEngine(spark, _state_dir(spark, sf_dir))
     stat = _user_type_stat()
     combined = engine.run(
         stat,
@@ -113,7 +107,7 @@ def i_incremental_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def i_affected_key_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cutoff = F.lit(_CUTOFF).cast("timestamp")
-    engine = IncrementalEngine(spark, _state_dir(sf_dir))
+    engine = IncrementalEngine(spark, _state_dir(spark, sf_dir))
     stat = IncrementalStat(
         name="user_event_counts_pruned",
         aggregate=lambda df: df.groupBy("user_id", "event_type").agg(
@@ -400,8 +394,6 @@ def i_deletion_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "swap/rollback pytest-pinned",
 )
 def i_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.sources.versioned import (
         commit_version,
         read_version,
@@ -419,7 +411,8 @@ def i_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("sp"),
         )
 
-    root = tempfile.mkdtemp(prefix="i_time_travel_") + "/orders_agg"
+    root = tempfile.mkdtemp(prefix="i_time_travel_", dir=scratch_root(spark))
+    root += "/orders_agg"
     v1 = commit_version(
         snapshot(orders.where(F.col("o_orderdate") < F.lit("1997-01-01"))),
         root,
@@ -458,7 +451,7 @@ def i_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # zero-groups is exact. Money is integer-cent quantized BEFORE
 # summation (float sums are not associative enough to survive
 # subtract-then-compare — the repo's order-free-sum convention).
-# retract prunes the combine to erased keys (P8): a small
+# retract prunes the combine to erased keys: a small
 # erasure batch touches a small state slice; the untouched remainder
 # unions back verbatim. Oracle = direct recompute over the surviving
 # rows, so the gate proves retraction == rebuild.
@@ -482,8 +475,7 @@ def i_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "retraction == full recompute of survivors",
 )
 def i_retraction_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    state_dir = tempfile.mkdtemp(prefix="i_retract_")
-    atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
+    state_dir = tempfile.mkdtemp(prefix="i_retract_", dir=scratch_root(spark))
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").cast("bigint").alias("custkey"),
         F.col("o_orderkey").alias("okey"),

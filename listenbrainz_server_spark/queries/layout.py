@@ -206,6 +206,7 @@ def x_chunked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_session_ids,
     )
     from listenbrainz_server_spark.plans.chunked import run_chunked
+    from listenbrainz_server_spark.session import scratch_root
 
     ev = load_table(spark, sf_dir, "events")
 
@@ -219,7 +220,7 @@ def x_chunked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_col="user_id",
         n_chunks=4,
         per_chunk=per_chunk,
-        state_dir=tempfile.mkdtemp(prefix="lbs_chunk_"),
+        state_dir=tempfile.mkdtemp(prefix="lbs_chunk_", dir=scratch_root(spark)),
         combine=lambda df: df.groupBy("item_a", "item_b").agg(
             F.sum("score").cast("bigint").alias("score")
         ),

@@ -414,8 +414,11 @@ def m_als_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from listenbrainz_server_spark.operators.sampling import split_label
+    from listenbrainz_server_spark.session import scratch_root
 
-    registry_dir = tempfile.mkdtemp(prefix="lbs_model_registry_")
+    registry_dir = tempfile.mkdtemp(
+        prefix="lbs_model_registry_", dir=scratch_root(spark)
+    )
     grid_df = als_cv_lifecycle(
         spark, sf_dir, registry_dir, max_iter=2, parallelism=4
     ).localCheckpoint(eager=True)

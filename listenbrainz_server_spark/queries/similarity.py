@@ -7,6 +7,9 @@ fold dot products in the same left-to-right double order.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,6 +23,7 @@ from listenbrainz_server_spark.operators.similarity import (
     mmr_rerank,
 )
 from listenbrainz_server_spark.queries import register
+from listenbrainz_server_spark.session import scratch_root
 
 _DIMS = 64
 _DOT = (
@@ -340,14 +344,10 @@ def v_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reconstruction MSE ~10%, see v_opq_rotation)",
 )
 def v_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     import numpy as np
     import pandas as pd
 
     from listenbrainz_server_spark.operators.similarity import (
-        _hadoop_delete,
-        _scratch_root,
         ivfpq_topk,
         opq_train,
         unit_vectors,
@@ -378,21 +378,20 @@ def v_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame 8.1 s vs 2-3 s on parquet, same data). float32 matches the
     # source column type — the downstream quantizer re-normalizes and
     # re-rounds, so the cast costs nothing the PQ didn't already.
-    # Scratch lives under _scratch_root (cluster-reachable URI) and is
-    # deleted in the finally: a tempfile.mkdtemp form stranded a
-    # corpus-sized parquet copy in /tmp per invocation. The audit result is a 1-row aggregate, so
-    # eagerly checkpointing it before the delete is free and the
-    # UnsafeRow-rescans trap above doesn't apply to the OUTPUT.
-    scratch = _scratch_root(spark).rstrip("/") + (
-        f"/opq_rotated_{uuid.uuid4().hex}"
-    )
+    # The copy is corpus-sized, so it is removed in the finally rather
+    # than kept until the scratch root goes at exit. The audit result
+    # is a 1-row aggregate, so eagerly checkpointing it before the
+    # delete is free and the UnsafeRow-rescans trap above doesn't apply
+    # to the OUTPUT.
+    scratch = tempfile.mkdtemp(prefix="opq_rotated_", dir=scratch_root(spark))
+    rotated_path = scratch + "/rotated"
     try:
         emb.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         ).mapInPandas(rot, "vec_id bigint, embedding array<float>").write.parquet(
-            scratch
+            rotated_path
         )
-        rotated = spark.read.parquet(scratch)
+        rotated = spark.read.parquet(rotated_path)
         # Auto dial triple, same reasoning as v_ivfpq_topk — the
         # fixed (8, 2, 8) dial read recall < 0.42 at sf0.1 in the
         # CHECK_sf01_r13 sweep; the oracle is dial-independent.
@@ -408,7 +407,7 @@ def v_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True
         )
     finally:
-        _hadoop_delete(spark, scratch)
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -712,8 +711,6 @@ def _incr_index_sql() -> str:
     "+ delta-only indexing of new vectors == full recompute",
 )
 def v_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.operators.similarity import as_double, lsh_signature
     from listenbrainz_server_spark.sources.sinks import atomic_swap_write
 
@@ -731,7 +728,8 @@ def v_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_rows = emb.where(F.col("vec_id") % 10 != 7)
     delta_rows = emb.where(F.col("vec_id") % 10 == 7)
 
-    state = tempfile.mkdtemp(prefix="ann_index_") + "/sig_index"
+    state = tempfile.mkdtemp(prefix="ann_index_", dir=scratch_root(spark))
+    state += "/sig_index"
     atomic_swap_write(index_of(base_rows), state)
 
     # Incremental step: index ONLY the delta, append to the state.
@@ -777,8 +775,6 @@ _DRIFT_REFIT_THRESHOLD = 0.6
     "per-bucket frame itself can't hash cross-engine)",
 )
 def v_ivfpq_delta_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.operators.similarity import (
         ivf_drift_report,
         ivfpq_encode,
@@ -793,7 +789,8 @@ def v_ivfpq_delta_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers, books = ivfpq_train_artifacts(
         base, "vec_id", "embedding", dims=_DIMS, n_centroids=8, m=8
     )
-    state = tempfile.mkdtemp(prefix="ivfpq_index_") + "/index"
+    state = tempfile.mkdtemp(prefix="ivfpq_index_", dir=scratch_root(spark))
+    state += "/index"
     # repartition BY THE BUCKET COLUMN before the partitioned write:
     # the encode frame is 32-way partitioned (unit_vectors), and
     # partitionBy from there fans out partitions × buckets tiny files

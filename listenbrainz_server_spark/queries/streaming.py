@@ -7,12 +7,14 @@ run as batch DataFrames so DuckDB can verify the semantics
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.queries import register
-from listenbrainz_server_spark.session import local_frame
+from listenbrainz_server_spark.session import local_frame, scratch_root
 from listenbrainz_server_spark.streaming.jobs import (
     session_aggregate,
     sliding_trending,
@@ -171,8 +173,6 @@ def st_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "micro-batch, atomic swap), state compared against batch aggregate",
 )
 def st_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.streaming.jobs import (
         foreach_batch_upsert,
         read_parquet_stream,
@@ -182,7 +182,7 @@ def st_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file stream source monitors a DIRECTORY (an append log);
     # stage the single-file table as one, split so several
     # micro-batches actually exercise the combine.
-    root = tempfile.mkdtemp(prefix="st_fb_")
+    root = tempfile.mkdtemp(prefix="st_fb_", dir=scratch_root(spark))
     log_dir, state = root + "/log", root + "/agg"
     ev.repartition(4).write.mode("overwrite").parquet(log_dir)
     # max_files=2 -> two triggers: the second still merges into
@@ -224,8 +224,6 @@ def st_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state compared against the batch argmax",
 )
 def st_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.streaming.jobs import (
         foreach_batch_merge_latest,
         read_parquet_stream,
@@ -234,7 +232,7 @@ def st_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    root = tempfile.mkdtemp(prefix="st_lww_")
+    root = tempfile.mkdtemp(prefix="st_lww_", dir=scratch_root(spark))
     log_dir, state = root + "/log", root + "/state"
     ev.repartition(4).write.mode("overwrite").parquet(log_dir)
     # max_files=2: two triggers keep the merge-into-existing-state path
@@ -288,15 +286,13 @@ def st_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the drained ranked state must equal the batch report",
 )
 def st_trending_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.streaming.jobs import (
         read_parquet_stream,
         trending_rank_sink,
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
-    root = tempfile.mkdtemp(prefix="st_trend_")
+    root = tempfile.mkdtemp(prefix="st_trend_", dir=scratch_root(spark))
     log_dir = root + "/log"
     counts_path, ranked_path = root + "/counts", root + "/ranked"
     ev.repartition(4).write.mode("overwrite").parquet(log_dir)
@@ -346,13 +342,11 @@ def st_trending_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     "micro-batches; final state compared against the batch aggregate",
 )
 def st_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.streaming.jobs import read_parquet_stream
     from listenbrainz_server_spark.streaming.stateful import running_user_totals
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    root = tempfile.mkdtemp(prefix="st_state_")
+    root = tempfile.mkdtemp(prefix="st_state_", dir=scratch_root(spark))
     log_dir = root + "/log"
     ev.repartition(4).write.mode("overwrite").parquet(log_dir)
 
@@ -691,8 +685,6 @@ def a_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "i_cdc_merge's batch answer",
 )
 def st_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.sources.sinks import atomic_swap_write
     from listenbrainz_server_spark.streaming.jobs import (
         foreach_batch_merge_latest,
@@ -730,7 +722,7 @@ def st_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("ok") % 7 == 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
     )
 
-    root = tempfile.mkdtemp(prefix="st_cdc_")
+    root = tempfile.mkdtemp(prefix="st_cdc_", dir=scratch_root(spark))
     log_dir, state = root + "/log", root + "/state"
     changes.repartition(4).write.mode("overwrite").parquet(log_dir)
     atomic_swap_write(base, state)  # pre-seeded snapshot
@@ -818,8 +810,6 @@ def st_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sessionize of surviving events (the oracle)",
 )
 def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.streaming.jobs import (
         read_parquet_stream,
         state_partition_conf,
@@ -839,7 +829,7 @@ def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     log = ups.unionByName(dels)
 
-    root = tempfile.mkdtemp(prefix="st_session_cdc_")
+    root = tempfile.mkdtemp(prefix="st_session_cdc_", dir=scratch_root(spark))
     log_dir = root + "/log"
     # ts-range changelog files, oldest ts first: the file source
     # replays in mtime order, so time-order across triggers is what
@@ -951,8 +941,6 @@ def st_session_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reproduces + the idempotence boolean in the hash gate",
 )
 def st_replay_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from listenbrainz_server_spark.streaming.jobs import (
         merge_latest_into_state,
         read_parquet_stream,
@@ -970,7 +958,7 @@ def st_replay_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice").alias("tp"),
         )
     )
-    root = tempfile.mkdtemp(prefix="st_replay_")
+    root = tempfile.mkdtemp(prefix="st_replay_", dir=scratch_root(spark))
     log_dir, state = root + "/log", root + "/state"
     changes.repartition(4).write.mode("overwrite").parquet(log_dir)
     schema = spark.read.parquet(log_dir).schema

@@ -70,8 +70,9 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
         _F("l_linestatus", T.StringType()),
         _F("l_shipdate", T.TimestampNTZType()),
     ),
-    # events.ts arrives as TIMESTAMP(NANOS) parquet → catalog converts
-    # to micros TimestampType (catalog._NANO_TS_COLS).
+    # events.ts arrives as parquet timestamp[us] without UTC adjustment
+    # (the testdata) or TIMESTAMP(NANOS) (an older generation); the
+    # catalog converts both to micros TimestampType (catalog._NANO_TS_COLS).
     "events": _s(
         _F("event_id", T.LongType()),
         _F("ts", T.TimestampType()),

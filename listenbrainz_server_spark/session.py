@@ -36,6 +36,7 @@ request metric in two A/B pairs.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType
@@ -119,8 +120,9 @@ def get_session(
         # explicit so a misconfigured cluster profile can't silently
         # disable them.
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Testdata's events.ts is TIMESTAMP(NANOS); Spark has no nanos
-        # type, so read as long and convert in the catalog loader.
+        # A parquet TIMESTAMP(NANOS) column (events.ts in older data
+        # generations) has no Spark type; read it as long and convert
+        # in the catalog loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.enableVectorizedReader", "true")
         # Static: a repeated request must find its classes compiled.
@@ -161,6 +163,29 @@ def local_frame(spark: SparkSession, rows, ddl: str | StructType) -> DataFrame:
         columns.append(pa.array(values, to_arrow_type(field.dataType)))
     table = pa.Table.from_arrays(columns, names=schema.names)
     return spark.createDataFrame(table, schema)
+
+
+# Made by the first ``scratch_root`` call; the finalizer of a
+# TemporaryDirectory removes it at interpreter exit.
+_SCRATCH: tempfile.TemporaryDirectory | None = None
+
+
+def scratch_root(spark: SparkSession) -> str:
+    """The one directory, per process, for engine state that outlives a
+    call (stream logs and checkpoints, stored partials, version
+    manifests, staged blocks, import outputs, model registries); callers
+    make entries with ``tempfile.mkdtemp(dir=scratch_root(spark))``.
+    Made on first use under the ``spark.lbs.scratchDir`` conf, else the
+    system temp dir, and removed at interpreter exit. A POSIX path that
+    driver and executors both reach (a shared mount on a multi-node
+    cluster): the driver renames, writes and touches files in it."""
+    global _SCRATCH
+    if _SCRATCH is None:
+        parent = spark.conf.get("spark.lbs.scratchDir", None) or None
+        if parent is not None:
+            os.makedirs(parent, exist_ok=True)
+        _SCRATCH = tempfile.TemporaryDirectory(prefix="lbs_scratch_", dir=parent)
+    return _SCRATCH.name
 
 
 def stop_session() -> None:

@@ -8,9 +8,10 @@ from __future__ import annotations
 import importlib
 import os
 
-from listenbrainz_server_spark import session
-from listenbrainz_server_spark.catalog import cache_disabled, load_table
+from listenbrainz_server_spark import catalog, session
+from listenbrainz_server_spark.catalog import cache_disabled, load_table, table_path
 from tests.conftest import SF_CHECK as SF_001
+from tests.conftest import SF_SMOKE
 
 SF_01 = os.path.join(os.path.dirname(SF_001), "sf0.1")
 
@@ -45,6 +46,21 @@ def test_cache_disabled_scans_parquet_after_table_was_cached(spark):
     assert "InMemoryTableScan" not in plan
     # Leaving the bypass restores the cached path.
     assert "InMemoryTableScan" in executed_plan(load_table(spark, SF_001, "events"))
+
+
+def test_a_rewritten_table_keeps_one_memo_entry(spark, tmp_path):
+    # Each overwrite gives the path a new mtime; the load after it
+    # replaces the memoized handle and unpersists the superseded one.
+    events = load_table(spark, SF_SMOKE, "events")
+    path = table_path(str(tmp_path), "events")
+    handles = []
+    for n in (10, 20, 30):
+        events.limit(n).write.mode("overwrite").parquet(path)
+        handles.append(load_table(spark, str(tmp_path), "events"))
+        assert handles[-1].count() == n
+    memo = [k for k in catalog._TABLE_CACHE if os.path.abspath(path) in k]
+    assert len(memo) == 1
+    assert [h.is_cached for h in handles] == [False, False, True]
 
 
 def test_default_cpus_follow_affinity(monkeypatch):
